@@ -1,29 +1,33 @@
 """analytics_mix: the analyst query mix over generated star-schema tables.
 
 Each round is one pass over the lanes of ``gen.MIX`` in a seed-shuffled
-order. The timed op is one lane: DataFrame build + ``.count()``. Read-only:
-no commit happens anywhere in this workload.
+order; set-up runs one more pass, the cold one. The timed op is one lane:
+DataFrame build + ``toPandas()``, which evaluates every output column
+(a ``.count()`` lets Catalyst prune aggregate columns away). Read-only: no
+commit happens anywhere in this workload.
 
-Correctness: during set-up every lane runs once (collected) and must match
-its ``oracle_sql()`` twin in DuckDB by schema, row count and an
-order-insensitive value hash (``tools/check_oracle.py``'s ``norm_cell`` /
-``row_key``). The DuckDB side runs in a thread started before the Spark pass,
-so it overlaps the JVM's cold start. Every timed ``.count()`` must then equal
-the oracle's row count.
+Correctness, all of it outside the timed ops: every result of a lane must
+equal the lane's first result, and after the timed loop that first result
+must match the lane's ``oracle_sql()`` twin in DuckDB by schema, row count
+and an order-insensitive value multiset (``tools/check_oracle.py``'s
+``norm_cell``). Two float cells that differ only as the two roundings of a
+tie also match (see ``_one_rounding_apart``).
 """
 
 from __future__ import annotations
 
 import importlib.util
+import math
 import os
-import threading
+import sys
+
+import pandas as pd
 
 from .gen import MIX, query_order, write_tables
 
-SCALE = 0.1  # 150k orders, ~600k lineitems, 100k events (the repo's sf0.1 shape)
-# The MinHash lane's DuckDB oracle costs ~25 ms per document; 250 documents
-# let it finish while the JVM starts.
-N_DOCS = 250
+SCALE = 0.1  # the row counts of the repo's sf0.1 tables
+_TABLES = ("region", "nation", "customer", "supplier", "part", "orders", "lineitem",
+           "events", "documents", "embeddings")
 
 
 def _check_oracle_module():
@@ -37,83 +41,87 @@ def _check_oracle_module():
     return mod
 
 
-def _value_key(df, norm) -> tuple[list[str], list[tuple]]:
+def _one_rounding_apart(a: float, b: float) -> bool:
+    """``a`` and ``b`` are both rounded to the same ``d`` decimals and lie
+    one unit of that place apart: the two roundings of a sum that sits on a
+    tie. ``round(sum(double), 2)`` lands on either side of ``.xx5`` by the
+    summation order alone. Prices with two decimals times discounts with two
+    make such ties in about 1% of four-decimal sums: on one seed, DuckDB
+    summed a group to 7383812.854999999 (-> .85) where the exact sum is
+    7383812.855 (-> .86, Spark's answer). Whole numbers never match: a
+    count or an integer sum that is one off is wrong."""
+    for d in range(7):
+        if round(a, d) == a and round(b, d) == b:
+            return d > 0 and math.isclose(abs(a - b), 10.0**-d, rel_tol=1e-6)
+    return False
+
+
+def _mismatches(got, want, norm) -> list[tuple]:
+    """Cells where two results with the same columns and row count differ,
+    rows paired after sorting both by their ``norm_cell`` forms with float
+    cells last. Cells that are the two roundings of a tie are reported to
+    stderr and not counted."""
+    cols = sorted(got.columns)
+
+    def rows(df):
+        out = []
+        # the cells ``iterrows`` (as check_oracle.py uses it) would give,
+        # without building a Series per row
+        for cells in map(tuple, df[cols].values):
+            normed = tuple(norm.norm_cell(v) for v in cells)
+            fixed = tuple(n for v, n in zip(cells, normed) if not isinstance(v, float))
+            out.append((fixed, normed, cells))
+        out.sort(key=lambda r: r[:2])
+        return out
+
+    bad = []
+    for (_, na, ra), (_, nb, rb) in zip(rows(got), rows(want)):
+        if na == nb:
+            continue
+        for c, x, y, nx, ny in zip(cols, ra, rb, na, nb):
+            if nx == ny:
+                continue
+            if isinstance(x, float) and isinstance(y, float) and _one_rounding_apart(x, y):
+                print(f"# rounding tie accepted: {c} {x!r} vs {y!r}", file=sys.stderr)
+                continue
+            bad.append((c, x, y))
+    return bad
+
+
+def _digest(df) -> tuple:
+    """Cheap order-insensitive fingerprint of a result: columns, rows and
+    the sum of per-row hashes."""
     cols = sorted(df.columns)
-    return cols, sorted(norm.row_key(r, cols) for _, r in df.iterrows())
+    text = df[cols].astype(str)  # list cells (embeddings) are not hashable
+    return cols, len(df), int(pd.util.hash_pandas_object(text, index=False).sum())
 
 
 class Analytics:
     name = "analytics_mix"
 
-    def __init__(self, scale: float = SCALE, n_docs: int = N_DOCS, lanes=MIX):
+    def __init__(self, scale: float = SCALE, lanes=MIX):
         self.scale = scale
-        self.n_docs = n_docs
         self.lanes = tuple(lanes)
 
     def inputs(self, ctx) -> None:
-        from rxlan_aws_lakehouse_spark.queries import all_oracles, all_queries
+        from rxlan_aws_lakehouse_spark.queries import all_queries
 
+        self.norm = _check_oracle_module()
         self.dir = ctx.path("analytics", "tables", "")
-        write_tables(ctx.seed, self.dir, self.scale, n_docs=self.n_docs)
+        write_tables(ctx.seed, self.dir, self.scale)
         self.queries = all_queries()
-        oracles = all_oracles()
-        self.oracle: dict[str, object] = {}
-        # slowest oracle first, so it overlaps the JVM start, not the cold pass
-        order = sorted(self.lanes, key=lambda n: n != "dedup_minhash_pairs")
-        self._oracle_thread = threading.Thread(
-            target=self._run_oracles, args=({n: oracles[n] for n in order},),
-            name="duckdb-oracle",
-        )
-        self._oracle_thread.start()
-
-    def _run_oracles(self, sqls: dict[str, str]) -> None:
-        import duckdb
-
-        con = duckdb.connect()
-        try:
-            con.execute("SET threads TO 2")
-            for t in ("region", "nation", "customer", "supplier", "part", "orders",
-                      "lineitem", "events", "documents", "embeddings"):
-                con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{self.dir}{t}.parquet'")
-            for name, sql in sqls.items():
-                try:
-                    self.oracle[name] = con.execute(sql).fetchdf()
-                except Exception as e:  # noqa: BLE001 - reported as a failed check
-                    self.oracle[name] = e
-        finally:
-            con.close()
+        self.first: dict[str, pd.DataFrame] = {}  # lane -> its first result
+        self.digest: dict[str, tuple] = {}
 
     def warmup(self, ctx) -> None:
-        """One collected pass: the cold pass, and the oracle comparison."""
-        norm = _check_oracle_module()
-        results = {}
-        for lane in query_order(ctx.seed, 0):
-            if lane in self.lanes:
-                results[lane] = ctx.op(
-                    lane, lambda lane=lane: self.queries[lane](ctx.spark, self.dir).toPandas()
-                )
-        self._oracle_thread.join()
-        self.expected_rows: dict[str, int] = {}
-        for lane, sdf in results.items():
-            odf = self.oracle.get(lane)
-            if isinstance(odf, Exception) or odf is None:
-                ctx.verify(False, f"{lane}: oracle failed: {odf!r}")
-                continue
-            self.expected_rows[lane] = len(odf)
-            if sdf is None:
-                continue  # already counted as a failed op
-            s_cols, s_rows = _value_key(sdf, norm)
-            if s_cols != sorted(odf.columns):
-                ctx.verify(False, f"{lane}: columns {s_cols} != oracle {sorted(odf.columns)}")
-            elif len(sdf) != len(odf):
-                ctx.verify(False, f"{lane}: {len(sdf)} rows != oracle {len(odf)}")
-            else:
-                ctx.verify(s_rows == _value_key(odf, norm)[1],
-                           f"{lane}: values differ from the oracle")
+        self._pass(ctx, 0)
 
     def round(self, ctx, i: int) -> None:
+        self._pass(ctx, i + 1)
+
+    def _pass(self, ctx, index: int) -> None:
         tr = ctx.tracer
-        for lane in query_order(ctx.seed, i + 1):
+        for lane in query_order(ctx.seed, index):
             if lane not in self.lanes:
                 continue
 
@@ -121,13 +129,57 @@ class Analytics:
                 with tr.span(f"queries.{lane}.build"):
                     df = self.queries[lane](ctx.spark, self.dir)
                 with tr.span(f"queries.{lane}.exec"):
-                    return df.count()
+                    return df.toPandas()
 
-            def check(n, lane=lane):
-                want = self.expected_rows.get(lane)
-                return None if n == want else f"count {n} != oracle rows {want}"
+            def check(pdf, lane=lane):
+                d = _digest(pdf)
+                if lane not in self.first:
+                    self.first[lane], self.digest[lane] = pdf, d
+                    return None
+                first = self.first[lane]
+                if d == self.digest[lane]:
+                    return None
+                if d[:2] != self.digest[lane][:2]:
+                    return f"result {d[:2]} differs from the first {self.digest[lane][:2]}"
+                bad = _mismatches(pdf, first, self.norm)
+                return f"result differs from the first: {bad[:3]}" if bad else None
 
             ctx.op(lane, run, check)
 
+    def oracles(self) -> dict[str, object]:
+        """lane -> the DuckDB result of its ``oracle_sql()``, or the error."""
+        import duckdb
+
+        from rxlan_aws_lakehouse_spark.queries import all_oracles
+
+        sqls = all_oracles()
+        out: dict[str, object] = {}
+        con = duckdb.connect()
+        try:
+            con.execute(f"SET threads TO {len(os.sched_getaffinity(0))}")
+            for t in _TABLES:
+                con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{self.dir}{t}.parquet'")
+            for lane in self.lanes:
+                try:
+                    out[lane] = con.execute(sqls[lane]).fetchdf()
+                except duckdb.Error as e:
+                    out[lane] = e
+        finally:
+            con.close()
+        return out
+
     def finish(self, ctx) -> None:
-        pass
+        for lane, odf in self.oracles().items():
+            sdf = self.first.get(lane)
+            if not isinstance(odf, pd.DataFrame):
+                ctx.verify(False, f"{lane}: oracle failed: {odf!r}")
+            elif sdf is None:
+                continue  # every run of the lane failed, and counted so
+            elif sorted(sdf.columns) != sorted(odf.columns):
+                ctx.verify(False, f"{lane}: columns {sorted(sdf.columns)} != oracle "
+                                  f"{sorted(odf.columns)}")
+            elif len(sdf) != len(odf):
+                ctx.verify(False, f"{lane}: {len(sdf)} rows != oracle {len(odf)}")
+            else:
+                bad = _mismatches(sdf, odf, self.norm)
+                ctx.verify(not bad, f"{lane}: values differ from the oracle: {bad[:3]}")

@@ -29,12 +29,6 @@ class Op:
     steal: float  # share of this guest's CPU demand the host gave to other guests
     cpu_s: float  # CPU time of the driver, its JVM and Spark's Python workers (traced runs)
 
-    @property
-    def adjusted(self) -> float:
-        """Latency with the stolen share removed: what the op would have
-        taken had the host run this guest whenever it was runnable."""
-        return self.seconds * (1.0 - self.steal)
-
 
 @dataclass
 class Ctx:
@@ -209,14 +203,13 @@ def process_start_wall() -> float:
 # --------------------------------------------------------------------------
 
 
-def run_workload(workload, ctx: Ctx, t_process: float, steal0: tuple[int, int]) -> dict:
+def run_workload(workload, ctx: Ctx, t_process: float) -> dict:
     """Run whole rounds for ``ctx.seconds`` (two at least when traced, so
     every op kind runs traced and untraced), then the final checks. Set-up
-    (``inputs`` and ``warmup``) has run already; ``setup_s`` ends at the
-    first timed op, and ``steal0`` is the steal reading at its start."""
+    (``inputs`` and ``warmup``) has run already; ``setup_s`` runs from
+    ``t_process`` to the first timed op."""
     min_rounds = 2 if ctx.tracer.enabled else 1
     setup_s = time.time() - t_process
-    setup_steal = steal_share(steal0, steal_ticks())
     ctx.timed = True
     t0 = time.perf_counter()
     rounds = 0
@@ -226,4 +219,4 @@ def run_workload(workload, ctx: Ctx, t_process: float, steal0: tuple[int, int]) 
     ctx.timed = False
     ctx.tracer.active = False  # the final checks belong to no traced op
     workload.finish(ctx)
-    return {"setup_s": setup_s, "setup_steal": setup_steal, "rounds": rounds}
+    return {"setup_s": setup_s, "rounds": rounds}

@@ -26,7 +26,6 @@ EVENTS_PER_HOUR = 10_000
 # than steady state while the JIT catches up. Two warm-up hours are what
 # set-up can afford.
 WARMUP_HOURS = 2
-HOURS_PER_ROUND = 4  # a run's one round gives four freshness samples
 STREAM_TIMEOUT_S = 120  # a run must end within 180 s
 _REQUIRED = ("city", "fetched_at_utc", "ts", "temp_c", "humidity", "pressure")
 
@@ -65,10 +64,10 @@ class Medallion:
             self._hour(ctx, h)
 
     def round(self, ctx, i: int) -> None:
-        for k in range(HOURS_PER_ROUND):
-            batch = self._hour(ctx, WARMUP_HOURS + i * HOURS_PER_ROUND + k)
-            if batch is not None and not ctx.ops[-1].traced:
-                self.rows_landed += batch.envelopes
+        """One round is one hour."""
+        batch = self._hour(ctx, WARMUP_HOURS + i)
+        if batch is not None and not ctx.ops[-1].traced:
+            self.rows_landed += batch.envelopes
 
     def finish(self, ctx) -> None:
         wall = sum(o.seconds for o in ctx.ops if o.ok and not o.traced)

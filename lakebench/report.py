@@ -80,13 +80,12 @@ def workload_metrics(name: str, ctx, loop: dict, peak: float) -> dict:
 
 
 def e2e_metrics(ctx, loop: dict) -> dict:
-    """The gated metrics, on steal-adjusted times (``Op.adjusted``): the
-    host's steal swung between 0.5% and 38% of this guest's CPU demand from
-    run to run, and raw latencies with it."""
-    xs = [o.adjusted for o in ctx.ops if o.ok]
+    """The gated metrics, on wall times. On each workload they are its own
+    user-facing figures under shared names (see the README)."""
+    xs = [o.seconds for o in ctx.ops if o.ok]
     ok = bool(xs)  # every op failed: no latency exists, the run is refused anyway
     return {
-        "setup_s": _m(loop["setup_s"] * (1.0 - loop["setup_steal"]), "s"),
+        "setup_s": _m(loop["setup_s"], "s"),
         "ops_per_s": _m(len(xs) / sum(xs) if ok else None, "1/s"),
         "op_p50_s": _m(median(xs) if ok else None, "s"),
         "op_tail_s": _m(tail(xs)[0] if ok else None, "s"),

@@ -30,6 +30,7 @@ import signal
 import subprocess
 import sys
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORKLOADS = ("medallion_hourly", "analytics_mix", "txn_dml")
@@ -96,17 +97,15 @@ def stop_spark(spark) -> None:
 
 
 def run_one(name: str, seed: int, seconds: float, trace: bool, workload=None,
-            spark=None, steal0=None) -> dict:
+            spark=None) -> dict:
     """Run one workload in this process; returns the lines to print and the
-    final result. ``steal0`` is the steal reading at process start. With
-    ``spark`` given (tests), that session is used and left running, and
-    set-up counts from this call."""
+    final result. With ``spark`` given (tests), that session is used and
+    left running, and set-up counts from this call."""
     from lakebench import harness, report
     from lakebench.tracing import Tracer
 
     own_session = spark is None
     t_start = harness.process_start_wall() if own_session else time.time()
-    steal0 = steal0 or harness.steal_ticks()
     data_root = os.path.join(REPO, ".lakebench", f"run-{os.getpid()}-{time.time_ns()}")
     os.makedirs(data_root)
     try:
@@ -116,22 +115,28 @@ def run_one(name: str, seed: int, seconds: float, trace: bool, workload=None,
         tracer = Tracer(trace)
         ctx = harness.Ctx(spark=spark, seed=seed, seconds=seconds, data_root=data_root,
                           tracer=tracer)
-        t0 = time.perf_counter()
-        workload.inputs(ctx)
-        inputs_s = time.perf_counter() - t0
 
-        t0 = time.perf_counter()
-        if own_session:
-            from rxlan_aws_lakehouse_spark import session
+        def make_inputs() -> float:
+            t0 = time.perf_counter()
+            workload.inputs(ctx)
+            return time.perf_counter() - t0
 
-            spark = ctx.spark = session.get_spark(f"lakebench-{name}")
-        start_s = time.perf_counter() - t0
+        # the inputs need no Spark: they are generated while the JVM starts
+        with ThreadPoolExecutor(1, thread_name_prefix="lakebench-inputs") as pool:
+            inputs = pool.submit(make_inputs)
+            t0 = time.perf_counter()
+            if own_session:
+                from rxlan_aws_lakehouse_spark import session
+
+                spark = ctx.spark = session.get_spark(f"lakebench-{name}")
+            start_s = time.perf_counter() - t0
+            inputs_s = inputs.result()
         tracer.install(spark)
         try:
             t0 = time.perf_counter()
             workload.warmup(ctx)
             warmup_s = time.perf_counter() - t0
-            loop = harness.run_workload(workload, ctx, t_start, steal0)
+            loop = harness.run_workload(workload, ctx, t_start)
         finally:
             tracer.uninstall()
         return report.build(
@@ -188,12 +193,9 @@ def main(argv=None) -> int:
         return 2
     if REPO not in sys.path:
         sys.path.insert(0, REPO)
-    from lakebench import harness
-
-    steal0 = harness.steal_ticks()
     if args.workload == "all":
         return run_all(args.seed, args.seconds, bool(args.trace))
-    result = run_one(args.workload, args.seed, args.seconds, bool(args.trace), steal0=steal0)
+    result = run_one(args.workload, args.seed, args.seconds, bool(args.trace))
     for line in result["lines"]:
         print(line)
     print(json.dumps(result["final"]))

@@ -72,8 +72,8 @@ def _bytes(path):
 def test_tables_are_deterministic():
     root = os.path.join(REPO, ".lakebench", "test-tables")
     try:
-        counts = gen.write_tables(5, os.path.join(root, "a"), 0.001, n_docs=20)
-        gen.write_tables(5, os.path.join(root, "b"), 0.001, n_docs=20)
+        counts = gen.write_tables(5, os.path.join(root, "a"), 0.001)
+        gen.write_tables(5, os.path.join(root, "b"), 0.001)
         orders = gen.write_orders(5, os.path.join(root, "c"), 0.001)
         for t in counts:
             a = _bytes(os.path.join(root, "a", f"{t}.parquet"))
@@ -100,6 +100,23 @@ def test_statement_stream_and_query_order_are_deterministic():
     assert sorted(kinds) == sorted(gen.HALF_A + gen.HALF_B + ("optimize", "optimize"))
     assert gen.query_order(4, 2) == gen.query_order(4, 2)
     assert sorted(gen.query_order(4, 2)) == sorted(gen.MIX)
+
+
+def test_result_comparison_accepts_only_rounding_ties():
+    import pandas as pd
+
+    from lakebench import analytics
+
+    norm = analytics._check_oracle_module()
+    assert analytics._one_rounding_apart(7383812.85, 7383812.86)
+    assert analytics._one_rounding_apart(7383812.8, 7383812.79)
+    assert not analytics._one_rounding_apart(7383812.85, 7383812.87)
+    assert not analytics._one_rounding_apart(5.0, 6.0)  # a count one off
+    want = pd.DataFrame({"n_name": ["A", "B", "C"], "revenue": [1.25, 7383812.85, 3.5]})
+    tie = pd.DataFrame({"revenue": [3.5, 7383812.86, 1.25], "n_name": ["C", "B", "A"]})
+    assert analytics._mismatches(tie, want, norm) == []
+    wrong = tie.assign(revenue=[3.5, 7383812.86, 1.26 + 1])
+    assert analytics._mismatches(wrong, want, norm) == [("revenue", 2.26, 1.25)]
 
 
 def test_tail_percentile():
@@ -141,7 +158,7 @@ def _tiny(name):
     return {
         "medallion_hourly": lambda: Medallion(events_per_hour=300),
         "analytics_mix": lambda: Analytics(
-            scale=0.002, n_docs=30, lanes=("tpch_q1", "ref_dup_detect", "window_topk")),
+            scale=0.002, lanes=("tpch_q1", "ref_dup_detect", "window_topk")),
         "txn_dml": lambda: Dml(scale=0.002, merge_rows=10),
     }[name]()
 
@@ -183,13 +200,12 @@ def test_wrong_gold_count_fails(spark, monkeypatch):
 def test_wrong_oracle_row_count_fails(spark, monkeypatch):
     from lakebench.analytics import Analytics
 
-    orig = Analytics.warmup
+    orig = Analytics.oracles
 
-    def skewed(self, ctx):
-        orig(self, ctx)
-        self.expected_rows = {k: v + 1 for k, v in self.expected_rows.items()}
+    def one_row_short(self):
+        return {lane: df.iloc[1:] for lane, df in orig(self).items()}
 
-    monkeypatch.setattr(Analytics, "warmup", skewed)
+    monkeypatch.setattr(Analytics, "oracles", one_row_short)
     final = run.run_one("analytics_mix", 1, 0, False,
                         workload=_tiny("analytics_mix"), spark=spark)["final"]
     assert not final["correct"] and final["failed"] >= 1
