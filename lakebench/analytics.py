@@ -98,6 +98,9 @@ def _digest(df) -> tuple:
 
 class Analytics:
     name = "analytics_mix"
+    # A round is one pass of 5-8 s. Two at least keep 20 queries in a run
+    # that a burst of host contention slows.
+    min_rounds = 2
 
     def __init__(self, scale: float = SCALE, lanes=MIX):
         self.scale = scale

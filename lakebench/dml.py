@@ -54,6 +54,7 @@ def storage_ratio(root: str, live_bytes: int) -> float:
 
 class Dml:
     name = "txn_dml"
+    min_rounds = 1  # a round is 12 statements, ~14 s
 
     def __init__(self, scale: float = SCALE, merge_rows: int = MERGE_ROWS):
         self.scale = scale

@@ -1,12 +1,13 @@
 """Closed-loop measurement core shared by the three workloads.
 
 A workload exposes ``inputs(ctx)`` (generate, no Spark), ``warmup(ctx)``
-(seed tables, cold pass, first checks), ``round(ctx, i)`` and
-``finish(ctx)``. ``run_workload`` calls ``round`` until ``seconds`` have
-passed, always finishing the round in progress, so every run measures whole
-hours / passes / statement cycles; then it runs the final checks. Inside a
-round each operation goes through ``ctx.op``: only the callable it wraps is
-timed; correctness checks run after it, outside the timed region.
+(seed tables, cold pass, first checks), ``round(ctx, i)``, ``finish(ctx)``
+and ``min_rounds``. ``run_workload`` calls ``round`` until ``seconds`` have
+passed and at least ``min_rounds`` times, always finishing the round in
+progress, so every run measures whole hours / passes / statement cycles;
+then it runs the final checks. Inside a round each operation goes through
+``ctx.op``: only the callable it wraps is timed; correctness checks run
+after it, outside the timed region.
 """
 
 from __future__ import annotations
@@ -204,11 +205,12 @@ def process_start_wall() -> float:
 
 
 def run_workload(workload, ctx: Ctx, t_process: float) -> dict:
-    """Run whole rounds for ``ctx.seconds`` (two at least when traced, so
-    every op kind runs traced and untraced), then the final checks. Set-up
+    """Run whole rounds for ``ctx.seconds`` and at least
+    ``workload.min_rounds`` (twice that when traced, so every op kind runs
+    traced and untraced), then the final checks. Set-up
     (``inputs`` and ``warmup``) has run already; ``setup_s`` runs from
     ``t_process`` to the first timed op."""
-    min_rounds = 2 if ctx.tracer.enabled else 1
+    min_rounds = workload.min_rounds * (2 if ctx.tracer.enabled else 1)
     setup_s = time.time() - t_process
     ctx.timed = True
     t0 = time.perf_counter()

@@ -47,6 +47,9 @@ def _rows_in(paths) -> int:
 
 class Medallion:
     name = "medallion_hourly"
+    # A round is one hour, of 2.5-4 s. Four at least give every run's tail a
+    # sample beyond it; with three, the tail would be the maximum.
+    min_rounds = 4
 
     def __init__(self, events_per_hour: int = EVENTS_PER_HOUR):
         self.events_per_hour = events_per_hour

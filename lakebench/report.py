@@ -19,7 +19,6 @@ E2E = {
     "setup_s": "s",
     "ops_per_s": "1/s",
     "op_p50_s": "s",
-    "op_tail_s": "s",
 }
 LAYERS = {
     "session.start_s": "s",
@@ -81,14 +80,15 @@ def workload_metrics(name: str, ctx, loop: dict, peak: float) -> dict:
 
 def e2e_metrics(ctx, loop: dict) -> dict:
     """The gated metrics, on wall times. On each workload they are its own
-    user-facing figures under shared names (see the README)."""
+    user-facing figures under shared names (see the README). Tails are not
+    among them: a run holds 4-20 ops, too few for a percentile with ten
+    samples beyond it, so they are printed on ``# workload_metrics`` only."""
     xs = [o.seconds for o in ctx.ops if o.ok]
     ok = bool(xs)  # every op failed: no latency exists, the run is refused anyway
     return {
         "setup_s": _m(loop["setup_s"], "s"),
         "ops_per_s": _m(len(xs) / sum(xs) if ok else None, "1/s"),
         "op_p50_s": _m(median(xs) if ok else None, "s"),
-        "op_tail_s": _m(tail(xs)[0] if ok else None, "s"),
     }
 
 
