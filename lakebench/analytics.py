@@ -1,7 +1,8 @@
 """analytics_mix: the analyst query mix over generated star-schema tables.
 
 Each round is one pass over the lanes of ``gen.MIX`` in a seed-shuffled
-order; set-up runs two more, the cold one and one while the JIT catches up. The timed op is one lane:
+order; set-up runs two more, the cold one and one while the JIT catches up.
+The timed op is one lane:
 DataFrame build + ``toPandas()``, which evaluates every output column
 (a ``.count()`` lets Catalyst prune aggregate columns away). Read-only: no
 commit happens anywhere in this workload.
@@ -26,7 +27,8 @@ import pandas as pd
 from .gen import MIX, query_order, write_tables
 
 SCALE = 0.1  # the row counts of the repo's sf0.1 tables
-# After the cold pass, the next still runs ~14% slower than the one after.
+# Set-up runs the cold pass and one more. With the cold pass alone, the next
+# two still ran 15-30% slower than the ones after them.
 WARMUP_PASSES = 2
 _TABLES = ("region", "nation", "customer", "supplier", "part", "orders", "lineitem",
            "events", "documents", "embeddings")
@@ -100,13 +102,13 @@ def _digest(df) -> tuple:
 
 class Analytics:
     name = "analytics_mix"
-    # A round is one pass of 5-8 s. Two at least keep 20 queries in a run
-    # that a burst of host contention slows.
+    # A round is one pass of 5-8 s; a lane's median is taken over two.
     min_rounds = 2
 
     def __init__(self, scale: float = SCALE, lanes=MIX):
         self.scale = scale
         self.lanes = tuple(lanes)
+        self.mix = {lane: 1 for lane in self.lanes}  # op kind -> ops per round
 
     def inputs(self, ctx) -> None:
         from rxlan_aws_lakehouse_spark.queries import all_queries

@@ -17,8 +17,9 @@ from __future__ import annotations
 
 import hashlib
 import os
+from collections import Counter
 
-from .gen import WARMUP, DmlStream, write_orders
+from .gen import HALF_A, HALF_B, WARMUP, DmlStream, write_orders
 
 SCALE = 0.1  # 150k orders
 MERGE_ROWS = 750  # ~0.5% of the keys per MERGE
@@ -55,6 +56,7 @@ def storage_ratio(root: str, live_bytes: int) -> float:
 class Dml:
     name = "txn_dml"
     min_rounds = 1  # a round is 12 statements, ~14 s
+    mix = dict(Counter(HALF_A + HALF_B + ("optimize", "optimize")))  # kind -> per round
 
     def __init__(self, scale: float = SCALE, merge_rows: int = MERGE_ROWS):
         self.scale = scale
@@ -94,6 +96,11 @@ class Dml:
 
     def round(self, ctx, i: int) -> None:
         for st in self.stream.round():
+            self._stmt(ctx, st)
+
+    def half(self, ctx, i: int) -> None:
+        """Half-cycle ``i % 2`` of a round (see ``gen.DmlStream.half``)."""
+        for st in self.stream.half(i):
             self._stmt(ctx, st)
 
     def finish(self, ctx) -> None:

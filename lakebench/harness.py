@@ -1,4 +1,4 @@
-"""Closed-loop measurement core shared by the three workloads.
+"""Closed-loop measurement core shared by the workloads.
 
 A workload exposes ``inputs(ctx)`` (generate, no Spark), ``warmup(ctx)``
 (seed tables, cold pass, first checks), ``round(ctx, i)``, ``finish(ctx)``

@@ -49,9 +49,12 @@ class Medallion:
     # A round is one hour, of 2.5-4 s. Four at least give every run's tail a
     # sample beyond it; with three, the tail would be the maximum.
     min_rounds = 4
+    mix = {"hour": 1}  # op kind -> ops per cycle (a cycle is one round)
 
-    def __init__(self, events_per_hour: int = EVENTS_PER_HOUR):
+    def __init__(self, events_per_hour: int = EVENTS_PER_HOUR,
+                 warmup_hours: int = WARMUP_HOURS):
         self.events_per_hour = events_per_hour
+        self.warmup_hours = warmup_hours
 
     def inputs(self, ctx) -> None:
         self.dirs = {
@@ -62,17 +65,17 @@ class Medallion:
         self.rows_landed = 0  # CDC events landed in timed hours
 
     def warmup(self, ctx) -> None:
-        for h in range(WARMUP_HOURS):
+        for h in range(self.warmup_hours):
             self._hour(ctx, h)
 
     def round(self, ctx, i: int) -> None:
         """One round is one hour."""
-        batch = self._hour(ctx, WARMUP_HOURS + i)
+        batch = self._hour(ctx, self.warmup_hours + i)
         if batch is not None and not ctx.ops[-1].traced:
             self.rows_landed += batch.envelopes
 
     def finish(self, ctx) -> None:
-        wall = sum(o.seconds for o in ctx.ops if o.ok and not o.traced)
+        wall = sum(o.seconds for o in ctx.ops if o.kind == "hour" and o.ok and not o.traced)
         ctx.report["etl.rows_per_s"] = (self.rows_landed / wall if wall else None, "rows/s")
 
     # ------------------------------------------------------------------

@@ -11,6 +11,7 @@ traced, the full per-layer breakdown (``# layers``).
 from __future__ import annotations
 
 import json
+import math
 import statistics
 
 from .harness import median, tail
@@ -18,7 +19,6 @@ from .harness import median, tail
 E2E = {
     "setup_s": "s",
     "ops_per_s": "1/s",
-    "op_p50_s": "s",
 }
 LAYERS = {
     "session.start_s": "s",
@@ -52,43 +52,68 @@ def _latency(into: dict, p50: str, tail_name: str, xs: list[float]) -> None:
         into[tail_name] = {**_m(v, "s"), "percentile": pct, "samples": n}
 
 
-def workload_metrics(name: str, ctx, loop: dict, peak: float) -> dict:
+def workload_metrics(name: str, ctx, loop: dict, peak: float, mix: dict) -> dict:
     """The run's metrics under the names the workload doc uses, on raw
     wall times."""
     ops = [o for o in ctx.ops if o.ok and not o.traced]
-    xs = [o.seconds for o in ops]
+    hours = [o.seconds for o in ops if o.kind == "hour"]
+    stmts = [o for o in ops if o.kind != "hour"]
     out = {
         "setup_s": _m(loop["setup_s"], "s"),
         "failed_ops_ratio": _m(len(ctx.errors) / max(1, ctx.attempted), "ratio"),
         "peak_rss_mb": _m(peak, "MiB"),
     }
-    if name == "medallion_hourly":
-        _latency(out, "etl.freshness_p50_s", "etl.freshness_tail_s", xs)
-    elif name == "analytics_mix":
+    if name in ("medallion_hourly", "ingest_dml"):
+        _latency(out, "etl.freshness_p50_s", "etl.freshness_tail_s", hours)
+    if name == "analytics_mix":
+        xs = [o.seconds for o in ops]
         out["query.per_s"] = _m(len(xs) / sum(xs) if xs else None, "queries/s")
         _latency(out, "query.p50_s", "query.tail_s", xs)
-    else:
+    if name in ("txn_dml", "ingest_dml"):
+        xs = [o.seconds for o in stmts]
         out["dml.stmts_per_s"] = _m(len(xs) / sum(xs) if xs else None, "stmts/s")
         _latency(out, "dml.write_p50_s", "dml.write_tail_s",
-                 [o.seconds for o in ops if o.kind not in _READS])
+                 [o.seconds for o in stmts if o.kind not in _READS])
         _latency(out, "dml.read_p50_s", "dml.read_tail_s",
-                 [o.seconds for o in ops if o.kind in _READS])
+                 [o.seconds for o in stmts if o.kind in _READS])
     out.update({k: _m(v, u) for k, (v, u) in ctx.report.items()})
+    out["kind_p50_geomean_s"] = _m(per_kind(ctx, mix)[1], "s")
     out["host.steal_share"] = _m(_mean([o.steal for o in ops]), "ratio")
     return out
 
 
-def e2e_metrics(ctx, loop: dict) -> dict:
-    """The gated metrics, on wall times. On each workload they are its own
-    user-facing figures under shared names (see the README). Tails are not
-    among them: a run holds 4-20 ops, too few for a percentile with ten
-    samples beyond it, so they are printed on ``# workload_metrics`` only."""
-    xs = [o.seconds for o in ctx.ops if o.ok]
-    ok = bool(xs)  # every op failed: no latency exists, the run is refused anyway
+def kind_medians(ops) -> dict[str, float]:
+    """Op kind -> median latency of its ops."""
+    by_kind: dict[str, list[float]] = {}
+    for o in ops:
+        by_kind.setdefault(o.kind, []).append(o.seconds)
+    return {k: median(v) for k, v in by_kind.items()}
+
+
+def per_kind(ctx, mix: dict) -> tuple[float | None, float | None]:
+    """(ops per second over one whole cycle of the workload's op mix, each
+    op at its kind's median latency; geometric mean of the kinds' medians).
+
+    ``mix`` maps each op kind to its ops per cycle, so a run's count of
+    rounds does not change the mix the rate is taken over, and one stalled
+    op moves neither figure. In the geometric mean every kind weighs the
+    same, a CDC hour as much as a point lookup."""
+    med = kind_medians(o for o in ctx.ops if o.ok and not o.traced)
+    kinds = [k for k in mix if k in med]
+    if not kinds:  # every op failed: the run is refused anyway
+        return None, None
+    rate = sum(mix[k] for k in kinds) / sum(mix[k] * med[k] for k in kinds)
+    return rate, math.exp(statistics.fmean(math.log(med[k]) for k in kinds))
+
+
+def e2e_metrics(ctx, loop: dict, mix: dict) -> dict:
+    """The gated metrics, on wall times, under names shared by the
+    workloads (see the README). Tails are not among them: a run holds 14 ops
+    of ten kinds or 20 queries of ten lanes, too few for a percentile with
+    ten samples beyond it, so they are printed on ``# workload_metrics``."""
     return {
         "setup_s": _m(loop["setup_s"], "s"),
-        "ops_per_s": _m(len(xs) / sum(xs) if ok else None, "1/s"),
-        "op_p50_s": _m(median(xs) if ok else None, "s"),
+        "ops_per_s": _m(per_kind(ctx, mix)[0], "1/s"),
     }
 
 
@@ -154,10 +179,11 @@ def layer_report(ctx, setup: dict) -> tuple[dict, dict]:
     return layers, full
 
 
-def build(name: str, ctx, loop: dict, peak: float, setup: dict, trace_path: str) -> dict:
+def build(name: str, ctx, loop: dict, peak: float, setup: dict, trace_path: str,
+          mix: dict) -> dict:
     """Everything ``run.py`` prints for one workload run."""
     failed = len(ctx.errors)
-    wm = workload_metrics(name, ctx, loop, peak)
+    wm = workload_metrics(name, ctx, loop, peak, mix)
     lines = [
         f"# {name} seed={ctx.seed} rounds={loop['rounds']} timed_ops={len(ctx.ops)} "
         f"attempted={ctx.attempted} failed={failed}",
@@ -174,7 +200,7 @@ def build(name: str, ctx, loop: dict, peak: float, setup: dict, trace_path: str)
                   "# trace.overhead " + json.dumps(full["trace.overhead"]),
                   f"# spans {trace_path}"]
     else:
-        metrics = e2e_metrics(ctx, loop)
+        metrics = e2e_metrics(ctx, loop, mix)
     final = {"correct": failed == 0, "attempted": ctx.attempted, "failed": failed,
              "metrics": metrics}
     return {"lines": lines, "final": final}
@@ -182,9 +208,9 @@ def build(name: str, ctx, loop: dict, peak: float, setup: dict, trace_path: str)
 
 def combine(results: dict) -> dict:
     """``--workload all``: workload -> (workload metrics, final line) of the
-    three runs, together as the 15 named metrics. Set-up time and memory
-    are the worst of the three; failures add up; each run's steal share
-    stays on its own ``# workload_metrics`` line."""
+    two runs, together as the 15 named metrics. Set-up time and memory
+    are the worse of the two; failures add up; each run's steal share and
+    kind geomean stay on its own ``# workload_metrics`` line."""
     metrics: dict = {}
     attempted = sum(final["attempted"] for _wm, final in results.values())
     failed = sum(final["failed"] for _wm, final in results.values())
@@ -193,7 +219,8 @@ def combine(results: dict) -> dict:
             if k in ("setup_s", "peak_rss_mb"):
                 if k not in metrics or v["value"] > metrics[k]["value"]:
                     metrics[k] = v
-            elif not k.startswith("host.") and k != "failed_ops_ratio":
+            elif not k.startswith("host.") and k not in ("failed_ops_ratio",
+                                                         "kind_p50_geomean_s"):
                 metrics[k] = v
     metrics["failed_ops_ratio"] = _m(failed / max(1, attempted), "ratio")
     return {"correct": failed == 0, "attempted": attempted, "failed": failed,

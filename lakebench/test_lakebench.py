@@ -127,6 +127,20 @@ def test_tail_percentile():
     assert (v, pct, n) == (190.0, 95.0, 200)
 
 
+def test_gated_rate_weighs_each_kind_by_its_median():
+    from lakebench import report
+
+    ops = [harness.Op(k, t, True, False, 0.0, 0.0) for k, t in
+           [("hour", 3.0), ("hour", 5.0), ("hour", 30.0), ("merge", 4.0), ("read", 0.5)]]
+    ctx = harness.Ctx(None, 1, 0, "", None, ops=ops)
+    mix = {"hour": 2, "merge": 1, "read": 2}
+    m = report.e2e_metrics(ctx, {"setup_s": 9.0}, mix)
+    # hour's median is 5 s whatever its outlier; a cycle is 2 hours, 1 merge, 2 reads
+    assert m["ops_per_s"]["value"] == pytest.approx(5 / (2 * 5.0 + 4.0 + 2 * 0.5))
+    assert m["setup_s"]["value"] == 9.0
+    assert report.per_kind(ctx, mix)[1] == pytest.approx((5.0 * 4.0 * 0.5) ** (1 / 3))
+
+
 def test_benchmark_json_matches_the_report():
     from lakebench import report
 
@@ -153,9 +167,12 @@ def spark():
 def _tiny(name):
     from lakebench.analytics import Analytics
     from lakebench.dml import Dml
+    from lakebench.ingest_dml import IngestDml
     from lakebench.medallion import Medallion
 
     return {
+        "ingest_dml": lambda: IngestDml(Medallion(events_per_hour=300, warmup_hours=1),
+                                        Dml(scale=0.002, merge_rows=10)),
         "medallion_hourly": lambda: Medallion(events_per_hour=300),
         "analytics_mix": lambda: Analytics(
             scale=0.002, lanes=("tpch_q1", "ref_dup_detect", "window_topk")),
@@ -173,7 +190,7 @@ def _check_shape(final, trace):
         assert isinstance(got["value"], (int, float)) and got["value"] > 0, m["name"]
 
 
-@pytest.mark.parametrize("name", run.WORKLOADS)
+@pytest.mark.parametrize("name", run.WORKLOADS + run.PARTS)
 @pytest.mark.parametrize("trace", [False, True])
 def test_smoke_run_passes(spark, name, trace):
     res = run.run_one(name, 1, 0, trace, workload=_tiny(name), spark=spark)
@@ -183,7 +200,8 @@ def test_smoke_run_passes(spark, name, trace):
     json.dumps(final)  # the printed line is plain JSON
 
 
-def test_wrong_gold_count_fails(spark, monkeypatch):
+@pytest.mark.parametrize("name", ["medallion_hourly", "ingest_dml"])
+def test_wrong_gold_count_fails(spark, monkeypatch, name):
     orig = gen.CdcHours.hour
 
     def off_by_one(self, h):
@@ -192,8 +210,7 @@ def test_wrong_gold_count_fails(spark, monkeypatch):
         return b
 
     monkeypatch.setattr(gen.CdcHours, "hour", off_by_one)
-    final = run.run_one("medallion_hourly", 1, 0, False,
-                        workload=_tiny("medallion_hourly"), spark=spark)["final"]
+    final = run.run_one(name, 1, 0, False, workload=_tiny(name), spark=spark)["final"]
     assert not final["correct"] and final["failed"] >= 1
 
 
