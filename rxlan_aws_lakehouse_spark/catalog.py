@@ -85,9 +85,11 @@ def scan_units(sf_dir: str, table: str) -> int | None:
             if os.path.isfile(path):
                 files = [path]
             else:
+                # partitioned layouts nest files under key=value dirs
                 files = [
-                    os.path.join(path, f)
-                    for f in os.listdir(path)
+                    os.path.join(d, f)
+                    for d, _dirs, names in os.walk(path)
+                    for f in names
                     if f.endswith(".parquet")
                 ]
             units = sum(

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from .similarity import dot
 
@@ -113,14 +114,18 @@ def connected_components(
         .withColumn("comp", F.col("node"))
     )
     # Convergence check (r17): labels are node ids and only ever DECREASE
-    # (min of mins), so the label-sum is strictly monotone and "sum
-    # unchanged" ⟺ "no label changed" — one cheap aggregate over the
-    # just-checkpointed frame instead of the old join+filter+count probe
-    # (decimal(38,0): exact, no int64 overflow at any node-id scale).
+    # (min of mins), so for INTEGRAL ids the label-sum is strictly
+    # monotone and "sum unchanged" ⟺ "no label changed" — one cheap
+    # aggregate over the just-checkpointed frame instead of a
+    # join+filter+count probe (decimal(38,0): exact, no int64 overflow at
+    # any node-id scale). Other id types (strings, binary hashes) have no
+    # exact sum: each round joins old and new labels and stops when no
+    # label changed.
+    integral = isinstance(labels.schema["comp"].dataType, IntegralType)
     _sum = lambda df: df.agg(  # noqa: E731
         F.sum(F.col("comp").cast("decimal(38,0)"))
     ).collect()[0][0]
-    prev_sum = _sum(labels)
+    prev_sum = _sum(labels) if integral else None
     converged = False
     try:
         for _ in range(max_iter):
@@ -132,12 +137,17 @@ def connected_components(
                 .agg(F.min("comp").alias("comp"))
             )
             prop = prop.localCheckpoint(eager=True)  # truncate lineage per round
-            cur_sum = _sum(prop)
+            if integral:
+                cur_sum = _sum(prop)
+                done = cur_sum == prev_sum
+                prev_sum = cur_sum
+            else:
+                old = labels.select("node", F.col("comp").alias("old"))
+                done = prop.join(old, "node").filter("comp <> old").isEmpty()
             labels = prop
-            if cur_sum == prev_sum:
+            if done:
                 converged = True
                 break
-            prev_sum = cur_sum
     finally:
         sym.unpersist()
     if not converged:

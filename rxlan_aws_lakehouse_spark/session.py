@@ -72,8 +72,11 @@ def _install_worker_shim() -> None:
     # resolve the interpreter the workers would have used, and verify
     # THAT interpreter imports pyspark+py4j outside any zip when the
     # zip entries are gone (one ~0.5 s probe per driver process)
-    real = shutil.which(current) if current else None
-    if real is None:
+    if current:
+        real = shutil.which(current)
+        if real is None:
+            return  # caller-chosen interpreter we cannot probe: keep it
+    else:
         real = sys.executable
     env = dict(os.environ)
     env.pop("PYTHONPATH", None)

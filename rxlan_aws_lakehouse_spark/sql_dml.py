@@ -89,6 +89,17 @@ and the Python API can never drift):
   SELECT sees the new snapshot (a txn DataFrame pins its snapshot at
   read-planning time, by design).
 
+Read path: every registered-table read the router plans — the bare and
+``__ns__`` session views, ``VERSION AS OF`` / ``TIMESTAMP AS OF`` views,
+a MERGE's target and a MERGE source that is itself a registered table —
+is ``TxnTable.read``: the engine's native parquet snapshot scan, with
+deletion vectors, column mapping and mixed partition specs applied. So
+Spark plans them inside the JVM with its vectorized parquet reader and
+partition-directory pruning (plus dynamic partition pruning on a MERGE
+join whose source side is broadcast). ``format("txn")`` (sources/txn_source.py) is the public data-source
+surface — user ``spark.read`` / ``readStream``, streaming sinks and
+metadata tables; the router uses it only for ``DESCRIBE HISTORY``.
+
 Unsupported syntax raises ``ValueError`` naming the construct — never
 a silent partial apply. Registry lane: ``txn_sql_dml`` (queries/
 txn_live.py) proves SQL MERGE == ``merge_upsert`` on the same input
@@ -684,7 +695,7 @@ class TxnSqlRouter:
     def _refresh_view(self, name: str) -> None:
         key = self._key(name)
         t = self._tables[key]
-        df = self._spark.read.format("txn").load(t.root)
+        df = t.read(self._spark)
         ns, bare = key.split(".", 1)
         if ns == self._namespace:
             df.createOrReplaceTempView(bare)
@@ -861,16 +872,14 @@ class TxnSqlRouter:
         else:
             name, t = self._resolve(m.target)
             schema = self._target_schema(t)
-            tgt_raw = spark.read.format("txn").load(t.root)
+            tgt_raw = t.read(spark)
         tgt = tgt_raw.alias(m.t_alias)
         if m.source_sql.startswith("("):
             src = spark.sql(m.source_sql[1:-1].strip())
         elif self._tables.get(self._key(m.source_sql)) is not None:
             # a registered txn table (possibly ns-qualified): read the
             # live snapshot directly, no temp-view indirection
-            src = spark.read.format("txn").load(
-                self._tables[self._key(m.source_sql)].root
-            )
+            src = self._tables[self._key(m.source_sql)].read(spark)
         else:
             src = spark.table(m.source_sql)
         src = src.alias(m.s_alias)
@@ -1971,8 +1980,11 @@ class TxnSqlRouter:
                     f"{name.replace('.', '__')}__tt_{kind}_"
                     + re.sub(r"[^A-Za-z0-9]", "_", str(val))
                 )
-                self._spark.read.format("txn").option(kind, val).load(
-                    tbl.root
+                # a missing version raises FileNotFoundError naming it
+                from .sources.txn_source import _resolve_version
+
+                tbl.read(
+                    self._spark, _resolve_version(tbl, {kind: val})
                 ).createOrReplaceTempView(vname)
                 out.append(vname)
                 i += width + 4

@@ -2432,9 +2432,9 @@ class TxnTable:
         independent of discovery, so serializing them just adds their
         wall to every merge. The returned future is joined RIGHT BEFORE
         the commit publishes — a rejected batch still never lands, with
-        the identical error. Thread-local job properties are inherited
-        (``inheritable_thread_target``), so UI labels/cancel groups stay
-        correct.
+        the identical error. Thread-local job properties and the
+        session's tags are inherited (``inheritable_thread_target`` on
+        the frames' session), so UI labels/cancel groups stay correct.
 
         Returns ``None`` — degrade to the caller running ``validate()``
         inline — when any of ``frames`` contains a Python-DataSource
@@ -2442,10 +2442,11 @@ class TxnTable:
         by flipping a SESSION-scoped conf for the action span
         (sources/pushdown_guard.py), and a concurrent planner landing
         inside another action's conf-off window fails loudly with
-        DATA_SOURCE_PUSHDOWN_DISABLED (observed on the router-MERGE
-        lane, whose update set joins the format("txn") target view).
-        Plain plans — parquet scans, aggregates, local frames — have no
-        such window and overlap safely."""
+        DATA_SOURCE_PUSHDOWN_DISABLED (e.g. an update set built from a
+        user's ``spark.read.format("txn")`` frame). Plain plans —
+        parquet scans such as ``TxnTable.read`` and the SQL router's
+        MERGE, aggregates, local frames — have no such window and
+        overlap safely."""
         from concurrent.futures import ThreadPoolExecutor
 
         from pyspark import inheritable_thread_target
@@ -2459,7 +2460,8 @@ class TxnTable:
         except Exception:  # noqa: BLE001 - conservative: stay serial
             return None
         pool = ThreadPoolExecutor(max_workers=1)
-        fut = pool.submit(inheritable_thread_target(validate))
+        session = frames[0].sparkSession  # the update set: never None
+        fut = pool.submit(inheritable_thread_target(session)(validate))
         pool.shutdown(wait=False)
         return fut
 

@@ -68,3 +68,19 @@ def test_spread_noop_when_units_unknown(spark, monkeypatch):
     monkeypatch.delitem(
         catalog._SCAN_UNITS_CACHE, (SF_DIR, "lineitem"), raising=False
     )
+
+
+def test_scan_units_walks_partition_dirs(tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = tmp_path / "lineitem.parquet"
+    for part in ("p=1", "p=2/q=a"):
+        d = root / part
+        d.mkdir(parents=True)
+        pq.write_table(
+            pa.table({"x": list(range(10))}),
+            str(d / "part-0.parquet"),
+            row_group_size=5,
+        )
+    assert scan_units(str(tmp_path), "lineitem") == 4

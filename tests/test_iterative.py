@@ -119,3 +119,18 @@ def test_pagerank_dangling_drops_mass(spark):
     pr = {r["node"]: r["rank"] for r in pagerank(edges, iters=3).collect()}
     assert sum(pr.values()) < 1.0
     assert pr[3] > pr[2] > 0  # downstream accumulates
+
+
+def test_connected_components_string_ids_propagate_fully(spark):
+    """Non-numeric node ids have no exact label sum; convergence must
+    still wait until no label changes (a chain needs several rounds)."""
+    chain = [f"n{i:02d}" for i in range(8)]
+    edges = spark.createDataFrame(
+        list(zip(chain, chain[1:])) + [("x", "y")], "src string, dst string"
+    )
+    out = {
+        r["node"]: r["comp"]
+        for r in connected_components(edges, max_iter=20).collect()
+    }
+    assert {out[n] for n in chain} == {"n00"}
+    assert out["x"] == out["y"] == "x"

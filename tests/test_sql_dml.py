@@ -936,3 +936,108 @@ def test_foreign_attachment_merge(spark, tmp_path):
         )
     router.sql("DROP TABLE fd")
     router.sql("DROP TABLE fi")
+
+
+# -- router reads plan on TxnTable.read (native parquet scans) ----------
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+class TestNativeReadPath:
+    """Every registered-table read the router plans — session views,
+    time-travel views, the MERGE target and a registered MERGE source —
+    is the engine's own parquet snapshot scan, never the Python
+    ``format("txn")`` source."""
+
+    def test_select_and_merge_plan_parquet_scans(
+        self, spark, tmp_path, monkeypatch
+    ):
+        t = _mk(spark, tmp_path, "tgt", n=50)
+        src = _mk(spark, tmp_path, "src", n=60)
+        r = TxnSqlRouter(spark)
+        r.register("tgt", t)
+        r.register("src", src)
+        plan = _executed_plan(r.sql("SELECT k, v FROM tgt WHERE k = 7"))
+        assert "FileScan parquet" in plan
+        assert "(Python)" not in plan
+        captured = []
+        orig = TxnTable.merge_upsert
+
+        def spy(self, spark_, updates, *a, **kw):
+            captured.append(updates)
+            return orig(self, spark_, updates, *a, **kw)
+
+        monkeypatch.setattr(TxnTable, "merge_upsert", spy)
+        r.sql(
+            "MERGE INTO tgt t USING src s ON t.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET v = s.v + 1 "
+            "WHEN NOT MATCHED THEN INSERT *"
+        )
+        (updates,) = captured
+        plan = _executed_plan(updates)
+        assert "FileScan parquet" in plan
+        assert "(Python)" not in plan
+        got = dict(
+            (x["k"], x["v"]) for x in spark.table("tgt").collect()
+        )
+        assert len(got) == 60
+        assert got[3] == 31 and got[55] == 550
+
+    def test_dv_router_select_and_merge_skip_deleted_rows(
+        self, spark, tmp_path
+    ):
+        t = _mk(spark, tmp_path, n=40)
+        r = TxnSqlRouter(spark, strategy="dv")
+        r.register("tgt", t)
+        r.sql("DELETE FROM tgt WHERE k < 10")
+        assert t.has_deletion_vectors()
+        assert r.sql(
+            "SELECT count(*) AS n, min(k) AS lo FROM tgt"
+        ).collect()[0].asDict() == {"n": 30, "lo": 10}
+        spark.range(0, 20).select(
+            F.col("id").alias("k"),
+            F.lit(-1).cast("long").alias("v"),
+            F.lit("upd").alias("tag"),
+        ).createOrReplaceTempView("dv_ups")
+        res = r.sql(
+            "MERGE INTO tgt t USING dv_ups s ON t.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET *"
+        ).collect()[0]
+        assert res["operation"] == "merge_upsert_dv"
+        got = dict(
+            (x["k"], x["v"]) for x in spark.table("tgt").collect()
+        )
+        # deleted keys 0-9 are not resurrected by the matched update
+        assert sorted(got) == list(range(10, 40))
+        assert all(got[k] == -1 for k in range(10, 20))
+        assert got[20] == 200
+
+    def test_select_over_mixed_partition_specs(self, spark, tmp_path):
+        t = TxnTable(str(tmp_path / "evo"))
+        rows = lambda lo, hi: spark.range(lo, hi).select(  # noqa: E731
+            F.col("id").alias("k"),
+            (F.col("id") % 4).cast("string").alias("part"),
+            (F.col("id") % 3).cast("string").alias("yr"),
+        )
+        t.commit(rows(0, 100), partition_by=["part"])
+        t.append(rows(100, 150), partition_by=["yr"])
+        assert len(t._spec_groups(t.current_version())) == 2
+        r = TxnSqlRouter(spark)
+        r.register("evo", t)
+        got = r.sql("SELECT k, part, yr FROM evo").collect()
+        assert sorted(x["k"] for x in got) == list(range(150))
+        assert all(
+            x["part"] == str(x["k"] % 4) and x["yr"] == str(x["k"] % 3)
+            for x in got
+        )
+
+    def test_version_as_of_missing_version_raises(self, spark, tmp_path):
+        t = _mk(spark, tmp_path, n=3)
+        r = TxnSqlRouter(spark)
+        r.register("tgt", t)
+        with pytest.raises(FileNotFoundError, match="v00000099"):
+            r.sql("SELECT * FROM tgt VERSION AS OF 99")
+        n = r.sql("SELECT count(*) AS n FROM tgt VERSION AS OF 1")
+        assert n.collect()[0]["n"] == 3

@@ -2649,3 +2649,25 @@ class TestUpdateWhereDv:
             (7, 777, "update_postimage"),
         }
         assert v2 != v1
+
+
+def test_spawn_validation_inherits_session_tags(spark):
+    """Concurrent pre-commit validation runs on the frames' session: its
+    job tags reach the validation thread, with no missing-session
+    warning."""
+    import warnings
+
+    df = spark.range(3)
+    spark.addTag("merge-validation")
+    try:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            fut = TxnTable._spawn_validation(
+                lambda: (df.count(), spark.getTags()), df
+            )
+        assert fut is not None
+        n, tags = fut.result()
+    finally:
+        spark.removeTag("merge-validation")
+    assert n == 3
+    assert "merge-validation" in tags

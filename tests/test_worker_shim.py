@@ -61,3 +61,17 @@ def test_worker_resolves_pyspark_from_site(tmp_path):
     )
     assert out.returncode == 0, out.stderr
     assert ".zip" not in out.stdout
+
+
+def test_unresolvable_pyspark_python_is_left_alone(monkeypatch):
+    """A caller-chosen PYSPARK_PYTHON that cannot be resolved is kept:
+    the shim is not installed in its place."""
+    from rxlan_aws_lakehouse_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_NO_WORKER_SHIM", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_REAL_PYTHON", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_SITE_OK", raising=False)
+    monkeypatch.setenv("PYSPARK_PYTHON", "no-such-python-interpreter")
+    session._install_worker_shim()
+    assert os.environ["PYSPARK_PYTHON"] == "no-such-python-interpreter"
+    assert "SPARK_GRAFT_REAL_PYTHON" not in os.environ
