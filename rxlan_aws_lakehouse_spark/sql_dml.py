@@ -85,9 +85,13 @@ and the Python API can never drift):
   (unconditional UPDATE SET * / INSERT * / DELETE); other BY SOURCE
   forms are refused loudly — no single-commit primitive expresses
   them, and a quiet two-commit emulation would break atomicity.
-* Registered views are re-registered after every DML so a following
-  SELECT sees the new snapshot (a txn DataFrame pins its snapshot at
-  read-planning time, by design).
+* A registered table's session views read the snapshot that was
+  current when they were built. The router rebuilds them after each of
+  its own DML statements, and before any statement that names the
+  table once its snapshot has moved (a commit through the Python API,
+  a streaming sink or another session) — one pointer read per named
+  table. A ``spark.sql`` call that bypasses the router reads the views
+  as last built.
 
 Read path: every registered-table read the router plans — the bare and
 ``__ns__`` session views, ``VERSION AS OF`` / ``TIMESTAMP AS OF`` views,
@@ -96,9 +100,14 @@ is ``TxnTable.read``: the engine's native parquet snapshot scan, with
 deletion vectors, column mapping and mixed partition specs applied. So
 Spark plans them inside the JVM with its vectorized parquet reader and
 partition-directory pruning (plus dynamic partition pruning on a MERGE
-join whose source side is broadcast). ``format("txn")`` (sources/txn_source.py) is the public data-source
-surface — user ``spark.read`` / ``readStream``, streaming sinks and
-metadata tables; the router uses it only for ``DESCRIBE HISTORY``.
+join whose source side is broadcast). A single-table ``SELECT ...
+WHERE`` whose simple conjuncts let the manifest rule out files reads
+through ``TxnTable.read_pruned`` instead (manifest file skipping, then
+the same native scan); every other read lists the snapshot directory
+and prunes by partition directory and row-group stats. ``format("txn")``
+(sources/txn_source.py) is the public data-source surface — user
+``spark.read`` / ``readStream``, streaming sinks and metadata tables;
+the router uses it only for ``DESCRIBE HISTORY``.
 
 Unsupported syntax raises ``ValueError`` naming the construct — never
 a silent partial apply. Registry lane: ``txn_sql_dml`` (queries/
@@ -569,6 +578,8 @@ class TxnSqlRouter:
         self._spark = spark
         self._strategy = strategy
         self._tables: dict[str, TxnTable] = {}  # "ns.table" -> table
+        # "ns.table" -> the snapshot version its session views read
+        self._view_version: dict[str, str] = {}
         # foreign attachments ("ns.table" -> path): session views over
         # format("delta_import") / format("iceberg_import"), never
         # persisted.  Reads always; INSERT INTO appends (round 14)
@@ -679,6 +690,7 @@ class TxnSqlRouter:
         t = table if isinstance(table, TxnTable) else TxnTable(table)
         key = self._key(name)
         self._tables[key] = t
+        self._view_version.pop(key, None)  # a re-pointed name
         if view and t.current_version() is not None:
             self._refresh_view(key)
         if persist:
@@ -695,11 +707,36 @@ class TxnSqlRouter:
     def _refresh_view(self, name: str) -> None:
         key = self._key(name)
         t = self._tables[key]
-        df = t.read(self._spark)
+        version = t.current_version()
+        df = t.read(self._spark, version)
         ns, bare = key.split(".", 1)
         if ns == self._namespace:
             df.createOrReplaceTempView(bare)
         df.createOrReplaceTempView(self._mangled_view(key))
+        self._view_version[key] = version
+
+    def _sync_views(self, toks: list[str]) -> None:
+        """Rebuild the views of every registered table the statement
+        names (bare or ``ns.``-qualified) whose snapshot has moved since
+        they were built. Over-matching (a column that shares a table's
+        name) costs one pointer read, never a wrong view."""
+        keys = set()
+        for i, tok in enumerate(toks):
+            if not _IDENT_RE.match(tok):
+                continue
+            keys.add(self._key(tok))
+            if (
+                i + 2 < len(toks)
+                and toks[i + 1] == "."
+                and _IDENT_RE.match(toks[i + 2])
+            ):
+                keys.add(
+                    f"{tok.strip('`')}.{toks[i + 2].strip('`')}".lower()
+                )
+        for key in sorted(keys & self._tables.keys()):
+            cur = self._tables[key].current_version()
+            if cur is not None and cur != self._view_version.get(key):
+                self._refresh_view(key)
 
     def _resolve(self, name: str) -> tuple[str, TxnTable]:
         key = self._key(name)
@@ -730,6 +767,7 @@ class TxnSqlRouter:
             return self._spark.sql(statement)
         if not toks:
             raise ValueError("empty statement")
+        self._sync_views(toks)
         verb = toks[0].upper()
         strat = strategy or self._strategy
         if strat not in ("cow", "dv"):
@@ -815,6 +853,9 @@ class TxnSqlRouter:
                 [("use_namespace", self._namespace)],
                 "operation string, version string",
             )
+        pruned = self._pruned_select(toks)
+        if pruned is not None:
+            return self._spark.sql(pruned)
         rewritten = self._rewrite_reads(toks)
         if rewritten is not None:
             return self._spark.sql(rewritten)
@@ -1755,10 +1796,12 @@ class TxnSqlRouter:
         self._resolve(name)
         key = self._key(name)
         del self._tables[key]
+        self._view_version.pop(key, None)
         ns, bare = key.split(".", 1)
         if ns == self._namespace:
             self._spark.catalog.dropTempView(bare)
         self._spark.catalog.dropTempView(self._mangled_view(key))
+        self._spark.catalog.dropTempView(f"{self._mangled_view(key)}__pruned")
         if self._catalog_dir is not None:
             try:
                 os.unlink(
@@ -1918,6 +1961,85 @@ class TxnSqlRouter:
     # mistaken for ``ns.table`` when a namespace shares an alias name
     _TABLE_REF_PRECEDERS = frozenset({"FROM", "JOIN", ",", "(", None})
 
+    # depth-0 keywords that end a SELECT's WHERE clause
+    _WHERE_END = frozenset(
+        {"GROUP", "HAVING", "ORDER", "SORT", "CLUSTER", "DISTRIBUTE",
+         "LIMIT", "OFFSET", "WINDOW"}
+    )
+
+    def _pruned_select(self, toks: list[str]) -> str | None:
+        """``SELECT ... FROM <table> [[AS] alias] WHERE ...`` over ONE
+        live registered table — no subquery, join or set operation —
+        whose WHERE conjuncts let the manifest rule out files: bind the
+        table to ``read_pruned`` over the view's snapshot, so the scan
+        opens only the files whose min/max stats may match. The session
+        view lists every file of the snapshot. Returns the rewritten
+        statement, or None when the shape does not fit or no file is
+        skipped."""
+        ups = [t.upper() for t in toks]
+        n = len(toks)
+        if (
+            ups[0] != "SELECT"
+            or ups.count("SELECT") != 1
+            or ups.count("FROM") != 1
+            or {"JOIN", "UNION", "INTERSECT", "EXCEPT", "MINUS"} & set(ups)
+        ):
+            return None
+        f = ups.index("FROM")
+        if toks[:f].count("(") != toks[:f].count(")"):
+            return None  # FROM inside a call: EXTRACT(x FROM y)
+        i = f + 1
+        if i >= n or not _IDENT_RE.match(toks[i]):
+            return None
+        if i + 2 < n and toks[i + 1] == "." and _IDENT_RE.match(toks[i + 2]):
+            key = f"{toks[i].strip('`')}.{toks[i + 2].strip('`')}".lower()
+            j = i + 3
+        else:
+            key = self._key(toks[i])
+            j = i + 1
+        version = self._view_version.get(key)
+        if key not in self._tables or version is None:
+            return None
+        alias = [toks[j - 1]]  # the table's own name stays a qualifier
+        if j + 1 < n and ups[j] == "AS":
+            j += 1
+            if ups[j] == "WHERE":
+                return None
+        if j < n and ups[j] != "WHERE":
+            if not _IDENT_RE.match(toks[j]) or ups[j] in (
+                "VERSION", "TIMESTAMP", "TABLESAMPLE", "LATERAL"
+            ):
+                return None
+            alias = [toks[j]]
+            j += 1
+        if j >= n or ups[j] != "WHERE":
+            return None
+        end, depth = j + 1, 0
+        while end < n:
+            depth += toks[end] == "("
+            depth -= toks[end] == ")"
+            if depth == 0 and ups[end] in self._WHERE_END:
+                break
+            end += 1
+        triples = prune_triples_from_where(toks[j + 1 : end])
+        if not triples:
+            return None
+        cols = self._spark.table(self._mangled_view(key)).columns
+        low = {c.lower() for c in cols}
+        triples = [tr for tr in triples if tr[0].lower() in low]
+        if not triples:
+            return None
+        t = self._tables[key]
+        kept, total = t.pruned_files(triples, version)
+        if len(kept) == total:
+            return None
+        vname = f"{self._mangled_view(key)}__pruned"
+        # the view's column order (a partition column may sit last)
+        t.read_pruned(self._spark, triples, version).select(
+            *[F.col("`" + c.replace("`", "``") + "`") for c in cols]
+        ).createOrReplaceTempView(vname)
+        return _render(toks[:i] + [vname, "AS"] + alias + toks[j:])
+
     def _rewrite_reads(self, toks: list[str]) -> str | None:
         """Rewrite registered-table READ references for ``spark.sql``:
 
@@ -1925,9 +2047,10 @@ class TxnSqlRouter:
           ``ns.``-qualified) -> a pinned temp view — Delta's SQL
           time-travel syntax;
         * ``ns.table`` live references in table position -> the
-          qualified table's mangled temp view, refreshed now — temp
-          views are single-part names, so cross-namespace SELECTs
-          can't resolve the dotted form natively.
+          qualified table's mangled temp view (``_sync_views`` keeps
+          it current) — temp views are single-part names, so
+          cross-namespace SELECTs can't resolve the dotted form
+          natively.
 
         Returns the rewritten statement, or None when nothing matched
         (the statement passes through verbatim — no re-rendering risk
@@ -1980,19 +2103,18 @@ class TxnSqlRouter:
                     f"{name.replace('.', '__')}__tt_{kind}_"
                     + re.sub(r"[^A-Za-z0-9]", "_", str(val))
                 )
+                if kind == "timestamp":
+                    v = tbl.version_at(val)
+                else:
+                    v = val if val.startswith("v") else f"v{int(val):08d}"
                 # a missing version raises FileNotFoundError naming it
-                from .sources.txn_source import _resolve_version
-
-                tbl.read(
-                    self._spark, _resolve_version(tbl, {kind: val})
-                ).createOrReplaceTempView(vname)
+                tbl.read(self._spark, v).createOrReplaceTempView(vname)
                 out.append(vname)
                 i += width + 4
                 hit = True
             elif name is not None and width == 3:
                 # live qualified reference: route through the mangled
-                # view, refreshed to the current snapshot
-                self._refresh_view(name)
+                # view (``_sync_views`` has brought it up to date)
                 out.append(self._mangled_view(name))
                 i += width
                 hit = True

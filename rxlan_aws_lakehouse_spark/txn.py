@@ -1428,7 +1428,12 @@ class TxnTable:
         if v is None:
             raise FileNotFoundError(f"no committed version at {self.root}")
         data = os.path.join(self.root, _VERSIONS, v)
-        meta = self._meta(v)
+        try:
+            meta = self._meta(v)
+        except FileNotFoundError:
+            raise FileNotFoundError(
+                f"version {v} not found at {self.root}"
+            ) from None
         schema_json = meta.get("schema")
         schema = StructType.fromJson(schema_json) if schema_json else None
         cm = meta.get("column_mapping")

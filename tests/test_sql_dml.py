@@ -1041,3 +1041,114 @@ class TestNativeReadPath:
             r.sql("SELECT * FROM tgt VERSION AS OF 99")
         n = r.sql("SELECT count(*) AS n FROM tgt VERSION AS OF 1")
         assert n.collect()[0]["n"] == 3
+
+    def test_views_follow_commits_made_outside_the_router(
+        self, spark, tmp_path
+    ):
+        t = _mk(spark, tmp_path, "tgt", n=10)
+        src = _mk(spark, tmp_path, "src", n=3)
+        r = TxnSqlRouter(spark)
+        r.register("tgt", t)
+        r.register("src", src)
+
+        def count(ref):
+            return r.sql(
+                f"SELECT count(*) AS n, min(k) AS lo FROM {ref}"
+            ).collect()[0].asDict()
+
+        assert count("tgt") == {"n": 10, "lo": 0}
+        t.append(
+            spark.range(10, 15).select(
+                F.col("id").alias("k"),
+                (F.col("id") * 10).cast("long").alias("v"),
+                F.lit("late").alias("tag"),
+            )
+        )
+        assert count("tgt") == {"n": 15, "lo": 0}
+        assert count("default.tgt") == {"n": 15, "lo": 0}
+        t.delete_where_deferred(spark, F.col("k") < 3)
+        assert count("tgt") == {"n": 12, "lo": 3}
+        assert count("default.tgt") == {"n": 12, "lo": 3}
+        # the version the views were first built on is gone: they read
+        # the live snapshot, not the vacuumed one
+        assert t.vacuum(keep=1)
+        assert count("tgt") == {"n": 12, "lo": 3}
+        # a MERGE source subquery over a registered table sees its
+        # outside commit too
+        src.append(
+            spark.range(3, 4).select(
+                F.col("id").alias("k"),
+                F.lit(7).cast("long").alias("v"),
+                F.lit("src").alias("tag"),
+            )
+        )
+        r.sql(
+            "MERGE INTO tgt t USING (SELECT k, v, tag FROM src) s "
+            "ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v",
+            strategy="dv",
+        )
+        got = dict(
+            (x["k"], x["v"]) for x in r.sql("SELECT k, v FROM tgt").collect()
+        )
+        assert got[3] == 7 and got[4] == 40 and len(got) == 12
+
+    def test_single_table_select_skips_files_by_manifest(
+        self, spark, tmp_path
+    ):
+        t = TxnTable(str(tmp_path / "wide"))
+        t.commit(
+            spark.range(2000)
+            .repartitionByRange(8, "id")
+            .select(
+                F.col("id").alias("k"),
+                (F.col("id") % 7).alias("v"),
+            )
+        )
+        assert len(t.files()) == 8
+        r = TxnSqlRouter(spark)
+        r.register("wide", t)
+
+        def run(sql):
+            df = r.sql(sql)
+            return len(df.inputFiles()), [tuple(x) for x in df.collect()]
+
+        assert run("SELECT k, v FROM wide WHERE k = 1234") == (
+            1, [(1234, 1234 % 7)]
+        )
+        assert run(
+            "SELECT x.k FROM wide x WHERE k >= 1997 AND x.v >= 0 "
+            "ORDER BY x.k DESC LIMIT 2"
+        ) == (1, [(1999,), (1998,)])
+        assert run(
+            "SELECT wide.k FROM default.wide WHERE k < 2 ORDER BY k"
+        ) == (1, [(0,), (1,)])
+        # shapes the manifest cannot bound scan every file
+        assert run("SELECT k FROM wide WHERE k = 1 OR k = 1999")[0] == 8
+        assert run(
+            "SELECT count(*) FROM wide a JOIN wide b ON a.k = b.k "
+            "WHERE a.k = 3"
+        ) == (8, [(1,)])
+        # a partition column keeps the view's position (last) under *
+        pt = TxnTable(str(tmp_path / "parted"))
+        pt.commit(
+            spark.range(400)
+            .repartitionByRange(4, "id")
+            .select(
+                F.col("id").alias("k"),
+                (F.col("id") % 3).cast("string").alias("p"),
+                (F.col("id") * 2).alias("v"),
+            ),
+            partition_by=["p"],
+        )
+        r.register("parted", pt)
+        assert spark.table("parted").columns == ["k", "v", "p"]
+        df = r.sql("SELECT * FROM parted WHERE k = 5")
+        assert df.columns == ["k", "v", "p"]
+        assert [tuple(x) for x in df.collect()] == [(5, 10, "2")]
+        assert len(df.inputFiles()) < len(pt.files())
+        # the pruned scan still applies pending deletion vectors
+        t.delete_where_deferred(spark, F.col("k") == 1234)
+        assert r.sql("SELECT k FROM wide WHERE k = 1234").collect() == []
+        assert r.sql(
+            "SELECT count(*) AS n FROM wide WHERE k >= 1230 AND k < 1240"
+        ).collect()[0]["n"] == 9
