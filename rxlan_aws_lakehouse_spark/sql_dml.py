@@ -2021,18 +2021,21 @@ class TxnSqlRouter:
             if depth == 0 and ups[end] in self._WHERE_END:
                 break
             end += 1
+        # with no subquery or join, every WHERE column is the table's
         triples = prune_triples_from_where(toks[j + 1 : end])
-        if not triples:
-            return None
-        cols = self._spark.table(self._mangled_view(key)).columns
-        low = {c.lower() for c in cols}
-        triples = [tr for tr in triples if tr[0].lower() in low]
         if not triples:
             return None
         t = self._tables[key]
         kept, total = t.pruned_files(triples, version)
+        # the view's own scan already prunes partition directories: only
+        # a skip beyond those pays for a second scan to plan
+        parts = {c.lower() for c in t._meta(version).get("partition_by", [])}
+        on_parts = [tr for tr in triples if tr[0].lower() in parts]
+        if on_parts:
+            total = len(t.pruned_files(on_parts, version)[0])
         if len(kept) == total:
             return None
+        cols = self._spark.table(self._mangled_view(key)).columns
         vname = f"{self._mangled_view(key)}__pruned"
         # the view's column order (a partition column may sit last)
         t.read_pruned(self._spark, triples, version).select(
