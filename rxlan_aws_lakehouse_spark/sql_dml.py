@@ -2029,7 +2029,8 @@ class TxnSqlRouter:
         kept, total = t.pruned_files(triples, version)
         # the view's own scan already prunes partition directories: only
         # a skip beyond those pays for a second scan to plan
-        parts = {c.lower() for c in t._meta(version).get("partition_by", [])}
+        spec = t._meta(version).get("partition_by") or []
+        parts = {c.lower() for c in spec}
         on_parts = [tr for tr in triples if tr[0].lower() in parts]
         if on_parts:
             total = len(t.pruned_files(on_parts, version)[0])
