@@ -281,11 +281,13 @@ def _publish_last_checkpoint(
     older checkpoint — harmless for correctness (replay just reads a
     longer JSON tail) but below the CAS discipline the commit publish
     already holds (``_publish_commit``). This serializes the swap
-    behind an ``O_EXCL`` lockfile (same recipe as txn.py's
-    LocalFSPointer, stale locks stolen after ``stale_after``), re-reads
-    the current pointer INSIDE the lock, and refuses to move it
-    backward. Returns True when the pointer advanced, False when a
-    newer checkpoint already owned it."""
+    behind an ``O_EXCL``-created ``_last_checkpoint.lock``: a lock older
+    than ``stale_after`` seconds is taken to be a crashed holder's and is
+    stolen by renaming it aside (exactly one stealer wins the rename),
+    and waiting gives up with ``TimeoutError`` after ``timeout``
+    seconds. Inside the lock it re-reads the current pointer and refuses
+    to move it backward. Returns True when the pointer advanced, False
+    when a newer checkpoint already owned it."""
     last = os.path.join(log_dir, "_last_checkpoint")
     lock = f"{last}.lock"
     tmp = f"{last}.tmp-{os.getpid()}-{time.time_ns()}"

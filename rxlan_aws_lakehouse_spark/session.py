@@ -55,11 +55,18 @@ def _install_worker_shim() -> None:
     redundant zip entries. Guards: never override a caller-chosen
     PYSPARK_PYTHON, and only engage when this driver's own pyspark AND
     py4j already resolve OUTSIDE any zip in the interpreter the workers
-    will run (the same ``sys.executable``). Must run before the JVM
-    launches; a no-op afterwards."""
+    will run (the same ``sys.executable``), and there report this
+    driver's own ``pyspark.__version__``: the shim must never swap in a
+    site-packages pyspark that does not match the JVM. The probe runs
+    with the ``PYTHONPATH`` the shim leaves (zip entries removed, every
+    other entry kept), so an entry that shadows pyspark is probed too.
+    Must run before the JVM launches; a no-op afterwards."""
+    import fnmatch
     import shutil
     import subprocess
     import sys
+
+    import pyspark
 
     if os.environ.get("SPARK_GRAFT_NO_WORKER_SHIM"):
         return
@@ -70,8 +77,8 @@ def _install_worker_shim() -> None:
     if current.endswith("pyworker_shim.sh"):
         return  # already installed
     # resolve the interpreter the workers would have used, and verify
-    # THAT interpreter imports pyspark+py4j outside any zip when the
-    # zip entries are gone (one ~0.5 s probe per driver process)
+    # THAT interpreter imports this pyspark+py4j outside any zip when
+    # the zip entries are gone (one ~0.5 s probe per driver process)
     if current:
         real = shutil.which(current)
         if real is None:
@@ -79,7 +86,18 @@ def _install_worker_shim() -> None:
     else:
         real = sys.executable
     env = dict(os.environ)
-    env.pop("PYTHONPATH", None)
+    # the entries pyworker_shim.sh strips
+    path = [
+        p
+        for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p
+        and os.path.basename(p) != "pyspark.zip"
+        and not fnmatch.fnmatch(os.path.basename(p), "py4j-*-src.zip")
+    ]
+    if path:
+        env["PYTHONPATH"] = os.pathsep.join(path)
+    else:
+        env.pop("PYTHONPATH", None)
     try:
         probe = subprocess.run(
             [
@@ -87,15 +105,17 @@ def _install_worker_shim() -> None:
                 "-c",
                 "import pyspark, py4j; import sys; "
                 "sys.exit(1 if ('.zip' in (pyspark.__file__ or '') or "
-                "'.zip' in (py4j.__file__ or '')) else 0)",
+                "'.zip' in (py4j.__file__ or '')) else "
+                "print(pyspark.__version__))",
             ],
             env=env,
             capture_output=True,
+            text=True,
             timeout=60,
         )
     except Exception:
         return
-    if probe.returncode != 0:
+    if probe.returncode != 0 or probe.stdout.strip() != pyspark.__version__:
         return
     os.environ["PYSPARK_PYTHON"] = shim
     os.environ["SPARK_GRAFT_REAL_PYTHON"] = real

@@ -91,7 +91,15 @@ and the Python API can never drift):
   table once its snapshot has moved (a commit through the Python API,
   a streaming sink or another session) — one pointer read per named
   table. A ``spark.sql`` call that bypasses the router reads the views
-  as last built.
+  as last built, and that is the intended contract: such readers get
+  no per-query freshness. A temp view is a fixed plan over one
+  immutable snapshot, so a bypassing reader sees a whole, consistent
+  snapshot, only possibly an older one (and its scan fails once
+  ``vacuum`` removes that snapshot). Re-resolving the pointer on every
+  query would take the Python ``format("txn")`` source, whose per-query
+  planning in Python workers is the cost the native reads removed.
+  Readers that need the live snapshot use ``TxnSqlRouter.sql``,
+  ``TxnTable.read`` or ``spark.read.format("txn")``.
 
 Read path: every registered-table read the router plans — the bare and
 ``__ns__`` session views, ``VERSION AS OF`` / ``TIMESTAMP AS OF`` views,

@@ -6,24 +6,31 @@ commits it atomically (/root/reference/glue/bronze_to_silver_openweather.py:
 ``mode("overwrite")`` parquet gives up that property: the directory is
 deleted, then refilled, and a reader in between sees a torn (or empty)
 table. This module restores the Redshift guarantee with the mechanism
-Delta/Iceberg use — immutable data files + an atomically swapped pointer:
+Delta/Iceberg use — immutable data files + an atomically published pointer:
 
     <root>/
       _versions/v00000001/        immutable parquet snapshot (+ _meta.json)
       _versions/v00000002/
-      _LATEST                     tiny pointer file naming the live version
+      _log/_root                  names v00000001 (first commit)
+      _log/v00000001              names v00000002 (its child)
+      _LATEST                     hint: a hard link to the newest log entry
 
 Writers build the NEXT version directory in full (data + metadata manifest),
-then swap ``_LATEST`` via ``os.rename`` of a same-directory temp file —
-atomic on POSIX, so every reader resolves either the old snapshot or the new
-one, never a mixture. Old snapshots stay on disk until ``vacuum`` (readers
-that already resolved them keep working: their files are never mutated).
+then publish it with one put-if-absent, as Delta's commit log does: a fully
+written, fsynced file naming the new version is hard-linked to
+``_log/<parent>``. ``link`` fails when the name exists, so each parent gets
+at most one child and a second writer on the same parent loses with
+``ConcurrentCommitError``. Readers take the version ``_LATEST`` names and
+follow ``_log`` forward until there is no entry; they resolve either the
+old snapshot or the new one, never a mixture. Old snapshots stay on disk
+until ``vacuum`` (readers that already resolved them keep working: their
+files are never mutated).
 
-On an object store the rename becomes a conditional PUT / commit-service
-call (how Delta's S3 LogStore and Iceberg's catalog swap work); everything
-else — immutable version dirs, manifest metadata, optimistic concurrency on
-the expected parent version — carries over unchanged, which is why the
-upsert/compact logic below is written against snapshots, not paths.
+On an object store the link becomes a conditional PUT (If-None-Match) of
+the log entry; everything else — immutable version dirs, manifest metadata,
+optimistic concurrency on the expected parent version — carries over
+unchanged, which is why the upsert/compact logic below is written against
+snapshots, not paths.
 
 Each snapshot's ``_meta.json`` records the partition spec, so operations
 that rewrite the table (``merge_upsert``, ``compact``) re-apply it — a gold
@@ -60,7 +67,9 @@ _DV_DIR = "_dv"  # per-version deletion-vector parquet dir (rel, row_index)
 _CDF_DIR = "_cdf"  # per-version row-level change payload (Delta CDF shape)
 _CHANGE_TYPE = "_change_type"  # insert | update_preimage | update_postimage | delete
 _COMMIT_VERSION = "_commit_version"
-_LATEST = "_LATEST"
+_LATEST = "_LATEST"  # hint: hard link to the newest _log entry
+_LOG = "_log"  # put-if-absent commit log: _log/<parent> names its child
+_LOG_ROOT = "_root"  # the _log entry naming an empty table's first version
 # commit(expect_parent=...) sentinel: "resolve the head at commit time"
 # (None is a real value meaning "expect an empty table")
 _CURRENT = object()
@@ -745,10 +754,10 @@ class PointerBackend:
     dirs), which every store provides; the pointer swap is where
     linearizability lives — Delta's LogStore / Iceberg's catalog
     ``commit`` play exactly this role. Implementations: ``LocalFSPointer``
-    (O_EXCL lockfile + rename) here; an object-store deployment maps
-    ``compare_and_swap`` onto a conditional PUT (S3 If-Match / GCS
-    ``ifGenerationMatch`` / DynamoDB conditional write) with no other
-    code change."""
+    (put-if-absent log entries via ``link``) here; an object-store
+    deployment maps ``compare_and_swap`` onto a conditional PUT (S3
+    If-None-Match / If-Match, GCS ``ifGenerationMatch``, DynamoDB
+    conditional write) with no other code change."""
 
     def read(self, root: str) -> str | None:
         raise NotImplementedError
@@ -760,108 +769,99 @@ class PointerBackend:
         reads ``expect``; raise ``ConcurrentCommitError`` otherwise."""
         raise NotImplementedError
 
+    def forget(self, root: str, versions: list[str]) -> None:
+        """Drop what the backend keeps for ``versions``, which ``vacuum``
+        has removed (never the live one). Default: nothing to drop."""
+
 
 class LocalFSPointer(PointerBackend):
-    """POSIX CAS: an ``O_EXCL``-created lockfile serializes the
-    check-then-rename, making the swap a REAL compare-and-swap — two
-    writers interleaving between their version check and their rename
-    can no longer both publish (the round-5 race window). A lock left by
-    a crashed holder is stolen after ``stale_after`` seconds; the loser
-    of any interleaving gets ``ConcurrentCommitError`` and retries on
-    the new head, never silently overwriting the winner."""
+    """POSIX put-if-absent log. Publishing ``version`` on ``expect``
+    writes and fsyncs a temp file naming ``version``, then hard-links it
+    to ``_log/<expect>`` (``_log/_root`` for an empty table). ``link``
+    refuses an existing name, so of two writers on one parent exactly
+    one lands and the other gets ``ConcurrentCommitError``. The head is
+    checked first: an entry for a stale or never-published ``expect``
+    would be one no reader ever reaches.
 
-    def __init__(self, stale_after: float = 10.0, timeout: float = 30.0):
-        self.stale_after = stale_after
-        self.timeout = timeout
+    ``_LATEST`` is only a hint. After each publish it becomes a hard
+    link to the new entry (link to a temp name, rename over); the inode
+    it replaced is still linked from ``_log/``, so the rename frees
+    nothing. ``read`` starts at the hint and follows ``_log/<v>`` until
+    there is no entry, so a writer that died between the link and the
+    hint has still published. A plain-file ``_LATEST`` left by the
+    older lockfile protocol reads as a hint; the next commit replaces
+    it, and a leftover ``_LATEST.lock`` is ignored."""
 
-    def read(self, root: str) -> str | None:
+    @staticmethod
+    def _resolve(root: str) -> tuple[str | None, str | None]:
+        """(head, path of the log entry naming it, or None)."""
         try:
             with open(os.path.join(root, _LATEST)) as f:
-                return f.read().strip() or None
+                head = f.read().strip() or None
         except FileNotFoundError:
-            return None
+            head = None
+        entry = None
+        while True:
+            nxt = os.path.join(root, _LOG, head or _LOG_ROOT)
+            try:
+                with open(nxt) as f:
+                    head = f.read().strip()
+            except FileNotFoundError:
+                return head, entry
+            entry = nxt
+
+    @staticmethod
+    def _hint(root: str, entry: str) -> None:
+        tmp = os.path.join(root, f".{_LATEST}.{os.getpid()}.{time.time_ns()}")
+        os.link(entry, tmp)
+        os.rename(tmp, os.path.join(root, _LATEST))
+
+    def read(self, root: str) -> str | None:
+        return self._resolve(root)[0]
 
     def compare_and_swap(
         self, root: str, version: str, expect: str | None
     ) -> None:
-        lock = os.path.join(root, f"{_LATEST}.lock")
-        deadline = time.monotonic() + self.timeout
-        # Per-holder nonce written INTO the lockfile at acquire: release
-        # re-reads it and unlinks only if still ours, so a holder paused
-        # past stale_after (GC, SIGSTOP, scheduler stall) whose lock was
-        # stolen cannot delete the stealer's freshly created lock.
-        nonce = f"{os.getpid()}.{time.time_ns()}"
-        fd = None
-        while fd is None:
-            # Deadline bounds EVERY iteration — including the
-            # OSError-on-stat and successful-steal paths, which would
-            # otherwise spin unbounded under continuous lock churn.
-            if time.monotonic() > deadline:
-                raise ConcurrentCommitError(
-                    f"pointer lock at {lock} held past timeout"
-                )
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            except FileExistsError:
-                try:
-                    held = time.time() - os.path.getmtime(lock)
-                except OSError:
-                    continue  # holder released between EXISTS and stat
-                if held > self.stale_after:
-                    # crashed holder: steal by RENAME, not unlink — the
-                    # rename succeeds for exactly one stealer (atomic),
-                    # so a second stealer that stat'ed the OLD lock can
-                    # never delete the first stealer's freshly created
-                    # one (an unlink here would reopen the double-hold
-                    # race the lock exists to close).
-                    grave = f"{lock}.stale.{os.getpid()}.{time.time_ns()}"
-                    try:
-                        os.rename(lock, grave)
-                    except FileNotFoundError:
-                        continue  # someone else stole it first
-                    try:
-                        os.unlink(grave)
-                    except FileNotFoundError:
-                        pass
-                    continue
-                time.sleep(0.002)
-        try:
-            os.write(fd, nonce.encode("ascii"))
-            os.fsync(fd)
-            if self.read(root) != expect:
-                raise ConcurrentCommitError(
-                    f"table advanced past {expect!r}; retry on the new "
-                    "snapshot"
-                )
-            tmp = os.path.join(
-                root, f".{_LATEST}.{os.getpid()}.{time.time_ns()}"
+        if self.read(root) != expect:
+            raise ConcurrentCommitError(
+                f"table advanced past {expect!r}; retry on the new snapshot"
             )
-            with open(tmp, "w") as f:
-                f.write(version)
-                f.flush()
-                os.fsync(f.fileno())
-            os.rename(tmp, os.path.join(root, _LATEST))
+        log = os.path.join(root, _LOG)
+        os.makedirs(log, exist_ok=True)
+        entry = os.path.join(log, expect or _LOG_ROOT)
+        tmp = os.path.join(log, f".{version}.{os.getpid()}.{time.time_ns()}")
+        with open(tmp, "w") as f:
+            f.write(version)
+            f.flush()
+            os.fsync(f.fileno())
+        try:
+            os.link(tmp, entry)
+        except FileExistsError as e:
+            raise ConcurrentCommitError(
+                f"another commit on {expect!r} landed first; retry on the "
+                "new snapshot"
+            ) from e
         finally:
-            try:
-                # Ownership-checked release (ADVICE r7): unlink only if
-                # the lock PATH still resolves to the inode WE created —
-                # os.fstat on our held fd vs os.stat on the path, an
-                # identity check no content collision can fool. If we
-                # stalled past stale_after and a stealer replaced the
-                # lock, this leaves the stealer's lock intact instead of
-                # reopening the double-publish window. The stat→unlink
-                # gap remains a few µs vs the ≥10 s staleness horizon —
-                # unclosable with path-based unlink; the full close would
-                # be flock-based holding (kernel releases on crash), at
-                # the price of no live-holder steal.
-                ours = os.fstat(fd)
-                cur = os.stat(lock)
-                if (cur.st_ino, cur.st_dev) == (ours.st_ino, ours.st_dev):
-                    os.unlink(lock)
-            except OSError:
-                pass  # stolen/replaced mid-hold: not ours to remove
-            finally:
-                os.close(fd)
+            os.unlink(tmp)
+        fd = os.open(log, os.O_RDONLY)
+        try:
+            os.fsync(fd)
+        finally:
+            os.close(fd)
+        self._hint(root, entry)
+
+    def forget(self, root: str, versions: list[str]) -> None:
+        # Point the hint at the head first: an entry deleted below may be
+        # the one a stale hint (a writer died before renaming it) needs.
+        head, entry = self._resolve(root)
+        if entry is not None:
+            self._hint(root, entry)
+        for v in versions:
+            if v != head:
+                try:
+                    os.unlink(os.path.join(root, _LOG, v))
+                except FileNotFoundError:
+                    pass
 
 
 class _PreconditionFailed(Exception):
@@ -1053,6 +1053,20 @@ class TxnTable:
     # -- deletion vectors (round 8) ---------------------------------------
     def _dv_dir(self, version: str) -> str:
         return os.path.join(self.root, _VERSIONS, version, _DV_DIR)
+
+    def _read_dv(self, spark: SparkSession, version: str) -> DataFrame:
+        """The snapshot's deletion vector (``rel``, ``row_index``), read
+        by its explicit file list: Spark skips a path whose name starts
+        with ``_``, so reading the ``_dv`` directory itself logs "All
+        paths were ignored" on every read."""
+        d = self._dv_dir(version)
+        files = [
+            os.path.join(d, n) for n in sorted(os.listdir(d))
+            if n.endswith(".parquet")
+        ]
+        if not files:
+            return spark.createDataFrame([], "rel string, row_index long")
+        return spark.read.parquet(*files)
 
     # -- CHECK constraints ------------------------------------------------
     def constraints(self, version: str | None = None) -> dict[str, str]:
@@ -1392,10 +1406,9 @@ class TxnTable:
         join only on DV-carrying snapshots; the DV is usually tiny
         relative to data (it holds keys of DELETED rows, not data), and
         AQE broadcasts it while it fits."""
-        dv_dir = self._dv_dir(version)
-        if not os.path.isdir(dv_dir):
+        if not self.has_deletion_vectors(version):
             return df
-        dv = spark.read.parquet(dv_dir)
+        dv = self._read_dv(spark, version)
         cols = df.columns
         keyed = df.select(
             *cols,
@@ -1549,14 +1562,13 @@ class TxnTable:
         metadata-only commit at 100 TB: history keeps its layout, new
         data gets the new one, and predicates on a new spec column still
         prune old files through their column stats."""
-        dv_dir = self._dv_dir(version)
-        has_dv = os.path.isdir(dv_dir)
+        has_dv = self.has_deletion_vectors(version)
         df = self._scan_files(
             spark, version, rels, schema, meta_cols=has_dv
         )
         if not has_dv:
             return df
-        dv = spark.read.parquet(dv_dir)
+        dv = self._read_dv(spark, version)
         cols = [c for c in df.columns if c not in ("__rel", "__ri")]
         return df.join(
             dv,
@@ -2894,8 +2906,7 @@ class TxnTable:
                 else update_keys
             )
             candidates = self._merge_candidates(expect, all_keys, keys)
-            old_dv_dir = self._dv_dir(expect)
-            has_old_dv = os.path.isdir(old_dv_dir)
+            has_old_dv = self.has_deletion_vectors(expect)
             matched = None
             if candidates:
                 # Same file-skipping discovery as merge_upsert, but the
@@ -2907,7 +2918,7 @@ class TxnTable:
                     meta_cols=True,
                 )
                 if has_old_dv:
-                    old = spark.read.parquet(old_dv_dir)
+                    old = self._read_dv(spark, expect)
                     scan = scan.join(
                         old,
                         (scan["__rel"] == old["rel"])
@@ -2928,7 +2939,7 @@ class TxnTable:
                     dv = fresh_dv
                     if has_old_dv:
                         dv = dv.unionByName(
-                            spark.read.parquet(old_dv_dir)
+                            self._read_dv(spark, expect)
                         ).distinct()
                     # Row-level CDF, mirroring merge_upsert exactly: a
                     # pure-insert merge writes no payload (fresh files ARE
@@ -3513,10 +3524,9 @@ class TxnTable:
             scan = self._scan_files(
                 spark, expect, candidates, target_schema, meta_cols=True
             )
-            old_dv_dir = self._dv_dir(expect)
-            has_old_dv = os.path.isdir(old_dv_dir)
+            has_old_dv = self.has_deletion_vectors(expect)
             if has_old_dv:
-                old = spark.read.parquet(old_dv_dir)
+                old = self._read_dv(spark, expect)
                 scan = scan.join(
                     old,
                     (scan["__rel"] == old["rel"])
@@ -3534,7 +3544,7 @@ class TxnTable:
                 )
                 if has_old_dv:
                     dv = dv.unionByName(
-                        spark.read.parquet(old_dv_dir)
+                        self._read_dv(spark, expect)
                     ).distinct()
                 pre = matched.drop("__rel", "__ri")
                 updated = pre.select(
@@ -3702,7 +3712,7 @@ class TxnTable:
             target_schema = StructType.fromJson(self._meta(expect)["schema"])
             candidates, _total = self.pruned_files(prune or [], expect)
             pred = F.coalesce(condition.cast("boolean"), F.lit(False))
-            old_dv = self._dv_dir(expect)
+            has_old_dv = self.has_deletion_vectors(expect)
             fresh_matches = None
             if candidates:
                 # meta_cols binds __rel/__ri inside each spec-group scan
@@ -3720,8 +3730,8 @@ class TxnTable:
             if fresh_matches is None:
                 return expect  # nothing matched: the table is unchanged
             dv = fresh_matches
-            if os.path.isdir(old_dv):
-                dv = dv.unionByName(spark.read.parquet(old_dv))
+            if has_old_dv:
+                dv = dv.unionByName(self._read_dv(spark, expect))
             dv = dv.distinct()
             # CDF payload: the rows this commit NEWLY suppresses. The raw
             # scan sees rows an earlier vector already deleted (DV is
@@ -3736,9 +3746,9 @@ class TxnTable:
                         "row_index": F.col("__ri"),
                     }
                 ).drop("__rel", "__ri")
-                if os.path.isdir(old_dv):
+                if has_old_dv:
                     rows = rows.join(
-                        spark.read.parquet(old_dv),
+                        self._read_dv(spark, expect),
                         ["rel", "row_index"],
                         "left_anti",
                     )
@@ -3773,24 +3783,28 @@ class TxnTable:
         self, spark: SparkSession, max_retries: int = 2
     ) -> str:
         """Fold pending deletion vectors into the data: rewrite ONLY the
-        files the vector references (each keeps its surviving rows; a
-        fully-deleted file drops from the snapshot), carry every other
-        file by reference, clear the vector. After this, file-granular
-        writers are legal again. No-op when no vector is pending."""
+        files the vector references, carry every other file by reference,
+        clear the vector. Like Delta's deletion-vector purge, each touched
+        file's surviving rows become one new file in the same partition
+        directory (a fully-deleted file drops from the snapshot), so the
+        file layout does not depend on how Spark packs the scan. After
+        this, file-granular writers are legal again. No-op when no vector
+        is pending."""
 
         def attempt() -> str:
             expect = self.current_version()
             if expect is None:
                 raise FileNotFoundError(f"no committed version at {self.root}")
-            dv_dir = self._dv_dir(expect)
-            if not os.path.isdir(dv_dir):
+            if not self.has_deletion_vectors(expect):
                 return expect
+            meta = self._meta(expect)
             data_root = os.path.join(self.root, _VERSIONS, expect)
-            target_schema = StructType.fromJson(self._meta(expect)["schema"])
+            target_schema = StructType.fromJson(meta["schema"])
             current_files = set(self.files(expect))
             touched = sorted(
                 r["rel"]
-                for r in spark.read.parquet(dv_dir).select("rel").distinct().collect()
+                for r in self._read_dv(spark, expect)
+                .select("rel").distinct().collect()
                 if r["rel"] in current_files
             )
             carry = {
@@ -3798,17 +3812,58 @@ class TxnTable:
                 for rel in current_files
                 if rel not in set(touched)
             }
-            if touched:
-                kept = self._scan_rels(spark, expect, touched, target_schema)
-            else:
-                kept = _empty_df(spark, target_schema)
+
+            def rewrite(staging: str) -> None:
+                # Partitioning the write by the touched file's index gives
+                # each one its own output file; the files then move up out
+                # of the __file=<i> directories into their partition dir.
+                scan = self._scan_files(
+                    spark, expect, touched, target_schema, meta_cols=True
+                )
+                dv = self._read_dv(spark, expect)
+                cm = meta.get("column_mapping")
+                kept = scan.join(
+                    dv,
+                    (scan["__rel"] == dv["rel"])
+                    & (scan["__ri"] == dv["row_index"]),
+                    "left_anti",
+                ).select(
+                    *(
+                        F.col(c).alias(_cm_phys(cm, c))
+                        for c in target_schema.fieldNames()
+                    ),
+                    F.array_position(
+                        F.array(*map(F.lit, touched)), F.col("__rel")
+                    ).alias("__file"),
+                )
+                tmp = os.path.join(staging, "_purge")
+                kept.write.partitionBy(
+                    *(_cm_phys(cm, c) for c in meta.get("partition_by") or []),
+                    "__file",
+                ).parquet(tmp)
+                for d, _sub, names in os.walk(tmp):
+                    i = os.path.basename(d).removeprefix("__file=")
+                    part = os.path.join(
+                        staging, os.path.relpath(os.path.dirname(d), tmp)
+                    )
+                    for n in names:
+                        if n.endswith(".parquet"):
+                            os.makedirs(part, exist_ok=True)
+                            new = f"part-f{i}-{n.removeprefix('part-')}"
+                            os.rename(
+                                os.path.join(d, n), os.path.join(part, new)
+                            )
+                shutil.rmtree(tmp)
+
             return self.commit(
-                kept,
+                _empty_df(spark, target_schema),
+                metadata_only=True,
                 operation="materialize_deletes",
                 carry_files=carry,
                 carry_src=expect,
                 expect_parent=expect,
                 carry_dv=False,  # the whole point: the vector is folded in
+                aux_writer=rewrite if touched else None,
             )
 
         return self._with_retries(attempt, max_retries)
@@ -5032,7 +5087,10 @@ class TxnTable:
         changes_cursor: str | None = None,
         force: bool = False,
     ) -> list[str]:
-        """Drop old snapshots (never the live one), subject to two guards:
+        """Drop old snapshots (never the live one) and what the pointer
+        backend keeps for them (``LocalFSPointer``: their ``_log``
+        entries, after pointing the ``_LATEST`` hint at the head), subject
+        to two guards:
 
         * ``retain_hours`` — age-based retention (Delta VACUUM's window):
           snapshots committed within the last ``retain_hours`` survive even
@@ -5080,4 +5138,5 @@ class TxnTable:
         for v in candidates:
             shutil.rmtree(os.path.join(vdir, v), ignore_errors=True)
             removed.append(v)
+        self.pointer.forget(self.root, removed)
         return removed

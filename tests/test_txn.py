@@ -23,7 +23,7 @@ from rxlan_aws_lakehouse_spark import warehouse
 
 @pytest.fixture(params=["localfs", "etag"])
 def pointer(request):
-    """Both shipped PointerBackends: the POSIX lockfile CAS and the
+    """Both shipped PointerBackends: the POSIX put-if-absent log and the
     object-store-shaped conditional-PUT fake. The race/stress tests run
     over each to prove the seam isn't shaped around os.rename."""
     return (
@@ -1300,22 +1300,6 @@ def test_pointer_cas_prevents_double_publish(spark, tmp_path, pointer):
     assert t.current_version() == {"a": "v00000002", "b": "v00000003"}[winner]
 
 
-def test_pointer_stale_lock_is_stolen(spark, tmp_path):
-    """A lockfile left by a crashed holder must not wedge the table."""
-    from rxlan_aws_lakehouse_spark.txn import LocalFSPointer
-
-    t = TxnTable(str(tmp_path / "t"), pointer=LocalFSPointer(stale_after=0.2))
-    t.commit(_df(spark, 4))
-    lock = os.path.join(t.root, "_LATEST.lock")
-    with open(lock, "w"):
-        pass
-    stale = time.time() - 60
-    os.utime(lock, (stale, stale))
-    v = t.append(_df(spark, 2, tag="after"))  # steals the stale lock
-    assert t.current_version() == v
-    assert not os.path.exists(lock)  # released after the swap
-
-
 def test_concurrent_merges_both_land_via_retry(spark, tmp_path, pointer):
     """Two writers merging DISJOINT keys concurrently: the CAS loser
     retries against the winner's snapshot and both updates land. Runs
@@ -1600,69 +1584,135 @@ def test_bloom_cross_typed_literal_never_prunes(spark, tmp_path):
     assert got == 1
 
 
-def test_cas_deadline_bounds_every_loop_path(tmp_path, monkeypatch):
-    """Regression (ADVICE r6, txn.py:436): the OSError-on-stat path used
-    to ``continue`` without a deadline check, so continuous lock churn
-    could spin compare_and_swap forever. Every iteration is now bounded."""
+def _log_entries(root):
+    log = os.path.join(root, "_log")
+    out = {}
+    for n in sorted(os.listdir(log)):
+        with open(os.path.join(log, n)) as f:
+            out[n] = f.read()
+    return out
+
+
+def test_crash_between_log_link_and_hint_still_published(spark, tmp_path):
+    """A writer that dies after linking its log entry but before moving
+    the ``_LATEST`` hint has published: readers and the next commit both
+    see its version."""
+
+    class DiesBeforeHint(LocalFSPointer):
+        @staticmethod
+        def _hint(root, entry):
+            pass  # the process is gone before the hint moves
+
     root = str(tmp_path / "t")
-    os.makedirs(root, exist_ok=True)
-    lock = os.path.join(root, "_LATEST.lock")
-    with open(lock, "w"):
-        pass
+    TxnTable(root).commit(_df(spark, 4))
+    v2 = TxnTable(root, pointer=DiesBeforeHint()).append(
+        _df(spark, 3, tag="b")
+    )
+    with open(os.path.join(root, "_LATEST")) as f:
+        assert f.read() == "v00000001"  # the hint lags
+    t = TxnTable(root)
+    assert t.current_version() == v2
+    assert t.read(spark).count() == 7
+    v3 = t.append(_df(spark, 2, tag="c"))
+    assert t.current_version() == v3 and t.read(spark).count() == 9
+    with open(os.path.join(root, "_LATEST")) as f:
+        assert f.read() == v3
 
-    def always_raises(_path):
-        raise OSError("stat storm")
 
-    monkeypatch.setattr("os.path.getmtime", always_raises)
-    p = LocalFSPointer(stale_after=10.0, timeout=0.3)
+def test_legacy_plain_latest_reads_and_upgrades(spark, tmp_path):
+    """A table written by the older lockfile protocol (plain-file
+    ``_LATEST``, no ``_log/``) reads at that version, and a commit on
+    top of it works and leaves the hint a link into ``_log/``."""
+    root = str(tmp_path / "t")
+    t = TxnTable(root)
+    t.commit(_df(spark, 4))
+    v2 = t.append(_df(spark, 3, tag="b"))
+    shutil.rmtree(os.path.join(root, "_log"))
+    latest = os.path.join(root, "_LATEST")
+    os.unlink(latest)
+    with open(latest, "w") as f:
+        f.write(v2)
+    t = TxnTable(root)
+    assert t.current_version() == v2 and t.read(spark).count() == 7
+    v3 = t.append(_df(spark, 2, tag="c"))
+    assert t.current_version() == v3 and t.read(spark).count() == 9
+    assert _log_entries(root) == {v2: v3}
+    assert os.stat(latest).st_nlink == 2  # the hint is the entry's inode
+
+
+def test_leftover_lockfile_blocks_nothing(spark, tmp_path):
+    """A fresh ``_LATEST.lock`` left by the older protocol is ignored."""
+    t = TxnTable(str(tmp_path / "t"))
+    t.commit(_df(spark, 4))
+    lock = os.path.join(t.root, "_LATEST.lock")
+    with open(lock, "w") as f:
+        f.write("someone-else")
+    v = t.append(_df(spark, 2, tag="after"))
+    assert t.current_version() == v and t.read(spark).count() == 6
+
+
+def test_hint_naming_a_vacuumed_version_resolves_the_head(spark, tmp_path):
+    """The hint lags (a writer died before moving it), then vacuum
+    removes the version it names: reads still resolve the live head,
+    and the removed versions' log entries are gone."""
+    root = str(tmp_path / "t")
+    t = TxnTable(root)
+    for i in range(4):
+        t.commit(_df(spark, 5 + i))
+    head = t.current_version()
+    # hint back at v00000002, as if the last two writers died before it
+    os.link(os.path.join(root, "_log", "v00000001"), root + "/.hint")
+    os.rename(root + "/.hint", os.path.join(root, "_LATEST"))
+    assert t.current_version() == head
+    removed = t.vacuum(keep=1)
+    assert removed == ["v00000001", "v00000002", "v00000003"]
+    assert t.current_version() == head == "v00000004"
+    assert t.read(spark).count() == 8
+    assert _log_entries(root) == {"_root": "v00000001"}
+    v5 = t.append(_df(spark, 1, tag="z"))
+    assert TxnTable(root).current_version() == v5
+
+
+def test_stale_or_unpublished_expect_creates_no_entry(tmp_path):
+    """A CAS on a parent that is not the head raises and leaves
+    ``_log/`` exactly as it was: no entry a reader could never reach."""
+    root = str(tmp_path / "t")
+    p = LocalFSPointer()
+    p.compare_and_swap(root, "v00000001", None)
+    p.compare_and_swap(root, "v00000002", "v00000001")
+    before = _log_entries(root)
+    for stale in (None, "v00000001", "v00000007"):
+        with pytest.raises(ConcurrentCommitError):
+            p.compare_and_swap(root, "v00000009", stale)
+    assert _log_entries(root) == before
+    assert p.read(root) == "v00000002"
+
+
+def test_same_parent_put_if_absent_admits_one_writer(tmp_path):
+    """Two writers pass the head check on the same parent; the link
+    decides. The one that links second raises at once and leaves the
+    winner's entry and the hint intact."""
+    root = str(tmp_path / "t")
+    LocalFSPointer().compare_and_swap(root, "v00000001", None)
+
+    class Stalled(LocalFSPointer):
+        def read(self, r):
+            head = super().read(r)
+            # another writer publishes on the same parent while this one
+            # sits between its head check and its link
+            LocalFSPointer().compare_and_swap(r, "v00000002", head)
+            return head
+
     start = time.monotonic()
     with pytest.raises(ConcurrentCommitError):
-        p.compare_and_swap(root, "v00000001", None)
-    assert time.monotonic() - start < 5.0  # bounded, not a spin
-
-
-def test_stalled_holder_does_not_delete_stealers_lock(tmp_path):
-    """Regression (ADVICE r6, txn.py:478): a holder paused past
-    stale_after whose lock was stolen must NOT unlink the stealer's
-    freshly created lock on release — release is ownership-checked via
-    the nonce written into the lockfile at acquire."""
-    root = str(tmp_path / "t")
-    os.makedirs(root, exist_ok=True)
-    lock = os.path.join(root, "_LATEST.lock")
-    acquired = threading.Event()
-
-    class StallingPointer(LocalFSPointer):
-        def read(self, r):  # called while HOLDING the lock
-            acquired.set()
-            time.sleep(0.8)  # stall well past stale_after
-            return super().read(r)
-
-    a = StallingPointer(stale_after=0.2, timeout=5.0)
-    res: list[str] = []
-
-    def holder():
-        try:
-            a.compare_and_swap(root, "v00000001", None)
-            res.append("published")
-        except ConcurrentCommitError:
-            res.append("conflict")
-
-    th = threading.Thread(target=holder)
-    th.start()
-    assert acquired.wait(5.0)
-    time.sleep(0.4)  # A's lock is now stale
-    # B steals exactly as the code would: rename away, create its own
-    os.rename(lock, lock + ".stale.test")
-    os.unlink(lock + ".stale.test")
-    fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    os.write(fd, b"B-nonce")
-    os.close(fd)
-    th.join()
-    # A finished (either outcome) but B's lock MUST still be there,
-    # untouched — pre-fix, A's finally-unlink deleted it.
-    assert os.path.exists(lock)
-    with open(lock) as f:
-        assert f.read() == "B-nonce"
+        Stalled().compare_and_swap(root, "v00000003", "v00000001")
+    assert time.monotonic() - start < 5.0
+    assert LocalFSPointer().read(root) == "v00000002"
+    assert _log_entries(root) == {
+        "_root": "v00000001", "v00000001": "v00000002"
+    }
+    with open(os.path.join(root, "_LATEST")) as f:
+        assert f.read() == "v00000002"
 
 
 def test_etag_pointer_is_a_real_backend(spark, tmp_path):
@@ -1993,6 +2043,58 @@ def test_dv_survives_partition_overwrite(spark, tmp_path):
     v = t.materialize_deletes(spark)
     assert not t.has_deletion_vectors(v)
     assert t.read(spark).count() == 50
+
+
+def test_dv_read_by_file_list_returns_the_vector(spark, tmp_path):
+    """The deletion vector is read by its explicit file list: the same
+    (rel, row_index) rows a read of its directory returns, applied by the
+    snapshot read."""
+    t = _dv_table(spark, tmp_path)
+    t.delete_where_deferred(spark, F.col("k") < 10)
+    v = t.delete_where_deferred(spark, F.col("k") % 9 == 0)
+    got = sorted(tuple(r) for r in t._read_dv(spark, v).collect())
+    want = sorted(
+        tuple(r) for r in spark.read.parquet(t._dv_dir(v)).collect()
+    )
+    assert got == want and len(got) == 10 + 10  # k < 10, then 18, 27 .. 99
+    assert t.read(spark).count() == 80
+
+
+def test_materialize_rewrites_each_touched_file_into_one(spark, tmp_path):
+    """Deletion vectors purge file by file: each touched file's surviving
+    rows become exactly one new file in its partition directory and every
+    other file carries, whatever the core count."""
+    from rxlan_aws_lakehouse_spark.txn import TxnTable
+
+    t = TxnTable(str(tmp_path / "t"))
+    t.commit(
+        spark.range(400).select(
+            F.col("id").alias("k"),
+            F.when(F.col("id") < 200, "a").otherwise("b").alias("part"),
+        ).repartition(8),
+        partition_by=["part"],
+    )  # 16 files, 8 in each partition
+    t.delete_where_deferred(
+        spark, (F.col("part") == "a") & (F.col("k") % 7 == 0)
+    )
+    v = t.current_version()
+    before = t.file_entries(v)
+    deleted = {
+        r["rel"]: r["count"]
+        for r in t._read_dv(spark, v).groupBy("rel").count().collect()
+    }
+    want = sorted(tuple(r) for r in t.read(spark).collect())
+    t.materialize_deletes(spark)
+    after = t.file_entries()
+    assert {r for r in after if r in before} == set(before) - set(deleted)
+    fresh = {r: e for r, e in after.items() if r not in before}
+    assert sorted(os.path.dirname(r) for r in fresh) == sorted(
+        os.path.dirname(r) for r in deleted
+    )
+    assert sorted(e["rows"] for e in fresh.values()) == sorted(
+        before[r]["rows"] - n for r, n in deleted.items()
+    )
+    assert sorted(tuple(r) for r in t.read(spark).collect()) == want
 
 
 class TestSyncFull:
