@@ -86,18 +86,13 @@ def _install_worker_shim() -> None:
     else:
         real = sys.executable
     env = dict(os.environ)
-    # the entries pyworker_shim.sh strips
-    path = [
+    # keep what pyworker_shim.sh keeps (an empty PYTHONPATH is ignored)
+    env["PYTHONPATH"] = os.pathsep.join(
         p
         for p in env.get("PYTHONPATH", "").split(os.pathsep)
-        if p
-        and os.path.basename(p) != "pyspark.zip"
+        if os.path.basename(p) != "pyspark.zip"
         and not fnmatch.fnmatch(os.path.basename(p), "py4j-*-src.zip")
-    ]
-    if path:
-        env["PYTHONPATH"] = os.pathsep.join(path)
-    else:
-        env.pop("PYTHONPATH", None)
+    )
     try:
         probe = subprocess.run(
             [

@@ -843,6 +843,18 @@ class LocalFSPointer(PointerBackend):
             ) from e
         finally:
             os.unlink(tmp)
+        # The head check and the link are two steps. If another writer
+        # published on ``expect`` between them and vacuum then dropped
+        # ``expect`` with its entry, the link re-created that entry off
+        # the chain: take it back rather than report a lost commit.
+        if self.read(root) != version and not os.path.exists(
+            os.path.join(log, version)
+        ):
+            os.unlink(entry)
+            raise ConcurrentCommitError(
+                f"{expect!r} was superseded and vacuumed during the swap; "
+                "retry on the new snapshot"
+            )
         fd = os.open(log, os.O_RDONLY)
         try:
             os.fsync(fd)
@@ -1060,13 +1072,13 @@ class TxnTable:
         with ``_``, so reading the ``_dv`` directory itself logs "All
         paths were ignored" on every read."""
         d = self._dv_dir(version)
-        files = [
-            os.path.join(d, n) for n in sorted(os.listdir(d))
-            if n.endswith(".parquet")
-        ]
-        if not files:
-            return spark.createDataFrame([], "rel string, row_index long")
-        return spark.read.parquet(*files)
+        return spark.read.parquet(
+            *(
+                os.path.join(d, n)
+                for n in sorted(os.listdir(d))
+                if n.endswith(".parquet")
+            )
+        )
 
     # -- CHECK constraints ------------------------------------------------
     def constraints(self, version: str | None = None) -> dict[str, str]:

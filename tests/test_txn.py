@@ -1715,6 +1715,32 @@ def test_same_parent_put_if_absent_admits_one_writer(tmp_path):
         assert f.read() == "v00000002"
 
 
+def test_entry_relinked_after_vacuum_is_taken_back(tmp_path):
+    """Between a writer's head check and its link, another writer
+    publishes on the same parent and vacuum drops that parent with its
+    entry. The late link would re-create the entry off the chain; the
+    writer must take it back and raise instead of reporting a commit no
+    reader can reach."""
+    root = str(tmp_path / "t")
+    LocalFSPointer().compare_and_swap(root, "v00000001", None)
+
+    class Stalled(LocalFSPointer):
+        stalled = False
+
+        def read(self, r):
+            head = super().read(r)
+            if not self.stalled:
+                self.stalled = True
+                LocalFSPointer().compare_and_swap(r, "v00000002", head)
+                LocalFSPointer().forget(r, [head])
+            return head
+
+    with pytest.raises(ConcurrentCommitError):
+        Stalled().compare_and_swap(root, "v00000003", "v00000001")
+    assert LocalFSPointer().read(root) == "v00000002"
+    assert _log_entries(root) == {"_root": "v00000001"}
+
+
 def test_etag_pointer_is_a_real_backend(spark, tmp_path):
     """The conditional-PUT backend drives a full table lifecycle —
     commit, append, merge, clone (pointer travels), restore — with no
