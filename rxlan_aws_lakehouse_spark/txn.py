@@ -783,14 +783,13 @@ class LocalFSPointer(PointerBackend):
     checked first: an entry for a stale or never-published ``expect``
     would be one no reader ever reaches.
 
-    ``_LATEST`` is only a hint. After each publish it becomes a hard
-    link to the new entry (link to a temp name, rename over); the inode
-    it replaced is still linked from ``_log/``, so the rename frees
-    nothing. ``read`` starts at the hint and follows ``_log/<v>`` until
-    there is no entry, so a writer that died between the link and the
-    hint has still published. A plain-file ``_LATEST`` left by the
-    older lockfile protocol reads as a hint; the next commit replaces
-    it, and a leftover ``_LATEST.lock`` is ignored."""
+    ``_LATEST`` is only a hint: after each publish, a hard link to the
+    new entry is renamed over it. The inode it replaces is still linked
+    from ``_log/``, so the rename frees nothing. ``read`` follows
+    ``_log/<v>`` from the hint until there is no entry, so a writer that
+    died between the link and the hint has still published. A plain
+    ``_LATEST`` from the older lockfile protocol reads as a hint, and a
+    leftover ``_LATEST.lock`` is ignored."""
 
     @staticmethod
     def _resolve(root: str) -> tuple[str | None, str | None]:
@@ -863,17 +862,16 @@ class LocalFSPointer(PointerBackend):
         self._hint(root, entry)
 
     def forget(self, root: str, versions: list[str]) -> None:
-        # Point the hint at the head first: an entry deleted below may be
-        # the one a stale hint (a writer died before renaming it) needs.
-        head, entry = self._resolve(root)
+        # Point the hint at the head first: a stale hint (a writer died
+        # before moving it) may need an entry deleted below.
+        entry = self._resolve(root)[1]
         if entry is not None:
             self._hint(root, entry)
         for v in versions:
-            if v != head:
-                try:
-                    os.unlink(os.path.join(root, _LOG, v))
-                except FileNotFoundError:
-                    pass
+            try:
+                os.unlink(os.path.join(root, _LOG, v))
+            except FileNotFoundError:
+                pass
 
 
 class _PreconditionFailed(Exception):
