@@ -769,10 +769,6 @@ class PointerBackend:
         reads ``expect``; raise ``ConcurrentCommitError`` otherwise."""
         raise NotImplementedError
 
-    def forget(self, root: str, versions: list[str]) -> None:
-        """Drop what the backend keeps for ``versions``, which ``vacuum``
-        has removed (never the live one). Default: nothing to drop."""
-
 
 class LocalFSPointer(PointerBackend):
     """POSIX put-if-absent log. Publishing ``version`` on ``expect``
@@ -787,9 +783,14 @@ class LocalFSPointer(PointerBackend):
     new entry is renamed over it. The inode it replaces is still linked
     from ``_log/``, so the rename frees nothing. ``read`` follows
     ``_log/<v>`` from the hint until there is no entry, so a writer that
-    died between the link and the hint has still published. A plain
-    ``_LATEST`` from the older lockfile protocol reads as a hint, and a
-    leftover ``_LATEST.lock`` is ignored."""
+    died between the link and the hint has still published.
+
+    Log entries are never deleted, not even by ``vacuum`` (Delta keeps its
+    log past VACUUM too). So a hint that lags, or that a stalled writer
+    moves back, still walks forward to the head, and a writer that links
+    after its parent was superseded hits the winner's entry and raises.
+    A plain ``_LATEST`` from the older lockfile protocol reads as a hint,
+    and a leftover ``_LATEST.lock`` is ignored."""
 
     @staticmethod
     def _resolve(root: str) -> tuple[str | None, str | None]:
@@ -842,36 +843,12 @@ class LocalFSPointer(PointerBackend):
             ) from e
         finally:
             os.unlink(tmp)
-        # The head check and the link are two steps. If another writer
-        # published on ``expect`` between them and vacuum then dropped
-        # ``expect`` with its entry, the link re-created that entry off
-        # the chain: take it back rather than report a lost commit.
-        if self.read(root) != version and not os.path.exists(
-            os.path.join(log, version)
-        ):
-            os.unlink(entry)
-            raise ConcurrentCommitError(
-                f"{expect!r} was superseded and vacuumed during the swap; "
-                "retry on the new snapshot"
-            )
         fd = os.open(log, os.O_RDONLY)
         try:
             os.fsync(fd)
         finally:
             os.close(fd)
         self._hint(root, entry)
-
-    def forget(self, root: str, versions: list[str]) -> None:
-        # Point the hint at the head first: a stale hint (a writer died
-        # before moving it) may need an entry deleted below.
-        entry = self._resolve(root)[1]
-        if entry is not None:
-            self._hint(root, entry)
-        for v in versions:
-            try:
-                os.unlink(os.path.join(root, _LOG, v))
-            except FileNotFoundError:
-                pass
 
 
 class _PreconditionFailed(Exception):
@@ -2107,8 +2084,8 @@ class TxnTable:
         try:
             if metadata_only:
                 # metadata-only commit (deferred deletes): df supplies the
-                # schema and session; no data files are written — the
-                # snapshot is carried files + auxiliary payloads
+                # schema and session and writes nothing — the snapshot is
+                # carried files + what aux_writer stages
                 os.makedirs(staging, exist_ok=True)
             else:
                 writer.save(staging)
@@ -2125,10 +2102,12 @@ class TxnTable:
                                 for n, c in sorted(viol.items())
                             )
                         )
-            # Auxiliary NON-DATA payloads (deletion vectors): written into
-            # an underscore-prefixed subdir, which Spark's reader treats
-            # as hidden and the fresh-file enumeration below skips — the
-            # payload rides the same atomic staging->rename as the data.
+            # Auxiliary payloads ride the same atomic staging->rename as
+            # the data. Deletion vectors go into an underscore-prefixed
+            # subdir, which Spark's reader treats as hidden and the
+            # fresh-file enumeration skips. Any other .parquet file the
+            # writer stages is listed as fresh data: that is how
+            # materialize_deletes writes its per-file rewrite.
             if aux_writer is not None:
                 aux_writer(staging)
             return self._publish_staging(
@@ -5097,10 +5076,7 @@ class TxnTable:
         changes_cursor: str | None = None,
         force: bool = False,
     ) -> list[str]:
-        """Drop old snapshots (never the live one) and what the pointer
-        backend keeps for them (``LocalFSPointer``: their ``_log``
-        entries, after pointing the ``_LATEST`` hint at the head), subject
-        to two guards:
+        """Drop old snapshots (never the live one), subject to two guards:
 
         * ``retain_hours`` — age-based retention (Delta VACUUM's window):
           snapshots committed within the last ``retain_hours`` survive even
@@ -5148,5 +5124,4 @@ class TxnTable:
         for v in candidates:
             shutil.rmtree(os.path.join(vdir, v), ignore_errors=True)
             removed.append(v)
-        self.pointer.forget(self.root, removed)
         return removed

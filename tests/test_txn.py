@@ -1653,8 +1653,8 @@ def test_leftover_lockfile_blocks_nothing(spark, tmp_path):
 
 def test_hint_naming_a_vacuumed_version_resolves_the_head(spark, tmp_path):
     """The hint lags (a writer died before moving it), then vacuum
-    removes the version it names: reads still resolve the live head,
-    and the removed versions' log entries are gone."""
+    removes the version it names: reads still resolve the live head
+    through the log entries, which vacuum keeps."""
     root = str(tmp_path / "t")
     t = TxnTable(root)
     for i in range(4):
@@ -1668,7 +1668,10 @@ def test_hint_naming_a_vacuumed_version_resolves_the_head(spark, tmp_path):
     assert removed == ["v00000001", "v00000002", "v00000003"]
     assert t.current_version() == head == "v00000004"
     assert t.read(spark).count() == 8
-    assert _log_entries(root) == {"_root": "v00000001"}
+    assert _log_entries(root) == {
+        "_root": "v00000001", "v00000001": "v00000002",
+        "v00000002": "v00000003", "v00000003": "v00000004",
+    }
     v5 = t.append(_df(spark, 1, tag="z"))
     assert TxnTable(root).current_version() == v5
 
@@ -1715,14 +1718,13 @@ def test_same_parent_put_if_absent_admits_one_writer(tmp_path):
         assert f.read() == "v00000002"
 
 
-def test_entry_relinked_after_vacuum_is_taken_back(tmp_path):
-    """Between a writer's head check and its link, another writer
-    publishes on the same parent and vacuum drops that parent with its
-    entry. The late link would re-create the entry off the chain; the
-    writer must take it back and raise instead of reporting a commit no
-    reader can reach."""
+def test_late_link_after_vacuum_hits_the_winners_entry(spark, tmp_path):
+    """Between a writer's head check and its link, two commits land on
+    its parent and vacuum removes the parent. The parent's log entry
+    survives vacuum, so the late link fails and the chain is unchanged."""
     root = str(tmp_path / "t")
-    LocalFSPointer().compare_and_swap(root, "v00000001", None)
+    t = TxnTable(root)
+    t.commit(_df(spark, 4))
 
     class Stalled(LocalFSPointer):
         stalled = False
@@ -1731,14 +1733,50 @@ def test_entry_relinked_after_vacuum_is_taken_back(tmp_path):
             head = super().read(r)
             if not self.stalled:
                 self.stalled = True
-                LocalFSPointer().compare_and_swap(r, "v00000002", head)
-                LocalFSPointer().forget(r, [head])
+                t.append(_df(spark, 3, tag="b"))
+                t.append(_df(spark, 2, tag="c"))
+                assert t.vacuum(keep=1) == ["v00000001", "v00000002"]
             return head
 
     with pytest.raises(ConcurrentCommitError):
-        Stalled().compare_and_swap(root, "v00000003", "v00000001")
-    assert LocalFSPointer().read(root) == "v00000002"
-    assert _log_entries(root) == {"_root": "v00000001"}
+        Stalled().compare_and_swap(root, "v00000009", "v00000001")
+    assert _log_entries(root) == {
+        "_root": "v00000001", "v00000001": "v00000002",
+        "v00000002": "v00000003",
+    }
+    assert TxnTable(root).current_version() == "v00000003"
+    assert TxnTable(root).read(spark).count() == 9
+
+
+def test_writer_stalled_inside_hint_cannot_hide_the_head(spark, tmp_path):
+    """A writer links its hint temp name to its entry, then stalls before
+    the rename while two more commits and a vacuum run. Its late rename
+    moves the hint back to a vacuumed version; readers and the next
+    commit still reach the real head."""
+    root = str(tmp_path / "t")
+    TxnTable(root).commit(_df(spark, 4))
+
+    class StallsInHint(LocalFSPointer):
+        def _hint(self, r, entry):
+            tmp = os.path.join(r, ".hint-stalled")
+            os.link(entry, tmp)
+            other = TxnTable(r)
+            other.append(_df(spark, 3, tag="c"))
+            other.append(_df(spark, 2, tag="d"))
+            assert other.vacuum(keep=2) == ["v00000001", "v00000002"]
+            os.rename(tmp, os.path.join(r, "_LATEST"))
+
+    v2 = TxnTable(root, pointer=StallsInHint()).append(_df(spark, 5, tag="b"))
+    assert v2 == "v00000002"
+    with open(os.path.join(root, "_LATEST")) as f:
+        assert f.read() == v2  # the hint names a vacuumed version
+    t = TxnTable(root)
+    assert t.current_version() == "v00000004"
+    assert t.read(spark).count() == 14
+    v5 = t.append(_df(spark, 1, tag="e"))
+    assert TxnTable(root).current_version() == v5 == "v00000005"
+    assert TxnTable(root).read(spark).count() == 15
+    assert _log_entries(root)["v00000004"] == v5
 
 
 def test_etag_pointer_is_a_real_backend(spark, tmp_path):
