@@ -5,6 +5,17 @@ The reference's catalog is implicit (a single Redshift table created by DDL,
 parquet: explicit table list, column-pruned scans (callers select what they
 need; Catalyst prunes the parquet read), temp-view registration for the SQL
 surface.
+
+Schema cache: ``spark.read.parquet(path)`` runs one Spark job to read a
+footer and infer the schema, on every call. ``load`` infers each input's
+schema once per process and reads with ``spark.read.schema(s)`` after that,
+which launches no job. An entry is keyed by the input's path and stores,
+next to the schema, the input's signature: ``(size, mtime_ns, inode)`` of
+the file, or of every file under a partitioned directory. An input
+rewritten in place changes its signature and is inferred again; one entry
+per path bounds the cache by the number of tables. Inputs that cannot be
+stat'ed (a missing path, a non-local URI) are inferred on every load, as
+before.
 """
 
 from __future__ import annotations
@@ -51,16 +62,61 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Load one star-schema table. Parquet scan: pushdown + pruning are free."""
+    """Load one star-schema table. Parquet scan: pushdown + pruning are free.
+
+    The schema comes from the process's schema cache when the input's
+    signature (``(size, mtime_ns, inode)`` of each of its files) matches
+    the cached one; otherwise it is inferred, as ``spark.read.parquet``
+    does, and the entry for the path replaced. ``ensure_runtime_confs``
+    runs first on both paths, so ``nanosAsLong`` has the same value at
+    inference and at read time."""
     if table not in TABLES:
         raise KeyError(f"unknown table {table!r}; known: {TABLES}")
     ensure_runtime_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
-    if table == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    sig = _signature(path)
+    cached = _SCHEMA_CACHE.get(path)
+    if cached is not None and cached[0] == sig:
+        schema = cached[1]
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        schema = df.schema
+        if sig is not None:
+            _SCHEMA_CACHE[path] = (sig, schema)
+    if table == "events" and isinstance(schema["ts"].dataType, T.LongType):
         # TIMESTAMP(NANOS) read as long via nanosAsLong; truncate to micros
         # (matches DuckDB's NS->US cast semantics).
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
+
+
+# input path -> (signature, schema Spark inferred for it); see the module
+# docstring.
+_SCHEMA_CACHE: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def _input_files(path: str) -> list[str]:
+    """The files of one table input: the file itself, or every file under a
+    partitioned directory (``key=value`` dirs nest them), sorted."""
+    if os.path.isfile(path):
+        return [path]
+    return sorted(
+        os.path.join(d, f) for d, _dirs, names in os.walk(path) for f in names
+    )
+
+
+def _signature(path: str) -> tuple | None:
+    """``(file, size, mtime_ns, inode)`` of every file of the input, or None
+    when it has none or one cannot be stat'ed."""
+    try:
+        sig = []
+        for f in _input_files(path):
+            st = os.stat(f)
+            sig.append((f, st.st_size, st.st_mtime_ns, st.st_ino))
+    except OSError:
+        return None
+    return tuple(sig) or None
 
 
 # (sf_dir, table) -> row-group count; the star-schema inputs are immutable
@@ -82,16 +138,7 @@ def scan_units(sf_dir: str, table: str) -> int | None:
             import pyarrow.parquet as pq  # deferred: keeps worker spawn light
 
             path = os.path.join(sf_dir, f"{table}.parquet")
-            if os.path.isfile(path):
-                files = [path]
-            else:
-                # partitioned layouts nest files under key=value dirs
-                files = [
-                    os.path.join(d, f)
-                    for d, _dirs, names in os.walk(path)
-                    for f in names
-                    if f.endswith(".parquet")
-                ]
+            files = [f for f in _input_files(path) if f.endswith(".parquet")]
             units = sum(
                 pq.ParquetFile(f).metadata.num_row_groups for f in files
             ) or None

@@ -48,6 +48,7 @@ import json
 import os
 import posixpath
 import struct
+import tempfile
 import time
 from datetime import date as _date, datetime as _datetime
 from urllib.parse import unquote
@@ -570,6 +571,41 @@ def export_iceberg(
     }
 
 
+def _publish_metadata(mdir: str, version: int, meta: dict) -> None:
+    """Publish ``meta`` as ``mdir/v{version}.metadata.json`` by atomic
+    create-if-absent (the HadoopTables commit point), then point
+    ``version-hint.text`` at it.
+
+    The JSON goes to a fresh ``mkstemp`` file, so two writers in one
+    process never share a temp file. It is fsynced, hard-linked to its
+    final name (``link`` refuses an existing name), and the directory is
+    fsynced, so the published file is complete and durable before the
+    hint names it. Raises ``FileExistsError`` when the version is already
+    published; each caller maps that to its own error. The hint is
+    advisory: readers take the highest published version."""
+    mp = os.path.join(mdir, f"v{version}.metadata.json")
+    fd, tmp = tempfile.mkstemp(dir=mdir, prefix=f".v{version}.metadata.json.")
+    try:
+        with os.fdopen(fd, "w") as f:
+            os.fchmod(f.fileno(), 0o644)  # mkstemp's 0600 would hide it
+            json.dump(meta, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.link(tmp, mp)
+    finally:
+        os.unlink(tmp)
+    dfd = os.open(mdir, os.O_RDONLY)
+    try:
+        os.fsync(dfd)
+    finally:
+        os.close(dfd)
+    fd, tmp = tempfile.mkstemp(dir=mdir, prefix=".version-hint.text.")
+    with os.fdopen(fd, "w") as f:
+        os.fchmod(f.fileno(), 0o644)
+        f.write(str(version))
+    os.replace(tmp, os.path.join(mdir, "version-hint.text"))
+
+
 def _write_sync_state(dest: str, state: dict) -> None:
     p = os.path.join(dest, _SYNC_STATE)
     tmp = f"{p}.tmp-{os.getpid()}"
@@ -938,23 +974,14 @@ def export_iceberg_sync(
     mdir = os.path.join(dest, "metadata")
     cur_v = dmeta_v
     mp = os.path.join(mdir, f"v{cur_v + 1}.metadata.json")
-    tmp = f"{mp}.tmp-{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(new_meta, f)
     try:
-        os.link(tmp, mp)
+        _publish_metadata(mdir, cur_v + 1, new_meta)
     except FileExistsError:
-        os.unlink(tmp)
         raise RuntimeError(
             f"mirror {dest} advanced concurrently while syncing "
             f"(v{cur_v + 1}.metadata.json already exists) — it was "
             "modified out-of-band; re-bootstrap"
         ) from None
-    os.unlink(tmp)
-    hint_p = os.path.join(mdir, "version-hint.text")
-    with open(f"{hint_p}.tmp-{os.getpid()}", "w") as f:
-        f.write(str(cur_v + 1))
-    os.replace(f"{hint_p}.tmp-{os.getpid()}", hint_p)
 
     _write_sync_state(
         dest,
@@ -1709,24 +1736,12 @@ def append_iceberg(spark, path: str, df, _stage_only: bool = False) -> dict:
             # never a publish-time re-scan (a commit racing in between
             # read and publish would be silently built over)
             mdir = os.path.join(path, "metadata")
-            hint_p = os.path.join(mdir, "version-hint.text")
             cur_v = head_v
-            mp = os.path.join(
-                path, "metadata", f"v{cur_v + 1}.metadata.json"
-            )
-            tmp = f"{mp}.tmp-{os.getpid()}"
-            with open(tmp, "w") as f:
-                json.dump(new_meta, f)
             try:
                 # atomic create-if-absent: the HadoopTables commit rule
-                os.link(tmp, mp)
+                _publish_metadata(mdir, cur_v + 1, new_meta)
             except FileExistsError:
-                os.unlink(tmp)
                 continue  # lost the race: re-read the head, retry
-            os.unlink(tmp)
-            with open(f"{hint_p}.tmp-{os.getpid()}", "w") as f:
-                f.write(str(cur_v + 1))
-            os.replace(f"{hint_p}.tmp-{os.getpid()}", hint_p)
             return {
                 "snapshot_id": sid,
                 "snapshot_seq": seq,
@@ -2113,20 +2128,10 @@ def restore_iceberg(spark, path: str, snapshot_id: int) -> dict:
             meta.get("snapshot-log") or []
         ) + [{"timestamp-ms": now_ms, "snapshot-id": snapshot_id}]
         mdir = os.path.join(path, "metadata")
-        mp = os.path.join(mdir, f"v{head_v + 1}.metadata.json")
-        tmp = f"{mp}.tmp-{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(new_meta, f)
         try:
-            os.link(tmp, mp)
+            _publish_metadata(mdir, head_v + 1, new_meta)
         except FileExistsError:
-            os.unlink(tmp)
             continue  # lost the race: re-read the head, retry
-        os.unlink(tmp)
-        hint_p = os.path.join(mdir, "version-hint.text")
-        with open(f"{hint_p}.tmp-{os.getpid()}", "w") as f:
-            f.write(str(head_v + 1))
-        os.replace(f"{hint_p}.tmp-{os.getpid()}", hint_p)
         return {
             "snapshot_id": snapshot_id,
             "previous_snapshot_id": prev,
@@ -2254,20 +2259,10 @@ def overwrite_iceberg(spark, path: str, df) -> dict:
                 staged["n_rows"]
             )
         mdir = os.path.join(path, "metadata")
-        mp = os.path.join(mdir, f"v{head_v + 1}.metadata.json")
-        tmp = f"{mp}.tmp-{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(new_meta, f)
         try:
-            os.link(tmp, mp)
+            _publish_metadata(mdir, head_v + 1, new_meta)
         except FileExistsError:
-            os.unlink(tmp)
             continue  # lost the race: re-read the head, retry
-        os.unlink(tmp)
-        hint_p = os.path.join(mdir, "version-hint.text")
-        with open(f"{hint_p}.tmp-{os.getpid()}", "w") as f:
-            f.write(str(head_v + 1))
-        os.replace(f"{hint_p}.tmp-{os.getpid()}", hint_p)
         return {
             "snapshot_id": sid,
             "snapshot_seq": seq,
@@ -3242,20 +3237,10 @@ def _row_level_iceberg(
                     int(upd_staged["n_rows"]) if upd_staged else 0
                 )
             mdir = os.path.join(path, "metadata")
-            mp = os.path.join(mdir, f"v{head_v + 1}.metadata.json")
-            tmp = f"{mp}.tmp-{os.getpid()}"
-            with open(tmp, "w") as f:
-                json.dump(new_meta, f)
             try:
-                os.link(tmp, mp)
+                _publish_metadata(mdir, head_v + 1, new_meta)
             except FileExistsError:
-                os.unlink(tmp)
                 continue  # lost the race: re-read the head, retry
-            os.unlink(tmp)
-            hint_p = os.path.join(mdir, "version-hint.text")
-            with open(f"{hint_p}.tmp-{os.getpid()}", "w") as f:
-                f.write(str(head_v + 1))
-            os.replace(f"{hint_p}.tmp-{os.getpid()}", hint_p)
             return {
                 "snapshot_id": sid,
                 "snapshot_seq": seq,
@@ -3489,23 +3474,13 @@ def rewrite_manifests_iceberg(spark, path: str) -> dict:
         snap["first-row-id"] = first_rid
         new_meta["next-row-id"] = first_rid
     mdir = os.path.join(path, "metadata")
-    mp = os.path.join(mdir, f"v{head_v + 1}.metadata.json")
-    tmp = f"{mp}.tmp-{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(new_meta, f)
     try:
-        os.link(tmp, mp)
+        _publish_metadata(mdir, head_v + 1, new_meta)
     except FileExistsError:
-        os.unlink(tmp)
         raise ValueError(
             "cannot rewrite manifests: lost the metadata race; "
             "re-run against the new state"
         )
-    os.unlink(tmp)
-    hint_p = os.path.join(mdir, "version-hint.text")
-    with open(f"{hint_p}.tmp-{os.getpid()}", "w") as f:
-        f.write(str(head_v + 1))
-    os.replace(f"{hint_p}.tmp-{os.getpid()}", hint_p)
     return {
         "snapshot_id": sid,
         "snapshot_seq": seq,
@@ -3846,23 +3821,13 @@ def compact_data_files_iceberg(
         meta.get("snapshot-log") or []
     ) + [{"timestamp-ms": now_ms, "snapshot-id": sid}]
     mdir = os.path.join(path, "metadata")
-    mp = os.path.join(mdir, f"v{head_v + 1}.metadata.json")
-    tmp = f"{mp}.tmp-{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(new_meta, f)
     try:
-        os.link(tmp, mp)
+        _publish_metadata(mdir, head_v + 1, new_meta)
     except FileExistsError:
-        os.unlink(tmp)
         raise ValueError(
             "cannot compact: lost the metadata race; re-run against "
             "the new state"
         )
-    os.unlink(tmp)
-    hint_p = os.path.join(mdir, "version-hint.text")
-    with open(f"{hint_p}.tmp-{os.getpid()}", "w") as f:
-        f.write(str(head_v + 1))
-    os.replace(f"{hint_p}.tmp-{os.getpid()}", hint_p)
     return {
         "snapshot_id": sid,
         "snapshot_seq": seq,
@@ -3976,23 +3941,13 @@ def expire_snapshots_iceberg(
         int(time.time() * 1000),
     )
     mdir = os.path.join(path, "metadata")
-    mp = os.path.join(mdir, f"v{head_v + 1}.metadata.json")
-    tmp = f"{mp}.tmp-{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(new_meta, f)
     try:
-        os.link(tmp, mp)
+        _publish_metadata(mdir, head_v + 1, new_meta)
     except FileExistsError:
-        os.unlink(tmp)
         raise ValueError(
             "cannot expire snapshots: lost the metadata race; re-run "
             "against the new state"
         )
-    os.unlink(tmp)
-    hint_p = os.path.join(mdir, "version-hint.text")
-    with open(f"{hint_p}.tmp-{os.getpid()}", "w") as f:
-        f.write(str(head_v + 1))
-    os.replace(f"{hint_p}.tmp-{os.getpid()}", hint_p)
     n_del = 0
     for p in sorted(doomed):
         try:

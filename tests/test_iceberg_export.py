@@ -877,6 +877,75 @@ def test_sync_publish_is_create_if_absent(spark, tmp_path, monkeypatch):
         assert json.load(f) == {"committed": "by someone else"}
 
 
+def test_racing_publishers_of_one_version(spark, tmp_path, monkeypatch):
+    """Two threads of one process publish the same metadata version
+    (both expire snapshots from the same head; a barrier holds each at
+    its link). One lands, the other gets its caller's lost-race error,
+    and the published file is the winner's complete JSON: each writer
+    has a temp file of its own, and none is left behind."""
+    import threading
+
+    import rxlan_aws_lakehouse_spark.iceberg_export as ie
+    from rxlan_aws_lakehouse_spark.iceberg_import import (
+        load_table_metadata_versioned,
+    )
+
+    t = TxnTable(str(tmp_path / "t"))
+    t.commit(spark.createDataFrame([(1, "a")], "k INT, s STRING"))
+    dest = str(tmp_path / "ice")
+    export_iceberg(t, dest)
+    ie.append_iceberg(
+        spark, dest, spark.createDataFrame([(2, "b")], "k INT, s STRING")
+    )
+    _, head = load_table_metadata_versioned(dest)
+    mdir = os.path.join(dest, "metadata")
+    target = os.path.join(mdir, f"v{head + 1}.metadata.json")
+    barrier = threading.Barrier(2, timeout=60)
+    real_link = os.link
+    linked = {}  # thread name -> the JSON text its link published
+
+    def link(src, dst, *args, **kwargs):
+        if dst != target:
+            return real_link(src, dst, *args, **kwargs)
+        with open(src) as f:
+            text = f.read()
+        barrier.wait()
+        real_link(src, dst, *args, **kwargs)
+        linked[threading.current_thread().name] = text
+
+    monkeypatch.setattr(ie.os, "link", link)
+    results, errors = {}, {}
+
+    def run():
+        name = threading.current_thread().name
+        try:
+            results[name] = ie.expire_snapshots_iceberg(
+                spark, dest, older_than_ms=1 << 62
+            )
+        except Exception as e:  # noqa: BLE001 - the test inspects it
+            errors[name] = e
+
+    threads = [threading.Thread(target=run, name=n) for n in ("a", "b")]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=120)
+        assert not th.is_alive()
+    assert len(results) == 1 and len(errors) == 1, (results, errors)
+    (err,) = errors.values()
+    assert isinstance(err, ValueError)
+    assert "lost the metadata race" in str(err)
+    (winner,) = results
+    assert set(linked) == {winner}
+    with open(target) as f:
+        assert f.read() == linked[winner]
+    meta, v = load_table_metadata_versioned(dest)
+    assert v == head + 1 and len(meta["snapshots"]) == 1
+    with open(os.path.join(mdir, "version-hint.text")) as f:
+        assert f.read() == str(head + 1)
+    assert not [n for n in os.listdir(mdir) if n.startswith(".") or "tmp" in n]
+
+
 def test_sync_never_reminted_retired_id_after_plain_overwrite(
     spark, tmp_path
 ):

@@ -6,8 +6,9 @@ deployment shape is separate driver PROCESSES hammering one pointer,
 and OS-level file-lock/rename semantics are exactly where lakehouse
 formats historically break. These tests spawn real ``python``
 subprocesses, each committing through the full ``commit_staged`` path
-(staging, per-file stats, manifest assembly, version-slot rename,
-O_EXCL-lock CAS) with ZERO library-level retries — every
+(staging, per-file stats, manifest assembly, version-slot rename, and
+the commit point: the put-if-absent link of a ``_log`` entry naming the
+new version) with ZERO library-level retries — every
 ``ConcurrentCommitError`` is surfaced to the child and counted — and
 then assert the serializability contract: every commit lands exactly
 once, the published lineage is a single chain containing all of them,
