@@ -1736,10 +1736,8 @@ def append_iceberg(spark, path: str, df, _stage_only: bool = False) -> dict:
             # never a publish-time re-scan (a commit racing in between
             # read and publish would be silently built over)
             mdir = os.path.join(path, "metadata")
-            cur_v = head_v
             try:
-                # atomic create-if-absent: the HadoopTables commit rule
-                _publish_metadata(mdir, cur_v + 1, new_meta)
+                _publish_metadata(mdir, head_v + 1, new_meta)
             except FileExistsError:
                 continue  # lost the race: re-read the head, retry
             return {
