@@ -64,6 +64,9 @@ from .txn import (
     _cm_fields,
     _cm_phys,
     _file_column_stats,
+    _fsync_dir,
+    _staged,
+    validate_merge_keys,
 )
 
 _PLAIN_PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -240,11 +243,12 @@ def _has_log(log_dir: str) -> bool:
 
 
 def _publish_commit(tmp: str, log_path: str) -> None:
-    """ATOMIC create-if-absent publish of a log commit: ``os.link``
-    fails with EEXIST when the slot is taken (POSIX ``os.rename``
-    would silently OVERWRITE a concurrent writer's same-numbered
-    commit — the lost-update race Delta's LogStores exist to close;
-    link is the local-FS conditional PUT)."""
+    """ATOMIC create-if-absent publish of a log commit staged in
+    ``tmp``: ``os.link`` fails with EEXIST when the slot is taken (POSIX
+    ``os.rename`` would silently OVERWRITE a concurrent writer's
+    same-numbered commit — the lost-update race Delta's LogStores exist
+    to close; link is the local-FS conditional PUT). The log directory
+    is fsynced after the link, so a published commit is durable."""
     try:
         os.link(tmp, log_path)
     except FileExistsError as e:
@@ -253,10 +257,26 @@ def _publish_commit(tmp: str, log_path: str) -> None:
             "the slot); re-run the sync to resume from the new state"
         ) from e
     finally:
-        try:
-            os.unlink(tmp)
-        except FileNotFoundError:
-            pass
+        os.unlink(tmp)
+    _fsync_dir(os.path.dirname(log_path))
+
+
+def _write_commit(log_path: str, actions: list[dict]) -> None:
+    """Write ``actions`` as the log commit ``log_path``, create-if-absent
+    (``_publish_commit``). The actions are staged in a fresh ``mkstemp``
+    file of the writer's own (``_staged``), so two writers of one slot —
+    threads of one process included — can neither publish each other's
+    actions nor remove each other's temp file: exactly one commit lands,
+    and the other writer gets ``FileExistsError``."""
+    _publish_commit(
+        _staged(
+            log_path,
+            "".join(
+                json.dumps(a, separators=(",", ":")) + "\n" for a in actions
+            ),
+        ),
+        log_path,
+    )
 
 
 def _link_or_copy(src: str, dst: str) -> None:
@@ -290,11 +310,7 @@ def _publish_last_checkpoint(
     when a newer checkpoint already owned it."""
     last = os.path.join(log_dir, "_last_checkpoint")
     lock = f"{last}.lock"
-    tmp = f"{last}.tmp-{os.getpid()}-{time.time_ns()}"
-    with open(tmp, "w") as f:
-        json.dump({"version": version, "size": size}, f)
-        f.flush()
-        os.fsync(f.fileno())
+    tmp = _staged(last, json.dumps({"version": version, "size": size}))
     deadline = time.monotonic() + timeout
     try:
         while True:
@@ -439,13 +455,7 @@ def export_delta(
         *adds,
     ]
     log_path = os.path.join(log_dir, "00000000000000000000.json")
-    tmp = f"{log_path}.tmp-{os.getpid()}"
-    with open(tmp, "w") as f:
-        for a in actions:
-            f.write(json.dumps(a, separators=(",", ":")) + "\n")
-        f.flush()
-        os.fsync(f.fileno())
-    _publish_commit(tmp, log_path)
+    _write_commit(log_path, actions)
     return {
         "n_files": len(adds),
         "n_rows": total_rows,
@@ -1200,13 +1210,7 @@ def export_delta_sync(
         cdc_actions = _emit_cdc(table, dest, last_txn, v, commit_n)
         actions.extend(cdc_actions)
     log_path = os.path.join(log_dir, f"{commit_n:020d}.json")
-    tmp = f"{log_path}.tmp-{os.getpid()}"
-    with open(tmp, "w") as f:
-        for a in actions:
-            f.write(json.dumps(a, separators=(",", ":")) + "\n")
-        f.flush()
-        os.fsync(f.fileno())
-    _publish_commit(tmp, log_path)
+    _write_commit(log_path, actions)
     out = {
         "commit": commit_n,
         "n_adds": len(added),
@@ -1400,9 +1404,10 @@ def write_delta_checkpoint(dest: str) -> dict:
     ckpt_path = os.path.join(
         log_dir, f"{version:020d}.checkpoint.parquet"
     )
-    tmp = f"{ckpt_path}.tmp-{os.getpid()}"
-    _pq.write_table(tbl, tmp)
-    os.rename(tmp, ckpt_path)
+    buf = pa.BufferOutputStream()
+    _pq.write_table(tbl, buf)
+    os.rename(_staged(ckpt_path, buf.getvalue().to_pybytes()), ckpt_path)
+    _fsync_dir(log_dir)
     advanced = _publish_last_checkpoint(log_dir, version, len(rows))
     return {
         "version": version,
@@ -2456,14 +2461,8 @@ def append_delta(spark, path: str, df) -> dict:
             }
         ] + adds
         log_path = os.path.join(log_dir, f"{n_commit:020d}.json")
-        tmp = f"{log_path}.tmp-{os.getpid()}"
-        with open(tmp, "w") as f:
-            for a in actions:
-                f.write(json.dumps(a, separators=(",", ":")) + "\n")
-            f.flush()
-            os.fsync(f.fileno())
         try:
-            _publish_commit(tmp, log_path)
+            _write_commit(log_path, actions)
             return {
                 "version": n_commit,
                 "n_files": len(adds),
@@ -2588,14 +2587,8 @@ def overwrite_delta(spark, path: str, df) -> dict:
             }
         ] + removes + adds
         log_path = os.path.join(log_dir, f"{n_commit:020d}.json")
-        tmp = f"{log_path}.tmp-{os.getpid()}"
-        with open(tmp, "w") as f:
-            for a in actions:
-                f.write(json.dumps(a, separators=(",", ":")) + "\n")
-            f.flush()
-            os.fsync(f.fileno())
         try:
-            _publish_commit(tmp, log_path)
+            _write_commit(log_path, actions)
             return {
                 "version": n_commit,
                 "n_files": len(adds),
@@ -2739,14 +2732,8 @@ def restore_delta(spark, path: str, version: int) -> dict:
         actions.append({"add": add})
     n_commit = state["n_commits"]
     log_path = os.path.join(log_dir, f"{n_commit:020d}.json")
-    tmp = f"{log_path}.tmp-{os.getpid()}"
-    with open(tmp, "w") as f:
-        for a in actions:
-            f.write(json.dumps(a, separators=(",", ":")) + "\n")
-        f.flush()
-        os.fsync(f.fileno())
     try:
-        _publish_commit(tmp, log_path)
+        _write_commit(log_path, actions)
     except FileExistsError:
         # a concurrent commit moved the head: the file diff this
         # restore computed no longer describes the transition —
@@ -3153,31 +3140,7 @@ def merge_delta(
             raise ValueError(
                 f"cannot merge: unknown key column {k!r}"
             )
-    dup = (
-        updates.groupBy(*keys)
-        .count()
-        .filter("count > 1")
-        .limit(1)
-        .collect()
-    )
-    if dup:
-        raise ValueError(
-            "cannot merge: updates contain duplicate merge keys, "
-            f"e.g. {[dup[0][k] for k in keys]}"
-        )
-    if delete_keys is not None:
-        both = (
-            updates.select(*keys)
-            .join(delete_keys.select(*keys), keys, "left_semi")
-            .limit(1)
-            .collect()
-        )
-        if both:
-            raise ValueError(
-                f"cannot merge: key {[both[0][k] for k in keys]} "
-                "appears in both updates and delete_keys; MERGE "
-                "clauses must decide one action per row"
-            )
+    validate_merge_keys(updates, keys, delete_keys)
     return _row_level_delta(
         spark,
         path,
@@ -3799,14 +3762,8 @@ def _row_level_delta(
             actions.append(proto_action)
         actions += cdc_actions + removes + re_adds
         log_path = os.path.join(log_dir, f"{n_commit:020d}.json")
-        tmp = f"{log_path}.tmp-{os.getpid()}"
-        with open(tmp, "w") as f:
-            for a in actions:
-                f.write(json.dumps(a, separators=(",", ":")) + "\n")
-            f.flush()
-            os.fsync(f.fileno())
         try:
-            _publish_commit(tmp, log_path)
+            _write_commit(log_path, actions)
             return {
                 "version": n_commit,
                 "mode": "dv" if use_dv else "cow",
@@ -4085,14 +4042,8 @@ def optimize_delta(
     for _attempt in range(8):
         n_commit = state["n_commits"]
         log_path = os.path.join(log_dir, f"{n_commit:020d}.json")
-        tmp = f"{log_path}.tmp-{os.getpid()}"
-        with open(tmp, "w") as f:
-            for a in actions:
-                f.write(json.dumps(a, separators=(",", ":")) + "\n")
-            f.flush()
-            os.fsync(f.fileno())
         try:
-            _publish_commit(tmp, log_path)
+            _write_commit(log_path, actions)
             return {
                 "version": n_commit,
                 "n_files_removed": len(touched_rels),

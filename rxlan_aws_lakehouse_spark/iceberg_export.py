@@ -48,13 +48,19 @@ import json
 import os
 import posixpath
 import struct
-import tempfile
 import time
 from datetime import date as _date, datetime as _datetime
 from urllib.parse import unquote
 
 from .avro_lite import write_avro
-from .txn import TxnTable, _cm_fields, _cm_phys
+from .txn import (
+    TxnTable,
+    _cm_fields,
+    _cm_phys,
+    _fsync_dir,
+    _staged,
+    validate_merge_keys,
+)
 
 _EPOCH_DATE = _date(1970, 1, 1)
 _EPOCH_DT = _datetime(1970, 1, 1)
@@ -538,12 +544,7 @@ def export_iceberg(
         ],
     }
     mp = os.path.join(dest, "metadata", "v1.metadata.json")
-    with open(mp, "w") as f:
-        json.dump(table_meta, f)
-    with open(
-        os.path.join(dest, "metadata", "version-hint.text"), "w"
-    ) as f:
-        f.write("1")
+    _publish_metadata(os.path.join(dest, "metadata"), 1, table_meta)
     # engine-private sync state (ignored by spec readers): the txn-rel
     # -> mirror-file mapping and the frozen field-id assignment that
     # export_iceberg_sync resumes from
@@ -576,42 +577,33 @@ def _publish_metadata(mdir: str, version: int, meta: dict) -> None:
     create-if-absent (the HadoopTables commit point), then point
     ``version-hint.text`` at it.
 
-    The JSON goes to a fresh ``mkstemp`` file, so two writers in one
-    process never share a temp file. It is fsynced, hard-linked to its
-    final name (``link`` refuses an existing name), and the directory is
-    fsynced, so the published file is complete and durable before the
-    hint names it. Raises ``FileExistsError`` when the version is already
+    The JSON goes to a fresh ``mkstemp`` file (``_staged``), so two
+    writers in one process never share a temp file. It is fsynced,
+    hard-linked to its final name (``link`` refuses an existing name),
+    and the directory is fsynced, so the published file is complete and
+    durable before the hint names it. Raises ``FileExistsError`` when the version is already
     published; each caller maps that to its own error. The hint is
     advisory: readers take the highest published version."""
     mp = os.path.join(mdir, f"v{version}.metadata.json")
-    fd, tmp = tempfile.mkstemp(dir=mdir, prefix=f".v{version}.metadata.json.")
+    tmp = _staged(mp, json.dumps(meta))
     try:
-        with os.fdopen(fd, "w") as f:
-            os.fchmod(f.fileno(), 0o644)  # mkstemp's 0600 would hide it
-            json.dump(meta, f)
-            f.flush()
-            os.fsync(f.fileno())
         os.link(tmp, mp)
     finally:
         os.unlink(tmp)
-    dfd = os.open(mdir, os.O_RDONLY)
-    try:
-        os.fsync(dfd)
-    finally:
-        os.close(dfd)
-    fd, tmp = tempfile.mkstemp(dir=mdir, prefix=".version-hint.text.")
-    with os.fdopen(fd, "w") as f:
-        os.fchmod(f.fileno(), 0o644)
-        f.write(str(version))
-    os.replace(tmp, os.path.join(mdir, "version-hint.text"))
+    _fsync_dir(mdir)
+    _replace_durably(os.path.join(mdir, "version-hint.text"), str(version))
+
+
+def _replace_durably(path: str, text: str) -> None:
+    """Atomically replace ``path`` with ``text`` (last writer wins): a
+    fsynced temp file of this writer's own (``_staged``) renamed over
+    it, then the directory fsynced."""
+    os.replace(_staged(path, text), path)
+    _fsync_dir(os.path.dirname(path))
 
 
 def _write_sync_state(dest: str, state: dict) -> None:
-    p = os.path.join(dest, _SYNC_STATE)
-    tmp = f"{p}.tmp-{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(state, f)
-    os.replace(tmp, p)
+    _replace_durably(os.path.join(dest, _SYNC_STATE), json.dumps(state))
 
 
 def export_iceberg_sync(
@@ -1074,10 +1066,7 @@ def create_iceberg_table(
     }
     if int(format_version) >= 3:
         meta["next-row-id"] = 0
-    with open(os.path.join(mdir, "v1.metadata.json"), "w") as f:
-        json.dump(meta, f)
-    with open(os.path.join(mdir, "version-hint.text"), "w") as f:
-        f.write("1")
+    _publish_metadata(mdir, 1, meta)
     return meta
 
 
@@ -2306,31 +2295,7 @@ def merge_iceberg(
             raise ValueError(
                 f"cannot merge: unknown key column {k!r}"
             )
-    dup = (
-        updates.groupBy(*keys)
-        .count()
-        .filter("count > 1")
-        .limit(1)
-        .collect()
-    )
-    if dup:
-        raise ValueError(
-            "cannot merge: updates contain duplicate merge keys, "
-            f"e.g. {[dup[0][k] for k in keys]}"
-        )
-    if delete_keys is not None:
-        both = (
-            updates.select(*keys)
-            .join(delete_keys.select(*keys), keys, "left_semi")
-            .limit(1)
-            .collect()
-        )
-        if both:
-            raise ValueError(
-                f"cannot merge: key {[both[0][k] for k in keys]} "
-                "appears in both updates and delete_keys; MERGE "
-                "clauses must decide one action per row"
-            )
+    validate_merge_keys(updates, keys, delete_keys)
     return _row_level_iceberg(
         spark,
         path,

@@ -49,11 +49,13 @@ from __future__ import annotations
 
 import base64
 import datetime as _dt
+import functools
 import hashlib
 import json
 import os
 import re
 import shutil
+import tempfile
 import threading
 import time
 from urllib.parse import unquote, urlparse
@@ -105,6 +107,35 @@ def _link_or_copy(src: str, dst: str) -> None:
         os.link(src, dst)
     except OSError:
         shutil.copy2(src, dst)
+
+
+def _staged(path: str, data: str | bytes) -> str:
+    """A fresh ``mkstemp`` file beside ``path`` holding ``data``,
+    fsynced and world-readable, for the caller to link or rename into
+    place. Two writers, threads of one process included, never share a
+    temp file. The dot prefix keeps it out of every listing that looks
+    for published names."""
+    d, name = os.path.split(path)
+    fd, tmp = tempfile.mkstemp(dir=d, prefix=f".{name}.")
+    try:
+        with os.fdopen(fd, "wb") as f:
+            os.fchmod(f.fileno(), 0o644)  # mkstemp's 0600 would hide it
+            f.write(data.encode() if isinstance(data, str) else data)
+            f.flush()
+            os.fsync(f.fileno())
+    except BaseException:
+        os.unlink(tmp)
+        raise
+    return tmp
+
+
+def _fsync_dir(d: str) -> None:
+    """Make the names linked or renamed into ``d`` durable."""
+    fd = os.open(d, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 def _empty_df(spark: SparkSession, schema) -> DataFrame:
@@ -473,6 +504,113 @@ def _evolved_columns(
         if f.name in by_name or f.name not in gen
     ] + extra
 
+
+def validate_merge_keys(
+    rows: DataFrame,
+    keys: list[str],
+    delete_keys: DataFrame | None = None,
+    name: str = "updates",
+) -> None:
+    """The MERGE input guard of every merge path — ``TxnTable``'s keyed
+    verbs and the Delta and Iceberg mirrors' ``merge_delta`` /
+    ``merge_iceberg`` — raised the way Delta raises it. Two ``rows`` with
+    one key would BOTH land, silently duplicating the key, and a key in
+    both ``rows`` and ``delete_keys`` has no single action. One skinny
+    aggregate and one semi-join, each stopping at its first offender."""
+    dup = (
+        rows.groupBy(*keys)
+        .count()
+        .filter(F.col("count") > 1)
+        .limit(1)
+        .collect()
+    )
+    if dup:
+        raise ValueError(
+            f"cannot merge: duplicate merge keys in {name}, e.g. "
+            f"{[dup[0][k] for k in keys]}; dedupe the {name} first"
+        )
+    if delete_keys is not None:
+        both = (
+            rows.select(*keys)
+            .join(delete_keys.select(*keys), keys, "leftsemi")
+            .limit(1)
+            .collect()
+        )
+        if both:
+            raise ValueError(
+                f"cannot merge: key {[both[0][k] for k in keys]} appears "
+                f"in both {name} and delete_keys; MERGE clauses must "
+                "decide one action per row"
+            )
+
+
+def _conform(rows: DataFrame, cols: list[str], like: DataFrame) -> DataFrame:
+    """Target ``rows`` in a merge's output ``cols``: a column only the
+    update set ``like`` has (additive ``merge_schema`` evolution) reads
+    as typed NULLs."""
+    have = set(rows.columns)
+    return rows.select(
+        *[
+            c if c in have else F.lit(None).cast(like.schema[c].dataType).alias(c)
+            for c in cols
+        ]
+    )
+
+
+def _changes(*parts: tuple[DataFrame, str]) -> DataFrame:
+    """One row-level change payload (Delta CDF) from ``(rows, change
+    type)`` parts, unioned in order."""
+    return functools.reduce(
+        DataFrame.unionByName,
+        (rows.withColumn(_CHANGE_TYPE, F.lit(kind)) for rows, kind in parts),
+    )
+
+
+def _keyed_changes(
+    keys: list[str],
+    fresh: DataFrame,
+    pre: DataFrame,
+    gone: DataFrame | None = None,
+) -> DataFrame:
+    """The change payload of a keyed merge (copy-on-write, deletion
+    vector, CDC): ``pre`` — the live target rows of updated keys — are
+    the update pre-images; the rows of ``fresh`` whose key ``pre`` holds
+    are the post-images, the rest inserts; ``gone`` — the live target
+    rows of deleted keys — the deletes. Built from frames the merge
+    already has in hand, so IO ∝ touched files, never the table."""
+    matched = pre.select(*keys).distinct()
+    parts = [
+        (pre, "update_preimage"),
+        (fresh.join(matched, keys, "leftsemi"), "update_postimage"),
+        (fresh.join(matched, keys, "left_anti"), "insert"),
+    ]
+    if gone is not None:
+        parts.append((gone, "delete"))
+    return _changes(*parts)
+
+
+def _set_image(schema: StructType, set_: dict, op: str, hit=None) -> list:
+    """UPDATE's post-image: every column of ``schema``, each one ``set_``
+    names replaced by its expression CAST TO THE COLUMN'S RECORDED TYPE —
+    only on the rows ``hit`` holds for, when given. An UPDATE never
+    changes a column's type, so the copy-on-write rewrite, the
+    deletion-vector copies and both change-feed post-images agree. A
+    column the schema lacks raises: new columns are schema evolution."""
+    names = schema.fieldNames()
+    bad = [c for c in set_ if c not in names]
+    if bad:
+        raise ValueError(
+            f"{op} sets unknown columns {bad}; UPDATE cannot add columns — "
+            "use merge_upsert(merge_schema=True) for additive evolution"
+        )
+
+    def image(c: str):
+        value = set_[c].cast(schema[c].dataType)
+        if hit is not None:
+            value = F.when(hit, value).otherwise(F.col(c))
+        return value.alias(c)
+
+    return [image(c) if c in set_ else F.col(c) for c in names]
 
 def _relax_added(schema: StructType, parent: StructType) -> StructType:
     """Relax columns ADDED relative to ``parent`` to nullable in the
@@ -1080,11 +1218,7 @@ class TxnTable:
         revertible via ``restore``. ANSI semantics: NULL passes."""
 
         def attempt() -> str:
-            expect = self.current_version()
-            if expect is None:
-                raise FileNotFoundError(
-                    f"no committed version at {self.root}"
-                )
+            expect, schema = self._snapshot()
             cur = self.constraints(expect)
             if cur.get(name) == expr:
                 return expect  # idempotent re-add
@@ -1096,22 +1230,10 @@ class TxnTable:
                     "constraint not added"
                 )
             cur[name] = expr
-            data_root = os.path.join(self.root, _VERSIONS, expect)
-            carry = {
-                rel: os.path.join(data_root, rel)
-                for rel in self.files(expect)
-            }
-            empty = _empty_df(spark, StructType.fromJson(self._meta(expect)["schema"])
-            )
-            return self.commit(
-                empty,
-                metadata_only=True,
-                operation="set_constraint",
-                carry_files=carry,
-                carry_src=expect,
-                expect_parent=expect,
+            return self._commit_over(
+                expect, _empty_df(spark, schema), "set_constraint",
+                {"constraint_added": name}, metadata_only=True,
                 constraints=cur,
-                extra_meta={"constraint_added": name},
             )
 
         return self._with_retries(attempt, max_retries)
@@ -1122,31 +1244,15 @@ class TxnTable:
         """Remove a CHECK constraint via a metadata-only commit."""
 
         def attempt() -> str:
-            expect = self.current_version()
-            if expect is None:
-                raise FileNotFoundError(
-                    f"no committed version at {self.root}"
-                )
+            expect, schema = self._snapshot()
             cur = self.constraints(expect)
             if name not in cur:
                 return expect
             del cur[name]
-            data_root = os.path.join(self.root, _VERSIONS, expect)
-            carry = {
-                rel: os.path.join(data_root, rel)
-                for rel in self.files(expect)
-            }
-            empty = _empty_df(spark, StructType.fromJson(self._meta(expect)["schema"])
-            )
-            return self.commit(
-                empty,
-                metadata_only=True,
-                operation="set_constraint",
-                carry_files=carry,
-                carry_src=expect,
-                expect_parent=expect,
+            return self._commit_over(
+                expect, _empty_df(spark, schema), "set_constraint",
+                {"constraint_dropped": name}, metadata_only=True,
                 constraints=cur,
-                extra_meta={"constraint_dropped": name},
             )
 
         return self._with_retries(attempt, max_retries)
@@ -1172,28 +1278,12 @@ class TxnTable:
         contract). ``read_row_changes`` consumes the feed."""
 
         def attempt() -> str:
-            expect = self.current_version()
-            if expect is None:
-                raise FileNotFoundError(
-                    f"no committed version at {self.root}"
-                )
+            expect, schema = self._snapshot()
             if bool(self._meta(expect).get("cdf", False)) == enabled:
                 return expect  # idempotent
-            data_root = os.path.join(self.root, _VERSIONS, expect)
-            carry = {
-                rel: os.path.join(data_root, rel)
-                for rel in self.files(expect)
-            }
-            empty = _empty_df(spark, StructType.fromJson(self._meta(expect)["schema"])
-            )
-            return self.commit(
-                empty,
-                metadata_only=True,
-                operation="set_cdf",
-                carry_files=carry,
-                carry_src=expect,
-                expect_parent=expect,
-                cdf=enabled,
+            return self._commit_over(
+                expect, _empty_df(spark, schema), "set_cdf",
+                metadata_only=True, cdf=enabled,
             )
 
         return self._with_retries(attempt, max_retries)
@@ -1549,19 +1639,11 @@ class TxnTable:
         metadata-only commit at 100 TB: history keeps its layout, new
         data gets the new one, and predicates on a new spec column still
         prune old files through their column stats."""
-        has_dv = self.has_deletion_vectors(version)
-        df = self._scan_files(
-            spark, version, rels, schema, meta_cols=has_dv
+        if not self.has_deletion_vectors(version):
+            return self._scan_files(spark, version, rels, schema)
+        return self._live_scan(spark, version, rels, schema).drop(
+            "__rel", "__ri"
         )
-        if not has_dv:
-            return df
-        dv = self._read_dv(spark, version)
-        cols = [c for c in df.columns if c not in ("__rel", "__ri")]
-        return df.join(
-            dv,
-            (df["__rel"] == dv["rel"]) & (df["__ri"] == dv["row_index"]),
-            "left_anti",
-        ).select(*cols)
 
     def register(
         self,
@@ -2487,6 +2569,193 @@ class TxnTable:
         assert last is not None
         raise last
 
+    def _keyed_dml(self, frames, validate, attempt, max_retries: int) -> str:
+        """Run a keyed verb (``merge_upsert``, ``merge_upsert_dv``,
+        ``sync_full``, ``apply_cdc``) around its input plans.
+
+        ``frames`` (``None`` entries allowed) are persisted for the whole
+        call: their plans feed key bounds, touched-file discovery,
+        validation and the commit write, and callers often hand in a
+        non-trivial plan (the incremental-aggregate refresh passes a full
+        combine aggregate). Without the persist each job re-executes that
+        plan end to end — the fixed per-refresh overhead the r5 bench
+        surfaced on ``txn_incremental_agg``.
+
+        ``validate(*frames)``, when given, runs concurrently with the
+        first attempt's discovery (``_spawn_validation``).
+        ``attempt(gate, *frames)`` runs under ``_with_retries`` and calls
+        ``gate()`` right before it publishes: validation gates the
+        PUBLISH, not the planning, so a rejected batch never lands and
+        raises its identical error. Every exit unpersists — a rejected
+        batch must not leak its cached blocks for the session's
+        lifetime."""
+        frames = tuple(None if f is None else f.persist() for f in frames)
+        fut = None
+        committed = False
+
+        def gate() -> None:
+            if fut is not None:
+                fut.result()
+
+        try:
+            if validate is not None:
+                fut = self._spawn_validation(
+                    lambda: validate(*frames), *frames
+                )
+                if fut is None:
+                    validate(*frames)  # python-source plan: stay serial
+            res = self._with_retries(
+                lambda: attempt(gate, *frames), max_retries
+            )
+            committed = True
+            return res
+        finally:
+            try:
+                if fut is not None:
+                    try:
+                        fut.result()
+                    except Exception:  # noqa: BLE001
+                        # a commit path that published WITHOUT gating on
+                        # the future would otherwise silently land a
+                        # validation-rejected batch — fail loudly instead
+                        # (when the attempt itself raised, that error is
+                        # already propagating and this one is the same)
+                        if committed:
+                            raise
+            finally:
+                for f in frames:
+                    if f is not None:
+                        f.unpersist()
+
+    # -- row-level DML core ----------------------------------------------
+    # Every row-level verb is the same three steps over one snapshot: find
+    # what the statement touches, build the rows it writes, commit them
+    # with every other file carried by reference. The copy-on-write verbs
+    # (merge_upsert, update_where, delete_where, apply_cdc, sync_full)
+    # find touched FILES and rewrite them; their deletion-vector twins
+    # (merge_upsert_dv, update_where_dv, delete_where_deferred) find live
+    # row POSITIONS and add them to the vector. Each step is written once
+    # below.
+
+    def _snapshot(self) -> tuple[str, StructType]:
+        """The head version a DML attempt derives from and the schema its
+        commit recorded. The schema comes from the manifest, NOT a
+        directory read — a spark.read over the snapshot dir would run
+        partition discovery across every partition directory
+        (file-count-scale driver listing) just to learn a schema the
+        commit recorded."""
+        expect = self.current_version()
+        if expect is None:
+            raise FileNotFoundError(f"no committed version at {self.root}")
+        return expect, StructType.fromJson(self._meta(expect)["schema"])
+
+    def _carry(self, version: str, drop=()) -> dict[str, str]:
+        """Every file of ``version`` except ``drop``, as the relpath ->
+        path map a commit links into the new snapshot unchanged. It comes
+        from the parent MANIFEST (``files()``), never a directory
+        listing — object-store-portable and flat in table file count."""
+        data_root = os.path.join(self.root, _VERSIONS, version)
+        drop = set(drop)
+        return {
+            rel: os.path.join(data_root, rel)
+            for rel in self.files(version)
+            if rel not in drop
+        }
+
+    def _commit_over(
+        self, expect: str, rows: DataFrame, operation: str,
+        extra_meta: dict | None = None, drop=(), aux=None, **commit_kw,
+    ) -> str:
+        """Commit ``rows`` as the child of ``expect``: every file of
+        ``expect`` except ``drop`` carries by reference, and the pointer
+        swap refuses if another commit landed since ``expect`` was read.
+        ``aux`` stages the commit's payloads (deletion vector, change
+        feed) beside the data."""
+        return self.commit(
+            rows, operation=operation, carry_files=self._carry(expect, drop),
+            extra_meta=extra_meta, carry_src=expect, expect_parent=expect,
+            aux_writer=aux, **commit_kw,
+        )
+
+    def _touched(self, version: str, hits: DataFrame) -> list[str]:
+        """Copy-on-write touched-file discovery: the sorted relpaths of the
+        files ``hits`` — a ``file_col="_f"`` scan narrowed to the rows the
+        statement changes — reads from. A metadata-scale collect (file
+        count, not row count), like Delta's matched-file listing."""
+        data_root = os.path.join(self.root, _VERSIONS, version)
+        return sorted(
+            os.path.relpath(_local_path(r["_f"]), data_root)
+            for r in hits.select("_f").distinct().collect()
+        )
+
+    def _live_scan(
+        self, spark: SparkSession, version: str, rels: list[str],
+        schema: StructType,
+    ) -> DataFrame:
+        """``_scan_files`` of ``rels`` with each row's position bound
+        (``__rel``/``__ri``) and the snapshot's pending deletion vector
+        anti-joined out: the rows a reader sees, and where they live."""
+        scan = self._scan_files(spark, version, rels, schema, meta_cols=True)
+        if not self.has_deletion_vectors(version):
+            return scan
+        dv = self._read_dv(spark, version)
+        return scan.join(
+            dv,
+            (scan["__rel"] == dv["rel"]) & (scan["__ri"] == dv["row_index"]),
+            "left_anti",
+        )
+
+    def _live_matches(
+        self, spark: SparkSession, version: str, rels: list[str],
+        schema: StructType, pick,
+    ) -> DataFrame | None:
+        """Deletion-vector discovery: the live rows of ``rels``
+        (``_live_scan``) that ``pick`` keeps. A row an earlier vector
+        already deleted is never matched again, so it is neither
+        re-deleted nor re-imaged in the change feed. Persisted — the
+        vector and the change payload both read it; ``None`` when
+        nothing matched."""
+        if not rels:
+            return None
+        matched = pick(self._live_scan(spark, version, rels, schema)).persist()
+        if matched.limit(1).count() == 0:
+            matched.unpersist()
+            return None
+        return matched
+
+    @staticmethod
+    def _cdf_writer(chg: DataFrame | None):
+        """The aux writer that stages ``chg`` as the commit's row-level
+        change payload (Delta CDF); ``None`` when there is no payload."""
+        if chg is None:
+            return None
+
+        def aux(staging: str) -> None:
+            chg.write.parquet(os.path.join(staging, _CDF_DIR))
+
+        return aux
+
+    def _dv_writer(
+        self, spark: SparkSession, version: str, matched: DataFrame,
+        chg: DataFrame | None,
+    ):
+        """The aux writer of a deletion-vector commit: the committed
+        vector is ``matched``'s positions plus the pending vector's, then
+        ``chg`` is staged as the change payload."""
+        dv = matched.select(
+            F.col("__rel").alias("rel"), F.col("__ri").alias("row_index")
+        )
+        if self.has_deletion_vectors(version):
+            dv = dv.unionByName(self._read_dv(spark, version)).distinct()
+        cdf = self._cdf_writer(chg)
+
+        def aux(staging: str) -> None:
+            dv.coalesce(1).write.parquet(os.path.join(staging, _DV_DIR))
+            if cdf is not None:
+                cdf(staging)
+
+        return aux
+
     # Below this many files, stats-based candidate pruning is skipped:
     # pruning exists to SAVE IO, but it costs one Spark job (min/max over
     # the update set) — on a table this small, the discovery scan reads
@@ -2547,6 +2816,84 @@ class TxnTable:
         candidates, _total = self.pruned_files(preds, expect)
         return candidates
 
+    def _merge_keys(
+        self, expect: str, updates: DataFrame, dels: DataFrame | None,
+        keys: list[str],
+    ) -> tuple[DataFrame, DataFrame, list[str]]:
+        """A keyed merge's distinct update keys, the keys it touches (those
+        plus ``dels``), and the candidate files that may hold them."""
+        update_keys = updates.select(*keys).distinct()
+        all_keys = (
+            update_keys.unionByName(dels).distinct()
+            if dels is not None
+            else update_keys
+        )
+        return update_keys, all_keys, self._merge_candidates(
+            expect, all_keys, keys
+        )
+
+    def _merge_cow(
+        self, spark: SparkSession, updates: DataFrame,
+        dels: DataFrame | None, keys: list[str], columns, operation: str,
+        extra_meta: dict | None, gate,
+    ) -> str:
+        """One attempt of the copy-on-write keyed merge that
+        ``merge_upsert`` and ``apply_cdc`` run: the files holding a key
+        of ``updates`` or ``dels`` are rewritten as their other rows plus
+        ``updates``; every other file carries. ``columns(schema, meta)``
+        picks the output columns from the snapshot's recorded schema and
+        manifest; ``gate()`` runs right before the publish."""
+        expect, schema = self._snapshot()
+        self._require_no_dv(expect, operation)
+        meta = self._meta(expect)
+        update_keys, all_keys, candidates = self._merge_keys(
+            expect, updates, dels, keys
+        )
+        touched = (
+            self._touched(
+                expect,
+                self._scan_files(
+                    spark, expect, candidates, schema, file_col="_f"
+                ).join(all_keys, keys, "leftsemi"),
+            )
+            if candidates
+            else []
+        )
+        out_cols = columns(schema, meta)
+        fresh = updates.select(*out_cols)
+        rows, chg = fresh, None
+        if touched:
+
+            def target(ks: DataFrame, how: str) -> DataFrame:
+                # the touched files' rows whose key is (semi) or is not
+                # (anti) in ks, in the output columns
+                return _conform(
+                    self._scan_files(spark, expect, touched, schema).join(
+                        ks, keys, how
+                    ),
+                    out_cols,
+                    updates,
+                )
+
+            rows = target(all_keys, "left_anti").unionByName(fresh)
+            # Row-level change feed payload (Delta CDF): preimages re-read
+            # ONLY the touched files, post/insert split the persisted
+            # update set. IO ∝ touched files, never the table. A merge
+            # that touches nothing writes no payload at all: its fresh
+            # files ARE the inserts, derived at read time.
+            if meta.get("cdf"):
+                chg = _keyed_changes(
+                    keys,
+                    fresh,
+                    target(update_keys, "leftsemi"),
+                    None if dels is None else target(dels, "leftsemi"),
+                )
+        gate()
+        return self._commit_over(
+            expect, rows, operation, extra_meta, drop=touched,
+            aux=self._cdf_writer(chg),
+        )
+
     def merge_upsert(
         self,
         spark: SparkSession,
@@ -2594,209 +2941,44 @@ class TxnTable:
         atomic commit (``WHEN MATCHED THEN DELETE``) — their files join
         the rewrite set, the kept-scan anti-joins the union of update
         and delete keys, and no replacement row lands. A key in both
-        sets is ambiguous and raises, mirroring the duplicate-key guard.
+        sets is ambiguous and raises, mirroring the duplicate-key guard
+        (``validate_merge_keys``, skipped with ``validate_keys=False``
+        for pre-deduped pipelines that can't afford the extra job).
 
         ``updates`` is persisted for the duration of the merge: its plan
         feeds THREE jobs (key bounds, touched-file discovery, the commit
-        write — four with validation), and callers often hand in a
-        non-trivial plan (the incremental-aggregate refresh passes a full
-        combine aggregate). Without the persist each job re-executes that
-        plan end to end — the fixed per-refresh overhead the r5 bench
-        surfaced on ``txn_incremental_agg``.
+        write — four with validation), see ``_keyed_dml``.
         """
-        updates = updates.persist()
-        dels = (
-            delete_keys.select(*keys).distinct().persist()
-            if delete_keys is not None
-            else None
-        )
 
-        def validate() -> None:
-            # Ambiguous-merge guard (Delta raises the same way): two update
-            # rows with the same key would BOTH land, silently duplicating
-            # the key. One skinny aggregate over the (typically small)
-            # update set, run once before any commit attempt; disable for
-            # pre-deduped pipelines that can't afford the extra job.
-            dup = (
-                updates.groupBy(*keys)
-                .count()
-                .filter(F.col("count") > 1)
-                .limit(1)
-                .collect()
-            )
-            if dup:
-                raise ValueError(
-                    f"updates contain duplicate merge keys, e.g. "
-                    f"{[dup[0][k] for k in keys]}; dedupe the update set "
-                    "or pass validate_keys=False"
-                )
-            if dels is not None:
-                both = (
-                    updates.select(*keys)
-                    .join(dels, keys, "leftsemi")
-                    .limit(1)
-                    .collect()
-                )
-                if both:
-                    raise ValueError(
-                        f"key {[both[0][k] for k in keys]} appears in "
-                        "both updates and delete_keys; MERGE clauses "
-                        "must decide one action per row"
-                    )
-
-        def attempt() -> str:
-            expect = self.current_version()
-            if expect is not None:
-                self._require_no_dv(expect, "merge_upsert")
-            if expect is None:
-                raise FileNotFoundError(f"no committed version at {self.root}")
-            data_root = os.path.join(self.root, _VERSIONS, expect)
-            # Schema comes from the manifest, NOT a directory read — a
-            # spark.read over the snapshot dir would run partition
-            # discovery across every partition directory (file-count-scale
-            # driver listing) just to learn a schema the commit recorded.
-            target_schema = StructType.fromJson(self._meta(expect)["schema"])
-            update_keys = updates.select(*keys).distinct()
-            all_keys = (
-                update_keys.unionByName(dels).distinct()
-                if dels is not None
-                else update_keys
-            )
-            candidates = self._merge_candidates(expect, all_keys, keys)
-            if candidates:
-                cand_scan = self._scan_files(
-                    spark, expect, candidates, target_schema, file_col="_f"
-                )
-                touched = sorted(
-                    os.path.relpath(_local_path(r["_f"]), data_root)
-                    for r in cand_scan.join(all_keys, keys, "leftsemi")
-                    .select("_f")
-                    .distinct()
-                    .collect()
-                )
-            else:
-                touched = []
-            touched_set = set(touched)
-            carry = {
-                rel: os.path.join(data_root, rel)
-                for rel in self.files(expect)
-                if rel not in touched_set
-            }
+        def columns(schema: StructType, meta: dict) -> list[str]:
             # Same guard as append(): a typo'd/extra column in updates
             # must raise (not silently drop) unless merge_schema evolves
             # the table; a missing table column would hide it for carried
             # rows; a changed type is never allowed.
-            out_cols = _evolved_columns(
-                target_schema, updates, merge_schema, "merge_upsert",
-                generated=self._meta(expect).get("generated"),
-            )
-            have = set(target_schema.fieldNames())
-            extra_fields = [
-                f for f in updates.schema.fields if f.name not in have
-            ]
-            if touched:
-                kept = self._scan_files(
-                    spark, expect, touched, target_schema
-                ).join(all_keys, keys, "left_anti")
-                for f in extra_fields:
-                    kept = kept.withColumn(
-                        f.name, F.lit(None).cast(f.dataType)
-                    )
-                merged = kept.select(*out_cols).unionByName(
-                    updates.select(*out_cols)
-                )
-            else:
-                # pure insert: nothing matched, carry every existing file
-                merged = updates.select(*out_cols)
-            # Row-level change feed payload (Delta CDF): built from data
-            # the merge already has in hand — preimages re-read ONLY the
-            # touched files (the same set the kept-scan reads), post/insert
-            # split the persisted update set. IO ∝ touched files, never
-            # the table. A pure-insert merge writes no payload at all:
-            # its fresh files ARE the inserts, derived at read time.
-            aux = None
-            if self._meta(expect).get("cdf") and touched:
-                pre = self._scan_files(
-                    spark, expect, touched, target_schema
-                ).join(update_keys, keys, "leftsemi")
-                for f in extra_fields:
-                    pre = pre.withColumn(f.name, F.lit(None).cast(f.dataType))
-                pre = pre.select(*out_cols)
-                matched_keys = pre.select(*keys).distinct()
-                post = updates.select(*out_cols).join(
-                    matched_keys, keys, "leftsemi"
-                )
-                ins = updates.select(*out_cols).join(
-                    matched_keys, keys, "left_anti"
-                )
-                chg = (
-                    pre.withColumn(_CHANGE_TYPE, F.lit("update_preimage"))
-                    .unionByName(
-                        post.withColumn(
-                            _CHANGE_TYPE, F.lit("update_postimage")
-                        )
-                    )
-                    .unionByName(
-                        ins.withColumn(_CHANGE_TYPE, F.lit("insert"))
-                    )
-                )
-                if dels is not None:
-                    gone = self._scan_files(
-                        spark, expect, touched, target_schema
-                    ).join(dels, keys, "leftsemi")
-                    for f in extra_fields:
-                        gone = gone.withColumn(
-                            f.name, F.lit(None).cast(f.dataType)
-                        )
-                    chg = chg.unionByName(
-                        gone.select(*out_cols).withColumn(
-                            _CHANGE_TYPE, F.lit("delete")
-                        )
-                    )
-
-                def aux(staging: str) -> None:
-                    chg.write.parquet(os.path.join(staging, _CDF_DIR))
-
-            if val_fut is not None:
-                # validation gates the PUBLISH, not the planning: it ran
-                # concurrently with discovery and must be green (or raise
-                # its identical error) before anything commits
-                val_fut.result()
-            return self.commit(
-                merged, operation="merge_upsert", carry_files=carry,
-                extra_meta=extra_meta, carry_src=expect,
-                expect_parent=expect, aux_writer=aux,
+            return _evolved_columns(
+                schema, updates, merge_schema, "merge_upsert",
+                generated=meta.get("generated"),
             )
 
-        val_fut = None
-        committed = False
-        try:
-            # validation runs INSIDE the unpersist guard: a rejected batch
-            # must not leak its cached blocks for the session's lifetime
-            if validate_keys:
-                val_fut = self._spawn_validation(validate, updates, dels)
-                if val_fut is None:
-                    validate()  # python-source plan: stay serial
-            res = self._with_retries(attempt, max_retries)
-            committed = True
-            return res
-        finally:
-            try:
-                if val_fut is not None:
-                    try:
-                        val_fut.result()
-                    except Exception:  # noqa: BLE001
-                        # a commit path that published WITHOUT gating on
-                        # the future would otherwise silently land a
-                        # validation-rejected batch — fail loudly instead
-                        # (when the attempt itself raised, that error is
-                        # already propagating and this one is the same)
-                        if committed:
-                            raise
-            finally:
-                updates.unpersist()
-                if dels is not None:
-                    dels.unpersist()
+        def attempt(gate, updates: DataFrame, dels: DataFrame | None) -> str:
+            return self._merge_cow(
+                spark, updates, dels, keys, columns, "merge_upsert",
+                extra_meta, gate,
+            )
+
+        return self._keyed_dml(
+            (
+                updates,
+                None
+                if delete_keys is None
+                else delete_keys.select(*keys).distinct(),
+            ),
+            (lambda u, d: validate_merge_keys(u, keys, d))
+            if validate_keys
+            else None,
+            attempt,
+            max_retries,
+        )
 
     def merge_upsert_dv(
         self,
@@ -2826,211 +3008,84 @@ class TxnTable:
         folds the vector in — the standard MoR write/read trade.
 
         Composes with a PENDING vector (unlike the copy-on-write writers,
-        which ``_require_no_dv``): matched-position discovery anti-joins
-        the existing vector first, so a key whose only physical row is
-        already deleted counts as an INSERT (and the CDF preimage never
-        resurrects dead rows); the committed vector is the union. Repeat
-        merges on the same key keep working because the previous merge's
-        appended file is a manifest data file — discovery scans it like
-        any other candidate and suppresses the stale copy.
+        which ``_require_no_dv``): matched-position discovery
+        (``_live_matches``) anti-joins the existing vector first, so a key
+        whose only physical row is already deleted counts as an INSERT
+        (and the CDF preimage never resurrects dead rows); the committed
+        vector is the union. Repeat merges on the same key keep working
+        because the previous merge's appended file is a manifest data
+        file — discovery scans it like any other candidate and suppresses
+        the stale copy.
 
         Result-identical to ``merge_upsert`` on the same input (pinned by
         the ``txn_merge_dv`` registry lane and pytest); chooses between
         them by workload: scattered keys / wide files -> DV, clustered
-        keys on few files -> copy-on-write stays cheaper to read.
+        keys on few files -> copy-on-write stays cheaper to read. Both
+        share the candidate pruning (``_merge_keys``), the validation and
+        persist wrapper (``_keyed_dml``) and the change-feed rows
+        (``_keyed_changes``).
 
         ``delete_keys`` mirrors ``merge_upsert``'s: matched rows whose
         key appears in it become vector entries with NO replacement row
         — ``WHEN MATCHED THEN DELETE`` at delta write cost.
         """
-        updates = updates.persist()
-        dels = (
-            delete_keys.select(*keys).distinct().persist()
-            if delete_keys is not None
-            else None
-        )
 
-        def validate() -> None:
-            dup = (
-                updates.groupBy(*keys)
-                .count()
-                .filter(F.col("count") > 1)
-                .limit(1)
-                .collect()
-            )
-            if dup:
-                raise ValueError(
-                    f"updates contain duplicate merge keys, e.g. "
-                    f"{[dup[0][k] for k in keys]}; dedupe the update set "
-                    "or pass validate_keys=False"
-                )
-            if dels is not None:
-                both = (
-                    updates.select(*keys)
-                    .join(dels, keys, "leftsemi")
-                    .limit(1)
-                    .collect()
-                )
-                if both:
-                    raise ValueError(
-                        f"key {[both[0][k] for k in keys]} appears in "
-                        "both updates and delete_keys; MERGE clauses "
-                        "must decide one action per row"
-                    )
-
-        def attempt() -> str:
-            expect = self.current_version()
-            if expect is None:
-                raise FileNotFoundError(f"no committed version at {self.root}")
-            data_root = os.path.join(self.root, _VERSIONS, expect)
-            target_schema = StructType.fromJson(self._meta(expect)["schema"])
+        def attempt(gate, updates: DataFrame, dels: DataFrame | None) -> str:
+            expect, schema = self._snapshot()
+            meta = self._meta(expect)
             out_cols = _evolved_columns(
-                target_schema, updates, merge_schema, "merge_upsert_dv",
-                generated=self._meta(expect).get("generated"),
+                schema, updates, merge_schema, "merge_upsert_dv",
+                generated=meta.get("generated"),
             )
-            update_keys = updates.select(*keys).distinct()
-            all_keys = (
-                update_keys.unionByName(dels).distinct()
-                if dels is not None
-                else update_keys
+            fresh = updates.select(*out_cols)
+            _, all_keys, candidates = self._merge_keys(
+                expect, updates, dels, keys
             )
-            candidates = self._merge_candidates(expect, all_keys, keys)
-            has_old_dv = self.has_deletion_vectors(expect)
-            matched = None
-            if candidates:
-                # Same file-skipping discovery as merge_upsert, but the
-                # scan keeps per-row positions (__rel/__ri) — the LIVE
-                # matched rows, post-existing-vector, become new vector
-                # entries instead of a rewrite set.
-                scan = self._scan_files(
-                    spark, expect, candidates, target_schema,
-                    meta_cols=True,
-                )
-                if has_old_dv:
-                    old = self._read_dv(spark, expect)
-                    scan = scan.join(
-                        old,
-                        (scan["__rel"] == old["rel"])
-                        & (scan["__ri"] == old["row_index"]),
-                        "left_anti",
-                    )
-                matched = scan.join(all_keys, keys, "leftsemi").persist()
-                if matched.limit(1).count() == 0:
-                    matched.unpersist()
-                    matched = None
+            matched = self._live_matches(
+                spark, expect, candidates, schema,
+                lambda scan: scan.join(all_keys, keys, "leftsemi"),
+            )
             try:
-                aux = None
-                if matched is not None:
-                    fresh_dv = matched.select(
-                        F.col("__rel").alias("rel"),
-                        F.col("__ri").alias("row_index"),
-                    )
-                    dv = fresh_dv
-                    if has_old_dv:
-                        dv = dv.unionByName(
-                            self._read_dv(spark, expect)
-                        ).distinct()
-                    # Row-level CDF, mirroring merge_upsert exactly: a
-                    # pure-insert merge writes no payload (fresh files ARE
-                    # the inserts); a matching one writes pre/post/insert
-                    # from frames already in hand.
-                    chg = None
-                    if self._meta(expect).get("cdf"):
-                        have = set(target_schema.fieldNames())
-                        pre = matched.drop("__rel", "__ri")
-                        if dels is not None:
-                            gone = pre.join(dels, keys, "leftsemi")
-                            pre = pre.join(dels, keys, "left_anti")
-                        for f in updates.schema.fields:
-                            if f.name not in have:
-                                pre = pre.withColumn(
-                                    f.name, F.lit(None).cast(f.dataType)
-                                )
-                        pre = pre.select(*out_cols)
-                        matched_keys = pre.select(*keys).distinct()
-                        post = updates.select(*out_cols).join(
-                            matched_keys, keys, "leftsemi"
-                        )
-                        ins = updates.select(*out_cols).join(
-                            matched_keys, keys, "left_anti"
-                        )
-                        chg = (
-                            pre.withColumn(
-                                _CHANGE_TYPE, F.lit("update_preimage")
-                            )
-                            .unionByName(
-                                post.withColumn(
-                                    _CHANGE_TYPE, F.lit("update_postimage")
-                                )
-                            )
-                            .unionByName(
-                                ins.withColumn(_CHANGE_TYPE, F.lit("insert"))
-                            )
-                        )
-                        if dels is not None:
-                            for f in updates.schema.fields:
-                                if f.name not in have:
-                                    gone = gone.withColumn(
-                                        f.name,
-                                        F.lit(None).cast(f.dataType),
-                                    )
-                            chg = chg.unionByName(
-                                gone.select(*out_cols).withColumn(
-                                    _CHANGE_TYPE, F.lit("delete")
-                                )
-                            )
-
-                    def aux(staging: str, dv=dv, chg=chg) -> None:
-                        dv.coalesce(1).write.parquet(
-                            os.path.join(staging, _DV_DIR)
-                        )
-                        if chg is not None:
-                            chg.write.parquet(os.path.join(staging, _CDF_DIR))
-
                 # Nothing matched: plain append; commit's default DV
                 # carry-forward keeps any pending vector (aux is None).
-                carry = {
-                    rel: os.path.join(data_root, rel)
-                    for rel in self.files(expect)
-                }
-                if val_fut is not None:
-                    val_fut.result()  # gate the publish (see merge_upsert)
-                return self.commit(
-                    updates.select(*out_cols),
-                    operation="merge_upsert_dv",
-                    carry_files=carry,
-                    carry_src=expect,
-                    expect_parent=expect,
-                    extra_meta=extra_meta,
-                    aux_writer=aux,
+                aux = None
+                if matched is not None:
+                    chg = None
+                    if meta.get("cdf"):
+                        pre, gone = matched.drop("__rel", "__ri"), None
+                        if dels is not None:
+                            gone = _conform(
+                                pre.join(dels, keys, "leftsemi"),
+                                out_cols,
+                                updates,
+                            )
+                            pre = pre.join(dels, keys, "left_anti")
+                        chg = _keyed_changes(
+                            keys, fresh, _conform(pre, out_cols, updates),
+                            gone,
+                        )
+                    aux = self._dv_writer(spark, expect, matched, chg)
+                gate()
+                return self._commit_over(
+                    expect, fresh, "merge_upsert_dv", extra_meta, aux=aux
                 )
             finally:
                 if matched is not None:
                     matched.unpersist()
 
-        val_fut = None
-        committed = False
-        try:
-            # overlapped with discovery — see merge_upsert / guide §2.6
-            if validate_keys:
-                val_fut = self._spawn_validation(validate, updates, dels)
-                if val_fut is None:
-                    validate()  # python-source plan: stay serial
-            res = self._with_retries(attempt, max_retries)
-            committed = True
-            return res
-        finally:
-            try:
-                if val_fut is not None:
-                    try:
-                        val_fut.result()
-                    except Exception:  # noqa: BLE001
-                        if committed:  # missed gate: fail loudly
-                            raise
-            finally:
-                updates.unpersist()
-                if dels is not None:
-                    dels.unpersist()
+        return self._keyed_dml(
+            (
+                updates,
+                None
+                if delete_keys is None
+                else delete_keys.select(*keys).distinct(),
+            ),
+            (lambda u, d: validate_merge_keys(u, keys, d))
+            if validate_keys
+            else None,
+            attempt,
+            max_retries,
+        )
 
     def sync_full(
         self,
@@ -3068,32 +3123,12 @@ class TxnTable:
         Schema must match the table exactly (``_evolved_columns`` guard,
         no evolution here — a full extract with a new column should
         evolve via ``merge_upsert(merge_schema=True)`` first)."""
-        source = source.persist()
 
-        def validate() -> None:
-            dup = (
-                source.groupBy(*keys)
-                .count()
-                .filter(F.col("count") > 1)
-                .limit(1)
-                .collect()
-            )
-            if dup:
-                raise ValueError(
-                    f"source contains duplicate merge keys, e.g. "
-                    f"{[dup[0][k] for k in keys]}; dedupe the source "
-                    "or pass validate_keys=False"
-                )
-
-        def attempt() -> str:
-            expect = self.current_version()
-            if expect is None:
-                raise FileNotFoundError(f"no committed version at {self.root}")
+        def attempt(gate, source: DataFrame) -> str:
+            expect, schema = self._snapshot()
             self._require_no_dv(expect, "sync_full")
-            data_root = os.path.join(self.root, _VERSIONS, expect)
-            target_schema = StructType.fromJson(self._meta(expect)["schema"])
             out_cols = _evolved_columns(
-                target_schema, source, False, "sync_full",
+                schema, source, False, "sync_full",
                 generated=self._meta(expect).get("generated"),
             )
             val_cols = [c for c in out_cols if c not in keys]
@@ -3103,8 +3138,7 @@ class TxnTable:
                 F.lit(True).alias("_sp"),
             )
             tgt = self._scan_files(
-                spark, expect, self.files(expect), target_schema,
-                file_col="_f",
+                spark, expect, self.files(expect), schema, file_col="_f",
             ).select(
                 *keys,
                 F.struct(*[F.col(c) for c in val_cols]).alias("_tv"),
@@ -3118,108 +3152,54 @@ class TxnTable:
                 .when(F.col("_sv").eqNullSafe(F.col("_tv")), F.lit("same"))
                 .otherwise(F.lit("update")),
             ).persist()
-            try:
-                touched = sorted(
-                    {
-                        os.path.relpath(_local_path(r["_f"]), data_root)
-                        for r in j.filter(
-                            F.col("_cls").isin("update", "delete")
-                        )
-                        .select("_f")
-                        .distinct()
-                        .collect()
-                    }
-                )
-                touched_set = set(touched)
-                carry = {
-                    rel: os.path.join(data_root, rel)
-                    for rel in self.files(expect)
-                    if rel not in touched_set
-                }
-                affected = j.filter(
-                    F.col("_cls").isin("update", "delete")
-                ).select(*keys)
-                if touched:
-                    kept = (
-                        self._scan_files(spark, expect, touched, target_schema)
-                        .join(affected, keys, "left_anti")
-                        .select(*out_cols)
-                    )
-                else:
-                    kept = None
-                fresh = j.filter(F.col("_cls").isin("update", "insert")).select(
-                    *keys, *[F.col(f"_sv.{c}").alias(c) for c in val_cols]
+
+            def side(classes: tuple[str, ...], image: str) -> DataFrame:
+                # rows of the given classes as the source (_sv) or the
+                # target (_tv) holds them, in the output columns
+                return j.filter(F.col("_cls").isin(*classes)).select(
+                    *keys, *[F.col(f"{image}.{c}").alias(c) for c in val_cols]
                 ).select(*out_cols)
-                merged = kept.unionByName(fresh) if kept is not None else fresh
-                aux = None
+
+            try:
+                changed = j.filter(F.col("_cls").isin("update", "delete"))
+                touched = self._touched(expect, changed)
+                rows = side(("update", "insert"), "_sv")
+                if touched:
+                    rows = (
+                        self._scan_files(spark, expect, touched, schema)
+                        .join(changed.select(*keys), keys, "left_anti")
+                        .select(*out_cols)
+                        .unionByName(rows)
+                    )
+                chg = None
                 # a NO-change sync writes no payload (and no fresh files):
                 # an empty parquet dir would break the feed read, and the
                 # feed's fresh-file derivation already yields nothing
                 if self._meta(expect).get("cdf") and j.filter(
                     F.col("_cls") != "same"
                 ).take(1):
-                    pre = j.filter(F.col("_cls") == "update").select(
-                        *keys,
-                        *[F.col(f"_tv.{c}").alias(c) for c in val_cols],
-                    ).select(*out_cols).withColumn(
-                        _CHANGE_TYPE, F.lit("update_preimage")
+                    chg = _changes(
+                        (side(("update",), "_tv"), "update_preimage"),
+                        (side(("update",), "_sv"), "update_postimage"),
+                        (side(("insert",), "_sv"), "insert"),
+                        (side(("delete",), "_tv"), "delete"),
                     )
-                    post = j.filter(F.col("_cls") == "update").select(
-                        *keys,
-                        *[F.col(f"_sv.{c}").alias(c) for c in val_cols],
-                    ).select(*out_cols).withColumn(
-                        _CHANGE_TYPE, F.lit("update_postimage")
-                    )
-                    ins = j.filter(F.col("_cls") == "insert").select(
-                        *keys,
-                        *[F.col(f"_sv.{c}").alias(c) for c in val_cols],
-                    ).select(*out_cols).withColumn(
-                        _CHANGE_TYPE, F.lit("insert")
-                    )
-                    dels = j.filter(F.col("_cls") == "delete").select(
-                        *keys,
-                        *[F.col(f"_tv.{c}").alias(c) for c in val_cols],
-                    ).select(*out_cols).withColumn(
-                        _CHANGE_TYPE, F.lit("delete")
-                    )
-                    chg = pre.unionByName(post).unionByName(ins).unionByName(
-                        dels
-                    )
-
-                    def aux(staging: str) -> None:
-                        chg.write.parquet(os.path.join(staging, _CDF_DIR))
-
-                if val_fut is not None:
-                    val_fut.result()  # gate the publish (see merge_upsert)
-                return self.commit(
-                    merged, operation="sync_full", carry_files=carry,
-                    extra_meta=extra_meta, carry_src=expect,
-                    expect_parent=expect, aux_writer=aux,
+                gate()
+                return self._commit_over(
+                    expect, rows, "sync_full", extra_meta, drop=touched,
+                    aux=self._cdf_writer(chg),
                 )
             finally:
                 j.unpersist()
 
-        val_fut = None
-        committed = False
-        try:
-            # overlapped with discovery — see merge_upsert / guide §2.6
-            if validate_keys:
-                val_fut = self._spawn_validation(validate, source)
-                if val_fut is None:
-                    validate()  # python-source plan: stay serial
-            res = self._with_retries(attempt, max_retries)
-            committed = True
-            return res
-        finally:
-            try:
-                if val_fut is not None:
-                    try:
-                        val_fut.result()
-                    except Exception:  # noqa: BLE001
-                        if committed:  # missed gate: fail loudly
-                            raise
-            finally:
-                source.unpersist()
+        return self._keyed_dml(
+            (source,),
+            (lambda s: validate_merge_keys(s, keys, name="source"))
+            if validate_keys
+            else None,
+            attempt,
+            max_retries,
+        )
 
     def overwrite_partitions(
         self,
@@ -3338,16 +3318,9 @@ class TxnTable:
                     generated=self._meta(expect).get("generated"),
                 )
             )
-            data_root = os.path.join(self.root, _VERSIONS, expect)
-            carry = {
-                rel: os.path.join(data_root, rel)
-                for rel in self.files(expect)
-            }
-            return self.commit(
-                out, partition_by=partition_by, sort_within=sort_within,
-                operation="append", carry_files=carry,
-                extra_meta=extra_meta, carry_src=expect,
-                expect_parent=expect,
+            return self._commit_over(
+                expect, out, "append", extra_meta,
+                partition_by=partition_by, sort_within=sort_within,
             )
 
         return self._with_retries(attempt, max_retries)
@@ -3371,11 +3344,13 @@ class TxnTable:
         predicate + column expressions.
 
         ``set`` maps EXISTING column names to pyspark Column expressions
-        (evaluated against the pre-update row; new columns are schema
-        evolution, use ``merge_upsert(merge_schema=True)``). ``prune``
-        optionally bounds the touched-file discovery with manifest
-        triples, exactly as in ``delete_where`` — on a key-clustered
-        100 TB table a keyed update rewrites only the files it hits.
+        (evaluated against the pre-update row and cast to the column's
+        recorded type — an UPDATE never changes a column's type; new
+        columns are schema evolution, use
+        ``merge_upsert(merge_schema=True)``). ``prune`` optionally bounds
+        the touched-file discovery with manifest triples, exactly as in
+        ``delete_where`` — on a key-clustered 100 TB table a keyed update
+        rewrites only the files it hits.
 
         ANSI三-valued WHERE: only rows where the condition is definitely
         TRUE update (NULL keeps the row unchanged). Row-level CDF, when
@@ -3384,84 +3359,35 @@ class TxnTable:
         nothing matched — no empty commit)."""
 
         def attempt() -> str:
-            expect = self.current_version()
-            if expect is None:
-                raise FileNotFoundError(f"no committed version at {self.root}")
+            expect, schema = self._snapshot()
             self._require_no_dv(expect, "update_where")
-            data_root = os.path.join(self.root, _VERSIONS, expect)
-            target_schema = StructType.fromJson(self._meta(expect)["schema"])
-            known = set_ = dict(set)
-            bad = [c for c in known if c not in target_schema.fieldNames()]
-            if bad:
-                raise ValueError(
-                    f"update_where sets unknown columns {bad}; UPDATE "
-                    "cannot add columns — use merge_upsert(merge_schema"
-                    "=True) for additive evolution"
-                )
+            hit = F.coalesce(condition.cast("boolean"), F.lit(False))
+            updated_cols = _set_image(schema, set, "update_where", hit)
             candidates, _total = self.pruned_files(prune or [], expect)
             if not candidates:
                 return expect
-            cand_scan = self._scan_files(
-                spark, expect, candidates, target_schema, file_col="_f"
-            )
-            touched = sorted(
-                os.path.relpath(_local_path(r["_f"]), data_root)
-                for r in cand_scan.filter(condition)
-                .select("_f")
-                .distinct()
-                .collect()
+            touched = self._touched(
+                expect,
+                self._scan_files(
+                    spark, expect, candidates, schema, file_col="_f"
+                ).filter(condition),
             )
             if not touched:
                 return expect  # nothing matched: the table is unchanged
-            # NB: the public `set` parameter shadows the builtin here
-            touched_set = frozenset(touched)
-            carry = {
-                rel: os.path.join(data_root, rel)
-                for rel in self.files(expect)
-                if rel not in touched_set
-            }
-            hit = F.coalesce(condition.cast("boolean"), F.lit(False))
-            scan = self._scan_files(spark, expect, touched, target_schema)
-            updated = scan.select(
-                *[
-                    (
-                        F.when(hit, set_[c]).otherwise(F.col(c)).alias(c)
-                        if c in set_
-                        else F.col(c)
-                    )
-                    for c in target_schema.fieldNames()
-                ]
-            )
-            aux = None
+            scan = self._scan_files(spark, expect, touched, schema)
+            chg = None
             if self._meta(expect).get("cdf"):
-                pre = scan.filter(hit).withColumn(
-                    _CHANGE_TYPE, F.lit("update_preimage")
+                pre = scan.filter(hit)
+                chg = _changes(
+                    (pre, "update_preimage"),
+                    (
+                        pre.select(*_set_image(schema, set, "update_where")),
+                        "update_postimage",
+                    ),
                 )
-                post = (
-                    scan.filter(hit)
-                    .select(
-                        *[
-                            (
-                                set_[c]
-                                .cast(target_schema[c].dataType)
-                                .alias(c)
-                                if c in set_
-                                else F.col(c)
-                            )
-                            for c in target_schema.fieldNames()
-                        ]
-                    )
-                    .withColumn(_CHANGE_TYPE, F.lit("update_postimage"))
-                )
-                chg = pre.unionByName(post)
-
-                def aux(staging: str) -> None:
-                    chg.write.parquet(os.path.join(staging, _CDF_DIR))
-
-            return self.commit(
-                updated, operation="update", carry_files=carry,
-                extra_meta=extra_meta, carry_src=expect,
-                expect_parent=expect, aux_writer=aux,
+            return self._commit_over(
+                expect, scan.select(*updated_cols), "update", extra_meta,
+                drop=touched, aux=self._cdf_writer(chg),
             )
 
         return self._with_retries(attempt, max_retries)
@@ -3487,94 +3413,34 @@ class TxnTable:
         ``materialize_deletes`` rewrite).
 
         Same three-valued WHERE as ``update_where`` (only
-        definitely-TRUE rows update), same ``set``/``prune`` contract,
-        same row-level CDF images (pre/post from the matched scan).
+        definitely-TRUE rows update), same ``set``/``prune`` contract and
+        the same post-image (``_set_image``), same row-level CDF images
+        (pre/post from the matched live rows, ``_live_matches``).
         Returns the current version unchanged when nothing matches."""
 
         def attempt() -> str:
-            expect = self.current_version()
-            if expect is None:
-                raise FileNotFoundError(f"no committed version at {self.root}")
-            data_root = os.path.join(self.root, _VERSIONS, expect)
-            target_schema = StructType.fromJson(self._meta(expect)["schema"])
-            set_ = dict(set)
-            bad = [
-                c for c in set_ if c not in target_schema.fieldNames()
-            ]
-            if bad:
-                raise ValueError(
-                    f"update_where_dv sets unknown columns {bad}; "
-                    "UPDATE cannot add columns — use merge_upsert("
-                    "merge_schema=True) for additive evolution"
-                )
+            expect, schema = self._snapshot()
+            updated_cols = _set_image(schema, set, "update_where_dv")
             candidates, _total = self.pruned_files(prune or [], expect)
-            if not candidates:
-                return expect
-            scan = self._scan_files(
-                spark, expect, candidates, target_schema, meta_cols=True
-            )
-            has_old_dv = self.has_deletion_vectors(expect)
-            if has_old_dv:
-                old = self._read_dv(spark, expect)
-                scan = scan.join(
-                    old,
-                    (scan["__rel"] == old["rel"])
-                    & (scan["__ri"] == old["row_index"]),
-                    "left_anti",
-                )
             hit = F.coalesce(condition.cast("boolean"), F.lit(False))
-            matched = scan.filter(hit).persist()
+            matched = self._live_matches(
+                spark, expect, candidates, schema,
+                lambda scan: scan.filter(hit),
+            )
+            if matched is None:
+                return expect  # nothing matched: the table is unchanged
             try:
-                if matched.limit(1).count() == 0:
-                    return expect
-                dv = matched.select(
-                    F.col("__rel").alias("rel"),
-                    F.col("__ri").alias("row_index"),
-                )
-                if has_old_dv:
-                    dv = dv.unionByName(
-                        self._read_dv(spark, expect)
-                    ).distinct()
                 pre = matched.drop("__rel", "__ri")
-                updated = pre.select(
-                    *[
-                        (
-                            set_[c].cast(target_schema[c].dataType).alias(c)
-                            if c in set_
-                            else F.col(c)
-                        )
-                        for c in target_schema.fieldNames()
-                    ]
-                )
+                updated = pre.select(*updated_cols)
                 chg = None
                 if self._meta(expect).get("cdf"):
-                    chg = pre.withColumn(
-                        _CHANGE_TYPE, F.lit("update_preimage")
-                    ).unionByName(
-                        updated.withColumn(
-                            _CHANGE_TYPE, F.lit("update_postimage")
-                        )
+                    chg = _changes(
+                        (pre, "update_preimage"),
+                        (updated, "update_postimage"),
                     )
-
-                def aux(staging: str, dv=dv, chg=chg) -> None:
-                    dv.coalesce(1).write.parquet(
-                        os.path.join(staging, _DV_DIR)
-                    )
-                    if chg is not None:
-                        chg.write.parquet(os.path.join(staging, _CDF_DIR))
-
-                carry = {
-                    rel: os.path.join(data_root, rel)
-                    for rel in self.files(expect)
-                }
-                return self.commit(
-                    updated,
-                    operation="update_where_dv",
-                    carry_files=carry,
-                    carry_src=expect,
-                    expect_parent=expect,
-                    extra_meta=extra_meta,
-                    aux_writer=aux,
+                return self._commit_over(
+                    expect, updated, "update_where_dv", extra_meta,
+                    aux=self._dv_writer(spark, expect, matched, chg),
                 )
             finally:
                 matched.unpersist()
@@ -3608,60 +3474,35 @@ class TxnTable:
         """
 
         def attempt() -> str:
-            expect = self.current_version()
-            if expect is not None:
-                self._require_no_dv(expect, "delete_where")
-            if expect is None:
-                raise FileNotFoundError(f"no committed version at {self.root}")
-            data_root = os.path.join(self.root, _VERSIONS, expect)
-            target_schema = StructType.fromJson(self._meta(expect)["schema"])
+            expect, schema = self._snapshot()
+            self._require_no_dv(expect, "delete_where")
             candidates, _total = self.pruned_files(prune or [], expect)
             if not candidates:
                 return expect
-            cand_scan = self._scan_files(
-                spark, expect, candidates, target_schema, file_col="_f"
-            )
-            touched = sorted(
-                os.path.relpath(_local_path(r["_f"]), data_root)
-                for r in cand_scan.filter(condition)
-                .select("_f")
-                .distinct()
-                .collect()
+            touched = self._touched(
+                expect,
+                self._scan_files(
+                    spark, expect, candidates, schema, file_col="_f"
+                ).filter(condition),
             )
             if not touched:
                 return expect  # nothing matched: the table is unchanged
-            touched_set = set(touched)
-            carry = {
-                rel: os.path.join(data_root, rel)
-                for rel in self.files(expect)
-                if rel not in touched_set
-            }
             # DELETE semantics: remove rows where the condition is TRUE.
             # ``~condition`` alone would also drop NULL-evaluating rows
             # (NULL negates to NULL, and filter drops non-TRUE) — silent
             # data loss on any nullable predicate column. Keep = NOT
             # coalesce(condition, FALSE), the SQL-standard three-valued
             # reading Delta's DELETE implements.
-            kept = self._scan_files(
-                spark, expect, touched, target_schema
-            ).filter(~F.coalesce(condition.cast("boolean"), F.lit(False)))
+            hit = F.coalesce(condition.cast("boolean"), F.lit(False))
+            scan = self._scan_files(spark, expect, touched, schema)
             # CDF payload: the deleted rows, read from the same touched
             # files the kept-scan reads — IO ∝ touched, written once
-            aux = None
+            chg = None
             if self._meta(expect).get("cdf"):
-                deleted = (
-                    self._scan_files(spark, expect, touched, target_schema)
-                    .filter(F.coalesce(condition.cast("boolean"), F.lit(False)))
-                    .withColumn(_CHANGE_TYPE, F.lit("delete"))
-                )
-
-                def aux(staging: str) -> None:
-                    deleted.write.parquet(os.path.join(staging, _CDF_DIR))
-
-            return self.commit(
-                kept, operation="delete", carry_files=carry,
-                extra_meta=extra_meta, carry_src=expect,
-                expect_parent=expect, aux_writer=aux,
+                chg = _changes((scan.filter(hit), "delete"))
+            return self._commit_over(
+                expect, scan.filter(~hit), "delete", extra_meta,
+                drop=touched, aux=self._cdf_writer(chg),
             )
 
         return self._with_retries(attempt, max_retries)
@@ -3686,7 +3527,10 @@ class TxnTable:
 
         Same three-valued semantics as ``delete_where``: rows where the
         condition is TRUE are suppressed; NULL-evaluating rows stay.
-        Successive deferred deletes union their vectors. Manifest row
+        Successive deferred deletes union their vectors; only LIVE rows
+        match (``_live_matches``), so a delete whose every match an
+        earlier vector already suppressed commits nothing, and the change
+        feed records each logical delete exactly once. Manifest row
         counts and column stats intentionally keep counting suppressed
         rows (conservative for pruning — a file is never skipped because
         of rows it still physically holds). File-granular writers
@@ -3694,77 +3538,26 @@ class TxnTable:
         """
 
         def attempt() -> str:
-            expect = self.current_version()
-            if expect is None:
-                raise FileNotFoundError(f"no committed version at {self.root}")
-            data_root = os.path.join(self.root, _VERSIONS, expect)
-            target_schema = StructType.fromJson(self._meta(expect)["schema"])
+            expect, schema = self._snapshot()
             candidates, _total = self.pruned_files(prune or [], expect)
-            pred = F.coalesce(condition.cast("boolean"), F.lit(False))
-            has_old_dv = self.has_deletion_vectors(expect)
-            fresh_matches = None
-            if candidates:
-                # meta_cols binds __rel/__ri inside each spec-group scan
-                # (_metadata does not survive the evolution union)
-                scan = self._scan_files(
-                    spark, expect, candidates, target_schema,
-                    meta_cols=True,
-                )
-                fresh_matches = scan.filter(pred).select(
-                    F.col("__rel").alias("rel"),
-                    F.col("__ri").alias("row_index"),
-                )
-                if fresh_matches.limit(1).count() == 0:
-                    fresh_matches = None
-            if fresh_matches is None:
-                return expect  # nothing matched: the table is unchanged
-            dv = fresh_matches
-            if has_old_dv:
-                dv = dv.unionByName(self._read_dv(spark, expect))
-            dv = dv.distinct()
-            # CDF payload: the rows this commit NEWLY suppresses. The raw
-            # scan sees rows an earlier vector already deleted (DV is
-            # applied at read, not here), so an overlapping predicate
-            # would re-emit them — the anti-join against the OLD vector
-            # keeps the feed exactly-once per logical delete.
-            chg = None
-            if self._meta(expect).get("cdf"):
-                rows = scan.filter(pred).withColumns(
-                    {
-                        "rel": F.col("__rel"),
-                        "row_index": F.col("__ri"),
-                    }
-                ).drop("__rel", "__ri")
-                if has_old_dv:
-                    rows = rows.join(
-                        self._read_dv(spark, expect),
-                        ["rel", "row_index"],
-                        "left_anti",
-                    )
-                chg = rows.drop("rel", "row_index").withColumn(
-                    _CHANGE_TYPE, F.lit("delete")
-                )
-
-            def aux(staging: str) -> None:
-                dv.coalesce(1).write.parquet(os.path.join(staging, _DV_DIR))
-                if chg is not None:
-                    chg.write.parquet(os.path.join(staging, _CDF_DIR))
-
-            carry = {
-                rel: os.path.join(data_root, rel)
-                for rel in self.files(expect)
-            }
-            empty = _empty_df(spark, target_schema)
-            return self.commit(
-                empty,
-                metadata_only=True,
-                operation="delete_dv",
-                carry_files=carry,
-                carry_src=expect,
-                expect_parent=expect,
-                extra_meta=extra_meta,
-                aux_writer=aux,
+            hit = F.coalesce(condition.cast("boolean"), F.lit(False))
+            matched = self._live_matches(
+                spark, expect, candidates, schema,
+                lambda scan: scan.filter(hit),
             )
+            if matched is None:
+                return expect  # nothing matched: the table is unchanged
+            try:
+                chg = None
+                if self._meta(expect).get("cdf"):
+                    chg = _changes((matched.drop("__rel", "__ri"), "delete"))
+                return self._commit_over(
+                    expect, _empty_df(spark, schema), "delete_dv",
+                    extra_meta, metadata_only=True,
+                    aux=self._dv_writer(spark, expect, matched, chg),
+                )
+            finally:
+                matched.unpersist()
 
         return self._with_retries(attempt, max_retries)
 
@@ -3781,14 +3574,10 @@ class TxnTable:
         is pending."""
 
         def attempt() -> str:
-            expect = self.current_version()
-            if expect is None:
-                raise FileNotFoundError(f"no committed version at {self.root}")
+            expect, target_schema = self._snapshot()
             if not self.has_deletion_vectors(expect):
                 return expect
             meta = self._meta(expect)
-            data_root = os.path.join(self.root, _VERSIONS, expect)
-            target_schema = StructType.fromJson(meta["schema"])
             current_files = set(self.files(expect))
             touched = sorted(
                 r["rel"]
@@ -3796,26 +3585,14 @@ class TxnTable:
                 .select("rel").distinct().collect()
                 if r["rel"] in current_files
             )
-            carry = {
-                rel: os.path.join(data_root, rel)
-                for rel in current_files
-                if rel not in set(touched)
-            }
 
             def rewrite(staging: str) -> None:
                 # Partitioning the write by the touched file's index gives
                 # each one its own output file; the files then move up out
                 # of the __file=<i> directories into their partition dir.
-                scan = self._scan_files(
-                    spark, expect, touched, target_schema, meta_cols=True
-                )
-                dv = self._read_dv(spark, expect)
                 cm = meta.get("column_mapping")
-                kept = scan.join(
-                    dv,
-                    (scan["__rel"] == dv["rel"])
-                    & (scan["__ri"] == dv["row_index"]),
-                    "left_anti",
+                kept = self._live_scan(
+                    spark, expect, touched, target_schema
                 ).select(
                     *(
                         F.col(c).alias(_cm_phys(cm, c))
@@ -3844,15 +3621,11 @@ class TxnTable:
                             )
                 shutil.rmtree(tmp)
 
-            return self.commit(
-                _empty_df(spark, target_schema),
-                metadata_only=True,
-                operation="materialize_deletes",
-                carry_files=carry,
-                carry_src=expect,
-                expect_parent=expect,
+            return self._commit_over(
+                expect, _empty_df(spark, target_schema),
+                "materialize_deletes", drop=touched,
+                aux=rewrite if touched else None, metadata_only=True,
                 carry_dv=False,  # the whole point: the vector is folded in
-                aux_writer=rewrite if touched else None,
             )
 
         return self._with_retries(attempt, max_retries)
@@ -3879,129 +3652,52 @@ class TxnTable:
         upserts) — per-key last-writer-wins, resolved with one window over
         the (small) change batch. Without it, one op per key is enforced.
 
-        Execution mirrors ``merge_upsert``: manifest min/max candidate
-        pruning on the key bounds, one discovery scan for touched files,
-        rewrite = kept rows (non-affected keys) + surviving upserts,
-        everything else carried by hard link. Deletes that match nothing
-        are no-ops; the whole batch lands in exactly one snapshot.
+        The resolved batch then runs the copy-on-write keyed merge
+        ``merge_upsert`` runs (``_merge_cow``): the I/U rows are the update
+        set, in the table's recorded columns, and the D keys its
+        ``delete_keys`` — manifest min/max candidate pruning on the key
+        bounds, one discovery scan for touched files, rewrite = kept rows
+        (non-affected keys) + surviving upserts, everything else carried
+        by hard link. Deletes that match nothing are no-ops; the whole
+        batch lands in exactly one snapshot.
         """
+        if seq_col is not None:
+            from pyspark.sql.window import Window
 
-        def attempt() -> str:
-            expect = self.current_version()
-            if expect is not None:
-                self._require_no_dv(expect, "apply_cdc")
-            if expect is None:
-                raise FileNotFoundError(f"no committed version at {self.root}")
-            data_root = os.path.join(self.root, _VERSIONS, expect)
-            target_schema = StructType.fromJson(self._meta(expect)["schema"])
+            w = Window.partitionBy(*keys).orderBy(F.col(seq_col).desc())
+            changes = (
+                changes.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") == 1)
+                .drop("_rn")
+            )
+        else:
+            dup = (
+                changes.groupBy(*keys)
+                .count()
+                .filter(F.col("count") > 1)
+                .limit(1)
+                .collect()
+            )
+            if dup:
+                raise ValueError(
+                    "CDC batch has multiple ops for key "
+                    f"{[dup[0][k] for k in keys]}; pass seq_col to "
+                    "resolve per-key ordering"
+                )
 
-            latest = changes
-            if seq_col is not None:
-                from pyspark.sql.window import Window
+        def attempt(gate, latest: DataFrame) -> str:
+            return self._merge_cow(
+                spark,
+                latest.filter(F.col(op_col).isin("I", "U")),
+                latest.filter(F.col(op_col) == "D").select(*keys).distinct(),
+                keys,
+                lambda schema, meta: schema.fieldNames(),
+                "apply_cdc",
+                extra_meta,
+                gate,
+            )
 
-                w = Window.partitionBy(*keys).orderBy(F.col(seq_col).desc())
-                latest = (
-                    changes.withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") == 1)
-                    .drop("_rn")
-                )
-            else:
-                dup = (
-                    changes.groupBy(*keys)
-                    .count()
-                    .filter(F.col("count") > 1)
-                    .limit(1)
-                    .collect()
-                )
-                if dup:
-                    raise ValueError(
-                        "CDC batch has multiple ops for key "
-                        f"{[dup[0][k] for k in keys]}; pass seq_col to "
-                        "resolve per-key ordering"
-                    )
-            latest = latest.persist()
-            upserts = latest.filter(
-                F.col(op_col).isin("I", "U")
-            ).drop(op_col, *( [seq_col] if seq_col else [] ))
-            upserts = upserts.select(*[f.name for f in target_schema.fields])
-            affected_keys = latest.select(*keys).distinct()
-            candidates = self._merge_candidates(expect, affected_keys, keys)
-            if candidates:
-                cand_scan = self._scan_files(
-                    spark, expect, candidates, target_schema, file_col="_f"
-                )
-                touched = sorted(
-                    os.path.relpath(_local_path(r["_f"]), data_root)
-                    for r in cand_scan.join(affected_keys, keys, "leftsemi")
-                    .select("_f")
-                    .distinct()
-                    .collect()
-                )
-            else:
-                touched = []
-            touched_set = set(touched)
-            carry = {
-                rel: os.path.join(data_root, rel)
-                for rel in self.files(expect)
-                if rel not in touched_set
-            }
-            aux = None
-            if touched:
-                old_scan = self._scan_files(
-                    spark, expect, touched, target_schema
-                )
-                kept = old_scan.join(affected_keys, keys, "left_anti")
-                merged = kept.unionByName(upserts)
-                # CDF payload from data already in hand (same touched-file
-                # scan the kept-path reads): matched upserts -> pre/post
-                # images, unmatched -> inserts, matched D-rows -> deletes
-                # (a D matching nothing is a no-op, no event)
-                if self._meta(expect).get("cdf"):
-                    upsert_keys = upserts.select(*keys).distinct()
-                    delete_keys = (
-                        latest.filter(F.col(op_col) == "D")
-                        .select(*keys)
-                        .distinct()
-                    )
-                    pre = old_scan.join(upsert_keys, keys, "leftsemi")
-                    matched_keys = pre.select(*keys).distinct()
-                    post = upserts.join(matched_keys, keys, "leftsemi")
-                    ins = upserts.join(matched_keys, keys, "left_anti")
-                    del_rows = old_scan.join(delete_keys, keys, "leftsemi")
-                    chg = (
-                        pre.withColumn(
-                            _CHANGE_TYPE, F.lit("update_preimage")
-                        )
-                        .unionByName(
-                            post.withColumn(
-                                _CHANGE_TYPE, F.lit("update_postimage")
-                            )
-                        )
-                        .unionByName(
-                            ins.withColumn(_CHANGE_TYPE, F.lit("insert"))
-                        )
-                        .unionByName(
-                            del_rows.withColumn(
-                                _CHANGE_TYPE, F.lit("delete")
-                            )
-                        )
-                    )
-
-                    def aux(staging: str) -> None:
-                        chg.write.parquet(os.path.join(staging, _CDF_DIR))
-
-            else:
-                merged = upserts
-            try:
-                return self.commit(
-                    merged, operation="apply_cdc", carry_files=carry,
-                    extra_meta=extra_meta, carry_src=expect,
-                    expect_parent=expect, aux_writer=aux,
-                )
-            finally:
-                latest.unpersist()
-
-        return self._with_retries(attempt, max_retries)
+        return self._keyed_dml((changes,), None, attempt, max_retries)
 
     def add_columns(
         self,
@@ -4034,12 +3730,7 @@ class TxnTable:
             raise ValueError(f"duplicate column names in ADD COLUMNS: {names}")
 
         def attempt() -> str:
-            expect = self.current_version()
-            if expect is None:
-                raise FileNotFoundError(
-                    f"no committed version at {self.root}"
-                )
-            recorded = StructType.fromJson(self._meta(expect)["schema"])
+            expect, recorded = self._snapshot()
             existing = {f.name.lower() for f in recorded.fields}
             clash = [n for n in names if n.lower() in existing]
             if clash:
@@ -4051,19 +3742,9 @@ class TxnTable:
                 list(recorded.fields)
                 + [StructField(f.name, f.dataType, True) for f in added]
             )
-            data_root = os.path.join(self.root, _VERSIONS, expect)
-            carry = {
-                rel: os.path.join(data_root, rel)
-                for rel in self.files(expect)
-            }
-            return self.commit(
-                _empty_df(spark, evolved),
-                metadata_only=True,
-                operation="add_columns",
-                carry_files=carry,
-                carry_src=expect,
-                expect_parent=expect,
-                extra_meta={"columns_added": names},
+            return self._commit_over(
+                expect, _empty_df(spark, evolved), "add_columns",
+                {"columns_added": names}, metadata_only=True,
             )
 
         return self._with_retries(attempt, max_retries)
@@ -4104,13 +3785,8 @@ class TxnTable:
         want = _parse_datatype_string(new_type)
 
         def attempt() -> str:
-            expect = self.current_version()
-            if expect is None:
-                raise FileNotFoundError(
-                    f"no committed version at {self.root}"
-                )
+            expect, recorded = self._snapshot()
             meta = self._meta(expect)
-            recorded = StructType.fromJson(meta["schema"])
             by_lower = {f.name.lower(): f for f in recorded.fields}
             f = by_lower.get(column.lower())
             if f is None:
@@ -4147,19 +3823,9 @@ class TxnTable:
                     for x in recorded.fields
                 ]
             )
-            data_root = os.path.join(self.root, _VERSIONS, expect)
-            carry = {
-                rel: os.path.join(data_root, rel)
-                for rel in self.files(expect)
-            }
-            return self.commit(
-                _empty_df(spark, evolved),
-                metadata_only=True,
-                operation="widen_type",
-                carry_files=carry,
-                carry_src=expect,
-                expect_parent=expect,
-                extra_meta={"type_widened": [column, cur, tgt]},
+            return self._commit_over(
+                expect, _empty_df(spark, evolved), "widen_type",
+                {"type_widened": [column, cur, tgt]}, metadata_only=True,
             )
 
         return self._with_retries(attempt, max_retries)
@@ -4230,13 +3896,8 @@ class TxnTable:
             raise ValueError("rename_column: old and new name are equal")
 
         def attempt() -> str:
-            expect = self.current_version()
-            if expect is None:
-                raise FileNotFoundError(
-                    f"no committed version at {self.root}"
-                )
+            expect, recorded = self._snapshot()
             meta = self._meta(expect)
-            recorded = StructType.fromJson(meta["schema"])
             have = {f.name.lower() for f in recorded.fields}
             if old.lower() not in have:
                 raise ValueError(f"no column {old!r} to rename")
@@ -4265,22 +3926,10 @@ class TxnTable:
                 new if c.lower() == old.lower() else c
                 for c in (meta.get("bloom_cols") or [])
             ]
-            data_root = os.path.join(self.root, _VERSIONS, expect)
-            carry = {
-                rel: os.path.join(data_root, rel)
-                for rel in self.files(expect)
-            }
-            return self.commit(
-                _empty_df(spark, evolved),
-                metadata_only=True,
-                partition_by=spec,
-                operation="rename_column",
-                carry_files=carry,
-                carry_src=expect,
-                expect_parent=expect,
-                bloom_cols=blooms,
-                column_mapping=cm,
-                extra_meta={"column_renamed": [old, new]},
+            return self._commit_over(
+                expect, _empty_df(spark, evolved), "rename_column",
+                {"column_renamed": [old, new]}, metadata_only=True,
+                partition_by=spec, bloom_cols=blooms, column_mapping=cm,
             )
 
         return self._with_retries(attempt, max_retries)
@@ -4306,13 +3955,8 @@ class TxnTable:
         dropping the last column."""
 
         def attempt() -> str:
-            expect = self.current_version()
-            if expect is None:
-                raise FileNotFoundError(
-                    f"no committed version at {self.root}"
-                )
+            expect, recorded = self._snapshot()
             meta = self._meta(expect)
-            recorded = StructType.fromJson(meta["schema"])
             by_lower = {f.name.lower(): f for f in recorded.fields}
             if column.lower() not in by_lower:
                 raise ValueError(f"no column {column!r} to drop")
@@ -4343,21 +3987,10 @@ class TxnTable:
                 for c in (meta.get("bloom_cols") or [])
                 if c.lower() != column.lower()
             ]
-            data_root = os.path.join(self.root, _VERSIONS, expect)
-            carry = {
-                rel: os.path.join(data_root, rel)
-                for rel in self.files(expect)
-            }
-            return self.commit(
-                _empty_df(spark, evolved),
-                metadata_only=True,
-                operation="drop_column",
-                carry_files=carry,
-                carry_src=expect,
-                expect_parent=expect,
-                bloom_cols=blooms,
-                column_mapping=cm,
-                extra_meta={"column_dropped": column},
+            return self._commit_over(
+                expect, _empty_df(spark, evolved), "drop_column",
+                {"column_dropped": column}, metadata_only=True,
+                bloom_cols=blooms, column_mapping=cm,
             )
 
         return self._with_retries(attempt, max_retries)
@@ -4849,11 +4482,7 @@ class TxnTable:
                 raise
             carry: dict[str, str] = {}
             if expect is not None and not overwrite:
-                data_root = os.path.join(self.root, _VERSIONS, expect)
-                carry = {
-                    rel: os.path.join(data_root, rel)
-                    for rel in self.files(expect)
-                }
+                carry = self._carry(expect)
             # watermark fold-forward, same as commit(); the caller's own
             # extra_meta (e.g. the streaming sink's epoch id) wins
             extra: dict = {}

@@ -657,6 +657,63 @@ def test_concurrent_sync_loses_loudly_never_overwrites(spark, tmp_path):
     assert not os.path.exists(tmp)  # loser's temp cleaned up
 
 
+
+def test_racing_commit_writers_of_one_slot(spark, tmp_path, monkeypatch):
+    """Two threads of one process append to one Delta table and both
+    compute the same next commit number (a barrier holds each at its
+    link into that slot). Exactly one links it; the other loses the
+    slot, re-replays and lands in the next one. Each commit holds its
+    own writer's actions — each writer stages them in a temp file of
+    its own — so the table ends with both appends exactly once, and no
+    temp file is left in the log."""
+    import threading
+
+    import rxlan_aws_lakehouse_spark.delta_export as dx
+
+    t = _mk(spark, str(tmp_path / "t"), n=10)
+    dest = str(tmp_path / "out")
+    export_delta(t, dest)
+    log_dir = os.path.join(dest, "_delta_log")
+    slot = replay_delta_log(dest)["n_commits"]
+    target = os.path.join(log_dir, f"{slot:020d}.json")
+    barrier = threading.Barrier(2, timeout=60)
+    real_link = os.link
+
+    def link(src, dst, *args, **kwargs):
+        if dst == target:
+            barrier.wait()
+        return real_link(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(dx.os, "link", link)
+    results, errors = {}, {}
+
+    def run(lo):
+        try:
+            results[lo] = dx.append_delta(
+                spark,
+                dest,
+                spark.range(lo, lo + 5).select(
+                    F.col("id"),
+                    (F.col("id") % 7).alias("g"),
+                    (F.col("id") * 1.5).alias("x"),
+                ),
+            )
+        except Exception as e:  # noqa: BLE001 - the test inspects it
+            errors[lo] = e
+
+    threads = [threading.Thread(target=run, args=(lo,)) for lo in (100, 200)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=120)
+        assert not th.is_alive()
+    assert not errors, errors
+    assert sorted(r["version"] for r in results.values()) == [slot, slot + 1]
+    ids = sorted(r["id"] for r in read_delta_export(spark, dest).collect())
+    assert ids == [*range(10), *range(100, 105), *range(200, 205)]
+    assert not [n for n in os.listdir(log_dir) if n.startswith(".")]
+
+
 # -- round 12: CAS pointer, null partitions, rewind, dataChange ---------
 
 

@@ -104,6 +104,20 @@ def test_bucket_pairs_complete(spark, ids):
     assert len({(r["a"], r["b"]) for r in rows}) == len(rows)
 
 
+def _rows_and_feed(spark, t, since):
+    """A table's logical rows and its row-level change feed since
+    ``since``, both as sorted tuples (commit versions left out: the two
+    strategies' tables commit in lockstep, but a no-op commits nothing)."""
+    rows = sorted(tuple(r) for r in t.read(spark).select("k", "v").collect())
+    feed = sorted(
+        tuple(r)
+        for r in t.read_row_changes(spark, since)
+        .select("k", "v", "_change_type")
+        .collect()
+    )
+    return rows, feed
+
+
 @settings(
     max_examples=6,
     deadline=None,
@@ -112,44 +126,136 @@ def test_bucket_pairs_complete(spark, ids):
 @given(
     base_keys=st.sets(st.integers(0, 30), min_size=1, max_size=20),
     upd_keys=st.sets(st.integers(0, 40), min_size=1, max_size=10),
+    del_keys=st.sets(st.integers(0, 40), max_size=5),
+    set_keys=st.sets(st.integers(0, 40), max_size=8),
+    gone_keys=st.sets(st.integers(0, 40), max_size=8),
     pre_delete=st.sets(st.integers(0, 30), max_size=5),
 )
 def test_merge_dv_equals_cow_on_arbitrary_inputs(
-    spark, tmp_path_factory, base_keys, upd_keys, pre_delete
+    spark, tmp_path_factory, base_keys, upd_keys, del_keys, set_keys,
+    gone_keys, pre_delete,
 ):
-    """PROPERTY: for any base table, update set, and (optional) pending
-    deferred-delete set, merge-on-read (merge_upsert_dv) and
-    copy-on-write (merge_upsert, run after materializing the deletes)
-    produce the exact same logical table — and materializing the MoR
-    result changes nothing. The naive reference: dict-apply in Python."""
+    """PROPERTY: for any base table and any statement sequence — an
+    optional DELETE, then MERGE (with ``delete_keys``), UPDATE and
+    DELETE — the deletion-vector verbs (``delete_where_deferred``,
+    ``merge_upsert_dv``, ``update_where_dv``) and their copy-on-write
+    twins (``delete_where``, ``merge_upsert``, ``update_where``) leave
+    the same logical table and the same ``read_row_changes`` feed after
+    every statement. The DV table's later statements run over a
+    pending vector whenever an earlier one matched; materializing it
+    changes nothing. The naive reference: dict-apply in Python."""
     from rxlan_aws_lakehouse_spark.txn import TxnTable
 
     work = tmp_path_factory.mktemp("mdvprop")
     base = [(k, f"b{k}") for k in sorted(base_keys)]
     upd = [(k, f"u{k}") for k in sorted(upd_keys)]
+    dels = sorted(del_keys - upd_keys)  # one MERGE action per key
 
-    # python reference: delete, then last-writer-wins upsert
-    ref = {k: v for k, v in base if k not in pre_delete}
-    for k, v in upd:
-        ref[k] = v
-
-    t = TxnTable(str(work / "mor"))
-    t.commit(
-        spark.createDataFrame(base, "k long, v string").repartition(3, "k")
-    )
-    if pre_delete:
-        t.delete_where_deferred(
-            spark, F.col("k").isin(*[int(k) for k in pre_delete])
+    cow, dv = TxnTable(str(work / "cow")), TxnTable(str(work / "mor"))
+    for t in (cow, dv):
+        t.commit(
+            spark.createDataFrame(base, "k long, v string").repartition(
+                3, "k"
+            )
         )
-    t.merge_upsert_dv(
-        spark,
-        spark.createDataFrame(upd, "k long, v string"),
-        keys=["k"],
+        t.set_change_feed(spark, True)
+    since = cow.current_version()
+
+    def isin(keys):
+        return F.col("k").isin(*[int(k) for k in sorted(keys)] or [-1])
+
+    def both(run_cow, run_dv, ref):
+        run_cow(cow)
+        run_dv(dv)
+        rows, feed = _rows_and_feed(spark, cow, since)
+        assert rows == sorted(ref.items())
+        assert (rows, feed) == _rows_and_feed(spark, dv, since)
+
+    # python reference: delete, upsert + delete, update, delete
+    ref = {k: v for k, v in base if k not in pre_delete}
+    both(
+        lambda t: t.delete_where(spark, isin(pre_delete)),
+        lambda t: t.delete_where_deferred(spark, isin(pre_delete)),
+        ref,
     )
-    got = {r["k"]: r["v"] for r in t.read(spark).collect()}
-    assert got == ref
-    t.materialize_deletes(spark)
-    assert {r["k"]: r["v"] for r in t.read(spark).collect()} == ref
+    ref.update(upd)
+    for k in dels:
+        ref.pop(k, None)
+    upd_df = spark.createDataFrame(upd, "k long, v string")
+    del_df = spark.createDataFrame([(k,) for k in dels], "k long")
+    both(
+        lambda t: t.merge_upsert(spark, upd_df, ["k"], delete_keys=del_df),
+        lambda t: t.merge_upsert_dv(
+            spark, upd_df, ["k"], delete_keys=del_df
+        ),
+        ref,
+    )
+    for k in set_keys & set(ref):
+        ref[k] += "x"
+    setv = {"v": F.concat(F.col("v"), F.lit("x"))}
+    both(
+        lambda t: t.update_where(spark, isin(set_keys), setv),
+        lambda t: t.update_where_dv(spark, isin(set_keys), setv),
+        ref,
+    )
+    for k in gone_keys:
+        ref.pop(k, None)
+    both(
+        lambda t: t.delete_where(spark, isin(gone_keys)),
+        lambda t: t.delete_where_deferred(spark, isin(gone_keys)),
+        ref,
+    )
+    dv.materialize_deletes(spark)
+    assert _rows_and_feed(spark, dv, since) == _rows_and_feed(
+        spark, cow, since
+    )
+
+
+@settings(
+    max_examples=4,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    base_keys=st.sets(st.integers(0, 30), min_size=1, max_size=20),
+    ops=st.dictionaries(
+        st.integers(0, 40), st.sampled_from("IUD"), min_size=1, max_size=12
+    ),
+)
+def test_apply_cdc_equals_merge_with_delete_keys(
+    spark, tmp_path_factory, base_keys, ops
+):
+    """PROPERTY: a CDC batch (one op per key) through ``apply_cdc``
+    leaves the same rows and the same ``read_row_changes`` feed as
+    ``merge_upsert`` with its I/U rows as the update set and its D keys
+    as ``delete_keys``."""
+    from rxlan_aws_lakehouse_spark.txn import TxnTable
+
+    work = tmp_path_factory.mktemp("cdcprop")
+    base = [(k, f"b{k}") for k in sorted(base_keys)]
+    batch = [(k, f"c{k}", op) for k, op in sorted(ops.items())]
+    cdc, merge = TxnTable(str(work / "cdc")), TxnTable(str(work / "merge"))
+    for t in (cdc, merge):
+        t.commit(spark.createDataFrame(base, "k long, v string"))
+        t.set_change_feed(spark, True)
+    since = cdc.current_version()
+    changes = spark.createDataFrame(batch, "k long, v string, op string")
+    cdc.apply_cdc(spark, changes, keys=["k"])
+    merge.merge_upsert(
+        spark,
+        changes.filter(F.col("op") != "D").drop("op"),
+        keys=["k"],
+        delete_keys=changes.filter(F.col("op") == "D").select("k"),
+    )
+    ref = dict(base)
+    for k, v, op in batch:
+        if op == "D":
+            ref.pop(k, None)
+        else:
+            ref[k] = v
+    rows, feed = _rows_and_feed(spark, cdc, since)
+    assert rows == sorted(ref.items())
+    assert (rows, feed) == _rows_and_feed(spark, merge, since)
 
 
 # ---------------------------------------------------------------------------

@@ -1152,3 +1152,31 @@ class TestNativeReadPath:
         assert r.sql(
             "SELECT count(*) AS n FROM wide WHERE k >= 1230 AND k < 1240"
         ).collect()[0]["n"] == 9
+
+
+@pytest.mark.parametrize(
+    "route", ["update_where", "update_where_dv", "sql-cow", "sql-dv"]
+)
+def test_update_casts_set_values_to_column_type(spark, tmp_path, route):
+    """Every UPDATE path writes a SET value in its column's recorded
+    type: 7.9 into an INT column lands as 7, the recorded schema keeps
+    ``v:int``, and the change feed's post-image agrees — whether the
+    value comes from a Column (``F.lit(7.9)``, double) or from SQL
+    (``7.9``, decimal), under copy-on-write or deletion vectors."""
+    t = TxnTable(os.path.join(str(tmp_path), "t"))
+    t.commit(spark.createDataFrame([(1, 1), (2, 2)], "k int, v int"))
+    t.set_change_feed(spark, True)
+    since = t.current_version()
+    if route.startswith("sql-"):
+        r = TxnSqlRouter(spark, strategy=route.removeprefix("sql-"))
+        r.register("t", t)
+        r.sql("UPDATE t SET v = 7.9 WHERE k = 1").collect()
+    else:
+        getattr(t, route)(spark, F.col("k") == 1, {"v": F.lit(7.9)})
+    df = t.read(spark)
+    assert dict(df.dtypes) == {"k": "int", "v": "int"}
+    assert sorted(tuple(r) for r in df.collect()) == [(1, 7), (2, 2)]
+    feed = t.read_row_changes(spark, since)
+    assert sorted(
+        (r["_change_type"], r["v"]) for r in feed.collect()
+    ) == [("update_postimage", 7), ("update_preimage", 1)]
