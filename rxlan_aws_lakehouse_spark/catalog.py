@@ -23,6 +23,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.conversion import LocalDataToArrowConversion
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -45,20 +47,26 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
-    """Single-partition DataFrame over driver-local rows.
+    """DataFrame over driver-local ``rows`` (a list of tuples or Rows,
+    possibly empty) under ``schema`` (a ``StructType`` or a DDL string),
+    planned as a ``LocalRelation``.
 
-    ``spark.createDataFrame(list)`` parallelizes over
-    ``spark.default.parallelism`` slices, so EVERY later action on the
-    frame schedules that many near-empty tasks (32 here) — lanes
-    materialize their (small, already-collected) result this way, and
-    protocol lanes build fixture frames this way dozens of times.
-    One slice = one task per action (guide §1.2: remove work you don't
-    need; measured 3x cheaper per action at 1000 rows). Only for
-    driver-resident row lists, which are small by construction —
-    anything bigger arrives as a distributed plan, never a list."""
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema
-    )
+    The rows travel to the JVM as one Arrow table and stay in the plan:
+    collecting the frame runs no Spark job, and a plan that joins, unions
+    or writes it reads the rows on the driver. Values convert as
+    ``createDataFrame`` converts a row list: naive datetimes are local
+    wall-clock time, decimals are rounded to the column's scale. Only for
+    driver-resident row lists, which are small by construction; a list
+    above ``spark.sql.execution.arrow.localRelationThreshold`` bytes is
+    not planned as a ``LocalRelation``."""
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    rows = list(rows)
+    if rows:
+        table = LocalDataToArrowConversion.convert(rows, schema, False)
+    else:
+        table = to_arrow_schema(schema).empty_table()
+    return spark.createDataFrame(table, schema)
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:

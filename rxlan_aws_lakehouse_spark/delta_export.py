@@ -58,6 +58,7 @@ from urllib.parse import quote, unquote
 import pyarrow as pa
 import pyarrow.parquet as _pq
 
+from .catalog import local_df
 from .txn import (
     TxnTable,
     _cm_divergent,
@@ -74,13 +75,6 @@ _PLAIN_PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 # column-mapping reader contract; writer 5 covers the metadata writes)
 _MAPPED_PROTOCOL = {"minReaderVersion": 2, "minWriterVersion": 5}
 
-
-
-def _empty_df1(spark, schema):
-    """Schema-only empty frame on ONE slice (see txn._empty_df)."""
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize([], 1), schema
-    )
 
 def _delta_table_meta(meta: dict) -> tuple[dict, dict, dict]:
     """(schemaString json, configuration, protocol) for a snapshot.
@@ -1001,7 +995,7 @@ def read_delta_cdf(
         ]
     )
     if not parts:
-        return _empty_df1(spark, empty)
+        return local_df(spark, [], empty)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -1453,7 +1447,7 @@ def read_delta_export(spark, dest: str):
     schema = StructType.fromJson(state["schema"])
     paths = [os.path.join(dest, rel) for rel in state["files"]]
     if not paths:
-        return _empty_df1(spark, schema)
+        return local_df(spark, [], schema)
     return (
         spark.read.schema(schema)
         .option("basePath", dest)
@@ -1773,7 +1767,7 @@ def import_delta(
     )
     files = state["files"]
     if not files:
-        return _empty_df1(spark, schema)
+        return local_df(spark, [], schema)
     abs_paths = [os.path.join(path, rel) for rel in files]
     dv_specs = _foreign_dv_specs(state, path)
 
@@ -2229,7 +2223,7 @@ def convert_from_delta(
             )
 
     dest.commit(
-        _empty_df1(spark, logical),
+        local_df(spark, [], logical),
         metadata_only=True,
         partition_by=list(part_cols),
         operation="convert_from_delta",

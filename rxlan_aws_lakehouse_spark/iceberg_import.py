@@ -73,6 +73,7 @@ import re
 import struct
 
 from .avro_lite import read_avro
+from .catalog import local_df
 
 _DECIMAL_RE = re.compile(r"decimal\(\s*(\d+)\s*,\s*(\d+)\s*\)")
 _FIXED_RE = re.compile(r"fixed\[(\d+)\]")
@@ -80,11 +81,6 @@ _FIXED_RE = re.compile(r"fixed\[(\d+)\]")
 
 # ------------------------------------------------------------- metadata
 
-def _empty_df1(spark, schema):
-    """Schema-only empty frame on ONE slice (see txn._empty_df)."""
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize([], 1), schema
-    )
 
 def _resolve(table_path: str, p: str) -> str:
     """Iceberg metadata stores absolute URIs; fixtures may use relative
@@ -1292,7 +1288,7 @@ def convert_from_iceberg(
         }
     snap = state["snapshot"]
     dest.commit(
-        _empty_df1(spark, state["schema"]),
+        local_df(spark, [], state["schema"]),
         metadata_only=True,
         operation="convert_from_iceberg",
         carry_files=carry,
@@ -1370,7 +1366,7 @@ def import_iceberg(
     state = iceberg_live_files(path, snapshot_id, filters, timestamp)
     schema = state["schema"]
     if not state["files"]:
-        return _empty_df1(spark, schema)
+        return local_df(spark, [], schema)
     if any(state["delete_specs"]):
         from .sources.iceberg_import_source import (
             register_iceberg_import_source,

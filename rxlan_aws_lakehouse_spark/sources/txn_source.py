@@ -769,6 +769,41 @@ _META_SCHEMAS = {
 }
 
 
+def history_rows(t: TxnTable) -> list[tuple]:
+    """The ``history`` metadata table of ``t`` (``_META_SCHEMAS
+    ["history"]``), oldest snapshot first, from the manifests alone: the
+    ``format("txn")`` metadata reader and the SQL router's ``DESCRIBE
+    HISTORY`` both serve these rows."""
+    rows = []
+    prev_cols: set[str] | None = None
+    for meta in reversed(t.lineage()):  # oldest first
+        entries = t.file_entries(meta["version"])
+        cols = [
+            f["name"] for f in (meta.get("schema") or {}).get("fields", [])
+        ]
+        # schema delta vs the PARENT snapshot: the walk's first
+        # retained row has no visible baseline (either the creating
+        # commit, where every column is trivially "added", or a
+        # vacuum-truncated tail) — record "" there, names after
+        added = (
+            ",".join(c for c in cols if c not in prev_cols)
+            if prev_cols is not None
+            else ""
+        )
+        prev_cols = set(cols)
+        rows.append((
+            meta["version"],
+            meta.get("parent"),
+            meta.get("operation"),
+            int(meta.get("n_files", len(entries))),
+            int(meta.get("n_files_written", 0)),
+            sum(int(e.get("rows", 0)) for e in entries.values()),
+            len(cols),
+            added,
+        ))
+    return rows
+
+
 def _meta_rows(part: _MetaPartition):
     t = TxnTable(part.root)
 
@@ -778,32 +813,7 @@ def _meta_rows(part: _MetaPartition):
         )
 
     if part.kind == "history":
-        prev_cols: set[str] | None = None
-        for meta in reversed(t.lineage()):  # oldest first
-            entries = t.file_entries(meta["version"])
-            cols = [
-                f["name"] for f in (meta.get("schema") or {}).get("fields", [])
-            ]
-            # schema delta vs the PARENT snapshot: the walk's first
-            # retained row has no visible baseline (either the creating
-            # commit, where every column is trivially "added", or a
-            # vacuum-truncated tail) — record "" there, names after
-            added = (
-                ",".join(c for c in cols if c not in prev_cols)
-                if prev_cols is not None
-                else ""
-            )
-            prev_cols = set(cols)
-            yield (
-                meta["version"],
-                meta.get("parent"),
-                meta.get("operation"),
-                int(meta.get("n_files", len(entries))),
-                int(meta.get("n_files_written", 0)),
-                sum(int(e.get("rows", 0)) for e in entries.values()),
-                len(cols),
-                added,
-            )
+        yield from history_rows(t)
     elif part.kind == "files":
         for rel, e in sorted(t.file_entries(part.version).items()):
             yield (

@@ -135,6 +135,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 from .catalog import local_df
+from .sources.txn_source import _META_SCHEMAS, history_rows
 from .txn import TxnTable
 
 _TOKEN_RE = re.compile(
@@ -883,6 +884,15 @@ class TxnSqlRouter:
         return StructType.fromJson(t._meta(v)["schema"])
 
     def _exec_merge(self, m: _Merge, strat: str):
+        """MERGE INTO a registered table. ``plan(target)`` builds the
+        update set and the keys of the matched rows to delete from ONE
+        join of the source with ``target``. A native table gives it only
+        the rows of its touched files: ``TxnTable._merge_source`` first
+        finds those by one join of the source's ON keys (the broadcast
+        side) with the candidate files, then validates the update set and
+        commits it, copy-on-write or by deletion vector. A foreign
+        attachment gives it the whole table and commits through
+        ``merge_delta`` / ``merge_iceberg``."""
         spark = self._spark
         fkey = self._key(m.target)
         foreign_kind = None
@@ -921,8 +931,6 @@ class TxnSqlRouter:
         else:
             name, t = self._resolve(m.target)
             schema = self._target_schema(t)
-            tgt_raw = t.read(spark)
-        tgt = tgt_raw.alias(m.t_alias)
         if m.source_sql.startswith("("):
             src = spark.sql(m.source_sql[1:-1].strip())
         elif self._tables.get(self._key(m.source_sql)) is not None:
@@ -973,114 +981,125 @@ class TxnSqlRouter:
                 )
         if m.nm_by_source_delete:
             return self._exec_sync_full(m, name, t, schema, src)
-        branches = []
-        delete_frame = None
-        if m.matched:
-            joined = src.join(tgt, cond, "inner")
-            conds = [
-                F.expr(cl.cond) if cl.cond is not None else F.lit(True)
-                for cl in m.matched
-            ]
-            # first-match-wins: one decision index per matched row;
-            # rows matching no clause stay untouched (excluded)
-            decision = F.lit(-1)
-            for i, cc in reversed(list(enumerate(conds))):
-                decision = F.when(cc, F.lit(i)).otherwise(decision)
-            joined = joined.withColumn("__clause", decision)
-            upd_idx = [
-                i for i, cl in enumerate(m.matched) if not cl.delete
-            ]
-            del_idx = [i for i, cl in enumerate(m.matched) if cl.delete]
+
+        # One clause index per source row, first match wins: WHEN MATCHED
+        # clauses are 0.. and hold on rows that found a target row, NOT
+        # MATCHED ones follow and hold on rows that found none; -1 is
+        # "no clause takes the row". Each clause's condition and values
+        # are evaluated only on the rows it can take, as on the two
+        # frames (joined, source alone) the SQL semantics name.
+        n_matched = len(m.matched)
+        upd_idx = [i for i, cl in enumerate(m.matched) if not cl.delete]
+        del_idx = [i for i, cl in enumerate(m.matched) if cl.delete]
+        ins_idx = [n_matched + j for j in range(len(m.not_matched))]
+        matched = F.lit(-1)
+        for i, cl in reversed(list(enumerate(m.matched))):
+            cc = F.expr(cl.cond) if cl.cond is not None else F.lit(True)
+            matched = F.when(cc, F.lit(i)).otherwise(matched)
+        if m.not_matched:
+            # -2 marks a source row that found no target row (an
+            # equality ON never matches a NULL key)
+            matched = F.when(
+                _qualify(m.t_alias, keys[0]).isNotNull(), matched
+            ).otherwise(F.lit(-2))
+            not_matched = F.lit(-1)
+            for i, cl in reversed(list(zip(ins_idx, m.not_matched))):
+                cc = F.expr(cl.cond) if cl.cond is not None else F.lit(True)
+                not_matched = F.when(cc, F.lit(i)).otherwise(not_matched)
+        clause = F.col("__clause")
+
+        def updated(f):
+            # evolved (source-only) columns have no target-side value:
+            # an UPDATE SET that leaves them reads typed NULL
+            base = (
+                _qualify(m.t_alias, f.name)
+                if f.name in target_cols
+                else F.lit(None)
+            )
+            expr = F.lit(None)
+            for i in reversed(upd_idx):
+                sets = m.matched[i].sets
+                if sets is None:  # UPDATE SET *
+                    val = _qualify(m.s_alias, f.name)
+                elif f.name in sets:
+                    val = F.expr(sets[f.name])
+                else:
+                    val = base
+                expr = F.when(F.col("__matched") == i, val).otherwise(expr)
+            return expr
+
+        skey = dict(m.on)  # target key -> source key
+
+        def inserted(f, cl):
+            if cl.cols is None:  # INSERT *
+                return F.col(f.name)
+            low = {c.lower(): v for c, v in zip(cl.cols, cl.vals)}
+            if f.name.lower() in low:
+                return F.expr(low[f.name.lower()])
+            if f.name in skey:
+                # key columns default to the source key so the inserted
+                # row is reachable by its key
+                return F.col(skey[f.name])
+            return F.lit(None)
+
+        out_cols = []
+        for ci, f in enumerate(schema.fields):
+            expr = F.col(f"__upd{ci}") if upd_idx else F.lit(None)
+            for i, cl in reversed(list(zip(ins_idx, m.not_matched))):
+                expr = F.when(clause == i, inserted(f, cl)).otherwise(expr)
+            # cast to the exact target schema so the commit never widens
+            out_cols.append(expr.cast(f.dataType).alias(f.name))
+
+        def plan(target: DataFrame):
+            """The update set and the keys of the matched rows to delete,
+            from ONE join of the source with ``target``: the target rows
+            that can match (the touched files of a native table, the whole
+            of a foreign one). The join's rows carry their matched clause,
+            the target keys and the matched image beside the source row;
+            the NOT MATCHED clauses and insert values then read the source
+            row alone."""
+            joined = src.join(
+                target.alias(m.t_alias),
+                cond,
+                "left_outer" if m.not_matched else "inner",
+            ).withColumn("__matched", matched)
+            rows = joined.select(
+                F.col("__matched").alias("__clause"),
+                *[
+                    _qualify(m.t_alias, tk).alias(f"__key{i}")
+                    for i, (tk, _sk) in enumerate(m.on)
+                ],
+                *[
+                    updated(f).alias(f"__upd{ci}")
+                    for ci, f in enumerate(schema.fields)
+                    if upd_idx
+                ],
+                *[_qualify(m.s_alias, c).alias(c) for c in src.columns],
+            ).alias(m.s_alias)
+            if m.not_matched:
+                rows = rows.withColumn(
+                    "__clause",
+                    F.when(clause == -2, not_matched).otherwise(clause),
+                )
+            delete_frame = None
             if del_idx:
-                delete_frame = joined.filter(
-                    F.col("__clause").isin(del_idx)
-                ).select(
+                delete_frame = rows.filter(clause.isin(del_idx)).select(
                     [
-                        _qualify(m.t_alias, tk).alias(tk)
-                        for tk, _sk in m.on
+                        F.col(f"__key{i}").alias(tk)
+                        for i, (tk, _sk) in enumerate(m.on)
                     ]
                 )
-            if upd_idx:
-                out_cols = []
-                for col in tcols:
-                    # evolved (source-only) columns have no target-side
-                    # value: untouched-by-clause rows read typed NULL
-                    base = (
-                        _qualify(m.t_alias, col)
-                        if col in target_cols
-                        else F.lit(None)
-                    )
-                    expr = base
-                    for i in reversed(upd_idx):
-                        cl = m.matched[i]
-                        if cl.sets is None:  # UPDATE SET *
-                            val = _qualify(m.s_alias, col)
-                        elif col in cl.sets:
-                            val = F.expr(cl.sets[col])
-                        else:
-                            val = base
-                        expr = F.when(
-                            F.col("__clause") == i, val
-                        ).otherwise(expr)
-                    out_cols.append(expr.alias(col))
-                branches.append(
-                    joined.filter(
-                        F.col("__clause").isin(upd_idx)
-                    ).select(out_cols)
-                )
-        if m.not_matched:
-            anti = src.join(tgt, cond, "left_anti")
-            conds = [
-                F.expr(cl.cond) if cl.cond is not None else F.lit(True)
-                for cl in m.not_matched
-            ]
-            any_cond = conds[0]
-            for x in conds[1:]:
-                any_cond = any_cond | x
-            skey = dict(
-                (tk, sk) for tk, sk in m.on
-            )  # target key -> source key
-            out_cols = []
-            for f in schema.fields:
-                exprs_rev = []
-                for cl in reversed(m.not_matched):
-                    if cl.cols is None:  # INSERT *
-                        exprs_rev.append(F.col(f.name))
-                    else:
-                        low = {c.lower(): v for c, v in zip(cl.cols, cl.vals)}
-                        if f.name.lower() in low:
-                            exprs_rev.append(F.expr(low[f.name.lower()]))
-                        elif f.name in skey:
-                            # key columns default to the source key so
-                            # the inserted row is reachable by its key
-                            exprs_rev.append(F.col(skey[f.name]))
-                        else:
-                            exprs_rev.append(F.lit(None))
-                expr = None
-                for cc, val in zip(reversed(conds), exprs_rev):
-                    expr = (
-                        val
-                        if expr is None
-                        else F.when(cc, val).otherwise(expr)
-                    )
-                out_cols.append(expr.cast(f.dataType).alias(f.name))
-            branches.append(anti.filter(any_cond).select(out_cols))
+            keep = upd_idx + ins_idx
+            # a delete-only merge: an empty, correctly-typed update set
+            updates = (
+                rows.filter(clause.isin(keep)).select(out_cols)
+                if keep
+                else local_df(spark, [], schema)
+            )
+            return updates, delete_frame
 
-        if branches:
-            updates = branches[0]
-            for b in branches[1:]:
-                updates = updates.unionByName(b)
-        else:
-            # delete-only merge: an empty, correctly-typed update set
-            updates = local_df(self._spark, [], schema)
-        # cast to the exact target schema so the commit never widens
-        updates = updates.select(
-            [
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
-        )
         if foreign_kind is not None:
+            updates, delete_frame = plan(tgt_raw)
             if foreign_kind == "delta":
                 from .delta_export import merge_delta
 
@@ -1104,7 +1123,8 @@ class TxnSqlRouter:
                 )
                 ver = str(res["snapshot_id"])
             self._refresh_foreign_views(fkey, foreign_kind)
-            return local_df(self._spark, 
+            return local_df(
+                self._spark,
                 [
                     (
                         f"merge_foreign_{res['mode']}",
@@ -1114,14 +1134,24 @@ class TxnSqlRouter:
                 ],
                 "operation string, version string, n_matched bigint",
             )
-        op = "merge_upsert" if strat == "cow" else "merge_upsert_dv"
-        version = getattr(t, op)(
-            self._spark,
-            updates,
-            keys=keys,
-            delete_keys=delete_frame,
+        # the source's ON keys in the target's key names and types: the
+        # cast update set's keys are what the rewrite replaces
+        kinds = {f.name.lower(): f.dataType for f in schema.fields}
+        version = t._merge_source(
+            spark,
+            src.select(
+                [
+                    _qualify(m.s_alias, sk).cast(kinds[tk.lower()]).alias(tk)
+                    for tk, sk in m.on
+                ]
+            ),
+            plan,
+            keys,
+            dv=strat == "dv",
             merge_schema=m.evolve,
+            rewrite=bool(m.matched),
         )
+        op = "merge_upsert" if strat == "cow" else "merge_upsert_dv"
         return self._result(name, op, version)
 
     def _exec_sync_full(self, m: _Merge, name, t, schema, src):
@@ -1252,9 +1282,9 @@ class TxnSqlRouter:
     def _exec_describe_history(self, c: _Cursor):
         c.expect("DESCRIBE", "HISTORY")
         name, t = self._resolve(c.qident("table"))
-        return self._spark.read.format("txn").option(
-            "metadata", "history"
-        ).load(t.root)
+        return local_df(
+            self._spark, history_rows(t), _META_SCHEMAS["history"]
+        )
 
     def _exec_export(self, c: _Cursor):
         """``EXPORT TABLE t TO DELTA '<path>'``: open-format interop

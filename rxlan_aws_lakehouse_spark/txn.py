@@ -64,6 +64,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from .catalog import local_df
+
 _VERSIONS = "_versions"
 _DV_DIR = "_dv"  # per-version deletion-vector parquet dir (rel, row_index)
 _CDF_DIR = "_cdf"  # per-version row-level change payload (Delta CDF shape)
@@ -136,15 +138,6 @@ def _fsync_dir(d: str) -> None:
         os.fsync(fd)
     finally:
         os.close(fd)
-
-
-def _empty_df(spark: SparkSession, schema) -> DataFrame:
-    """Schema-only empty frame on ONE slice: createDataFrame([]) spreads
-    zero rows over default parallelism, so every job whose plan unions
-    or writes the empty leg schedules 32 no-op tasks (guide §1.2)."""
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize([], 1), schema
-    )
 
 
 def _stat_value(v):
@@ -1231,7 +1224,7 @@ class TxnTable:
                 )
             cur[name] = expr
             return self._commit_over(
-                expect, _empty_df(spark, schema), "set_constraint",
+                expect, local_df(spark, [], schema), "set_constraint",
                 {"constraint_added": name}, metadata_only=True,
                 constraints=cur,
             )
@@ -1250,7 +1243,7 @@ class TxnTable:
                 return expect
             del cur[name]
             return self._commit_over(
-                expect, _empty_df(spark, schema), "set_constraint",
+                expect, local_df(spark, [], schema), "set_constraint",
                 {"constraint_dropped": name}, metadata_only=True,
                 constraints=cur,
             )
@@ -1282,7 +1275,7 @@ class TxnTable:
             if bool(self._meta(expect).get("cdf", False)) == enabled:
                 return expect  # idempotent
             return self._commit_over(
-                expect, _empty_df(spark, schema), "set_cdf",
+                expect, local_df(spark, [], schema), "set_cdf",
                 metadata_only=True, cdf=enabled,
             )
 
@@ -1448,7 +1441,7 @@ class TxnTable:
                 .withColumn(_COMMIT_VERSION, F.lit(""))
                 .schema
             )
-            return _empty_df(spark, schema)
+            return local_df(spark, [], schema)
         df = branches[0]
         for b in branches[1:]:
             # schema evolution across the range: earlier commits surface
@@ -1956,7 +1949,8 @@ class TxnTable:
         schema_json = self._meta(v).get("schema")
         schema = StructType.fromJson(schema_json) if schema_json else None
         if not kept:
-            df = _empty_df(spark, schema if schema else self.read(spark, v).schema
+            df = local_df(
+                spark, [], schema if schema else self.read(spark, v).schema
             )
         else:
             # grouped scan: kept files may span partition specs after an
@@ -2514,11 +2508,11 @@ class TxnTable:
 
     @staticmethod
     def _spawn_validation(validate, *frames):
-        """Run a pre-commit validation CONCURRENTLY with touched-file
-        discovery (guide §2.6 — overlap independent jobs): the dup-key /
-        clause-overlap probes read only the persisted update set and are
-        independent of discovery, so serializing them just adds their
-        wall to every merge. The returned future is joined RIGHT BEFORE
+        """Run a pre-commit validation CONCURRENTLY with the merge's
+        discovery and write (guide §2.6 — overlap independent jobs): the
+        dup-key / clause-overlap probes read only the persisted update set
+        and are independent of the rest, so serializing them just adds
+        their wall to every merge. The returned future is joined RIGHT BEFORE
         the commit publishes — a rejected batch still never lands, with
         the identical error. Thread-local job properties and the
         session's tags are inherited (``inheritable_thread_target`` on
@@ -2582,7 +2576,10 @@ class TxnTable:
         surfaced on ``txn_incremental_agg``.
 
         ``validate(*frames)``, when given, runs concurrently with the
-        first attempt's discovery (``_spawn_validation``).
+        first attempt (``_spawn_validation``): with its touched-file
+        discovery and write in ``merge_upsert``, with the write in the
+        SQL router's MERGE, whose update set is built from the touched
+        files (``_merge_source``).
         ``attempt(gate, *frames)`` runs under ``_with_retries`` and calls
         ``gate()`` right before it publishes: validation gates the
         PUBLISH, not the planning, so a rejected batch never lands and
@@ -2680,12 +2677,26 @@ class TxnTable:
     def _touched(self, version: str, hits: DataFrame) -> list[str]:
         """Copy-on-write touched-file discovery: the sorted relpaths of the
         files ``hits`` — a ``file_col="_f"`` scan narrowed to the rows the
-        statement changes — reads from. A metadata-scale collect (file
-        count, not row count), like Delta's matched-file listing."""
+        statement changes — reads from, like Delta's matched-file listing.
+
+        One Spark job: each task folds the ``_f`` values it sees into a
+        set, observed on a ``noop`` write, and the driver merges the
+        per-task sets. No shuffle runs (``distinct().collect()`` would
+        take two jobs: AQE runs its shuffle as a job of its own), and the
+        result holds at most one entry per file, whatever the number of
+        matching rows."""
+        obs = Observation()
+        (
+            hits.select("_f")
+            .observe(obs, F.collect_set("_f").alias("files"))
+            .write.format("noop")
+            .mode("overwrite")
+            .save()
+        )
         data_root = os.path.join(self.root, _VERSIONS, version)
         return sorted(
-            os.path.relpath(_local_path(r["_f"]), data_root)
-            for r in hits.select("_f").distinct().collect()
+            os.path.relpath(_local_path(f), data_root)
+            for f in obs.get["files"]
         )
 
     def _live_scan(
@@ -2816,49 +2827,50 @@ class TxnTable:
         candidates, _total = self.pruned_files(preds, expect)
         return candidates
 
+    @staticmethod
     def _merge_keys(
-        self, expect: str, updates: DataFrame, dels: DataFrame | None,
-        keys: list[str],
-    ) -> tuple[DataFrame, DataFrame, list[str]]:
-        """A keyed merge's distinct update keys, the keys it touches (those
-        plus ``dels``), and the candidate files that may hold them."""
-        update_keys = updates.select(*keys).distinct()
-        all_keys = (
-            update_keys.unionByName(dels).distinct()
-            if dels is not None
-            else update_keys
-        )
-        return update_keys, all_keys, self._merge_candidates(
-            expect, all_keys, keys
+        updates: DataFrame, dels: DataFrame | None, keys: list[str]
+    ) -> DataFrame:
+        """The keys a keyed merge touches: those of ``updates`` plus
+        ``dels``. Duplicates are kept — every consumer is a semi- or
+        anti-join or a min/max, none of which needs a ``distinct``
+        shuffle."""
+        touched = updates.select(*keys)
+        return touched if dels is None else touched.unionByName(dels)
+
+    def _merge_touched(
+        self, spark: SparkSession, expect: str, schema: StructType,
+        keys_df: DataFrame, keys: list[str],
+    ) -> list[str]:
+        """A keyed merge's touched files: the candidates of ``keys_df``
+        (``_merge_candidates``) that hold a row whose ``keys`` equal one
+        of its rows. One join with ``keys_df`` as the broadcast build
+        side — a merge's key set is small next to its target, as Delta's
+        MERGE assumes — feeds ``_touched``."""
+        candidates = self._merge_candidates(expect, keys_df, keys)
+        if not candidates:
+            return []
+        return self._touched(
+            expect,
+            self._scan_files(
+                spark, expect, candidates, schema, file_col="_f"
+            ).join(F.broadcast(keys_df), keys, "leftsemi"),
         )
 
     def _merge_cow(
-        self, spark: SparkSession, updates: DataFrame,
-        dels: DataFrame | None, keys: list[str], columns, operation: str,
-        extra_meta: dict | None, gate,
+        self, spark: SparkSession, expect: str, schema: StructType,
+        touched: list[str], updates: DataFrame, dels: DataFrame | None,
+        keys: list[str], columns, operation: str, extra_meta: dict | None,
+        gate,
     ) -> str:
-        """One attempt of the copy-on-write keyed merge that
-        ``merge_upsert`` and ``apply_cdc`` run: the files holding a key
-        of ``updates`` or ``dels`` are rewritten as their other rows plus
-        ``updates``; every other file carries. ``columns(schema, meta)``
-        picks the output columns from the snapshot's recorded schema and
-        manifest; ``gate()`` runs right before the publish."""
-        expect, schema = self._snapshot()
-        self._require_no_dv(expect, operation)
+        """The copy-on-write keyed merge that ``merge_upsert``, the SQL
+        router's MERGE and ``apply_cdc`` commit over snapshot ``expect``:
+        the ``touched`` files — every file holding a key of ``updates``
+        or ``dels`` — are rewritten as their other rows plus ``updates``;
+        every other file carries. ``columns(schema, meta)`` picks the
+        output columns from the snapshot's recorded schema and manifest;
+        ``gate()`` runs right before the publish."""
         meta = self._meta(expect)
-        update_keys, all_keys, candidates = self._merge_keys(
-            expect, updates, dels, keys
-        )
-        touched = (
-            self._touched(
-                expect,
-                self._scan_files(
-                    spark, expect, candidates, schema, file_col="_f"
-                ).join(all_keys, keys, "leftsemi"),
-            )
-            if candidates
-            else []
-        )
         out_cols = columns(schema, meta)
         fresh = updates.select(*out_cols)
         rows, chg = fresh, None
@@ -2875,7 +2887,9 @@ class TxnTable:
                     updates,
                 )
 
-            rows = target(all_keys, "left_anti").unionByName(fresh)
+            rows = target(
+                self._merge_keys(updates, dels, keys), "left_anti"
+            ).unionByName(fresh)
             # Row-level change feed payload (Delta CDF): preimages re-read
             # ONLY the touched files, post/insert split the persisted
             # update set. IO ∝ touched files, never the table. A merge
@@ -2885,7 +2899,7 @@ class TxnTable:
                 chg = _keyed_changes(
                     keys,
                     fresh,
-                    target(update_keys, "leftsemi"),
+                    target(updates.select(*keys), "leftsemi"),
                     None if dels is None else target(dels, "leftsemi"),
                 )
         gate()
@@ -2893,6 +2907,144 @@ class TxnTable:
             expect, rows, operation, extra_meta, drop=touched,
             aux=self._cdf_writer(chg),
         )
+
+    def _keyed_cow(
+        self, spark: SparkSession, updates: DataFrame,
+        dels: DataFrame | None, keys: list[str], columns, operation: str,
+        extra_meta: dict | None, gate,
+    ) -> str:
+        """One attempt of ``merge_upsert`` and ``apply_cdc``: the touched
+        files of the head snapshot are found from the keys of ``updates``
+        and ``dels`` (``_merge_touched``), then ``_merge_cow`` commits."""
+        expect, schema = self._snapshot()
+        self._require_no_dv(expect, operation)
+        touched = self._merge_touched(
+            spark, expect, schema, self._merge_keys(updates, dels, keys),
+            keys,
+        )
+        return self._merge_cow(
+            spark, expect, schema, touched, updates, dels, keys, columns,
+            operation, extra_meta, gate,
+        )
+
+    def _merge_dv(
+        self, spark: SparkSession, expect: str, schema: StructType,
+        candidates: list[str], updates: DataFrame, dels: DataFrame | None,
+        keys: list[str], merge_schema: bool, extra_meta: dict | None,
+        gate,
+    ) -> str:
+        """The deletion-vector keyed merge that ``merge_upsert_dv`` and
+        the SQL router's MERGE commit over snapshot ``expect``: the live
+        rows of ``candidates`` holding a key of ``updates`` or ``dels``
+        join the vector, and ``updates`` land as fresh files."""
+        meta = self._meta(expect)
+        out_cols = _evolved_columns(
+            schema, updates, merge_schema, "merge_upsert_dv",
+            generated=meta.get("generated"),
+        )
+        fresh = updates.select(*out_cols)
+        all_keys = self._merge_keys(updates, dels, keys)
+        matched = self._live_matches(
+            spark, expect, candidates, schema,
+            lambda scan: scan.join(all_keys, keys, "leftsemi"),
+        )
+        try:
+            # Nothing matched: plain append; commit's default DV
+            # carry-forward keeps any pending vector (aux is None).
+            aux = None
+            if matched is not None:
+                chg = None
+                if meta.get("cdf"):
+                    pre, gone = matched.drop("__rel", "__ri"), None
+                    if dels is not None:
+                        gone = _conform(
+                            pre.join(dels, keys, "leftsemi"),
+                            out_cols,
+                            updates,
+                        )
+                        pre = pre.join(dels, keys, "left_anti")
+                    chg = _keyed_changes(
+                        keys, fresh, _conform(pre, out_cols, updates),
+                        gone,
+                    )
+                aux = self._dv_writer(spark, expect, matched, chg)
+            gate()
+            return self._commit_over(
+                expect, fresh, "merge_upsert_dv", extra_meta, aux=aux
+            )
+        finally:
+            if matched is not None:
+                matched.unpersist()
+
+    @staticmethod
+    def _merge_columns(updates: DataFrame, merge_schema: bool, op: str):
+        """The ``columns(schema, meta)`` of a keyed merge of ``updates``.
+        Same guard as append(): a typo'd/extra column in updates must
+        raise (not silently drop) unless merge_schema evolves the table;
+        a missing table column would hide it for carried rows; a changed
+        type is never allowed."""
+
+        def columns(schema: StructType, meta: dict) -> list[str]:
+            return _evolved_columns(
+                schema, updates, merge_schema, op,
+                generated=meta.get("generated"),
+            )
+
+        return columns
+
+    def _merge_source(
+        self, spark: SparkSession, source_keys: DataFrame, plan,
+        keys: list[str], dv: bool, merge_schema: bool, rewrite: bool,
+        max_retries: int = 2,
+    ) -> str:
+        """The SQL router's MERGE, in Delta's two passes. ``source_keys``
+        holds the source's ON keys under the target's key names and
+        types. Each attempt joins it with the candidate files once to
+        find the touched files (``_merge_touched``). ``plan(target)``
+        then builds the update set and the keys of the matched rows to
+        delete from the live rows of the touched files alone: a source key
+        absent from every touched file matches no target row at all. The
+        copy-on-write (``_merge_cow``) or deletion-vector (``_merge_dv``)
+        core commits them, validated and persisted as ``merge_upsert``'s
+        input is (``_keyed_dml``). ``rewrite=False`` (no WHEN MATCHED
+        clause) commits the inserts without rewriting or vectoring the
+        touched files: they only bound the not-matched branch."""
+        op = "merge_upsert_dv" if dv else "merge_upsert"
+
+        def attempt() -> str:
+            expect, schema = self._snapshot()
+            if not dv:
+                self._require_no_dv(expect, op)
+            touched = self._merge_touched(
+                spark, expect, schema, source_keys, keys
+            )
+            updates, dels = plan(
+                self._scan_rels(spark, expect, touched, schema)
+                if touched
+                else local_df(spark, [], schema)
+            )
+            rewritten = touched if rewrite else []
+
+            def write(gate, u: DataFrame, d: DataFrame | None) -> str:
+                if dv:
+                    return self._merge_dv(
+                        spark, expect, schema, rewritten, u, d, keys,
+                        merge_schema, None, gate,
+                    )
+                return self._merge_cow(
+                    spark, expect, schema, rewritten, u, d, keys,
+                    self._merge_columns(u, merge_schema, op), op, None,
+                    gate,
+                )
+
+            return self._keyed_dml(
+                (updates, dels),
+                lambda u, d: validate_merge_keys(u, keys, d),
+                write,
+                0,
+            )
+
+        return self._with_retries(attempt, max_retries)
 
     def merge_upsert(
         self,
@@ -2911,9 +3063,10 @@ class TxnTable:
 
         Delta Lake's MERGE algorithm on a plain-parquet snapshot store:
 
-          1. semi-join target x update-keys over ``input_file_name()`` ->
-             the distinct set of touched files (a metadata-scale collect,
-             like Delta's matched-file listing — file count, not row count);
+          1. semi-join the candidate files x update keys (the broadcast
+             side) over ``input_file_name()`` -> the set of touched files
+             (``_touched``: one job, file count, not row count — Delta's
+             matched-file listing);
           2. re-read just those files, anti-join the update keys -> kept
              rows;
           3. write kept + updates (inheriting the partition spec), link
@@ -2946,22 +3099,14 @@ class TxnTable:
         for pre-deduped pipelines that can't afford the extra job).
 
         ``updates`` is persisted for the duration of the merge: its plan
-        feeds THREE jobs (key bounds, touched-file discovery, the commit
-        write — four with validation), see ``_keyed_dml``.
+        feeds the key bounds (tables above ``_PRUNE_SKIP_FILES`` files),
+        touched-file discovery, validation and the commit write, see
+        ``_keyed_dml``.
         """
-
-        def columns(schema: StructType, meta: dict) -> list[str]:
-            # Same guard as append(): a typo'd/extra column in updates
-            # must raise (not silently drop) unless merge_schema evolves
-            # the table; a missing table column would hide it for carried
-            # rows; a changed type is never allowed.
-            return _evolved_columns(
-                schema, updates, merge_schema, "merge_upsert",
-                generated=meta.get("generated"),
-            )
+        columns = self._merge_columns(updates, merge_schema, "merge_upsert")
 
         def attempt(gate, updates: DataFrame, dels: DataFrame | None) -> str:
-            return self._merge_cow(
+            return self._keyed_cow(
                 spark, updates, dels, keys, columns, "merge_upsert",
                 extra_meta, gate,
             )
@@ -2969,9 +3114,7 @@ class TxnTable:
         return self._keyed_dml(
             (
                 updates,
-                None
-                if delete_keys is None
-                else delete_keys.select(*keys).distinct(),
+                None if delete_keys is None else delete_keys.select(*keys),
             ),
             (lambda u, d: validate_merge_keys(u, keys, d))
             if validate_keys
@@ -3021,7 +3164,7 @@ class TxnTable:
         the ``txn_merge_dv`` registry lane and pytest); chooses between
         them by workload: scattered keys / wide files -> DV, clustered
         keys on few files -> copy-on-write stays cheaper to read. Both
-        share the candidate pruning (``_merge_keys``), the validation and
+        share the candidate pruning (``_merge_candidates``), the validation and
         persist wrapper (``_keyed_dml``) and the change-feed rows
         (``_keyed_changes``).
 
@@ -3032,53 +3175,18 @@ class TxnTable:
 
         def attempt(gate, updates: DataFrame, dels: DataFrame | None) -> str:
             expect, schema = self._snapshot()
-            meta = self._meta(expect)
-            out_cols = _evolved_columns(
-                schema, updates, merge_schema, "merge_upsert_dv",
-                generated=meta.get("generated"),
+            return self._merge_dv(
+                spark, expect, schema,
+                self._merge_candidates(
+                    expect, self._merge_keys(updates, dels, keys), keys
+                ),
+                updates, dels, keys, merge_schema, extra_meta, gate,
             )
-            fresh = updates.select(*out_cols)
-            _, all_keys, candidates = self._merge_keys(
-                expect, updates, dels, keys
-            )
-            matched = self._live_matches(
-                spark, expect, candidates, schema,
-                lambda scan: scan.join(all_keys, keys, "leftsemi"),
-            )
-            try:
-                # Nothing matched: plain append; commit's default DV
-                # carry-forward keeps any pending vector (aux is None).
-                aux = None
-                if matched is not None:
-                    chg = None
-                    if meta.get("cdf"):
-                        pre, gone = matched.drop("__rel", "__ri"), None
-                        if dels is not None:
-                            gone = _conform(
-                                pre.join(dels, keys, "leftsemi"),
-                                out_cols,
-                                updates,
-                            )
-                            pre = pre.join(dels, keys, "left_anti")
-                        chg = _keyed_changes(
-                            keys, fresh, _conform(pre, out_cols, updates),
-                            gone,
-                        )
-                    aux = self._dv_writer(spark, expect, matched, chg)
-                gate()
-                return self._commit_over(
-                    expect, fresh, "merge_upsert_dv", extra_meta, aux=aux
-                )
-            finally:
-                if matched is not None:
-                    matched.unpersist()
 
         return self._keyed_dml(
             (
                 updates,
-                None
-                if delete_keys is None
-                else delete_keys.select(*keys).distinct(),
+                None if delete_keys is None else delete_keys.select(*keys),
             ),
             (lambda u, d: validate_merge_keys(u, keys, d))
             if validate_keys
@@ -3552,7 +3660,7 @@ class TxnTable:
                 if self._meta(expect).get("cdf"):
                     chg = _changes((matched.drop("__rel", "__ri"), "delete"))
                 return self._commit_over(
-                    expect, _empty_df(spark, schema), "delete_dv",
+                    expect, local_df(spark, [], schema), "delete_dv",
                     extra_meta, metadata_only=True,
                     aux=self._dv_writer(spark, expect, matched, chg),
                 )
@@ -3622,7 +3730,7 @@ class TxnTable:
                 shutil.rmtree(tmp)
 
             return self._commit_over(
-                expect, _empty_df(spark, target_schema),
+                expect, local_df(spark, [], target_schema),
                 "materialize_deletes", drop=touched,
                 aux=rewrite if touched else None, metadata_only=True,
                 carry_dv=False,  # the whole point: the vector is folded in
@@ -3686,10 +3794,10 @@ class TxnTable:
                 )
 
         def attempt(gate, latest: DataFrame) -> str:
-            return self._merge_cow(
+            return self._keyed_cow(
                 spark,
                 latest.filter(F.col(op_col).isin("I", "U")),
-                latest.filter(F.col(op_col) == "D").select(*keys).distinct(),
+                latest.filter(F.col(op_col) == "D").select(*keys),
                 keys,
                 lambda schema, meta: schema.fieldNames(),
                 "apply_cdc",
@@ -3743,7 +3851,7 @@ class TxnTable:
                 + [StructField(f.name, f.dataType, True) for f in added]
             )
             return self._commit_over(
-                expect, _empty_df(spark, evolved), "add_columns",
+                expect, local_df(spark, [], evolved), "add_columns",
                 {"columns_added": names}, metadata_only=True,
             )
 
@@ -3824,7 +3932,7 @@ class TxnTable:
                 ]
             )
             return self._commit_over(
-                expect, _empty_df(spark, evolved), "widen_type",
+                expect, local_df(spark, [], evolved), "widen_type",
                 {"type_widened": [column, cur, tgt]}, metadata_only=True,
             )
 
@@ -3927,7 +4035,7 @@ class TxnTable:
                 for c in (meta.get("bloom_cols") or [])
             ]
             return self._commit_over(
-                expect, _empty_df(spark, evolved), "rename_column",
+                expect, local_df(spark, [], evolved), "rename_column",
                 {"column_renamed": [old, new]}, metadata_only=True,
                 partition_by=spec, bloom_cols=blooms, column_mapping=cm,
             )
@@ -3988,7 +4096,7 @@ class TxnTable:
                 if c.lower() != column.lower()
             ]
             return self._commit_over(
-                expect, _empty_df(spark, evolved), "drop_column",
+                expect, local_df(spark, [], evolved), "drop_column",
                 {"column_dropped": column}, metadata_only=True,
                 bloom_cols=blooms, column_mapping=cm,
             )
@@ -4174,7 +4282,7 @@ class TxnTable:
                         )
 
         dest.commit(
-            _empty_df(spark, schema),
+            local_df(spark, [], schema),
             # [] passes through verbatim (commit only inherits on None):
             # cloning an unpartitioned snapshot must record unpartitioned
             partition_by=list(meta_v.get("partition_by") or []),
@@ -4220,7 +4328,7 @@ class TxnTable:
                 for rel in restored_entries
             }
             schema = StructType.fromJson(meta_v["schema"])
-            empty = _empty_df(spark, schema)
+            empty = local_df(spark, [], schema)
             return self.commit(
                 empty,
                 # [] verbatim: restoring an unpartitioned snapshot from a
@@ -4690,7 +4798,7 @@ class TxnTable:
                 )
             branches.append(b)
         if not branches:
-            schema = _empty_df(spark, self.read(spark, until or self.current_version()).schema
+            schema = local_df(spark, [], self.read(spark, until or self.current_version()).schema
             )
             return schema
         df = branches[0]

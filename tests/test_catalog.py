@@ -9,6 +9,8 @@ status tracker inside a job group.
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import itertools
 import os
 
@@ -114,3 +116,42 @@ def test_missing_input_still_fails_and_is_not_cached(spark, tmp_path, cache):
     with pytest.raises(AnalysisException):
         load(spark, str(tmp_path), "orders")
     assert cache == {}
+
+
+# -- local_df: driver-local rows as a LocalRelation -----------------------
+
+_LOCAL_ROWS = [
+    (
+        "a", 1, 2**40, 1.5, True, datetime.date(2024, 2, 29),
+        decimal.Decimal("12.34"), [1, 2], datetime.datetime(2024, 3, 10, 7, 30, 5),
+    ),
+    (None,) * 9,
+    (
+        "é ü", -7, -(2**62), -0.0, False, datetime.date(1970, 1, 1),
+        decimal.Decimal("-0.01"), [], datetime.datetime(1999, 12, 31, 23, 59, 59, 999999),
+    ),
+]
+_LOCAL_SCHEMA = (
+    "s string, i int, b bigint, d double, f boolean, dt date, "
+    "dec decimal(10,2), arr array<int>, ts timestamp"
+)
+
+
+@pytest.mark.parametrize("rows", [_LOCAL_ROWS, []], ids=["rows", "empty"])
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+def test_local_df_round_trips_without_a_job(spark, rows, tz):
+    """``local_df`` is a LocalRelation: collecting it runs no Spark job
+    and returns the rows it was given, for every type its callers pass,
+    with naive timestamps read back unchanged under a non-UTC session
+    time zone."""
+    saved = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        df = catalog.local_df(spark, rows, _LOCAL_SCHEMA)
+        got, n = _jobs(spark, df.collect)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", saved)
+    assert n == 0
+    assert [tuple(r) for r in got] == rows
+    assert df.schema == T._parse_datatype_string(_LOCAL_SCHEMA)
+    assert catalog.local_df(spark, rows, df.schema).collect() == got

@@ -3,6 +3,7 @@ arbitrary inputs, checked against naive Python reference implementations."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -332,3 +333,71 @@ def test_pruned_files_over_approximate_any_conjunction(
                 f"file {rel} holds a matching row but was pruned "
                 f"under {triples}"
             )
+
+
+@pytest.fixture(scope="module")
+def touched_table(spark, tmp_path_factory):
+    """A two-spec table whose partition values need URL decoding: 200
+    rows partitioned by ``p`` (a space, ``=``, ``%`` and a plain value),
+    then 60 more partitioned by ``q`` (partition evolution)."""
+    from rxlan_aws_lakehouse_spark.txn import TxnTable
+
+    t = TxnTable(str(tmp_path_factory.mktemp("touched") / "t"))
+    vals = F.array(*(F.lit(v) for v in ("a b", "x=y", "p%q", "plain")))
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"),
+            F.element_at(vals, (F.col("id") % 4 + 1).cast("int")).alias("p"),
+            (F.col("id") % 3).cast("string").alias("q"),
+        )
+
+    t.commit(rows(0, 200).repartition(3), partition_by=["p"])
+    t.append(rows(200, 260).repartition(2), partition_by=["q"])
+    return t
+
+
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    kind=st.sampled_from(["point", "range", "broad", "none", "partition"]),
+    k=st.integers(0, 259),
+    width=st.integers(1, 120),
+)
+def test_touched_equals_distinct_file_collect(
+    spark, touched_table, kind, k, width
+):
+    """PROPERTY: ``TxnTable._touched`` (one observed job) returns the
+    sorted relpaths a ``select("_f").distinct().collect()`` over the same
+    scan does, for point, range, broad, no-match and partition-value
+    predicates over a file list mixing two partition specs."""
+    import os
+
+    from rxlan_aws_lakehouse_spark.txn import _VERSIONS, _local_path
+
+    t = touched_table
+    v, schema = t._snapshot()
+    assert len(t._spec_groups(v)) == 2
+    cond = {
+        "point": F.col("k") == k,
+        "range": F.col("k").between(k, k + width),
+        "broad": F.col("k") >= 0,
+        "none": F.col("k") < 0,
+        "partition": F.col("p") == ["a b", "x=y", "p%q", "plain"][k % 4],
+    }[kind]
+    hits = t._scan_files(spark, v, t.files(v), schema, file_col="_f").filter(
+        cond
+    )
+    root = os.path.join(t.root, _VERSIONS, v)
+    want = sorted(
+        os.path.relpath(_local_path(r["_f"]), root)
+        for r in hits.select("_f").distinct().collect()
+    )
+    got = t._touched(v, hits)
+    assert got == want
+    assert set(got) <= set(t.files(v))
+    if kind == "none":
+        assert got == []

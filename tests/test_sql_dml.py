@@ -5,6 +5,7 @@ loudly, never partially apply."""
 
 from __future__ import annotations
 
+import itertools
 import os
 
 import pytest
@@ -132,6 +133,36 @@ class TestMerge:
         assert got[2] == (10, "a")  # second clause: full replace
         assert got[3] == (30, "big")  # first clause wins: tag only
         assert len(got) == 6
+
+    def test_not_matched_clauses_read_unmatched_rows_only(
+        self, spark, tmp_path
+    ):
+        """A NOT MATCHED condition and insert value are evaluated on the
+        source rows that found no target row only: here both would raise
+        a division by zero (ANSI) on the matched rows."""
+        t = _mk(spark, tmp_path, n=10)
+        spark.createDataFrame(
+            [(1, 0), (2, 0), (50, 2)], "k long, d long"
+        ).createOrReplaceTempView("div_src")
+        r = TxnSqlRouter(spark)
+        r.register("tgt", t)
+        saved = spark.conf.get("spark.sql.ansi.enabled")
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+        try:
+            r.sql(
+                "MERGE INTO tgt t USING div_src s ON t.k = s.k "
+                "WHEN MATCHED AND s.k = 2 THEN UPDATE SET tag = 'u' "
+                "WHEN MATCHED THEN DELETE "
+                "WHEN NOT MATCHED AND 10 / s.d > 1 THEN "
+                "  INSERT (k, v, tag) VALUES (s.k, 10 / s.d, 'i')"
+            )
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", saved)
+        got = dict(
+            (x["k"], (x["v"], x["tag"])) for x in t.read(spark).collect()
+        )
+        assert got[2] == (20, "u") and 1 not in got
+        assert got[50] == (5, "i") and len(got) == 10
 
     def test_duplicate_source_keys_refused(self, spark, tmp_path):
         t = _mk(spark, tmp_path)
@@ -963,13 +994,15 @@ class TestNativeReadPath:
         assert "FileScan parquet" in plan
         assert "(Python)" not in plan
         captured = []
-        orig = TxnTable.merge_upsert
+        orig = TxnTable._merge_cow
 
-        def spy(self, spark_, updates, *a, **kw):
+        def spy(self, spark_, expect, schema, touched, updates, *a, **kw):
             captured.append(updates)
-            return orig(self, spark_, updates, *a, **kw)
+            return orig(
+                self, spark_, expect, schema, touched, updates, *a, **kw
+            )
 
-        monkeypatch.setattr(TxnTable, "merge_upsert", spy)
+        monkeypatch.setattr(TxnTable, "_merge_cow", spy)
         r.sql(
             "MERGE INTO tgt t USING src s ON t.k = s.k "
             "WHEN MATCHED THEN UPDATE SET v = s.v + 1 "
@@ -1180,3 +1213,105 @@ def test_update_casts_set_values_to_column_type(spark, tmp_path, route):
     assert sorted(
         (r["_change_type"], r["v"]) for r in feed.collect()
     ) == [("update_postimage", 7), ("update_preimage", 1)]
+
+
+# -- jobs per statement: only the statement's own work runs --------------
+
+_GROUPS = itertools.count()
+
+
+def _jobs(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    group = f"test-sql-dml-{os.getpid()}-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    # the status store is fed by the listener bus; drain it before counting
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_router_statements_run_only_their_own_jobs(spark, tmp_path):
+    """On a partitioned table of 9 files: INSERT is its write (1 job);
+    a keyed UPDATE or DELETE is touched-file discovery plus the rewrite
+    (2); OPTIMIZE is its compaction write (1); a MERGE stays within 10;
+    and collecting any statement's result frame runs none."""
+    t = TxnTable(os.path.join(str(tmp_path), "t"))
+    t.commit(
+        spark.range(900)
+        .select(
+            F.col("id").alias("k"),
+            (F.col("id") * 10).alias("v"),
+            (F.col("id") % 3).cast("int").alias("p"),
+        )
+        .repartition(3),
+        partition_by=["p"],
+    )
+    assert len(t.files()) >= 9
+    spark.createDataFrame(
+        [(k, -k, k % 3) for k in (5, 6, 7, 1000, 1001)],
+        "k long, v long, p int",
+    ).createOrReplaceTempView("job_src")
+    r = TxnSqlRouter(spark)
+    r.register("t", t)
+    statements = [
+        ("INSERT INTO t VALUES (2000, 1, 2)", 1),
+        ("UPDATE t SET v = v + 1 WHERE k = 11", 2),
+        ("DELETE FROM t WHERE k = 12", 2),
+        (
+            "MERGE INTO t s0 USING job_src s ON s0.k = s.k AND s0.p = s.p "
+            "WHEN MATCHED THEN UPDATE SET v = s.v "
+            "WHEN NOT MATCHED THEN INSERT *",
+            None,
+        ),
+        ("OPTIMIZE t", 1),
+    ]
+    for stmt, want in statements:
+        df, n_stmt = _jobs(spark, lambda: r.sql(stmt))
+        (res,), n_collect = _jobs(spark, df.collect)
+        assert n_collect == 0, stmt
+        if want is None:
+            assert res["operation"] == "merge_upsert"
+            assert 1 <= n_stmt <= 10, stmt
+        else:
+            assert n_stmt == want, stmt
+    got = {x["k"]: x["v"] for x in t.read(spark).collect()}
+    assert len(got) == 900 + 1 - 1 + 2
+    assert (got[11], got[5], got[1001], got[2000]) == (111, -5, -1001, 1)
+    assert 12 not in got
+
+
+def test_describe_history_is_served_on_the_driver(spark, tmp_path):
+    """``DESCRIBE HISTORY`` returns the rows of the ``format("txn")``
+    history metadata table — after an append, a MERGE, additive schema
+    evolution and a vacuum — and collecting them runs no Spark job."""
+    t = _mk(spark, tmp_path, n=10)
+    r = TxnSqlRouter(spark)
+    r.register("tgt", t)
+    r.sql("INSERT INTO tgt VALUES (100, 1, 'a')")
+    spark.createDataFrame(
+        [(1, 7, "m", 0.5), (200, 8, "n", 1.5)],
+        "k long, v long, tag string, w double",
+    ).createOrReplaceTempView("hist_src")
+    r.sql(
+        "MERGE WITH SCHEMA EVOLUTION INTO tgt t USING hist_src s "
+        "ON t.k = s.k WHEN MATCHED THEN UPDATE SET * "
+        "WHEN NOT MATCHED THEN INSERT *"
+    )
+    t.add_columns(spark, "note string")
+    t.vacuum(keep=3, force=True)
+    df = r.sql("DESCRIBE HISTORY tgt")
+    got, n = _jobs(spark, df.collect)
+    assert n == 0
+    want = (
+        spark.read.format("txn").option("metadata", "history").load(t.root)
+    )
+    assert df.schema == want.schema
+    assert [tuple(x) for x in got] == [tuple(x) for x in want.collect()]
+    ops = [x["operation"] for x in got]
+    assert ops[-2:] == ["merge_upsert", "add_columns"] and len(ops) == 3
+    assert got[-2]["added_columns"] == "w"
+    assert got[-1]["added_columns"] == "note"
