@@ -45,12 +45,12 @@ is the same interop contract upgraded to a transactional format.
 
 from __future__ import annotations
 
+import fcntl
 import hashlib
 import json
 import os
 import posixpath
 import re
-import shutil
 import time
 from datetime import datetime as _datetime, timezone as _timezone
 from urllib.parse import quote, unquote
@@ -59,14 +59,14 @@ import pyarrow as pa
 import pyarrow.parquet as _pq
 
 from .catalog import local_df
+from .store import LOCAL
 from .txn import (
     TxnTable,
     _cm_divergent,
     _cm_fields,
     _cm_phys,
     _file_column_stats,
-    _fsync_dir,
-    _staged,
+    _link_or_copy,
     validate_merge_keys,
 )
 
@@ -236,123 +236,39 @@ def _has_log(log_dir: str) -> bool:
     )
 
 
-def _publish_commit(tmp: str, log_path: str) -> None:
-    """ATOMIC create-if-absent publish of a log commit staged in
-    ``tmp``: ``os.link`` fails with EEXIST when the slot is taken (POSIX
-    ``os.rename`` would silently OVERWRITE a concurrent writer's
-    same-numbered commit — the lost-update race Delta's LogStores exist
-    to close; link is the local-FS conditional PUT). The log directory
-    is fsynced after the link, so a published commit is durable."""
-    try:
-        os.link(tmp, log_path)
-    except FileExistsError as e:
-        raise FileExistsError(
-            f"{log_path} already exists (concurrent mirror writer won "
-            "the slot); re-run the sync to resume from the new state"
-        ) from e
-    finally:
-        os.unlink(tmp)
-    _fsync_dir(os.path.dirname(log_path))
-
-
-def _write_commit(log_path: str, actions: list[dict]) -> None:
-    """Write ``actions`` as the log commit ``log_path``, create-if-absent
-    (``_publish_commit``). The actions are staged in a fresh ``mkstemp``
-    file of the writer's own (``_staged``), so two writers of one slot —
-    threads of one process included — can neither publish each other's
-    actions nor remove each other's temp file: exactly one commit lands,
-    and the other writer gets ``FileExistsError``."""
-    _publish_commit(
-        _staged(
-            log_path,
-            "".join(
-                json.dumps(a, separators=(",", ":")) + "\n" for a in actions
-            ),
-        ),
-        log_path,
+def _ndjson(actions: list[dict]) -> str:
+    """A log commit's body: one compact JSON action per line."""
+    return "".join(
+        json.dumps(a, separators=(",", ":")) + "\n" for a in actions
     )
 
 
-def _link_or_copy(src: str, dst: str) -> None:
-    os.makedirs(os.path.dirname(dst), exist_ok=True)
-    try:
-        os.link(src, dst)
-    except OSError:
-        shutil.copy2(src, dst)
+def _publish_last_checkpoint(log_dir: str, version: int, size: int) -> bool:
+    """Monotonic publish of ``_last_checkpoint``.
 
-
-def _publish_last_checkpoint(
-    log_dir: str,
-    version: int,
-    size: int,
-    stale_after: float = 10.0,
-    timeout: float = 30.0,
-) -> bool:
-    """Monotonic compare-and-swap publish of ``_last_checkpoint``.
-
-    A plain ``os.rename`` is last-writer-wins: two concurrent
-    checkpointers finishing out of order can REGRESS the pointer to an
-    older checkpoint — harmless for correctness (replay just reads a
-    longer JSON tail) but below the CAS discipline the commit publish
-    already holds (``_publish_commit``). This serializes the swap
-    behind an ``O_EXCL``-created ``_last_checkpoint.lock``: a lock older
-    than ``stale_after`` seconds is taken to be a crashed holder's and is
-    stolen by renaming it aside (exactly one stealer wins the rename),
-    and waiting gives up with ``TimeoutError`` after ``timeout``
-    seconds. Inside the lock it re-reads the current pointer and refuses
-    to move it backward. Returns True when the pointer advanced, False
-    when a newer checkpoint already owned it."""
+    A bare ``put`` is last-writer-wins: two checkpointers finishing out
+    of order could REGRESS the pointer to an older checkpoint — harmless
+    for correctness (replay just reads a longer JSON tail) but below the
+    put-if-absent discipline of the log commits. So the swap runs under
+    an exclusive ``flock`` on the log directory's own fd, which leaves no
+    file in the log; inside it the current pointer is re-read and
+    replaced only by a newer version. The kernel drops a dead holder's
+    lock, so a crashed checkpointer blocks no one. Returns True when the
+    pointer advanced, False when a newer checkpoint already owned it."""
     last = os.path.join(log_dir, "_last_checkpoint")
-    lock = f"{last}.lock"
-    tmp = _staged(last, json.dumps({"version": version, "size": size}))
-    deadline = time.monotonic() + timeout
+    fd = os.open(log_dir, os.O_RDONLY)
     try:
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            except FileExistsError:
-                try:
-                    held = time.time() - os.stat(lock).st_mtime
-                except FileNotFoundError:
-                    continue  # holder just released; retry immediately
-                if held > stale_after:
-                    # crashed holder: move the corpse aside (rename is
-                    # atomic, so exactly one stealer wins) and retry
-                    grave = f"{lock}.stale.{os.getpid()}.{time.time_ns()}"
-                    try:
-                        os.rename(lock, grave)
-                        os.unlink(grave)
-                    except FileNotFoundError:
-                        pass
-                    continue
-                if time.monotonic() > deadline:
-                    raise TimeoutError(
-                        f"could not acquire {lock} within {timeout}s"
-                    )
-                time.sleep(0.01)
-                continue
-            try:
-                current = -1
-                try:
-                    with open(last) as f:
-                        current = int(json.load(f)["version"])
-                except (FileNotFoundError, ValueError, KeyError):
-                    pass
-                if version > current:
-                    os.rename(tmp, last)
-                    return True
-                return False
-            finally:
-                os.close(fd)
-                try:
-                    os.unlink(lock)
-                except FileNotFoundError:
-                    pass
-    finally:
+        fcntl.flock(fd, fcntl.LOCK_EX)
         try:
-            os.unlink(tmp)
-        except FileNotFoundError:
-            pass
+            current = int(json.loads(LOCAL.get(last))["version"])
+        except (TypeError, ValueError, KeyError):
+            current = -1  # no pointer yet, or an unreadable one
+        if version <= current:
+            return False
+        LOCAL.put(last, json.dumps({"version": version, "size": size}))
+        return True
+    finally:
+        os.close(fd)  # releases the lock
 
 
 def export_delta(
@@ -449,7 +365,7 @@ def export_delta(
         *adds,
     ]
     log_path = os.path.join(log_dir, "00000000000000000000.json")
-    _write_commit(log_path, actions)
+    LOCAL.put_if_absent(log_path, _ndjson(actions))
     return {
         "n_files": len(adds),
         "n_rows": total_rows,
@@ -1204,7 +1120,7 @@ def export_delta_sync(
         cdc_actions = _emit_cdc(table, dest, last_txn, v, commit_n)
         actions.extend(cdc_actions)
     log_path = os.path.join(log_dir, f"{commit_n:020d}.json")
-    _write_commit(log_path, actions)
+    LOCAL.put_if_absent(log_path, _ndjson(actions))
     out = {
         "commit": commit_n,
         "n_adds": len(added),
@@ -1400,8 +1316,7 @@ def write_delta_checkpoint(dest: str) -> dict:
     )
     buf = pa.BufferOutputStream()
     _pq.write_table(tbl, buf)
-    os.rename(_staged(ckpt_path, buf.getvalue().to_pybytes()), ckpt_path)
-    _fsync_dir(log_dir)
+    LOCAL.put(ckpt_path, buf.getvalue().to_pybytes())
     advanced = _publish_last_checkpoint(log_dir, version, len(rows))
     return {
         "version": version,
@@ -2387,8 +2302,8 @@ def append_delta(spark, path: str, df) -> dict:
       spec's writer rule — partitioned into hive dirs by the physical
       partition columns, with ``add.partitionValues`` (physical keys)
       as the authoritative values and footer-derived ``add.stats``;
-    * the commit publishes via atomic create-if-absent (``os.link``,
-      the local-FS conditional PUT); a lost race re-replays the log,
+    * the commit publishes via the store's atomic ``put_if_absent``
+      (``store.py``); a lost race re-replays the log,
       re-verifies the schema/protocol unchanged, and retries at the
       next version — the spec's optimistic-concurrency loop (append
       vs append never logically conflicts);
@@ -2456,7 +2371,7 @@ def append_delta(spark, path: str, df) -> dict:
         ] + adds
         log_path = os.path.join(log_dir, f"{n_commit:020d}.json")
         try:
-            _write_commit(log_path, actions)
+            LOCAL.put_if_absent(log_path, _ndjson(actions))
             return {
                 "version": n_commit,
                 "n_files": len(adds),
@@ -2582,7 +2497,7 @@ def overwrite_delta(spark, path: str, df) -> dict:
         ] + removes + adds
         log_path = os.path.join(log_dir, f"{n_commit:020d}.json")
         try:
-            _write_commit(log_path, actions)
+            LOCAL.put_if_absent(log_path, _ndjson(actions))
             return {
                 "version": n_commit,
                 "n_files": len(adds),
@@ -2727,7 +2642,7 @@ def restore_delta(spark, path: str, version: int) -> dict:
     n_commit = state["n_commits"]
     log_path = os.path.join(log_dir, f"{n_commit:020d}.json")
     try:
-        _write_commit(log_path, actions)
+        LOCAL.put_if_absent(log_path, _ndjson(actions))
     except FileExistsError:
         # a concurrent commit moved the head: the file diff this
         # restore computed no longer describes the transition —
@@ -3037,7 +2952,6 @@ def _stage_adds(spark, path: str, writer_df, part_phys, prefix: str):
                     continue  # Spark may emit empty part files
                 rel = n if rel_dir == "." else f"{rel_dir}/{n}"
                 dst = os.path.join(path, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
                 _link_or_copy(src, dst)
                 total_rows += n_rows
                 adds.append(
@@ -3757,7 +3671,7 @@ def _row_level_delta(
         actions += cdc_actions + removes + re_adds
         log_path = os.path.join(log_dir, f"{n_commit:020d}.json")
         try:
-            _write_commit(log_path, actions)
+            LOCAL.put_if_absent(log_path, _ndjson(actions))
             return {
                 "version": n_commit,
                 "mode": "dv" if use_dv else "cow",
@@ -4037,7 +3951,7 @@ def optimize_delta(
         n_commit = state["n_commits"]
         log_path = os.path.join(log_dir, f"{n_commit:020d}.json")
         try:
-            _write_commit(log_path, actions)
+            LOCAL.put_if_absent(log_path, _ndjson(actions))
             return {
                 "version": n_commit,
                 "n_files_removed": len(touched_rels),

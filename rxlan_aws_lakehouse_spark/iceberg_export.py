@@ -53,12 +53,11 @@ from datetime import date as _date, datetime as _datetime
 from urllib.parse import unquote
 
 from .avro_lite import write_avro
+from .store import LOCAL
 from .txn import (
     TxnTable,
     _cm_fields,
     _cm_phys,
-    _fsync_dir,
-    _staged,
     validate_merge_keys,
 )
 
@@ -573,37 +572,20 @@ def export_iceberg(
 
 
 def _publish_metadata(mdir: str, version: int, meta: dict) -> None:
-    """Publish ``meta`` as ``mdir/v{version}.metadata.json`` by atomic
-    create-if-absent (the HadoopTables commit point), then point
-    ``version-hint.text`` at it.
-
-    The JSON goes to a fresh ``mkstemp`` file (``_staged``), so two
-    writers in one process never share a temp file. It is fsynced,
-    hard-linked to its final name (``link`` refuses an existing name),
-    and the directory is fsynced, so the published file is complete and
-    durable before the hint names it. Raises ``FileExistsError`` when the version is already
-    published; each caller maps that to its own error. The hint is
-    advisory: readers take the highest published version."""
-    mp = os.path.join(mdir, f"v{version}.metadata.json")
-    tmp = _staged(mp, json.dumps(meta))
-    try:
-        os.link(tmp, mp)
-    finally:
-        os.unlink(tmp)
-    _fsync_dir(mdir)
-    _replace_durably(os.path.join(mdir, "version-hint.text"), str(version))
-
-
-def _replace_durably(path: str, text: str) -> None:
-    """Atomically replace ``path`` with ``text`` (last writer wins): a
-    fsynced temp file of this writer's own (``_staged``) renamed over
-    it, then the directory fsynced."""
-    os.replace(_staged(path, text), path)
-    _fsync_dir(os.path.dirname(path))
+    """Publish ``meta`` as ``mdir/v{version}.metadata.json`` by
+    put-if-absent (the HadoopTables commit point), then point
+    ``version-hint.text`` at it. Raises ``FileExistsError`` when the
+    version is already published; each caller maps that to its own
+    error. The hint is advisory: readers take the highest published
+    version."""
+    LOCAL.put_if_absent(
+        os.path.join(mdir, f"v{version}.metadata.json"), json.dumps(meta)
+    )
+    LOCAL.put(os.path.join(mdir, "version-hint.text"), str(version))
 
 
 def _write_sync_state(dest: str, state: dict) -> None:
-    _replace_durably(os.path.join(dest, _SYNC_STATE), json.dumps(state))
+    LOCAL.put(os.path.join(dest, _SYNC_STATE), json.dumps(state))
 
 
 def export_iceberg_sync(

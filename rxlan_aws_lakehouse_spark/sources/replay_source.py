@@ -82,6 +82,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ..store import LOCAL
+
 RECORD_SCHEMA = StructType(
     [
         StructField("shard", StringType()),
@@ -123,7 +125,7 @@ _HASH_SPAN = 1 << 32  # crc32 key space
 def _shard_meta(shard_dir: str) -> dict | None:
     """Reshard lineage metadata, or None for a legacy (pre-r10) shard.
     ``range``/``parents`` are immutable once written; ``closed_at``
-    flips null -> int exactly once (write-then-rename)."""
+    flips null -> int exactly once (a durable ``put``)."""
     try:
         with open(os.path.join(shard_dir, _META)) as f:
             return json.load(f)
@@ -132,10 +134,7 @@ def _shard_meta(shard_dir: str) -> dict | None:
 
 
 def _write_meta(shard_dir: str, meta: dict) -> None:
-    tmp = os.path.join(shard_dir, f".tmp-meta-{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.rename(tmp, os.path.join(shard_dir, _META))
+    LOCAL.put(os.path.join(shard_dir, _META), json.dumps(meta))
 
 
 class ReplayLog:

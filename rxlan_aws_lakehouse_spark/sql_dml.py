@@ -128,7 +128,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -136,6 +135,7 @@ from pyspark.sql.types import StructType
 
 from .catalog import local_df
 from .sources.txn_source import _META_SCHEMAS, history_rows
+from .store import LOCAL
 from .txn import TxnTable
 
 _TOKEN_RE = re.compile(
@@ -636,7 +636,7 @@ class TxnSqlRouter:
 
     # -- persistent catalog (round 11; namespaced round 12) -------------
     # One JSON file PER QUALIFIED NAME under the catalog dir, written
-    # via tmp+rename: registration is atomic per name with no read-
+    # by a durable store ``put``: registration is atomic per name, no read-
     # modify-write of a shared file, so two sessions registering
     # different tables never race (same-name races are last-writer-wins,
     # which is what re-pointing a name means). A fresh session
@@ -681,13 +681,10 @@ class TxnSqlRouter:
     def _persist_entry(self, key: str, t: TxnTable) -> None:
         if self._catalog_dir is None:
             return
-        path = os.path.join(self._catalog_dir, f"{key}.json")
-        tmp = f"{path}.tmp-{os.getpid()}-{time.time_ns()}"
-        with open(tmp, "w") as f:
-            json.dump({"name": key, "root": t.root}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, path)
+        LOCAL.put(
+            os.path.join(self._catalog_dir, f"{key}.json"),
+            json.dumps({"name": key, "root": t.root}),
+        )
 
     def register(
         self,

@@ -13,24 +13,31 @@ Delta/Iceberg use — immutable data files + an atomically published pointer:
       _versions/v00000002/
       _log/_root                  names v00000001 (first commit)
       _log/v00000001              names v00000002 (its child)
-      _LATEST                     hint: a hard link to the newest log entry
+      _LATEST                     hint: names the newest version
 
 Writers build the NEXT version directory in full (data + metadata manifest),
-then publish it with one put-if-absent, as Delta's commit log does: a fully
-written, fsynced file naming the new version is hard-linked to
-``_log/<parent>``. ``link`` fails when the name exists, so each parent gets
-at most one child and a second writer on the same parent loses with
-``ConcurrentCommitError``. Readers take the version ``_LATEST`` names and
-follow ``_log`` forward until there is no entry; they resolve either the
-old snapshot or the new one, never a mixture. Old snapshots stay on disk
-until ``vacuum`` (readers that already resolved them keep working: their
-files are never mutated).
+then publish it with one put-if-absent of ``_log/<parent>`` naming it, as
+Delta's commit log does. The store (``store.py``: local disk, or any
+object store with a create-only PUT) refuses an existing name, so each
+parent gets at most one child and a second writer on the same parent
+loses with ``ConcurrentCommitError``. Readers take the version ``_LATEST``
+names and follow ``_log`` forward until there is no entry; they resolve
+either the old snapshot or the new one, never a mixture. Old snapshots
+stay on disk until ``vacuum`` (readers that already resolved them keep
+working: their files are never mutated).
 
-On an object store the link becomes a conditional PUT (If-None-Match) of
-the log entry; everything else — immutable version dirs, manifest metadata,
-optimistic concurrency on the expected parent version — carries over
-unchanged, which is why the upsert/compact logic below is written against
-snapshots, not paths.
+``_LATEST`` is only a hint, replaced after each publish. Log entries are
+never deleted, not even by ``vacuum`` (Delta keeps its log past VACUUM
+too), so a hint that lags (its writer died after the entry landed) or
+that a stalled writer moves back still walks forward to the head, and a
+writer whose parent was superseded hits the winner's entry. The head is
+checked before the put: an entry for a stale or never-published parent
+would be one no reader reaches. A ``_LATEST`` written as a hard link to
+its entry, or as a plain file with no ``_log/``, reads the same way, and
+a leftover ``_LATEST.lock`` is ignored. Everything else — immutable
+version dirs, manifest metadata, optimistic concurrency on the expected
+parent version — is plain immutable-object IO, which is why the
+upsert/compact logic below is written against snapshots, not paths.
 
 Each snapshot's ``_meta.json`` records the partition spec, so operations
 that rewrite the table (``merge_upsert``, ``compact``) re-apply it — a gold
@@ -55,8 +62,6 @@ import json
 import os
 import re
 import shutil
-import tempfile
-import threading
 import time
 from urllib.parse import unquote, urlparse
 
@@ -65,13 +70,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from .catalog import local_df
+from .store import LOCAL, InMemoryStore, LocalStore
 
 _VERSIONS = "_versions"
 _DV_DIR = "_dv"  # per-version deletion-vector parquet dir (rel, row_index)
 _CDF_DIR = "_cdf"  # per-version row-level change payload (Delta CDF shape)
 _CHANGE_TYPE = "_change_type"  # insert | update_preimage | update_postimage | delete
 _COMMIT_VERSION = "_commit_version"
-_LATEST = "_LATEST"  # hint: hard link to the newest _log entry
+_LATEST = "_LATEST"  # hint: names the newest version
 _LOG = "_log"  # put-if-absent commit log: _log/<parent> names its child
 _LOG_ROOT = "_root"  # the _log entry naming an empty table's first version
 # commit(expect_parent=...) sentinel: "resolve the head at commit time"
@@ -99,45 +105,17 @@ _SUBSHARD_BUCKETS = 64
 
 
 def _link_or_copy(src: str, dst: str) -> None:
-    """``os.link`` with an EXDEV/EPERM copy fallback (delta_export.py:263
-    pattern). The carry paths that can cross TABLE roots (clone/convert/
-    writer publish) may legitimately cross filesystems — e.g. a foreign
-    table on disk converted into a TxnTable under tmpfs scratch — where a
-    bare hard link fails outright. Intra-table links never take the
-    fallback."""
+    """Carry a data file to ``dst`` by hard link, making its directory,
+    with a copy fallback for EXDEV/EPERM. The carry paths that can cross
+    TABLE roots (clone/convert/writer publish, the Delta mirror) may
+    legitimately cross filesystems — e.g. a foreign table on disk
+    converted into a TxnTable under tmpfs scratch — where a bare hard
+    link fails outright. Intra-table links never take the fallback."""
+    os.makedirs(os.path.dirname(dst), exist_ok=True)
     try:
         os.link(src, dst)
     except OSError:
         shutil.copy2(src, dst)
-
-
-def _staged(path: str, data: str | bytes) -> str:
-    """A fresh ``mkstemp`` file beside ``path`` holding ``data``,
-    fsynced and world-readable, for the caller to link or rename into
-    place. Two writers, threads of one process included, never share a
-    temp file. The dot prefix keeps it out of every listing that looks
-    for published names."""
-    d, name = os.path.split(path)
-    fd, tmp = tempfile.mkstemp(dir=d, prefix=f".{name}.")
-    try:
-        with os.fdopen(fd, "wb") as f:
-            os.fchmod(f.fileno(), 0o644)  # mkstemp's 0600 would hide it
-            f.write(data.encode() if isinstance(data, str) else data)
-            f.flush()
-            os.fsync(f.fileno())
-    except BaseException:
-        os.unlink(tmp)
-        raise
-    return tmp
-
-
-def _fsync_dir(d: str) -> None:
-    """Make the names linked or renamed into ``d`` durable."""
-    fd = os.open(d, os.O_RDONLY)
-    try:
-        os.fsync(fd)
-    finally:
-        os.close(fd)
 
 
 def _stat_value(v):
@@ -878,187 +856,50 @@ class PendingDeleteVectorsError(RuntimeError):
     suppresses. Call ``materialize_deletes()`` first."""
 
 
-class PointerBackend:
-    """The one storage primitive a deployment must supply: an atomic
-    COMPARE-AND-SWAP on the table's live-version pointer. Everything else
-    in ``TxnTable`` is plain immutable-object IO (write-once snapshot
-    dirs), which every store provides; the pointer swap is where
-    linearizability lives — Delta's LogStore / Iceberg's catalog
-    ``commit`` play exactly this role. Implementations: ``LocalFSPointer``
-    (put-if-absent log entries via ``link``) here; an object-store
-    deployment maps ``compare_and_swap`` onto a conditional PUT (S3
-    If-None-Match / If-Match, GCS ``ifGenerationMatch``, DynamoDB
-    conditional write) with no other code change."""
+class TxnTable:
+    """A parquet table with atomic commits and snapshot reads."""
 
-    def read(self, root: str) -> str | None:
-        raise NotImplementedError
+    def __init__(
+        self, root: str, store: LocalStore | InMemoryStore | None = None
+    ):
+        """``store`` holds the commit log and its hint (``store.py``);
+        snapshots are read and written on disk under ``root``."""
+        self.root = root
+        self.store = store or LOCAL
+        os.makedirs(os.path.join(root, _VERSIONS), exist_ok=True)
 
-    def compare_and_swap(
-        self, root: str, version: str, expect: str | None
-    ) -> None:
-        """Atomically set the pointer to ``version`` iff it currently
-        reads ``expect``; raise ``ConcurrentCommitError`` otherwise."""
-        raise NotImplementedError
+    # -- the commit log ---------------------------------------------------
+    def _read_name(self, *parts: str) -> str | None:
+        data = self.store.get(os.path.join(self.root, *parts))
+        return None if data is None else data.decode().strip() or None
 
+    def current_version(self) -> str | None:
+        """The head: from the ``_LATEST`` hint, follow ``_log/<v>``
+        until there is no entry."""
+        head = self._read_name(_LATEST)
+        while (nxt := self._read_name(_LOG, head or _LOG_ROOT)) is not None:
+            head = nxt
+        return head
 
-class LocalFSPointer(PointerBackend):
-    """POSIX put-if-absent log. Publishing ``version`` on ``expect``
-    writes and fsyncs a temp file naming ``version``, then hard-links it
-    to ``_log/<expect>`` (``_log/_root`` for an empty table). ``link``
-    refuses an existing name, so of two writers on one parent exactly
-    one lands and the other gets ``ConcurrentCommitError``. The head is
-    checked first: an entry for a stale or never-published ``expect``
-    would be one no reader ever reaches.
-
-    ``_LATEST`` is only a hint: after each publish, a hard link to the
-    new entry is renamed over it. The inode it replaces is still linked
-    from ``_log/``, so the rename frees nothing. ``read`` follows
-    ``_log/<v>`` from the hint until there is no entry, so a writer that
-    died between the link and the hint has still published.
-
-    Log entries are never deleted, not even by ``vacuum`` (Delta keeps its
-    log past VACUUM too). So a hint that lags, or that a stalled writer
-    moves back, still walks forward to the head, and a writer that links
-    after its parent was superseded hits the winner's entry and raises.
-    A plain ``_LATEST`` from the older lockfile protocol reads as a hint,
-    and a leftover ``_LATEST.lock`` is ignored."""
-
-    @staticmethod
-    def _resolve(root: str) -> tuple[str | None, str | None]:
-        """(head, path of the log entry naming it, or None)."""
-        try:
-            with open(os.path.join(root, _LATEST)) as f:
-                head = f.read().strip() or None
-        except FileNotFoundError:
-            head = None
-        entry = None
-        while True:
-            nxt = os.path.join(root, _LOG, head or _LOG_ROOT)
-            try:
-                with open(nxt) as f:
-                    head = f.read().strip()
-            except FileNotFoundError:
-                return head, entry
-            entry = nxt
-
-    @staticmethod
-    def _hint(root: str, entry: str) -> None:
-        tmp = os.path.join(root, f".{_LATEST}.{os.getpid()}.{time.time_ns()}")
-        os.link(entry, tmp)
-        os.rename(tmp, os.path.join(root, _LATEST))
-
-    def read(self, root: str) -> str | None:
-        return self._resolve(root)[0]
-
-    def compare_and_swap(
-        self, root: str, version: str, expect: str | None
-    ) -> None:
-        if self.read(root) != expect:
+    def _swap_pointer(self, version: str, expect: str | None) -> None:
+        """Publish ``version`` as the child of ``expect`` (``None``: the
+        first version): put-if-absent ``_log/<expect>``, then replace the
+        hint. Raises ``ConcurrentCommitError`` when ``expect`` is not the
+        head or another writer's entry on it landed first."""
+        if self.current_version() != expect:
             raise ConcurrentCommitError(
                 f"table advanced past {expect!r}; retry on the new snapshot"
             )
-        log = os.path.join(root, _LOG)
-        os.makedirs(log, exist_ok=True)
-        entry = os.path.join(log, expect or _LOG_ROOT)
-        tmp = os.path.join(log, f".{version}.{os.getpid()}.{time.time_ns()}")
-        with open(tmp, "w") as f:
-            f.write(version)
-            f.flush()
-            os.fsync(f.fileno())
         try:
-            os.link(tmp, entry)
+            self.store.put_if_absent(
+                os.path.join(self.root, _LOG, expect or _LOG_ROOT), version
+            )
         except FileExistsError as e:
             raise ConcurrentCommitError(
                 f"another commit on {expect!r} landed first; retry on the "
                 "new snapshot"
             ) from e
-        finally:
-            os.unlink(tmp)
-        fd = os.open(log, os.O_RDONLY)
-        try:
-            os.fsync(fd)
-        finally:
-            os.close(fd)
-        self._hint(root, entry)
-
-
-class _PreconditionFailed(Exception):
-    """Internal: the conditional PUT's If-Match etag no longer matches."""
-
-
-class InMemoryEtagPointer(PointerBackend):
-    """Object-store-shaped pointer backend: the pointer is an immutable
-    (value, etag) pair per root, written only through a conditional PUT
-    that carries the etag the writer last read (S3 ``If-Match`` / GCS
-    ``ifGenerationMatch`` / DynamoDB conditional write). There is no
-    lockfile, no rename, no mtime — the check-and-set is the store's own
-    atomic precondition. Exists to prove the ``PointerBackend`` seam is
-    not shaped around ``os.rename``: the CAS race / concurrent-merge /
-    writer-stress suites run over BOTH backends
-    (``tests/test_txn.py``)."""
-
-    def __init__(self):
-        self._mu = threading.Lock()
-        self._objects: dict[str, tuple[str, int]] = {}  # root -> (val, etag)
-
-    # -- the two store primitives a real client would wrap ---------------
-    def _get(self, root: str):
-        """(value, etag) of the pointer object, or (None, None) if absent."""
-        with self._mu:
-            ent = self._objects.get(root)
-            return (ent[0], ent[1]) if ent else (None, None)
-
-    def _put_if_match(self, root: str, value: str, etag) -> None:
-        """Conditional PUT: succeeds iff the object's current etag equals
-        ``etag`` (``None`` = If-None-Match, i.e. create-only)."""
-        with self._mu:
-            ent = self._objects.get(root)
-            cur_etag = ent[1] if ent else None
-            if cur_etag != etag:
-                raise _PreconditionFailed(
-                    f"etag mismatch at {root}: have {cur_etag}, sent {etag}"
-                )
-            self._objects[root] = (value, (ent[1] + 1) if ent else 1)
-
-    # -- PointerBackend contract ------------------------------------------
-    def read(self, root: str) -> str | None:
-        return self._get(root)[0]
-
-    def compare_and_swap(
-        self, root: str, version: str, expect: str | None
-    ) -> None:
-        # read → verify → conditional PUT, exactly the client-side shape a
-        # real object store forces; a precondition failure means another
-        # writer published between our read and our PUT, which is a
-        # concurrent commit by definition (their value can't equal
-        # ``expect`` — versions never repeat).
-        value, etag = self._get(root)
-        if value != expect:
-            raise ConcurrentCommitError(
-                f"table advanced past {expect!r}; retry on the new snapshot"
-            )
-        try:
-            self._put_if_match(root, version, etag)
-        except _PreconditionFailed as e:
-            raise ConcurrentCommitError(
-                f"pointer moved during swap to {version}: {e}"
-            ) from e
-
-
-class TxnTable:
-    """A parquet table with atomic commits and snapshot reads."""
-
-    def __init__(self, root: str, pointer: PointerBackend | None = None):
-        self.root = root
-        self.pointer = pointer or LocalFSPointer()
-        os.makedirs(os.path.join(root, _VERSIONS), exist_ok=True)
-
-    # -- pointer ----------------------------------------------------------
-    def current_version(self) -> str | None:
-        return self.pointer.read(self.root)
-
-    def _swap_pointer(self, version: str, expect: str | None) -> None:
-        self.pointer.compare_and_swap(self.root, version, expect)
+        self.store.put(os.path.join(self.root, _LATEST), version)
 
     def _next_version(self) -> str:
         # Max over the pointer AND existing version dirs: an orphaned slot
@@ -2268,12 +2109,10 @@ class TxnTable:
                 carry_files = carry_resolver(staging)
             carry_files = carry_files or {}
             for rel, src in carry_files.items():
-                dst = os.path.join(staging, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
                 # clone/convert/restore may carry from ANOTHER table's
                 # root (possibly a different filesystem): EXDEV falls
                 # back to a copy instead of failing the commit
-                _link_or_copy(src, dst)
+                _link_or_copy(src, os.path.join(staging, rel))
             # Deletion-vector carry-forward: a commit that carries data
             # files from a DV-bearing snapshot must carry the DV too, or
             # the deleted rows resurrect (append after a deferred delete).
@@ -4253,9 +4092,9 @@ class TxnTable:
             raise FileNotFoundError(f"no committed version at {self.root}")
         meta_v = self._meta(v)
         src_root = os.path.join(self.root, _VERSIONS, v)
-        # the clone shares the pointer backend (both shipped backends are
-        # root-keyed, so one instance serves many tables)
-        dest = TxnTable(dest_root, pointer=self.pointer)
+        # the clone shares the store (stores are path-keyed, so one
+        # instance serves many tables)
+        dest = TxnTable(dest_root, store=self.store)
         if dest.current_version() is not None:
             raise ValueError(f"clone target {dest_root} is not empty")
         src_entries = self.file_entries(v)
@@ -4581,10 +4420,10 @@ class TxnTable:
             os.makedirs(staging, exist_ok=True)
             try:
                 for rel in rels:
-                    dst = os.path.join(staging, rel)
-                    os.makedirs(os.path.dirname(dst), exist_ok=True)
                     # writer staging may sit on another fs than the table
-                    _link_or_copy(os.path.join(source, rel), dst)
+                    _link_or_copy(
+                        os.path.join(source, rel), os.path.join(staging, rel)
+                    )
             except Exception:
                 shutil.rmtree(staging, ignore_errors=True)
                 raise

@@ -629,13 +629,11 @@ def test_export_of_widened_table_round_trips(spark, tmp_path):
 
 def test_concurrent_sync_loses_loudly_never_overwrites(spark, tmp_path):
     """Two mirror writers computing the same next commit number: the
-    second publish must fail with EEXIST (atomic create-if-absent via
-    os.link), NEVER silently overwrite the winner's commit — the
-    lost-update race POSIX rename would reintroduce."""
-    from rxlan_aws_lakehouse_spark.delta_export import (
-        _publish_commit,
-        export_delta_sync,
-    )
+    second publish must fail with EEXIST (the store's put-if-absent),
+    NEVER silently overwrite the winner's commit — the lost-update race
+    POSIX rename would reintroduce."""
+    from rxlan_aws_lakehouse_spark.delta_export import export_delta_sync
+    from rxlan_aws_lakehouse_spark.store import LOCAL
 
     t = _mk(spark, str(tmp_path / "t"), n=40)
     dest = str(tmp_path / "out")
@@ -648,13 +646,13 @@ def test_concurrent_sync_loses_loudly_never_overwrites(spark, tmp_path):
     log_path = out["log_path"]
     winner = open(log_path).read()
     # a losing writer with the same slot computed
-    tmp = f"{log_path}.tmp-loser"
-    with open(tmp, "w") as f:
-        f.write('{"add": {"path": "bogus.parquet"}}\n')
-    with pytest.raises(FileExistsError, match="concurrent mirror"):
-        _publish_commit(tmp, log_path)
+    with pytest.raises(FileExistsError, match="already exists"):
+        LOCAL.put_if_absent(log_path, '{"add": {"path": "bogus.parquet"}}\n')
     assert open(log_path).read() == winner  # untouched
-    assert not os.path.exists(tmp)  # loser's temp cleaned up
+    # loser's temp cleaned up
+    assert not [
+        n for n in os.listdir(os.path.dirname(log_path)) if n.startswith(".")
+    ]
 
 
 
@@ -815,6 +813,63 @@ def test_last_checkpoint_pointer_never_regresses(spark, tmp_path):
 
     _os.unlink(last)
     assert _publish_last_checkpoint(log_dir, head, out["n_actions"])
+
+
+def test_killed_checkpointer_blocks_no_later_publish(tmp_path):
+    """A checkpointer SIGKILLed inside the ``_last_checkpoint`` critical
+    section leaves nothing that blocks the next publish (the kernel drops
+    its ``flock``), and neither does a ``_last_checkpoint.lock`` left by
+    the older lockfile protocol."""
+    import signal
+    import subprocess
+    import sys
+    import textwrap
+    import time
+
+    from rxlan_aws_lakehouse_spark.delta_export import (
+        _publish_last_checkpoint,
+    )
+
+    log_dir = str(tmp_path / "_delta_log")
+    os.makedirs(log_dir)
+    with open(os.path.join(log_dir, "_last_checkpoint.lock"), "w") as f:
+        f.write("left by the older protocol")
+    inside = str(tmp_path / "inside")
+    holder = subprocess.Popen(
+        [
+            sys.executable,
+            "-c",
+            textwrap.dedent(
+                """
+                import sys, time
+                import rxlan_aws_lakehouse_spark.delta_export as dx
+
+                def hold(path, data):
+                    open(sys.argv[2], "w").close()
+                    time.sleep(600)
+
+                dx.LOCAL.put = hold
+                dx._publish_last_checkpoint(sys.argv[1], 99, 1)
+                """
+            ),
+            log_dir,
+            inside,
+        ],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    try:
+        deadline = time.monotonic() + 120
+        while not os.path.exists(inside):
+            assert holder.poll() is None and time.monotonic() < deadline
+            time.sleep(0.05)
+    finally:
+        holder.send_signal(signal.SIGKILL)
+        holder.wait()
+    start = time.monotonic()
+    assert _publish_last_checkpoint(log_dir, 5, 1)
+    assert time.monotonic() - start < 5.0
+    with open(os.path.join(log_dir, "_last_checkpoint")) as f:
+        assert json.load(f)["version"] == 5
 
 
 def test_sync_refuses_explicit_rewind_version(spark, tmp_path):

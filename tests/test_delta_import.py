@@ -1737,10 +1737,10 @@ def test_append_delta_commit_race_retries(spark, tmp_path, monkeypatch):
     import rxlan_aws_lakehouse_spark.delta_export as dx
 
     f = _plain_foreign(tmp_path)
-    real_publish = dx._publish_commit
+    real_put_if_absent = dx.LOCAL.put_if_absent
     raced = {"done": False}
 
-    def racing_publish(tmp, log_path):
+    def racing_put_if_absent(log_path, data):
         if not raced["done"]:
             raced["done"] = True
             # a competing writer takes the slot first
@@ -1751,9 +1751,9 @@ def test_append_delta_commit_race_retries(spark, tmp_path, monkeypatch):
                     )
                     + "\n"
                 )
-        return real_publish(tmp, log_path)
+        return real_put_if_absent(log_path, data)
 
-    monkeypatch.setattr(dx, "_publish_commit", racing_publish)
+    monkeypatch.setattr(dx.LOCAL, "put_if_absent", racing_put_if_absent)
     out = dx.append_delta(
         spark,
         f.root,

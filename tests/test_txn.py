@@ -12,24 +12,18 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from rxlan_aws_lakehouse_spark.txn import (
-    ConcurrentCommitError,
-    InMemoryEtagPointer,
-    LocalFSPointer,
-    TxnTable,
-)
+from rxlan_aws_lakehouse_spark.store import InMemoryStore, LocalStore
+from rxlan_aws_lakehouse_spark.txn import ConcurrentCommitError, TxnTable
 from rxlan_aws_lakehouse_spark import warehouse
 
 
 @pytest.fixture(params=["localfs", "etag"])
-def pointer(request):
-    """Both shipped PointerBackends: the POSIX put-if-absent log and the
-    object-store-shaped conditional-PUT fake. The race/stress tests run
-    over each to prove the seam isn't shaped around os.rename."""
-    return (
-        LocalFSPointer() if request.param == "localfs"
-        else InMemoryEtagPointer()
-    )
+def store(request):
+    """Both shipped stores: the POSIX one (``localfs``) and the
+    object-store-shaped in-memory one with a create-only PUT (``etag``).
+    The log-protocol, race and stress tests run over each, so the
+    protocol is shown to need nothing but get/put_if_absent/put."""
+    return LocalStore() if request.param == "localfs" else InMemoryStore()
 
 
 def _drop(spark, *tables):
@@ -1270,16 +1264,16 @@ def test_clone_of_unpartitioned_snapshot_records_empty_spec(spark, tmp_path):
     assert clone.read(spark).count() == 10
 
 
-def test_pointer_cas_prevents_double_publish(spark, tmp_path, pointer):
+def test_pointer_cas_prevents_double_publish(spark, tmp_path, store):
     """Regression (ADVICE r5, txn.py:300): two writers that both read the
     same expected parent and interleave between the check and the rename.
     Pre-CAS, both renames succeeded — the second silently overwrote the
     first (a lost commit). With the CAS exactly one publishes and the
-    other deterministically gets ConcurrentCommitError. Runs over BOTH
-    pointer backends (lockfile and conditional-PUT)."""
+    other deterministically gets ConcurrentCommitError. Runs over both
+    stores."""
     import threading
 
-    t = TxnTable(str(tmp_path / "t"), pointer=pointer)
+    t = TxnTable(str(tmp_path / "t"), store=store)
     v1 = t.commit(_df(spark, 5))
     barrier = threading.Barrier(2)
     results: dict[str, str] = {}
@@ -1300,13 +1294,13 @@ def test_pointer_cas_prevents_double_publish(spark, tmp_path, pointer):
     assert t.current_version() == {"a": "v00000002", "b": "v00000003"}[winner]
 
 
-def test_concurrent_merges_both_land_via_retry(spark, tmp_path, pointer):
+def test_concurrent_merges_both_land_via_retry(spark, tmp_path, store):
     """Two writers merging DISJOINT keys concurrently: the CAS loser
     retries against the winner's snapshot and both updates land. Runs
-    over both pointer backends."""
+    over both stores."""
     import threading
 
-    t = TxnTable(str(tmp_path / "t"), pointer=pointer)
+    t = TxnTable(str(tmp_path / "t"), store=store)
     t.commit(_df(spark, 10))
     errs: list[Exception] = []
 
@@ -1489,13 +1483,13 @@ def test_bloom_conjunctive_equality_prunes_int_literal(spark, tmp_path):
     assert n == 1
 
 
-def test_multi_writer_stress_no_lost_rows(spark, tmp_path, pointer):
+def test_multi_writer_stress_no_lost_rows(spark, tmp_path, store):
     """Five concurrent writers (3 appenders + 2 disjoint-key mergers)
     hammer one table through the CAS pointer. Linearizability check:
     every writer's rows are present exactly once in the final snapshot,
     and the history's parent links form one unbroken chain (no slot ever
-    double-published). Runs over both pointer backends."""
-    t = TxnTable(str(tmp_path / "t"), pointer=pointer)
+    double-published). Runs over both stores."""
+    t = TxnTable(str(tmp_path / "t"), store=store)
     t.commit(_df(spark, 10))
     errs: list[Exception] = []
 
@@ -1503,7 +1497,7 @@ def test_multi_writer_stress_no_lost_rows(spark, tmp_path, pointer):
         try:
             for i in range(2):
                 rows = [(1000 + wid * 10 + i, f"app{wid}", "1")]
-                TxnTable(t.root, pointer=pointer).append(
+                TxnTable(t.root, store=store).append(
                     spark.createDataFrame(
                         rows, "k long, tag string, dt string"
                     ),
@@ -1518,7 +1512,7 @@ def test_multi_writer_stress_no_lost_rows(spark, tmp_path, pointer):
                 [(wid * 3, f"m{wid}", "0"), (wid * 3 + 1, f"m{wid}", "0")],
                 "k long, tag string, dt string",
             )
-            TxnTable(t.root, pointer=pointer).merge_upsert(
+            TxnTable(t.root, store=store).merge_upsert(
                 spark, upd, keys=["k"], max_retries=10
             )
         except Exception as e:  # pragma: no cover
@@ -1584,45 +1578,48 @@ def test_bloom_cross_typed_literal_never_prunes(spark, tmp_path):
     assert got == 1
 
 
-def _log_entries(root):
+def _log_entries(root, store=None):
+    """``_log/<name> -> content`` for every entry. The in-memory store
+    has no listing, so there the names ``_root`` and v1..v20 are probed."""
     log = os.path.join(root, "_log")
-    out = {}
-    for n in sorted(os.listdir(log)):
-        with open(os.path.join(log, n)) as f:
-            out[n] = f.read()
-    return out
+    if store is None or isinstance(store, LocalStore):
+        names = sorted(os.listdir(log))
+    else:
+        names = ["_root"] + [f"v{i:08d}" for i in range(1, 21)]
+    store = store or LocalStore()
+    return {
+        n: data.decode()
+        for n in names
+        if (data := store.get(os.path.join(log, n))) is not None
+    }
 
 
-def test_crash_between_log_link_and_hint_still_published(spark, tmp_path):
-    """A writer that dies after linking its log entry but before moving
+def test_crash_between_log_link_and_hint_still_published(
+    spark, tmp_path, store, monkeypatch
+):
+    """A writer that dies after its log entry lands but before it moves
     the ``_LATEST`` hint has published: readers and the next commit both
     see its version."""
-
-    class DiesBeforeHint(LocalFSPointer):
-        @staticmethod
-        def _hint(root, entry):
-            pass  # the process is gone before the hint moves
-
     root = str(tmp_path / "t")
-    TxnTable(root).commit(_df(spark, 4))
-    v2 = TxnTable(root, pointer=DiesBeforeHint()).append(
-        _df(spark, 3, tag="b")
-    )
-    with open(os.path.join(root, "_LATEST")) as f:
-        assert f.read() == "v00000001"  # the hint lags
-    t = TxnTable(root)
+    latest = os.path.join(root, "_LATEST")
+    TxnTable(root, store=store).commit(_df(spark, 4))
+    with monkeypatch.context() as m:
+        # the process is gone before the hint moves
+        m.setattr(store, "put", lambda path, data: None)
+        v2 = TxnTable(root, store=store).append(_df(spark, 3, tag="b"))
+    assert store.get(latest) == b"v00000001"  # the hint lags
+    t = TxnTable(root, store=store)
     assert t.current_version() == v2
     assert t.read(spark).count() == 7
     v3 = t.append(_df(spark, 2, tag="c"))
     assert t.current_version() == v3 and t.read(spark).count() == 9
-    with open(os.path.join(root, "_LATEST")) as f:
-        assert f.read() == v3
+    assert store.get(latest) == v3.encode()
 
 
 def test_legacy_plain_latest_reads_and_upgrades(spark, tmp_path):
     """A table written by the older lockfile protocol (plain-file
     ``_LATEST``, no ``_log/``) reads at that version, and a commit on
-    top of it works and leaves the hint a link into ``_log/``."""
+    top of it works and leaves the hint naming the new head."""
     root = str(tmp_path / "t")
     t = TxnTable(root)
     t.commit(_df(spark, 4))
@@ -1637,7 +1634,8 @@ def test_legacy_plain_latest_reads_and_upgrades(spark, tmp_path):
     v3 = t.append(_df(spark, 2, tag="c"))
     assert t.current_version() == v3 and t.read(spark).count() == 9
     assert _log_entries(root) == {v2: v3}
-    assert os.stat(latest).st_nlink == 2  # the hint is the entry's inode
+    with open(latest) as f:
+        assert f.read() == v3  # the hint names v3
 
 
 def test_leftover_lockfile_blocks_nothing(spark, tmp_path):
@@ -1674,72 +1672,76 @@ def test_hint_naming_a_vacuumed_version_resolves_the_head(spark, tmp_path):
     }
     v5 = t.append(_df(spark, 1, tag="z"))
     assert TxnTable(root).current_version() == v5
+    # the new hint replaced the link; the entry it shared kept its content
+    assert _log_entries(root)["v00000001"] == "v00000002"
 
 
-def test_stale_or_unpublished_expect_creates_no_entry(tmp_path):
-    """A CAS on a parent that is not the head raises and leaves
+def test_stale_or_unpublished_expect_creates_no_entry(tmp_path, store):
+    """A swap on a parent that is not the head raises and leaves
     ``_log/`` exactly as it was: no entry a reader could never reach."""
     root = str(tmp_path / "t")
-    p = LocalFSPointer()
-    p.compare_and_swap(root, "v00000001", None)
-    p.compare_and_swap(root, "v00000002", "v00000001")
-    before = _log_entries(root)
+    t = TxnTable(root, store=store)
+    t._swap_pointer("v00000001", None)
+    t._swap_pointer("v00000002", "v00000001")
+    before = _log_entries(root, store)
     for stale in (None, "v00000001", "v00000007"):
         with pytest.raises(ConcurrentCommitError):
-            p.compare_and_swap(root, "v00000009", stale)
-    assert _log_entries(root) == before
-    assert p.read(root) == "v00000002"
+            t._swap_pointer("v00000009", stale)
+    assert _log_entries(root, store) == before
+    assert t.current_version() == "v00000002"
 
 
-def test_same_parent_put_if_absent_admits_one_writer(tmp_path):
-    """Two writers pass the head check on the same parent; the link
-    decides. The one that links second raises at once and leaves the
-    winner's entry and the hint intact."""
+def test_same_parent_put_if_absent_admits_one_writer(
+    tmp_path, store, monkeypatch
+):
+    """Two writers pass the head check on the same parent; the
+    put-if-absent decides. The one that puts second raises at once and
+    leaves the winner's entry and the hint intact."""
     root = str(tmp_path / "t")
-    LocalFSPointer().compare_and_swap(root, "v00000001", None)
+    TxnTable(root, store=store)._swap_pointer("v00000001", None)
+    real_put_if_absent = store.put_if_absent
 
-    class Stalled(LocalFSPointer):
-        def read(self, r):
-            head = super().read(r)
-            # another writer publishes on the same parent while this one
-            # sits between its head check and its link
-            LocalFSPointer().compare_and_swap(r, "v00000002", head)
-            return head
+    def stalled(path, data):
+        # another writer publishes on the same parent while this one
+        # sits between its head check and its put
+        monkeypatch.setattr(store, "put_if_absent", real_put_if_absent)
+        TxnTable(root, store=store)._swap_pointer("v00000002", "v00000001")
+        real_put_if_absent(path, data)
 
+    monkeypatch.setattr(store, "put_if_absent", stalled)
     start = time.monotonic()
     with pytest.raises(ConcurrentCommitError):
-        Stalled().compare_and_swap(root, "v00000003", "v00000001")
+        TxnTable(root, store=store)._swap_pointer("v00000003", "v00000001")
     assert time.monotonic() - start < 5.0
-    assert LocalFSPointer().read(root) == "v00000002"
-    assert _log_entries(root) == {
+    assert TxnTable(root, store=store).current_version() == "v00000002"
+    assert _log_entries(root, store) == {
         "_root": "v00000001", "v00000001": "v00000002"
     }
-    with open(os.path.join(root, "_LATEST")) as f:
-        assert f.read() == "v00000002"
+    assert store.get(os.path.join(root, "_LATEST")) == b"v00000002"
 
 
-def test_late_link_after_vacuum_hits_the_winners_entry(spark, tmp_path):
-    """Between a writer's head check and its link, two commits land on
+def test_late_link_after_vacuum_hits_the_winners_entry(
+    spark, tmp_path, monkeypatch
+):
+    """Between a writer's head check and its put, two commits land on
     its parent and vacuum removes the parent. The parent's log entry
-    survives vacuum, so the late link fails and the chain is unchanged."""
+    survives vacuum, so the late put fails and the chain is unchanged."""
     root = str(tmp_path / "t")
-    t = TxnTable(root)
+    store = LocalStore()
+    t = TxnTable(root, store=store)
     t.commit(_df(spark, 4))
+    real_put_if_absent = store.put_if_absent
 
-    class Stalled(LocalFSPointer):
-        stalled = False
+    def stalled(path, data):
+        monkeypatch.setattr(store, "put_if_absent", real_put_if_absent)
+        t.append(_df(spark, 3, tag="b"))
+        t.append(_df(spark, 2, tag="c"))
+        assert t.vacuum(keep=1) == ["v00000001", "v00000002"]
+        real_put_if_absent(path, data)
 
-        def read(self, r):
-            head = super().read(r)
-            if not self.stalled:
-                self.stalled = True
-                t.append(_df(spark, 3, tag="b"))
-                t.append(_df(spark, 2, tag="c"))
-                assert t.vacuum(keep=1) == ["v00000001", "v00000002"]
-            return head
-
+    monkeypatch.setattr(store, "put_if_absent", stalled)
     with pytest.raises(ConcurrentCommitError):
-        Stalled().compare_and_swap(root, "v00000009", "v00000001")
+        TxnTable(root, store=store)._swap_pointer("v00000009", "v00000001")
     assert _log_entries(root) == {
         "_root": "v00000001", "v00000001": "v00000002",
         "v00000002": "v00000003",
@@ -1748,43 +1750,45 @@ def test_late_link_after_vacuum_hits_the_winners_entry(spark, tmp_path):
     assert TxnTable(root).read(spark).count() == 9
 
 
-def test_writer_stalled_inside_hint_cannot_hide_the_head(spark, tmp_path):
-    """A writer links its hint temp name to its entry, then stalls before
-    the rename while two more commits and a vacuum run. Its late rename
-    moves the hint back to a vacuumed version; readers and the next
-    commit still reach the real head."""
+def test_writer_stalled_inside_hint_cannot_hide_the_head(
+    spark, tmp_path, store, monkeypatch
+):
+    """A writer's log entry lands, then it stalls inside its hint
+    ``put`` while two more commits and a vacuum run. Its late put moves
+    the hint back to a vacuumed version; readers and the next commit
+    still reach the real head."""
     root = str(tmp_path / "t")
-    TxnTable(root).commit(_df(spark, 4))
+    TxnTable(root, store=store).commit(_df(spark, 4))
+    real_put = store.put
 
-    class StallsInHint(LocalFSPointer):
-        def _hint(self, r, entry):
-            tmp = os.path.join(r, ".hint-stalled")
-            os.link(entry, tmp)
-            other = TxnTable(r)
-            other.append(_df(spark, 3, tag="c"))
-            other.append(_df(spark, 2, tag="d"))
-            assert other.vacuum(keep=2) == ["v00000001", "v00000002"]
-            os.rename(tmp, os.path.join(r, "_LATEST"))
+    def stalls_in_hint(path, data):
+        monkeypatch.setattr(store, "put", real_put)
+        other = TxnTable(root, store=store)
+        other.append(_df(spark, 3, tag="c"))
+        other.append(_df(spark, 2, tag="d"))
+        assert other.vacuum(keep=2) == ["v00000001", "v00000002"]
+        real_put(path, data)
 
-    v2 = TxnTable(root, pointer=StallsInHint()).append(_df(spark, 5, tag="b"))
+    monkeypatch.setattr(store, "put", stalls_in_hint)
+    v2 = TxnTable(root, store=store).append(_df(spark, 5, tag="b"))
     assert v2 == "v00000002"
-    with open(os.path.join(root, "_LATEST")) as f:
-        assert f.read() == v2  # the hint names a vacuumed version
-    t = TxnTable(root)
+    # the hint names a vacuumed version
+    assert store.get(os.path.join(root, "_LATEST")) == v2.encode()
+    t = TxnTable(root, store=store)
     assert t.current_version() == "v00000004"
     assert t.read(spark).count() == 14
     v5 = t.append(_df(spark, 1, tag="e"))
-    assert TxnTable(root).current_version() == v5 == "v00000005"
-    assert TxnTable(root).read(spark).count() == 15
-    assert _log_entries(root)["v00000004"] == v5
+    assert TxnTable(root, store=store).current_version() == v5 == "v00000005"
+    assert TxnTable(root, store=store).read(spark).count() == 15
+    assert _log_entries(root, store)["v00000004"] == v5
 
 
 def test_etag_pointer_is_a_real_backend(spark, tmp_path):
-    """The conditional-PUT backend drives a full table lifecycle —
-    commit, append, merge, clone (pointer travels), restore — with no
-    filesystem pointer file at all."""
-    p = InMemoryEtagPointer()
-    t = TxnTable(str(tmp_path / "t"), pointer=p)
+    """The in-memory store drives a full table lifecycle — commit,
+    append, merge, clone (the store travels), restore — with no log or
+    hint file on disk at all."""
+    store = InMemoryStore()
+    t = TxnTable(str(tmp_path / "t"), store=store)
     t.commit(_df(spark, 10))
     t.append(
         spark.createDataFrame(
@@ -1793,19 +1797,20 @@ def test_etag_pointer_is_a_real_backend(spark, tmp_path):
         )
     )
     assert t.read(spark).count() == 12
-    # no _LATEST file on disk: the pointer lives in the backend
+    # no _LATEST or _log on disk: the commit log lives in the store
     assert not os.path.exists(os.path.join(t.root, "_LATEST"))
+    assert not os.path.exists(os.path.join(t.root, "_log"))
     upd = spark.createDataFrame(
         [(0, "merged", "0")], "k long, tag string, dt string"
     )
     t.merge_upsert(spark, upd, keys=["k"])
     assert t.read(spark).filter(F.col("tag") == "merged").count() == 1
     clone = t.clone_to(spark, str(tmp_path / "dev"))
-    assert clone.pointer is p  # backend travels with the clone
+    assert clone.store is store  # the store travels with the clone
     assert clone.read(spark).count() == 12
-    # stale CAS raises (not silently overwrites)
+    # stale swap raises (not silently overwrites)
     with pytest.raises(ConcurrentCommitError):
-        p.compare_and_swap(t.root, "v99999999", None)
+        t._swap_pointer("v99999999", None)
 
 
 def test_bloom_tag_and_stats_free_pruning():
