@@ -67,7 +67,7 @@ from .txn import (
     _cm_phys,
     _file_column_stats,
     _link_or_copy,
-    validate_merge_keys,
+    bind_foreign_dml,
 )
 
 _PLAIN_PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -2217,6 +2217,159 @@ def _gate_foreign_writer(state: dict) -> None:
                 )
 
 
+def _append_only(state: dict) -> bool:
+    cfg = state.get("configuration") or {}
+    return str(cfg.get("delta.appendOnly", "")).lower() == "true"
+
+
+def _gate_commit(state: dict, opl: str, removes_data: bool) -> None:
+    """The writer gates of every foreign commit, run on the state it
+    commits over: the reader and writer protocol gates, plus Delta's
+    own rule that an ``appendOnly`` table takes no ``remove`` with
+    ``dataChange=true``."""
+    _gate_foreign_protocol(state)
+    _gate_foreign_writer(state)
+    if removes_data and _append_only(state):
+        raise ValueError(
+            f"cannot {opl}: table sets delta.appendOnly=true"
+        )
+
+
+def _remove(add: dict, now_ms: int, data_change: bool = True) -> dict:
+    """The ``remove`` action tombstoning the live ``add``, its deletion
+    vector carried."""
+    dv = add.get("deletionVector")
+    if isinstance(dv, list):  # pyarrow struct-as-pairs round-trip
+        dv = dict(dv)
+    rm = {
+        "path": add["path"],
+        "deletionTimestamp": now_ms,
+        "dataChange": data_change,
+        "extendedFileMetadata": True,
+        "partitionValues": add.get("partitionValues") or {},
+        "size": add.get("size"),
+    }
+    if dv:
+        rm["deletionVector"] = dv
+    return {"remove": rm}
+
+
+def _physical(spark, state: dict, df, *extra):
+    """``df``'s logical columns cast to the table's types under their
+    PHYSICAL names, with parquet field ids in id mode (the spec's
+    writer rule), then ``extra`` columns: what ``_stage_adds`` writes."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    phys = _foreign_phys(state)
+    fids = _foreign_field_ids(state) if _cm_mode(state) == "id" else {}
+    if fids:
+        spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+    return df.select(
+        *(
+            F.col(f.name)
+            .cast(f.dataType)
+            .alias(
+                phys[f.name],
+                metadata={"parquet.field.id": fids[f.name]}
+                if f.name in fids
+                else None,
+            )
+            for f in StructType.fromJson(state["schema"]).fields
+        ),
+        *extra,
+    )
+
+
+def _part_phys(state: dict) -> list[str]:
+    phys = _foreign_phys(state)
+    return [phys[c] for c in state["partition_columns"]]
+
+
+def _same_columns(state: dict, df, opl: str) -> None:
+    names = [f["name"] for f in state["schema"]["fields"]]
+    missing = [c for c in names if c not in df.columns]
+    extra = [c for c in df.columns if c not in names]
+    if missing or extra:
+        raise ValueError(
+            f"cannot {opl}: DataFrame columns do not match the table "
+            f"schema (missing {missing}, unexpected {extra}); {opl}s "
+            "do not evolve a foreign schema"
+        )
+
+
+def _commit(
+    path: str,
+    state: dict,
+    opl: str,
+    operation: str,
+    params: dict,
+    actions,
+    touched=(),
+    attempts: int = 8,
+) -> int:
+    """Publish one commit to a foreign Delta log: the optimistic loop
+    every write verb goes through (Delta Lake, VLDB 2020, section 3).
+
+    Each attempt writes ``commitInfo`` plus ``actions(state, now_ms)``
+    as the next log entry by put-if-absent. A lost race re-replays the
+    log and runs ``_gate_commit`` on the new head, then refuses if the
+    schema, partitioning or protocol changed or any ``touched`` file's
+    ``add`` did; otherwise it rebuilds the actions over the new head
+    and takes the next slot. ``attempts=1`` refuses the first lost
+    race. Returns the committed version."""
+    log_dir = os.path.join(path, _LOG_DIR)
+    for _attempt in range(attempts):
+        now_ms = int(time.time() * 1000)
+        body = actions(state, now_ms)
+        n_commit = state["n_commits"]
+        info = {
+            "commitInfo": {
+                "timestamp": now_ms,
+                "operation": operation,
+                "operationParameters": params,
+                "engineInfo": f"rxlan-aws-lakehouse-spark foreign {opl}",
+            }
+        }
+        try:
+            LOCAL.put_if_absent(
+                os.path.join(log_dir, f"{n_commit:020d}.json"),
+                _ndjson([info] + body),
+            )
+            return n_commit
+        except FileExistsError:
+            if attempts == 1:
+                raise ValueError(
+                    f"cannot {opl}: a concurrent commit moved the table "
+                    "head; re-run against the new state"
+                ) from None
+        new = replay_delta_log(path)
+        _gate_commit(
+            new,
+            opl,
+            any(a.get("remove", {}).get("dataChange") for a in body),
+        )
+        if (
+            new["schema"] != state["schema"]
+            or new["partition_columns"] != state["partition_columns"]
+            or new.get("protocol") != state.get("protocol")
+            or any(
+                new["adds"].get(rel) != state["adds"].get(rel)
+                for rel in touched
+            )
+        ):
+            raise ValueError(
+                f"cannot {opl}: a concurrent commit changed the table "
+                "(schema/partitioning/protocol or a file this "
+                f"{opl.upper()} touches) mid-operation; re-run against "
+                "the new state"
+            )
+        state = new
+    raise RuntimeError(
+        f"{opl} on {path} lost the commit race {attempts} times; giving up"
+    )
+
+
 def _footer_stats(abs_path: str) -> tuple[str, int]:
     """Delta ``add.stats`` JSON from one parquet footer (row-group
     stats aggregated per column; columns without clean stats are
@@ -2302,100 +2455,30 @@ def append_delta(spark, path: str, df) -> dict:
       spec's writer rule — partitioned into hive dirs by the physical
       partition columns, with ``add.partitionValues`` (physical keys)
       as the authoritative values and footer-derived ``add.stats``;
-    * the commit publishes via the store's atomic ``put_if_absent``
-      (``store.py``); a lost race re-replays the log,
-      re-verifies the schema/protocol unchanged, and retries at the
-      next version — the spec's optimistic-concurrency loop (append
-      vs append never logically conflicts);
+    * the commit publishes through ``_commit``: a lost race re-runs
+      the writer gates on the new head, re-verifies the
+      schema/partitioning/protocol unchanged, and retries at the next
+      version (append vs append never logically conflicts);
     * CDF-enabled tables need no ``cdc`` file for an append: readers
       derive inserts from ``add`` actions with dataChange=true.
 
     Returns ``{"version", "n_files", "n_rows"}``.  Scale: one Spark
     write of the new rows + O(new files) links/footer reads; commit
     metadata is O(new files) JSON lines."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
     state = replay_delta_log(path)
-    _gate_foreign_protocol(state)
-    _gate_foreign_writer(state)
-    schema = StructType.fromJson(state["schema"])
-    part_cols = list(state["partition_columns"])
-    missing = [f.name for f in schema.fields if f.name not in df.columns]
-    extra = [c for c in df.columns if c not in schema.fieldNames()]
-    if missing or extra:
-        raise ValueError(
-            f"cannot append: DataFrame columns do not match the table "
-            f"schema (missing {missing}, unexpected {extra}); appends "
-            "do not evolve a foreign schema"
-        )
-    phys = _foreign_phys(state)
-    id_mode = _cm_mode(state) == "id"
-    fids = _foreign_field_ids(state) if id_mode else {}
-    if id_mode:
-        spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    writer_df = df.select(
-        *(
-            F.col(f.name)
-            .cast(f.dataType)
-            .alias(
-                phys[f.name],
-                metadata={"parquet.field.id": fids[f.name]}
-                if id_mode and f.name in fids
-                else None,
-            )
-            for f in schema.fields
-        )
-    )
-    part_phys = [phys[c] for c in part_cols]
+    _gate_commit(state, "append", False)
+    _same_columns(state, df, "append")
     adds, total_rows = _stage_adds(
-        spark, path, writer_df, part_phys, "delta_append_"
+        spark, path, _physical(spark, state, df), _part_phys(state),
+        "delta_append_",
     )
     if not adds:
         return {"version": None, "n_files": 0, "n_rows": 0}
-
-    log_dir = os.path.join(path, _LOG_DIR)
-    for _attempt in range(8):
-        n_commit = state["n_commits"]
-        actions = [
-            {
-                "commitInfo": {
-                    "timestamp": int(time.time() * 1000),
-                    "operation": "WRITE",
-                    "operationParameters": {"mode": "Append"},
-                    "engineInfo": (
-                        "rxlan-aws-lakehouse-spark foreign append"
-                    ),
-                }
-            }
-        ] + adds
-        log_path = os.path.join(log_dir, f"{n_commit:020d}.json")
-        try:
-            LOCAL.put_if_absent(log_path, _ndjson(actions))
-            return {
-                "version": n_commit,
-                "n_files": len(adds),
-                "n_rows": total_rows,
-            }
-        except FileExistsError:
-            # optimistic-concurrency retry: re-replay, verify the
-            # table still means the same thing, take the next slot
-            new_state = replay_delta_log(path)
-            if (
-                new_state["schema"] != state["schema"]
-                or new_state["partition_columns"]
-                != state["partition_columns"]
-                or new_state.get("protocol") != state.get("protocol")
-            ):
-                raise ValueError(
-                    "cannot append: a concurrent commit changed the "
-                    "table's schema/partitioning/protocol mid-append; "
-                    "re-run against the new state"
-                )
-            state = new_state
-    raise RuntimeError(
-        f"append to {path} lost the commit race 8 times; giving up"
+    version = _commit(
+        path, state, "append", "WRITE", {"mode": "Append"},
+        lambda st, now_ms: adds,
     )
+    return {"version": version, "n_files": len(adds), "n_rows": total_rows}
 
 
 def overwrite_delta(spark, path: str, df) -> dict:
@@ -2412,117 +2495,35 @@ def overwrite_delta(spark, path: str, df) -> dict:
     rows from the adds (``read_delta_cdf`` implements it); streaming
     tails correctly refuse the commit without ``ignoreChanges`` — an
     overwrite retracts rows.  ``delta.appendOnly`` refuses.  A lost
-    commit race re-replays and RECOMPUTES the removes — overwrite
-    replaces whatever the head holds, so it never logically conflicts,
-    but each retry must tombstone the files of the version it lands
-    on.  Returns ``{"version", "n_files", "n_rows",
-    "n_files_removed"}``.  Scale: one Spark write of the new rows;
-    commit metadata O(old files + new files) JSON lines; zero old
-    data bytes read."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
+    commit race in ``_commit`` RECOMPUTES the removes over the new
+    head — overwrite replaces whatever the head holds, so it never
+    logically conflicts, but each retry must tombstone the files of
+    the version it lands on.  Returns ``{"version", "n_files",
+    "n_rows", "n_files_removed"}``.  Scale: one Spark write of the new
+    rows; commit metadata O(old files + new files) JSON lines; zero
+    old data bytes read."""
     state = replay_delta_log(path)
-    _gate_foreign_protocol(state)
-    _gate_foreign_writer(state)
-    cfg = state.get("configuration") or {}
-    if str(cfg.get("delta.appendOnly", "")).lower() == "true":
-        raise ValueError(
-            "cannot overwrite: table sets delta.appendOnly=true"
-        )
-    schema = StructType.fromJson(state["schema"])
-    part_cols = list(state["partition_columns"])
-    missing = [f.name for f in schema.fields if f.name not in df.columns]
-    extra = [c for c in df.columns if c not in schema.fieldNames()]
-    if missing or extra:
-        raise ValueError(
-            f"cannot overwrite: DataFrame columns do not match the "
-            f"table schema (missing {missing}, unexpected {extra}); "
-            "overwrites do not evolve a foreign schema"
-        )
-    phys = _foreign_phys(state)
-    id_mode = _cm_mode(state) == "id"
-    fids = _foreign_field_ids(state) if id_mode else {}
-    if id_mode:
-        spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    writer_df = df.select(
-        *(
-            F.col(f.name)
-            .cast(f.dataType)
-            .alias(
-                phys[f.name],
-                metadata={"parquet.field.id": fids[f.name]}
-                if id_mode and f.name in fids
-                else None,
-            )
-            for f in schema.fields
-        )
-    )
-    part_phys = [phys[c] for c in part_cols]
+    _gate_commit(state, "overwrite", True)
+    _same_columns(state, df, "overwrite")
     adds, total_rows = _stage_adds(
-        spark, path, writer_df, part_phys, "delta_overwrite_"
+        spark, path, _physical(spark, state, df), _part_phys(state),
+        "delta_overwrite_",
     )
+    removes: list[dict] = []
 
-    log_dir = os.path.join(path, _LOG_DIR)
-    for _attempt in range(8):
-        now_ms = int(time.time() * 1000)
-        removes = []
-        for rel, old in sorted(state["adds"].items()):
-            old_dv = old.get("deletionVector")
-            if isinstance(old_dv, list):
-                old_dv = dict(old_dv)
-            rm = {
-                "path": old["path"],
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-                "extendedFileMetadata": True,
-                "partitionValues": old.get("partitionValues") or {},
-                "size": old.get("size"),
-            }
-            if old_dv:
-                rm["deletionVector"] = old_dv
-            removes.append({"remove": rm})
-        n_commit = state["n_commits"]
-        actions = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "WRITE",
-                    "operationParameters": {"mode": "Overwrite"},
-                    "engineInfo": (
-                        "rxlan-aws-lakehouse-spark foreign overwrite"
-                    ),
-                }
-            }
-        ] + removes + adds
-        log_path = os.path.join(log_dir, f"{n_commit:020d}.json")
-        try:
-            LOCAL.put_if_absent(log_path, _ndjson(actions))
-            return {
-                "version": n_commit,
-                "n_files": len(adds),
-                "n_rows": total_rows,
-                "n_files_removed": len(removes),
-            }
-        except FileExistsError:
-            # lost the race: overwrite replaces the NEW head — verify
-            # the table still means the same thing, recompute removes
-            new_state = replay_delta_log(path)
-            if (
-                new_state["schema"] != state["schema"]
-                or new_state["partition_columns"]
-                != state["partition_columns"]
-                or new_state.get("protocol") != state.get("protocol")
-            ):
-                raise ValueError(
-                    "cannot overwrite: a concurrent commit changed "
-                    "the table's schema/partitioning/protocol mid-"
-                    "overwrite; re-run against the new state"
-                )
-            state = new_state
-    raise RuntimeError(
-        f"overwrite of {path} lost the commit race 8 times; giving up"
+    def actions(st, now_ms):
+        removes[:] = [_remove(a, now_ms) for _, a in sorted(st["adds"].items())]
+        return removes + adds
+
+    version = _commit(
+        path, state, "overwrite", "WRITE", {"mode": "Overwrite"}, actions
     )
+    return {
+        "version": version,
+        "n_files": len(adds),
+        "n_rows": total_rows,
+        "n_files_removed": len(removes),
+    }
 
 
 def restore_delta(spark, path: str, version: int) -> dict:
@@ -2537,18 +2538,19 @@ def restore_delta(spark, path: str, version: int) -> dict:
     carries ``dataChange=true``, so CDF readers synthesize the
     restore's row-level effect and streaming tails refuse it without
     ``ignoreChanges`` — both correct for an operation that retracts
-    rows.  History is PRESERVED: the restore is a new version on top,
+    rows; an ``appendOnly`` table refuses a restore that removes a
+    file.  History is PRESERVED: the restore is a new version on top,
     never a log rewind.  Data bytes: ZERO read or written — the log
     tombstones/revives metadata only; re-added files must still exist
     on disk (VACUUMed restores refuse loudly, naming the first missing
     file).  Restores across a schema/partitioning/protocol change
-    refuse — data-only restore under a changed shape is ambiguous.
+    refuse — data-only restore under a changed shape is ambiguous — and
+    so does a lost commit race: the file diff no longer describes the
+    transition.
 
     Returns ``{"version", "restored_version", "n_files_added",
     "n_files_removed"}``."""
     state = replay_delta_log(path)
-    _gate_foreign_protocol(state)
-    _gate_foreign_writer(state)
     version = int(version)
     if not (0 <= version < state["n_commits"]):
         raise ValueError(
@@ -2592,6 +2594,7 @@ def restore_delta(spark, path: str, version: int) -> dict:
         for rel in cur
         if rel not in tgt or dv_sig(tgt[rel]) != dv_sig(cur[rel])
     )
+    _gate_commit(state, "restore", bool(to_remove))
     missing = [
         rel
         for rel in to_add
@@ -2604,53 +2607,16 @@ def restore_delta(spark, path: str, version: int) -> dict:
             "version is no longer restorable"
         )
 
-    log_dir = os.path.join(path, _LOG_DIR)
-    now_ms = int(time.time() * 1000)
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "RESTORE",
-                "operationParameters": {"version": str(version)},
-                "engineInfo": (
-                    "rxlan-aws-lakehouse-spark foreign restore"
-                ),
-            }
-        }
-    ]
-    for rel in to_remove:
-        old = cur[rel]
-        old_dv = old.get("deletionVector")
-        if isinstance(old_dv, list):
-            old_dv = dict(old_dv)
-        rm = {
-            "path": old["path"],
-            "deletionTimestamp": now_ms,
-            "dataChange": True,
-            "extendedFileMetadata": True,
-            "partitionValues": old.get("partitionValues") or {},
-            "size": old.get("size"),
-        }
-        if old_dv:
-            rm["deletionVector"] = old_dv
-        actions.append({"remove": rm})
-    for rel in to_add:
-        add = dict(tgt[rel])
-        add["dataChange"] = True
-        add["modificationTime"] = now_ms
-        actions.append({"add": add})
-    n_commit = state["n_commits"]
-    log_path = os.path.join(log_dir, f"{n_commit:020d}.json")
-    try:
-        LOCAL.put_if_absent(log_path, _ndjson(actions))
-    except FileExistsError:
-        # a concurrent commit moved the head: the file diff this
-        # restore computed no longer describes the transition —
-        # refuse rather than silently restoring over new data
-        raise ValueError(
-            "cannot restore: a concurrent commit moved the table "
-            "head; re-run against the new state"
-        )
+    def actions(st, now_ms):
+        return [_remove(cur[rel], now_ms) for rel in to_remove] + [
+            {"add": {**tgt[rel], "dataChange": True, "modificationTime": now_ms}}
+            for rel in to_add
+        ]
+
+    n_commit = _commit(
+        path, state, "restore", "RESTORE", {"version": str(version)},
+        actions, attempts=1,
+    )
     return {
         "version": n_commit,
         "restored_version": version,
@@ -2913,13 +2879,18 @@ def _lineage_scan(spark, state: dict, path: str):
     return out
 
 
-def _stage_adds(spark, path: str, writer_df, part_phys, prefix: str):
+def _stage_adds(
+    spark, path: str, writer_df, part_phys, prefix: str, cdc: str = None
+):
     """Stage ``writer_df`` (PHYSICAL column names) into hive dirs,
-    hard-link the non-empty part files under the table, and return the
-    spec ``add`` payloads (footer-derived stats) plus the total row
-    count — the shared write tail of ``append_delta``/``delete_delta``."""
+    hard-link the non-empty part files under the table, and return
+    their spec actions plus the total row count — the one write tail
+    of every foreign Delta verb.  The actions are ``add`` payloads
+    (footer-derived stats) by default; with ``cdc`` (a name tag) they
+    are ``cdc`` payloads for files linked flat under ``_change_data``."""
     import shutil as _shutil
     import tempfile as _tempfile
+    import uuid as _uuid
 
     # staged ADJACENT to the table (dot-prefixed, reader-invisible, gone
     # in the finally): hard links into the table require the same
@@ -2931,7 +2902,7 @@ def _stage_adds(spark, path: str, writer_df, part_phys, prefix: str):
         if part_phys:
             w = w.partitionBy(*part_phys)
         w.parquet(staging)
-        adds: list[dict] = []
+        out: list[dict] = []
         total_rows = 0
         hive_null = "__HIVE_DEFAULT_PARTITION__"
         for r, _d, ns in sorted(
@@ -2950,29 +2921,32 @@ def _stage_adds(spark, path: str, writer_df, part_phys, prefix: str):
                 stats, n_rows = _footer_stats(src)
                 if n_rows == 0:
                     continue  # Spark may emit empty part files
-                rel = n if rel_dir == "." else f"{rel_dir}/{n}"
+                if cdc:
+                    rel = os.path.join(
+                        _CHANGE_DIR,
+                        f"cdc-{cdc}-{_uuid.uuid4().hex[:12]}-"
+                        f"{len(out):04d}.parquet",
+                    )
+                else:
+                    rel = n if rel_dir == "." else f"{rel_dir}/{n}"
                 dst = os.path.join(path, rel)
                 _link_or_copy(src, dst)
                 total_rows += n_rows
-                adds.append(
-                    {
-                        "add": {
-                            "path": quote(
-                                rel.replace(os.sep, "/"), safe="/="
-                            ),
-                            "partitionValues": {
-                                c: pv.get(c) for c in part_phys
-                            },
-                            "size": os.path.getsize(dst),
-                            "modificationTime": int(
-                                os.path.getmtime(dst) * 1000
-                            ),
-                            "dataChange": True,
-                            "stats": stats,
-                        }
-                    }
+                action = {
+                    "path": quote(rel.replace(os.sep, "/"), safe="/="),
+                    "partitionValues": {c: pv.get(c) for c in part_phys},
+                    "size": os.path.getsize(dst),
+                }
+                if cdc:
+                    out.append({"cdc": {**action, "dataChange": False}})
+                    continue
+                action["modificationTime"] = int(
+                    os.path.getmtime(dst) * 1000
                 )
-        return adds, total_rows
+                action["dataChange"] = True
+                action["stats"] = stats
+                out.append({"add": action})
+        return out, total_rows
     finally:
         _shutil.rmtree(staging, ignore_errors=True)
 
@@ -3037,18 +3011,9 @@ def merge_delta(
     emit ``update_preimage``/``update_postimage``/``insert``/
     ``delete`` cdc rows classified per key.  A merge matching nothing
     (or into an empty table) degrades to a pure insert commit.
-    Duplicate merge keys in ``updates`` refuse loudly.  Returns
-    ``{"version", "mode", "n_matched", "n_files_touched",
-    "n_files_removed"}``."""
-    if not keys:
-        raise ValueError("cannot merge: empty key list")
-    up_cols = {c.lower() for c in updates.columns}
-    for k in keys:
-        if str(k).lower() not in up_cols:
-            raise ValueError(
-                f"cannot merge: unknown key column {k!r}"
-            )
-    validate_merge_keys(updates, keys, delete_keys)
+    Duplicate merge keys in ``updates`` refuse loudly
+    (``txn.bind_foreign_dml``).  Returns ``{"version", "mode",
+    "n_matched", "n_files_touched", "n_files_removed"}``."""
     return _row_level_delta(
         spark,
         path,
@@ -3092,7 +3057,7 @@ def _row_level_delta(
       only, an upgrade locks out old readers.
     * ``mode="cow"`` — copy-on-write: survivors of touched files are
       rewritten (one Spark job, hive staging, footer stats — the
-      ``append_delta`` write tail) and committed as ``remove`` + new
+      ``_stage_adds`` write tail) and committed as ``remove`` + new
       ``add``s.  Works at ANY protocol; the conservative default.
 
     ``mode="auto"`` picks ``dv`` when the table's protocol already
@@ -3105,9 +3070,8 @@ def _row_level_delta(
     generated/identity writer semantics refuse loudly.  CDF-enabled
     tables emit the spec ``cdc`` files (``_change_data/``, physical
     column names, ``_change_type='delete'``) in the same commit.
-    Publishes via the same atomic create-if-absent optimistic loop as
-    ``append_delta``; a lost race re-replays and retries only when
-    every touched file is still live and unchanged.
+    Publishes through ``_commit``; a lost race retries only when every
+    touched file is still live and unchanged.
 
     Returns ``{"version", "mode", "n_matched", "n_files_touched",
     "n_files_removed"}``.  Scale: one scan of the live files + per-
@@ -3116,6 +3080,7 @@ def _row_level_delta(
     import uuid as _uuid
 
     from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
 
     from .delta_dv import (
         deleted_rows,
@@ -3125,96 +3090,34 @@ def _row_level_delta(
         z85_encode,
     )
 
-    from pyspark.sql.types import StructType as _ST0
-
     is_update = set_map is not None
     is_merge = merge is not None
     opl = "merge" if is_merge else ("update" if is_update else "delete")
     if mode not in ("auto", "dv", "cow"):
         raise ValueError(f"unknown {opl} mode {mode!r} (auto/dv/cow)")
     state = replay_delta_log(path)
-    _gate_foreign_protocol(state)
-    _gate_foreign_writer(state)
-    cfg = state.get("configuration") or {}
-    if str(cfg.get("delta.appendOnly", "")).lower() == "true":
-        raise ValueError(
-            f"cannot {opl}: table sets delta.appendOnly=true"
-        )
-    set_exprs: dict = {}
-    if is_update:
-        by_lower = {
-            f.name.lower(): f
-            for f in _ST0.fromJson(state["schema"]).fields
-        }
-        for k, v in set_map.items():
-            fld = by_lower.get(str(k).lower())
-            if fld is None:
-                raise ValueError(
-                    f"cannot update: unknown column {k!r} in SET"
-                )
-            set_exprs[fld.name] = (
-                F.expr(v) if isinstance(v, str) else v
-            )
-    mkeys: list[str] = []
-    upd_src = dels_src = all_keys = None
-    if is_merge:
-        schema_m = _ST0.fromJson(state["schema"])
-        by_lower_m = {f.name.lower(): f.name for f in schema_m.fields}
-        for k in merge["keys"]:
-            n = by_lower_m.get(str(k).lower())
-            if n is None:
-                raise ValueError(
-                    f"cannot merge: unknown key column {k!r}"
-                )
-            mkeys.append(n)
-        upd_src = merge["updates"]
-        missing = [
-            f.name
-            for f in schema_m.fields
-            if f.name.lower()
-            not in {c.lower() for c in upd_src.columns}
-        ]
-        extra = [
-            c
-            for c in upd_src.columns
-            if c.lower() not in by_lower_m
-        ]
-        if missing or extra:
-            raise ValueError(
-                "cannot merge: updates columns do not match the "
-                f"table schema (missing {missing}, unexpected "
-                f"{extra}); merges do not evolve a foreign schema"
-            )
-        upd_src = upd_src.select(
-            *(
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                for f in schema_m.fields
-            )
-        )
-        dels_src = merge.get("delete_keys")
-        if dels_src is not None:
-            dels_src = dels_src.select(*mkeys).distinct()
-        all_keys = upd_src.select(*mkeys)
-        if dels_src is not None:
-            all_keys = all_keys.unionByName(dels_src)
-        all_keys = all_keys.distinct()
+    _gate_commit(state, opl, True)
+    schema = StructType.fromJson(state["schema"])
+    set_exprs, mkeys, upd_src, dels_src, all_keys = bind_foreign_dml(
+        schema, set_map, merge
+    )
     use_dv = mode == "dv" or (
         mode == "auto" and _protocol_has_dv(state.get("protocol") or {})
     )
+    nothing = {
+        "version": None,
+        "mode": "dv" if use_dv else "cow",
+        "n_matched": 0,
+        "n_files_touched": 0,
+        "n_files_removed": 0,
+    }
     if not state["files"] and not is_merge:
-        return {
-            "version": None,
-            "mode": "dv" if use_dv else "cow",
-            "n_matched": 0,
-            "n_files_touched": 0,
-            "n_files_removed": 0,
-        }
+        return nothing
+    cfg = state.get("configuration") or {}
     cdf_on = (
         str(cfg.get("delta.enableChangeDataFeed", "")).lower() == "true"
     )
-    phys = _foreign_phys(state)
-    part_cols = list(state["partition_columns"])
-    part_phys = [phys[c] for c in part_cols]
+    part_phys = _part_phys(state)
     cond = (
         None
         if is_merge
@@ -3269,13 +3172,7 @@ def _row_level_delta(
         else []
     )
     if not touched and not is_merge:
-        return {
-            "version": None,
-            "mode": "dv" if use_dv else "cow",
-            "n_matched": 0,
-            "n_files_touched": 0,
-            "n_files_removed": 0,
-        }
+        return nothing
     touched.sort(key=lambda r: r["rel"])
     n_matched = int(sum(r["n_new"] for r in touched))
     touched_rels = [r["rel"] for r in touched]
@@ -3293,61 +3190,35 @@ def _row_level_delta(
             os.path.join(path, rel)
         ).metadata.num_rows
 
-    now_ms = int(time.time() * 1000)
-    removes: list[dict] = []
     re_adds: list[dict] = []
     n_removed_files = 0
     if not touched:
         pass  # pure-insert merge: nothing to remove or rewrite
     elif use_dv:
-        fully = []
-        partial = []
-        for row in touched:
-            rel = row["rel"]
-            if int(row["card"]) >= num_records(rel):
-                fully.append(row)
-            else:
-                partial.append(row)
-        descs: dict[str, dict] = {}
+        partial = [
+            r for r in touched if int(r["card"]) < num_records(r["rel"])
+        ]
+        n_removed_files = len(touched) - len(partial)
         if partial:
             u = _uuid.uuid4()
-            dv_rel = dv_file_name(u)
             spans = write_dv_file(
-                os.path.join(path, dv_rel),
+                os.path.join(path, dv_file_name(u)),
                 [bytes(r["dv"]) for r in partial],
             )
             for row, (off, size) in zip(partial, spans):
-                descs[row["rel"]] = {
+                rel = row["rel"]
+                new_add = {
+                    k: v
+                    for k, v in state["adds"][rel].items()
+                    if k != "deletionVector"
+                }
+                new_add["deletionVector"] = {
                     "storageType": "u",
                     "pathOrInlineDv": z85_encode(u.bytes),
                     "offset": off,
                     "sizeInBytes": size,
                     "cardinality": int(row["card"]),
                 }
-        for row in touched:
-            rel = row["rel"]
-            old = state["adds"][rel]
-            old_dv = old.get("deletionVector")
-            if isinstance(old_dv, list):
-                old_dv = dict(old_dv)
-            rm = {
-                "path": old["path"],
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-                "extendedFileMetadata": True,
-                "partitionValues": old.get("partitionValues") or {},
-                "size": old.get("size"),
-            }
-            if old_dv:
-                rm["deletionVector"] = old_dv
-            removes.append({"remove": rm})
-            if row["rel"] in descs:
-                new_add = {
-                    k: v
-                    for k, v in old.items()
-                    if k != "deletionVector"
-                }
-                new_add["deletionVector"] = descs[row["rel"]]
                 new_add["dataChange"] = True
                 st = new_add.get("stats")
                 try:
@@ -3359,8 +3230,6 @@ def _row_level_delta(
                 stj["tightBounds"] = False
                 new_add["stats"] = json.dumps(stj)
                 re_adds.append({"add": new_add})
-            else:
-                n_removed_files += 1
     else:
         # copy-on-write: rewrite the SURVIVORS of touched files under
         # physical names (existing DVs already applied by the lineage
@@ -3381,52 +3250,11 @@ def _row_level_delta(
                 ~F.coalesce(cond, F.lit(False))
             )
         )
-        fids = (
-            _foreign_field_ids(state)
-            if _cm_mode(state) == "id"
-            else {}
-        )
-        if fids:
-            spark.conf.set(
-                "spark.sql.parquet.fieldId.write.enabled", "true"
-            )
-        from pyspark.sql.types import StructType as _ST
-
-        schema = _ST.fromJson(state["schema"])
-        writer_df = survivors.select(
-            *(
-                F.col(f.name)
-                .cast(f.dataType)
-                .alias(
-                    phys[f.name],
-                    metadata={"parquet.field.id": fids[f.name]}
-                    if f.name in fids
-                    else None,
-                )
-                for f in schema.fields
-            )
-        )
         re_adds, _ = _stage_adds(
-            spark, path, writer_df, part_phys, "delta_delete_"
+            spark, path, _physical(spark, state, survivors), part_phys,
+            "delta_delete_",
         )
-        for row in touched:
-            rel = row["rel"]
-            old = state["adds"][rel]
-            old_dv = old.get("deletionVector")
-            if isinstance(old_dv, list):
-                old_dv = dict(old_dv)
-            rm = {
-                "path": old["path"],
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-                "extendedFileMetadata": True,
-                "partitionValues": old.get("partitionValues") or {},
-                "size": old.get("size"),
-            }
-            if old_dv:
-                rm["deletionVector"] = old_dv
-            removes.append({"remove": rm})
-        n_removed_files = len(removes)
+        n_removed_files = len(touched)
 
     updated_logical = None
     if is_update:
@@ -3434,7 +3262,6 @@ def _row_level_delta(
         # the same commit (SET expressions evaluate over logical
         # columns; copies land wherever their — possibly updated —
         # partition values put them)
-        schema_u = _ST0.fromJson(state["schema"])
         updated_logical = matched.select(
             *(
                 (
@@ -3442,61 +3269,20 @@ def _row_level_delta(
                     if f.name in set_exprs
                     else F.col(f.name)
                 ).alias(f.name)
-                for f in schema_u.fields
+                for f in schema.fields
             )
         )
-        fids_u = (
-            _foreign_field_ids(state)
-            if _cm_mode(state) == "id"
-            else {}
-        )
-        if fids_u:
-            spark.conf.set(
-                "spark.sql.parquet.fieldId.write.enabled", "true"
-            )
-        upd_writer = updated_logical.select(
-            *(
-                F.col(f.name).alias(
-                    phys[f.name],
-                    metadata={"parquet.field.id": fids_u[f.name]}
-                    if f.name in fids_u
-                    else None,
-                )
-                for f in schema_u.fields
-            )
-        )
-        upd_adds, _n_upd = _stage_adds(
-            spark, path, upd_writer, part_phys, "delta_update_"
-        )
-        re_adds = re_adds + upd_adds
+        re_adds += _stage_adds(
+            spark, path, _physical(spark, state, updated_logical),
+            part_phys, "delta_update_",
+        )[0]
     elif is_merge:
         # the ANSI result set (replacements + inserts) lands as fresh
         # adds — one distributed write job, O(|updates|) data bytes
-        schema_u = _ST0.fromJson(state["schema"])
-        fids_u = (
-            _foreign_field_ids(state)
-            if _cm_mode(state) == "id"
-            else {}
-        )
-        if fids_u:
-            spark.conf.set(
-                "spark.sql.parquet.fieldId.write.enabled", "true"
-            )
-        mrg_writer = upd_src.select(
-            *(
-                F.col(f.name).alias(
-                    phys[f.name],
-                    metadata={"parquet.field.id": fids_u[f.name]}
-                    if f.name in fids_u
-                    else None,
-                )
-                for f in schema_u.fields
-            )
-        )
-        mrg_adds, _n_mrg = _stage_adds(
-            spark, path, mrg_writer, part_phys, "delta_merge_"
-        )
-        re_adds = re_adds + mrg_adds
+        re_adds += _stage_adds(
+            spark, path, _physical(spark, state, upd_src), part_phys,
+            "delta_merge_",
+        )[0]
 
     cdc_actions: list[dict] = []
     if cdf_on:
@@ -3504,33 +3290,9 @@ def _row_level_delta(
         # materializes its changed rows as cdc files (DELETE: the
         # deleted rows; UPDATE: update_preimage + update_postimage);
         # readers of this commit then use ONLY the cdc actions
-        from pyspark.sql.types import StructType as _ST2
-
-        schema2 = _ST2.fromJson(state["schema"])
-        fids2 = (
-            _foreign_field_ids(state)
-            if _cm_mode(state) == "id"
-            else {}
-        )
-        if fids2:
-            spark.conf.set(
-                "spark.sql.parquet.fieldId.write.enabled", "true"
-            )
-
         def _cdc_sel(df, change_type):
-            return df.select(
-                *(
-                    F.col(f.name)
-                    .cast(f.dataType)
-                    .alias(
-                        phys[f.name],
-                        metadata={"parquet.field.id": fids2[f.name]}
-                        if f.name in fids2
-                        else None,
-                    )
-                    for f in schema2.fields
-                ),
-                F.lit(change_type).alias("_change_type"),
+            return _physical(
+                spark, state, df, F.lit(change_type).alias("_change_type")
             )
 
         if is_update:
@@ -3577,131 +3339,42 @@ def _row_level_delta(
                 cdc_df = cdc_df.unionByName(x)
         else:
             cdc_df = _cdc_sel(matched, "delete")
-        import shutil as _shutil
-        import tempfile as _tempfile
-
-        staging = _tempfile.mkdtemp(
-            prefix=".delta_delete_cdc_", dir=path
+        cdc_actions, _ = _stage_adds(
+            spark, path, cdc_df, part_phys, "delta_delete_cdc_",
+            cdc="upd" if is_update else "del",
         )
-        try:
-            w = cdc_df.write.mode("overwrite")
-            if part_phys:
-                w = w.partitionBy(*part_phys)
-            w.parquet(staging)
-            os.makedirs(
-                os.path.join(path, _CHANGE_DIR), exist_ok=True
-            )
-            hive_null = "__HIVE_DEFAULT_PARTITION__"
-            seq = 0
-            for r, _d, ns in sorted(
-                (r, d, sorted(ns)) for r, d, ns in os.walk(staging)
-            ):
-                for n in ns:
-                    if not n.endswith(".parquet"):
-                        continue
-                    src = os.path.join(r, n)
-                    if _pq.ParquetFile(src).metadata.num_rows == 0:
-                        continue
-                    rel_dir = os.path.relpath(r, staging)
-                    pv: dict[str, str | None] = {}
-                    if rel_dir != ".":
-                        for seg in rel_dir.split(os.sep):
-                            k, _, raw = seg.partition("=")
-                            pv[k] = (
-                                None
-                                if raw == hive_null
-                                else unquote(raw)
-                            )
-                    rel = os.path.join(
-                        _CHANGE_DIR,
-                        f"cdc-{'upd' if is_update else 'del'}-"
-                        f"{_uuid.uuid4().hex[:12]}-{seq:04d}"
-                        ".parquet",
-                    )
-                    seq += 1
-                    dst = os.path.join(path, rel)
-                    _link_or_copy(src, dst)
-                    cdc_actions.append(
-                        {
-                            "cdc": {
-                                "path": quote(
-                                    rel.replace(os.sep, "/"), safe="/="
-                                ),
-                                "partitionValues": {
-                                    c: pv.get(c) for c in part_phys
-                                },
-                                "size": os.path.getsize(dst),
-                                "dataChange": False,
-                            }
-                        }
-                    )
-        finally:
-            _shutil.rmtree(staging, ignore_errors=True)
 
-    proto_action = None
+    head: list[dict] = []
     if use_dv and not _protocol_has_dv(state.get("protocol") or {}):
         if mode != "dv":
             raise AssertionError("auto mode never upgrades")  # unreachable
-        proto_action = {
-            "protocol": _dv_upgrade_protocol(state.get("protocol") or {})
-        }
-
-    log_dir = os.path.join(path, _LOG_DIR)
-    touched_set = set(touched_rels)
-    for _attempt in range(8):
-        n_commit = state["n_commits"]
-        actions = [
-            {
-                "commitInfo": {
-                    "timestamp": int(time.time() * 1000),
-                    "operation": opl.upper(),
-                    "operationParameters": (
-                        {"matchedPredicate": json.dumps(mkeys)}
-                        if is_merge
-                        else {"predicate": str(where)}
-                    ),
-                    "engineInfo": (
-                        f"rxlan-aws-lakehouse-spark foreign {opl}"
-                    ),
-                }
-            }
+        head = [
+            {"protocol": _dv_upgrade_protocol(state.get("protocol") or {})}
         ]
-        if proto_action:
-            actions.append(proto_action)
-        actions += cdc_actions + removes + re_adds
-        log_path = os.path.join(log_dir, f"{n_commit:020d}.json")
-        try:
-            LOCAL.put_if_absent(log_path, _ndjson(actions))
-            return {
-                "version": n_commit,
-                "mode": "dv" if use_dv else "cow",
-                "n_matched": n_matched,
-                "n_files_touched": len(touched_rels),
-                "n_files_removed": n_removed_files,
-            }
-        except FileExistsError:
-            new_state = replay_delta_log(path)
-            if (
-                new_state["schema"] != state["schema"]
-                or new_state["partition_columns"]
-                != state["partition_columns"]
-                or new_state.get("protocol") != state.get("protocol")
-                or any(
-                    new_state["adds"].get(rel)
-                    != state["adds"].get(rel)
-                    for rel in touched_set
-                )
-            ):
-                raise ValueError(
-                    f"cannot {opl}: a concurrent commit changed the "
-                    f"table (schema/protocol or a file this "
-                    f"{opl.upper()} touches) mid-operation; re-run "
-                    "against the new state"
-                )
-            state = new_state
-    raise RuntimeError(
-        f"{opl} on {path} lost the commit race 8 times; giving up"
+
+    version = _commit(
+        path,
+        state,
+        opl,
+        opl.upper(),
+        (
+            {"matchedPredicate": json.dumps(mkeys)}
+            if is_merge
+            else {"predicate": str(where)}
+        ),
+        lambda st, now_ms: head
+        + cdc_actions
+        + [_remove(st["adds"][rel], now_ms) for rel in touched_rels]
+        + re_adds,
+        touched=touched_rels,
     )
+    return {
+        "version": version,
+        "mode": "dv" if use_dv else "cow",
+        "n_matched": n_matched,
+        "n_files_touched": len(touched_rels),
+        "n_files_removed": n_removed_files,
+    }
 
 
 def optimize_delta(
@@ -3738,24 +3411,19 @@ def optimize_delta(
 
     Returns ``{"version", "n_files_removed", "n_files_added",
     "n_bins", "n_rows"}`` (version None = nothing worth compacting)."""
-    import uuid as _uuid
-
     from pyspark.sql import functions as F
     from pyspark.sql.types import NumericType
     from pyspark.sql.types import StructType as _ST
 
     state = replay_delta_log(path)
-    _gate_foreign_protocol(state)
-    _gate_foreign_writer(state)
-    cfg = state.get("configuration") or {}
-    if str(cfg.get("delta.appendOnly", "")).lower() == "true":
+    _gate_commit(state, "optimize", False)
+    if _append_only(state):
         raise ValueError(
             "cannot optimize: table sets delta.appendOnly=true "
             "(compaction removes files)"
         )
-    phys = _foreign_phys(state)
     part_cols = list(state["partition_columns"])
-    part_phys = [phys[c] for c in part_cols]
+    part_phys = _part_phys(state)
     schema0 = _ST.fromJson(state["schema"])
     if zorder_by:
         by_lower = {f.name.lower(): f for f in schema0.fields}
@@ -3851,14 +3519,6 @@ def optimize_delta(
         "__dl_rel string, __dl_bin int",
     )
     rows = rows.join(F.broadcast(bin_map), "__dl_rel")
-    fids = (
-        _foreign_field_ids(state) if _cm_mode(state) == "id" else {}
-    )
-    if fids:
-        spark.conf.set(
-            "spark.sql.parquet.fieldId.write.enabled", "true"
-        )
-    schema = _ST.fromJson(state["schema"])
     if zorder_by:
         # Morton-cluster the rewrite: approx-quantile bucket ids per
         # dimension (one stats pass, no global window), interleaved
@@ -3884,96 +3544,44 @@ def optimize_delta(
         )
     else:
         rows = rows.repartition(len(bins), "__dl_bin")
-    writer_df = rows.select(
-        *(
-            F.col(f.name)
-            .cast(f.dataType)
-            .alias(
-                phys[f.name],
-                metadata={"parquet.field.id": fids[f.name]}
-                if f.name in fids
-                else None,
-            )
-            for f in schema.fields
-        )
-    )
     adds, n_staged = _stage_adds(
-        spark, path, writer_df, part_phys, "delta_optimize_"
+        spark, path, _physical(spark, state, rows), part_phys,
+        "delta_optimize_",
     )
     if n_staged != expected_rows:
         raise RuntimeError(
             f"optimize aborted before commit: staged {n_staged} rows "
             f"but the touched files hold {expected_rows} live rows"
         )
-    now_ms = int(time.time() * 1000)
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "OPTIMIZE",
-                "operationParameters": (
-                    {
-                        "targetSize": str(target_bytes),
-                        "zOrderBy": json.dumps(zorder_by),
-                    }
-                    if zorder_by
-                    else {"targetSize": str(target_bytes)}
-                ),
-                "engineInfo": (
-                    "rxlan-aws-lakehouse-spark foreign optimize"
-                ),
-            }
-        }
-    ]
     for a in adds:
         a["add"]["dataChange"] = False
-        actions.append(a)
-    for rel in touched_rels:
-        old = state["adds"][rel]
-        old_dv = old.get("deletionVector")
-        if isinstance(old_dv, list):
-            old_dv = dict(old_dv)
-        rm = {
-            "path": old["path"],
-            "deletionTimestamp": now_ms,
-            "dataChange": False,
-            "extendedFileMetadata": True,
-            "partitionValues": old.get("partitionValues") or {},
-            "size": old.get("size"),
-        }
-        if old_dv:
-            rm["deletionVector"] = old_dv
-        actions.append({"remove": rm})
-
-    log_dir = os.path.join(path, _LOG_DIR)
-    touched_set = set(touched_rels)
-    for _attempt in range(8):
-        n_commit = state["n_commits"]
-        log_path = os.path.join(log_dir, f"{n_commit:020d}.json")
-        try:
-            LOCAL.put_if_absent(log_path, _ndjson(actions))
-            return {
-                "version": n_commit,
-                "n_files_removed": len(touched_rels),
-                "n_files_added": len(adds),
-                "n_bins": len(bins),
-                "n_rows": n_staged,
+    version = _commit(
+        path,
+        state,
+        "optimize",
+        "OPTIMIZE",
+        (
+            {
+                "targetSize": str(target_bytes),
+                "zOrderBy": json.dumps(zorder_by),
             }
-        except FileExistsError:
-            new_state = replay_delta_log(path)
-            if any(
-                new_state["adds"].get(rel) != state["adds"].get(rel)
-                for rel in touched_set
-            ):
-                raise ValueError(
-                    "cannot optimize: a concurrent commit changed a "
-                    "file this OPTIMIZE rewrites; re-run against the "
-                    "new state"
-                )
-            state = new_state
-    raise RuntimeError(
-        f"optimize on {path} lost the commit race 8 times; giving up"
+            if zorder_by
+            else {"targetSize": str(target_bytes)}
+        ),
+        lambda st, now_ms: adds
+        + [
+            _remove(st["adds"][rel], now_ms, data_change=False)
+            for rel in touched_rels
+        ],
+        touched=touched_rels,
     )
+    return {
+        "version": version,
+        "n_files_removed": len(touched_rels),
+        "n_files_added": len(adds),
+        "n_bins": len(bins),
+        "n_rows": n_staged,
+    }
 
 
 def vacuum_delta(

@@ -52,13 +52,14 @@ import time
 from datetime import date as _date, datetime as _datetime
 from urllib.parse import unquote
 
-from .avro_lite import write_avro
+from .avro_lite import read_avro, write_avro
+from .iceberg_import import _resolve, load_table_metadata_versioned
 from .store import LOCAL
 from .txn import (
     TxnTable,
     _cm_fields,
     _cm_phys,
-    validate_merge_keys,
+    bind_foreign_dml,
 )
 
 _EPOCH_DATE = _date(1970, 1, 1)
@@ -473,22 +474,11 @@ def export_iceberg(
     mpath = "metadata/m000.avro"
     write_avro(os.path.join(dest, mpath), mf_schema, mf_entries)
     summaries = _field_summaries(part_by, ice_types, part_values_seen)
-    ml_row = {
-        "manifest_path": mpath,
-        "manifest_length": os.path.getsize(os.path.join(dest, mpath)),
-        "partition_spec_id": 0,
-        "content": 0,
-        "sequence_number": 1,
-        "min_sequence_number": 1,
-        "added_snapshot_id": sid,
-        "added_files_count": len(mf_entries),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": total_rows,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-        "partitions": summaries if part_by else None,
-    }
+    ml_row = _ml_row(
+        dest, mpath, 0, 0, 1, sid,
+        added=(len(mf_entries), total_rows),
+        partitions=summaries if part_by else None,
+    )
     write_avro(
         os.path.join(dest, "metadata/snap-1.avro"), _ML_SCHEMA, [ml_row]
     )
@@ -586,6 +576,161 @@ def _publish_metadata(mdir: str, version: int, meta: dict) -> None:
 
 def _write_sync_state(dest: str, state: dict) -> None:
     LOCAL.put(os.path.join(dest, _SYNC_STATE), json.dumps(state))
+
+
+def _next_ts(meta: dict) -> int:
+    """Now in ms, kept above every snapshot's timestamp so the snapshot
+    log stays monotonic under clock skew."""
+    prev_ts = max(
+        [int(s.get("timestamp-ms") or 0) for s in meta.get("snapshots") or []]
+        or [0]
+    )
+    return max(int(time.time() * 1000), prev_ts + 1)
+
+
+def _ml_row(
+    path: str,
+    mpath: str,
+    spec_id: int,
+    content: int,
+    seq: int,
+    sid: int,
+    min_seq: int | None = None,
+    added: tuple = (0, 0),
+    existing: tuple = (0, 0),
+    deleted: tuple = (0, 0),
+    partitions=None,
+) -> dict:
+    """The manifest-list row of the manifest ``mpath`` (relative to the
+    table at ``path``) written at sequence ``seq`` by snapshot ``sid``.
+    ``added``/``existing``/``deleted`` are ``(files, rows)`` counts."""
+    return {
+        "manifest_path": mpath,
+        "manifest_length": os.path.getsize(_resolve(path, mpath)),
+        "partition_spec_id": int(spec_id),
+        "content": content,
+        "sequence_number": seq,
+        "min_sequence_number": seq if min_seq is None else min_seq,
+        "added_snapshot_id": sid,
+        "added_files_count": added[0],
+        "existing_files_count": existing[0],
+        "deleted_files_count": deleted[0],
+        "added_rows_count": added[1],
+        "existing_rows_count": existing[1],
+        "deleted_rows_count": deleted[1],
+        "partitions": partitions,
+    }
+
+
+def _added_manifest(path: str, mpath: str, staged: dict, seq: int, sid: int):
+    """Write ``append_iceberg``'s staged entries as one manifest of
+    ADDED entries (sequence inherited) and return its list row."""
+    for e in staged["entries"]:
+        e["snapshot_id"] = sid
+    write_avro(_resolve(path, mpath), staged["mf_schema"], staged["entries"])
+    return _ml_row(
+        path, mpath, staged["spec_id"], 0, seq, sid,
+        added=(len(staged["entries"]), staged["n_rows"]),
+        partitions=staged["partitions"],
+    )
+
+
+def _current_manifests(path: str, meta: dict) -> list[dict]:
+    """The current snapshot's manifest-list rows ([] without one)."""
+    cur = meta.get("current-snapshot-id")
+    snap = next(
+        (s for s in meta.get("snapshots") or [] if s.get("snapshot-id") == cur),
+        None,
+    )
+    if snap is None:
+        return []
+    return read_avro(_resolve(path, snap["manifest-list"]))[1]
+
+
+def _summary(operation: str, opl: str) -> dict:
+    return {
+        "operation": operation,
+        "engine": f"rxlan-aws-lakehouse-spark foreign {opl}",
+    }
+
+
+def _add_snapshot(
+    path: str, meta: dict, summary: dict, ml_prefix: str, build, sid=None
+) -> dict:
+    """``meta`` with one new snapshot on top: everything a snapshot
+    needs, written once for every snapshot-producing verb.
+
+    Picks the next sequence number and (unless given) a fresh snapshot
+    id, calls ``build(seq, sid)`` for the verb's manifest-list rows and
+    the row count it adds, writes the manifest list, and returns the
+    new metadata: current snapshot, parent, monotonic timestamp,
+    ``snapshot-log`` entry and, on format-version 3, the snapshot's
+    ``first-row-id`` with ``next-row-id`` advanced by the added rows
+    (the spec's row-lineage assignment rule)."""
+    import uuid as _uuid
+
+    seq = int(meta.get("last-sequence-number") or 0) + 1
+    if sid is None:
+        sid = _uuid.uuid4().int >> 65  # positive Avro long
+    rows, added_rows = build(seq, sid)
+    ml_rel = f"metadata/{ml_prefix}snap-{seq}.avro"
+    write_avro(_resolve(path, ml_rel), _ML_SCHEMA, rows)
+    now_ms = _next_ts(meta)
+    snap = {
+        "snapshot-id": sid,
+        "parent-snapshot-id": meta.get("current-snapshot-id"),
+        "timestamp-ms": now_ms,
+        "sequence-number": seq,
+        "summary": summary,
+        "manifest-list": ml_rel,
+        "schema-id": meta.get("current-schema-id", 0),
+    }
+    new_meta = dict(meta)
+    new_meta["last-sequence-number"] = seq
+    new_meta["last-updated-ms"] = now_ms
+    new_meta["current-snapshot-id"] = sid
+    new_meta["snapshots"] = list(meta.get("snapshots") or []) + [snap]
+    new_meta["snapshot-log"] = list(meta.get("snapshot-log") or []) + [
+        {"timestamp-ms": now_ms, "snapshot-id": sid}
+    ]
+    if int(meta.get("format-version", 1)) >= 3:
+        first_rid = int(meta.get("next-row-id") or 0)
+        snap["first-row-id"] = first_rid
+        new_meta["next-row-id"] = first_rid + int(added_rows)
+    return new_meta
+
+
+def _commit_metadata(path: str, opl: str, edit, attempts: int = 8):
+    """Publish ``edit(head metadata)`` as the next metadata version —
+    the one publish loop of every foreign Iceberg write verb.
+
+    Each attempt reads the head, builds the new metadata from it, and
+    publishes it into the slot pinned at that read (never the advisory
+    hint, which a crashed writer leaves stale, and never a publish-time
+    re-scan, which would build over a commit racing in between). A lost
+    race retries from the new head; ``attempts=1`` refuses it instead.
+    ``edit`` raises to refuse, or returns None to commit nothing.
+    Returns the published metadata (or None)."""
+    for _attempt in range(attempts):
+        meta, head_v = load_table_metadata_versioned(path)
+        new_meta = edit(meta)
+        if new_meta is None:
+            return None
+        try:
+            _publish_metadata(
+                os.path.join(path, "metadata"), head_v + 1, new_meta
+            )
+            return new_meta
+        except FileExistsError:
+            if attempts == 1:
+                raise ValueError(
+                    f"cannot {opl}: lost the metadata race; re-run "
+                    "against the new state"
+                ) from None
+    raise RuntimeError(
+        f"{opl} on {path} lost the metadata race {attempts} times; "
+        "giving up"
+    )
 
 
 def export_iceberg_sync(
@@ -688,10 +833,6 @@ def export_iceberg_sync(
         ) from e
     new_entries = table.file_entries(v)
     meta = table._meta(v)
-
-    from .avro_lite import read_avro
-    from .iceberg_import import load_table_metadata_versioned
-
     dmeta, dmeta_v = load_table_metadata_versioned(dest)
     fields, ice_types, phys_of, part_by = _export_schema(
         meta,
@@ -719,8 +860,6 @@ def export_iceberg_sync(
     added = sorted(set(new_entries) - set(old_entries))
     removed = sorted(set(old_entries) - set(new_entries))
     removed_set = set(removed)
-    seq = int(dmeta.get("last-sequence-number") or 0) + 1
-    sid = _snapshot_id(table.root, v)
     data_root = os.path.join(table.root, "_versions", v)
     avro_part_fields = [
         {
@@ -731,15 +870,9 @@ def export_iceberg_sync(
     ]
     mf_schema = _manifest_schema(avro_part_fields)
 
-    cur_sid = dmeta.get("current-snapshot-id")
-    cur_snap = next(
-        s for s in dmeta["snapshots"] if s.get("snapshot-id") == cur_sid
-    )
-    ml_abs = cur_snap["manifest-list"]
-    if not os.path.isabs(ml_abs):
-        ml_abs = os.path.join(dest, ml_abs)
-    _, prev_ml = read_avro(ml_abs)
-    prev_rows = {r["manifest_path"]: r for r in prev_ml}
+    prev_rows = {
+        r["manifest_path"]: r for r in _current_manifests(dest, dmeta)
+    }
     # SYMMETRIC out-of-band detection: the sync state must account for
     # EVERY manifest the current list carries, or the next snapshot
     # would silently drop rows another writer (this engine's own
@@ -763,131 +896,105 @@ def export_iceberg_sync(
     new_manifests_meta: list[dict] = []
     total_added_rows = 0
 
-    if added:
-        rows = []
-        pvs: dict[str, list] = {c: [] for c in part_by}
-        for rel in added:
-            src = os.path.join(data_root, rel)
-            new_rel = f"data/e{n_file:06d}-{os.path.basename(rel)}"
-            n_file += 1
-            dst = os.path.join(dest, new_rel)
-            if not os.path.exists(dst):
-                os.link(src, dst)
-            e = new_entries[rel]
-            total_added_rows += int(e.get("rows", 0))
-            row, partition = _entry_record(
-                rel, e, dst, part_by, part_phys, ice_types, fid_of,
-                phys_of, status=1, sid=sid, seq=None,
-            )
-            for c in part_by:
-                pvs[c].append(partition[c])
-            rows.append(row)
-            files_map[rel] = {"dest": new_rel, "seq": seq, "sid": sid}
-        mpath = f"metadata/m{seq:06d}-add.avro"
-        write_avro(os.path.join(dest, mpath), mf_schema, rows)
-        new_ml_rows.append(
-            {
-                "manifest_path": mpath,
-                "manifest_length": os.path.getsize(
-                    os.path.join(dest, mpath)
-                ),
-                "partition_spec_id": 0,
-                "content": 0,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": sid,
-                "added_files_count": len(rows),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": total_added_rows,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                "partitions": _field_summaries(
-                    part_by, ice_types, pvs
+    def build(seq, sid):
+        nonlocal n_file, total_added_rows
+        if added:
+            rows = []
+            pvs: dict[str, list] = {c: [] for c in part_by}
+            for rel in added:
+                src = os.path.join(data_root, rel)
+                new_rel = f"data/e{n_file:06d}-{os.path.basename(rel)}"
+                n_file += 1
+                dst = os.path.join(dest, new_rel)
+                if not os.path.exists(dst):
+                    os.link(src, dst)
+                e = new_entries[rel]
+                total_added_rows += int(e.get("rows", 0))
+                row, partition = _entry_record(
+                    rel, e, dst, part_by, part_phys, ice_types, fid_of,
+                    phys_of, status=1, sid=sid, seq=None,
                 )
-                if part_by
-                else None,
-            }
-        )
-        new_manifests_meta.append({"path": mpath, "rels": list(added)})
-
-    for i, mf in enumerate(sync.get("manifests") or []):
-        rels = list(mf.get("rels") or [])
-        live = [r for r in rels if r not in removed_set]
-        gone = [r for r in rels if r in removed_set]
-        if not rels:
-            continue
-        if not gone:
-            row = prev_rows.get(mf["path"])
-            if row is None:
-                raise RuntimeError(
-                    f"sync state names manifest {mf['path']!r} that the "
-                    "current manifest list does not carry — the mirror "
-                    "was modified out-of-band; re-bootstrap"
-                )
-            new_ml_rows.append(row)
-            new_manifests_meta.append({"path": mf["path"], "rels": live})
-            continue
-        rows = []
-        pvs = {c: [] for c in part_by}
-        n_exist_rows = n_del_rows = 0
-        min_seq = seq
-        for rel in rels:
-            fi = files_map[rel]
-            e = (
-                new_entries[rel]
-                if rel in new_entries
-                else old_entries[rel]
-            )
-            deleted = rel in removed_set
-            row, partition = _entry_record(
-                rel, e, os.path.join(dest, fi["dest"]), part_by,
-                part_phys, ice_types, fid_of, phys_of,
-                status=2 if deleted else 0,
-                sid=sid if deleted else int(fi["sid"]),
-                seq=int(fi["seq"]),
-            )
-            min_seq = min(min_seq, int(fi["seq"]))
-            if deleted:
-                n_del_rows += int(e.get("rows", 0))
-            else:
                 for c in part_by:
                     pvs[c].append(partition[c])
-                n_exist_rows += int(e.get("rows", 0))
-            rows.append(row)
-        mpath = f"metadata/m{seq:06d}-rw{i}.avro"
-        write_avro(os.path.join(dest, mpath), mf_schema, rows)
-        new_ml_rows.append(
-            {
-                "manifest_path": mpath,
-                "manifest_length": os.path.getsize(
-                    os.path.join(dest, mpath)
-                ),
-                "partition_spec_id": 0,
-                "content": 0,
-                "sequence_number": seq,
-                "min_sequence_number": min_seq,
-                "added_snapshot_id": sid,
-                "added_files_count": 0,
-                "existing_files_count": len(live),
-                "deleted_files_count": len(gone),
-                "added_rows_count": 0,
-                "existing_rows_count": n_exist_rows,
-                "deleted_rows_count": n_del_rows,
-                # summaries bound the LIVE entries (readers skip
-                # DELETED entries, so live-only bounds are sound)
-                "partitions": _field_summaries(part_by, ice_types, pvs)
-                if part_by and live
-                else None,
-            }
-        )
-        if live:
-            new_manifests_meta.append({"path": mpath, "rels": live})
-        for rel in gone:
-            files_map.pop(rel, None)
+                rows.append(row)
+                files_map[rel] = {"dest": new_rel, "seq": seq, "sid": sid}
+            mpath = f"metadata/m{seq:06d}-add.avro"
+            write_avro(os.path.join(dest, mpath), mf_schema, rows)
+            new_ml_rows.append(
+                _ml_row(
+                    dest, mpath, 0, 0, seq, sid,
+                    added=(len(rows), total_added_rows),
+                    partitions=_field_summaries(part_by, ice_types, pvs)
+                    if part_by
+                    else None,
+                )
+            )
+            new_manifests_meta.append({"path": mpath, "rels": list(added)})
 
-    ml_rel = f"metadata/snap-{seq}.avro"
-    write_avro(os.path.join(dest, ml_rel), _ML_SCHEMA, new_ml_rows)
+        for i, mf in enumerate(sync.get("manifests") or []):
+            rels = list(mf.get("rels") or [])
+            live = [r for r in rels if r not in removed_set]
+            gone = [r for r in rels if r in removed_set]
+            if not rels:
+                continue
+            if not gone:
+                row = prev_rows.get(mf["path"])
+                if row is None:
+                    raise RuntimeError(
+                        f"sync state names manifest {mf['path']!r} that "
+                        "the current manifest list does not carry — the "
+                        "mirror was modified out-of-band; re-bootstrap"
+                    )
+                new_ml_rows.append(row)
+                new_manifests_meta.append({"path": mf["path"], "rels": live})
+                continue
+            rows = []
+            pvs = {c: [] for c in part_by}
+            n_exist_rows = n_del_rows = 0
+            min_seq = seq
+            for rel in rels:
+                fi = files_map[rel]
+                e = (
+                    new_entries[rel]
+                    if rel in new_entries
+                    else old_entries[rel]
+                )
+                deleted = rel in removed_set
+                row, partition = _entry_record(
+                    rel, e, os.path.join(dest, fi["dest"]), part_by,
+                    part_phys, ice_types, fid_of, phys_of,
+                    status=2 if deleted else 0,
+                    sid=sid if deleted else int(fi["sid"]),
+                    seq=int(fi["seq"]),
+                )
+                min_seq = min(min_seq, int(fi["seq"]))
+                if deleted:
+                    n_del_rows += int(e.get("rows", 0))
+                else:
+                    for c in part_by:
+                        pvs[c].append(partition[c])
+                    n_exist_rows += int(e.get("rows", 0))
+                rows.append(row)
+            mpath = f"metadata/m{seq:06d}-rw{i}.avro"
+            write_avro(os.path.join(dest, mpath), mf_schema, rows)
+            new_ml_rows.append(
+                _ml_row(
+                    dest, mpath, 0, 0, seq, sid, min_seq=min_seq,
+                    existing=(len(live), n_exist_rows),
+                    deleted=(len(gone), n_del_rows),
+                    # summaries bound the LIVE entries (readers skip
+                    # DELETED entries, so live-only bounds are sound)
+                    partitions=_field_summaries(part_by, ice_types, pvs)
+                    if part_by and live
+                    else None,
+                )
+            )
+            if live:
+                new_manifests_meta.append({"path": mpath, "rels": live})
+            for rel in gone:
+                files_map.pop(rel, None)
+        return new_ml_rows, total_added_rows
+
     # zero-add/zero-remove syncs (metadata-only source commits: rename/
     # drop/properties) classify as a 0-file "append", NOT "overwrite" —
     # an overwrite that changed no rows would needlessly trip the
@@ -896,39 +1003,18 @@ def export_iceberg_sync(
         op = "delete" if not added else "overwrite"
     else:
         op = "append"
-    prev_ts = max(
-        [int(s.get("timestamp-ms") or 0) for s in dmeta["snapshots"]]
-        or [0]
-    )
-    now_ms = max(int(time.time() * 1000), prev_ts + 1)
-    snap = {
-        "snapshot-id": sid,
-        "parent-snapshot-id": cur_sid,
-        "timestamp-ms": now_ms,
-        "sequence-number": seq,
-        "summary": {"operation": op, "rxlan-txn-version": v},
-        "manifest-list": ml_rel,
-        "schema-id": cur_schema_id + (1 if schema_changed else 0),
-    }
-    new_meta = dict(dmeta)
-    new_meta["last-sequence-number"] = seq
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["current-snapshot-id"] = sid
-    new_meta["snapshots"] = list(dmeta["snapshots"]) + [snap]
-    new_meta["snapshot-log"] = list(
-        dmeta.get("snapshot-log") or []
-    ) + [{"timestamp-ms": now_ms, "snapshot-id": sid}]
+    base = dict(dmeta)
     if schema_changed:
         new_sid = cur_schema_id + 1
-        new_meta["schemas"] = list(dmeta["schemas"]) + [
+        base["schemas"] = list(dmeta["schemas"]) + [
             {"type": "struct", "schema-id": new_sid, "fields": fields}
         ]
-        new_meta["current-schema-id"] = new_sid
-        new_meta["last-column-id"] = max(
+        base["current-schema-id"] = new_sid
+        base["last-column-id"] = max(
             [f["id"] for f in fields]
             + [int(dmeta.get("last-column-id") or 0)]
         )
-    props = dict(new_meta.get("properties") or {})
+    props = dict(base.get("properties") or {})
     props["schema.name-mapping.default"] = json.dumps(
         [
             {"field-id": fid_of[n], "names": [phys_of[n]]}
@@ -937,23 +1023,31 @@ def export_iceberg_sync(
         ]
     )
     props["rxlan.txn.source-version"] = v
-    new_meta["properties"] = props
+    base["properties"] = props
+    new_meta = _add_snapshot(
+        dest,
+        base,
+        {"operation": op, "rxlan-txn-version": v},
+        "",
+        build,
+        sid=_snapshot_id(table.root, v),
+    )
+    seq = new_meta["last-sequence-number"]
+    sid = new_meta["current-snapshot-id"]
 
-    # publish via the same atomic create-if-absent rule as
-    # append_iceberg (HadoopTables commit point), into the slot pinned
-    # at READ time (the version the sync's head metadata came from) —
-    # never the advisory hint, and never a publish-time re-scan, either
-    # of which would let a racing commit be silently built over;
-    # open(w) here would even TRUNCATE a committed-but-unhinted file
+    # publish into the slot pinned at READ time (the version the sync's
+    # head metadata came from) — never the advisory hint, and never a
+    # publish-time re-scan, either of which would let a racing commit
+    # be silently built over; a mirror never retries over another
+    # writer's commit, it refuses
     mdir = os.path.join(dest, "metadata")
-    cur_v = dmeta_v
-    mp = os.path.join(mdir, f"v{cur_v + 1}.metadata.json")
+    mp = os.path.join(mdir, f"v{dmeta_v + 1}.metadata.json")
     try:
-        _publish_metadata(mdir, cur_v + 1, new_meta)
+        _publish_metadata(mdir, dmeta_v + 1, new_meta)
     except FileExistsError:
         raise RuntimeError(
             f"mirror {dest} advanced concurrently while syncing "
-            f"(v{cur_v + 1}.metadata.json already exists) — it was "
+            f"(v{dmeta_v + 1}.metadata.json already exists) — it was "
             "modified out-of-band; re-bootstrap"
         ) from None
 
@@ -1262,10 +1356,9 @@ def append_iceberg(spark, path: str, df, _stage_only: bool = False) -> dict:
       to the current manifest list BY REFERENCE — untouched manifests
       are never rewritten; per-file ``lower_bounds``/``upper_bounds``
       translate from the parquet footers (zero extra data IO);
-    * the new ``v<N+1>.metadata.json`` publishes via atomic
-      create-if-absent into the slot pinned at read time; a lost race
-      re-reads the head and retries — appends never logically
-      conflict.
+    * the snapshot is built by ``_add_snapshot`` and published by
+      ``_commit_metadata``; a lost race re-reads the head and retries —
+      appends never logically conflict, beyond the schema staying put.
 
     Returns ``{"snapshot_id", "snapshot_seq", "n_files", "n_rows"}``.
 
@@ -1281,13 +1374,10 @@ def append_iceberg(spark, path: str, df, _stage_only: bool = False) -> dict:
 
     from pyspark.sql import functions as F
 
-    from .avro_lite import read_avro
     from .iceberg_import import (
         _current_schema,
-        _resolve,
         _spark_schema,
         load_table_metadata,
-        load_table_metadata_versioned,
     )
 
     meta = load_table_metadata(path)
@@ -1604,18 +1694,18 @@ def append_iceberg(spark, path: str, df, _stage_only: bool = False) -> dict:
             if pparts
             else None
         )
+        staged = {
+            "entries": new_entries,
+            "n_rows": n_rows_total,
+            "mf_schema": mf_schema,
+            "spec_id": int(spec.get("spec-id") or 0),
+            "partitions": ml_partitions,
+            "run_id": run_id,
+        }
         if _stage_only:
-            return {
-                "entries": new_entries,
-                "n_rows": n_rows_total,
-                "mf_schema": mf_schema,
-                "spec_id": int(spec.get("spec-id") or 0),
-                "partitions": ml_partitions,
-                "run_id": run_id,
-            }
+            return staged
 
-        for _attempt in range(8):
-            meta, head_v = load_table_metadata_versioned(path)
+        def edit(meta):
             if (
                 _current_schema(meta).get("fields")
                 != ice_schema.get("fields")
@@ -1625,101 +1715,30 @@ def append_iceberg(spark, path: str, df, _stage_only: bool = False) -> dict:
                     "table schema mid-append; re-run against the new "
                     "state"
                 )
-            seq = int(meta.get("last-sequence-number") or 0) + 1
-            sid = _uuid.uuid4().int >> 65  # positive Avro long
-            for e in new_entries:
-                e["snapshot_id"] = sid
-            mpath = f"metadata/ap-{run_id}-m{seq}.avro"
-            write_avro(_resolve(path, mpath), mf_schema, new_entries)
-            cur_sid = meta.get("current-snapshot-id")
-            prev_rows: list[dict] = []
-            if cur_sid not in (None, -1):
-                cur_snap = next(
-                    s
-                    for s in meta.get("snapshots") or []
-                    if s.get("snapshot-id") == cur_sid
-                )
-                _, prev_rows = read_avro(
-                    _resolve(path, cur_snap["manifest-list"])
-                )
-            ml_row = {
-                "manifest_path": mpath,
-                "manifest_length": os.path.getsize(_resolve(path, mpath)),
-                "partition_spec_id": int(spec.get("spec-id") or 0),
-                "content": 0,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": sid,
-                "added_files_count": len(new_entries),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": n_rows_total,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                "partitions": ml_partitions,
-            }
-            ml_rel = f"metadata/ap-{run_id}-snap-{seq}.avro"
-            write_avro(
-                _resolve(path, ml_rel), _ML_SCHEMA, [ml_row] + prev_rows
+            return _add_snapshot(
+                path,
+                meta,
+                _summary("append", "append"),
+                f"ap-{run_id}-",
+                lambda seq, sid: (
+                    [
+                        _added_manifest(
+                            path, f"metadata/ap-{run_id}-m{seq}.avro",
+                            staged, seq, sid,
+                        )
+                    ]
+                    + _current_manifests(path, meta),
+                    n_rows_total,
+                ),
             )
-            prev_ts = max(
-                [
-                    int(s.get("timestamp-ms") or 0)
-                    for s in (meta.get("snapshots") or [])
-                ]
-                or [0]
-            )
-            now_ms = max(int(time.time() * 1000), prev_ts + 1)
-            snap = {
-                "snapshot-id": sid,
-                "parent-snapshot-id": cur_sid,
-                "timestamp-ms": now_ms,
-                "sequence-number": seq,
-                "summary": {
-                    "operation": "append",
-                    "engine": "rxlan-aws-lakehouse-spark foreign append",
-                },
-                "manifest-list": ml_rel,
-                "schema-id": meta.get("current-schema-id", 0),
-            }
-            new_meta = dict(meta)
-            new_meta["last-sequence-number"] = seq
-            new_meta["last-updated-ms"] = now_ms
-            new_meta["current-snapshot-id"] = sid
-            new_meta["snapshots"] = list(meta.get("snapshots") or []) + [
-                snap
-            ]
-            new_meta["snapshot-log"] = list(
-                meta.get("snapshot-log") or []
-            ) + [{"timestamp-ms": now_ms, "snapshot-id": sid}]
-            if int(meta.get("format-version", 1)) >= 3:
-                # v3 row lineage (round 16, r15 verdict task 8): the
-                # snapshot records the first row id its added files
-                # inherit; the table advances next-row-id by the rows
-                # added (the spec's assignment rule — readers derive
-                # per-file first_row_id cumulatively by record_count)
-                first_rid = int(meta.get("next-row-id") or 0)
-                snap["first-row-id"] = first_rid
-                new_meta["next-row-id"] = first_rid + n_rows_total
-            # commit slot = the version this attempt's head metadata
-            # was READ from + 1, never the advisory hint (a crashed
-            # writer leaves it stale -> permanent re-collision) and
-            # never a publish-time re-scan (a commit racing in between
-            # read and publish would be silently built over)
-            mdir = os.path.join(path, "metadata")
-            try:
-                _publish_metadata(mdir, head_v + 1, new_meta)
-            except FileExistsError:
-                continue  # lost the race: re-read the head, retry
-            return {
-                "snapshot_id": sid,
-                "snapshot_seq": seq,
-                "n_files": len(new_entries),
-                "n_rows": n_rows_total,
-            }
-        raise RuntimeError(
-            f"append to {path} lost the metadata race 8 times; giving up"
-        )
+
+        new_meta = _commit_metadata(path, "append", edit)
+        return {
+            "snapshot_id": new_meta["current-snapshot-id"],
+            "snapshot_seq": new_meta["last-sequence-number"],
+            "n_files": len(new_entries),
+            "n_rows": n_rows_total,
+        }
     finally:
         _shutil.rmtree(staging, ignore_errors=True)
 
@@ -1923,8 +1942,6 @@ def _apply_eq_exclusion(spark, path: str, st: dict, lineage):
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructField, StructType
 
-    from .iceberg_import import _resolve  # noqa: F401  (path symmetry)
-
     # (data_path, eq_abs) applicability + eq files grouped by their
     # equality-column signature
     groups: dict[tuple, dict] = {}
@@ -2015,6 +2032,31 @@ def _apply_eq_exclusion(spark, path: str, st: dict, lineage):
     return lineage
 
 
+def _live_lineage(spark, path: str, st: dict):
+    """The lineage scan of snapshot ``st``'s LIVE rows: equality
+    deletes applied inside the scan, position deletes and DVs by a
+    broadcast anti-join (bounded by ``_ICE_DELETE_MAX_EXISTING``).
+    Returns ``(rows, dead)``, ``dead`` being the driver-side exclusion
+    map of ``_existing_dead_pairs``."""
+    from pyspark.sql import functions as F
+
+    dead = _existing_dead_pairs(path, st)
+    rows = _iceberg_lineage_scan(spark, path, st)
+    rows = _apply_eq_exclusion(spark, path, st, rows)
+    if dead:
+        rows = rows.join(
+            F.broadcast(
+                spark.createDataFrame(
+                    [(fp, int(ri)) for fp, s in dead.items() for ri in s],
+                    "__ic_path string, __ic_ri bigint",
+                )
+            ),
+            ["__ic_path", "__ic_ri"],
+            "left_anti",
+        )
+    return rows, dead
+
+
 def delete_iceberg(spark, path: str, where, mode: str = "auto") -> dict:
     """Row-level DELETE committed against a FOREIGN Iceberg table
     (round 15 — the Iceberg twin of ``delete_delta``; write interop
@@ -2058,14 +2100,14 @@ def restore_iceberg(spark, path: str, snapshot_id: int) -> dict:
     works the same way.  O(metadata) — no manifest or data IO at all.
     Streaming tails see no new snapshot and emit nothing, matching
     the incremental contract (the rolled-back rows were already
-    emitted; a stream cannot retract them).
+    emitted; a stream cannot retract them).  A lost race retries from
+    the new head (``_commit_metadata``).
 
     Returns ``{"snapshot_id", "previous_snapshot_id"}``."""
-    from .iceberg_import import load_table_metadata_versioned
-
     snapshot_id = int(snapshot_id)
-    for _attempt in range(8):
-        meta, head_v = load_table_metadata_versioned(path)
+    prev: dict = {}
+
+    def edit(meta):
         have = [
             int(s.get("snapshot-id"))
             for s in (meta.get("snapshots") or [])
@@ -2076,38 +2118,20 @@ def restore_iceberg(spark, path: str, snapshot_id: int) -> dict:
                 f"the table's metadata (kept: {sorted(have)}); it "
                 "may have been expired"
             )
-        prev = meta.get("current-snapshot-id")
-        if prev == snapshot_id:
-            return {
-                "snapshot_id": snapshot_id,
-                "previous_snapshot_id": prev,
-            }
-        prev_ts = max(
-            [
-                int(s.get("timestamp-ms") or 0)
-                for s in (meta.get("snapshots") or [])
-            ]
-            or [0]
-        )
-        now_ms = max(int(time.time() * 1000), prev_ts + 1)
+        prev["id"] = meta.get("current-snapshot-id")
+        if prev["id"] == snapshot_id:
+            return None
+        now_ms = _next_ts(meta)
         new_meta = dict(meta)
         new_meta["current-snapshot-id"] = snapshot_id
         new_meta["last-updated-ms"] = now_ms
         new_meta["snapshot-log"] = list(
             meta.get("snapshot-log") or []
         ) + [{"timestamp-ms": now_ms, "snapshot-id": snapshot_id}]
-        mdir = os.path.join(path, "metadata")
-        try:
-            _publish_metadata(mdir, head_v + 1, new_meta)
-        except FileExistsError:
-            continue  # lost the race: re-read the head, retry
-        return {
-            "snapshot_id": snapshot_id,
-            "previous_snapshot_id": prev,
-        }
-    raise RuntimeError(
-        f"restore of {path} lost the metadata race 8 times; giving up"
-    )
+        return new_meta
+
+    _commit_metadata(path, "restore", edit)
+    return {"snapshot_id": snapshot_id, "previous_snapshot_id": prev["id"]}
 
 
 def overwrite_iceberg(spark, path: str, df) -> dict:
@@ -2123,23 +2147,15 @@ def overwrite_iceberg(spark, path: str, df) -> dict:
     live-set semantics (a snapshot's content IS its manifest list).
     Streaming tails correctly refuse the snapshot without
     ``ignoreChanges`` — an overwrite retracts rows.  An empty
-    DataFrame truncates the table.  The publish is the same pinned-
-    slot create-if-absent loop as ``append_iceberg``; a lost race
-    re-reads the head and retries (an overwrite replaces whatever the
-    head holds and never logically conflicts, beyond the
-    format-version staying put).  Returns ``{"snapshot_id",
-    "snapshot_seq", "n_files", "n_rows", "n_files_removed"}``."""
-    import uuid as _uuid
+    DataFrame truncates the table.  The publish goes through
+    ``_commit_metadata``; a lost race re-reads the head and retries
+    (an overwrite replaces whatever the head holds and never logically
+    conflicts, beyond the format-version staying put).  Returns
+    ``{"snapshot_id", "snapshot_seq", "n_files", "n_rows",
+    "n_files_removed"}``."""
+    from .iceberg_import import iceberg_live_files
 
-    from .iceberg_import import (
-        _resolve,
-        iceberg_live_files,
-        load_table_metadata_versioned,
-    )
-
-    st = iceberg_live_files(path)
-    meta0 = st["meta"]
-    fv = int(meta0.get("format-version", 1))
+    fv = int(iceberg_live_files(path)["meta"].get("format-version", 1))
     if fv < 2:
         raise ValueError(
             "cannot overwrite: format-version 1 tables are read-only "
@@ -2147,101 +2163,41 @@ def overwrite_iceberg(spark, path: str, df) -> dict:
         )
     staged = append_iceberg(spark, path, df, _stage_only=True)
     run_id = staged["run_id"]
-    for _attempt in range(8):
-        meta, head_v = load_table_metadata_versioned(path)
+    removed: dict = {}
+
+    def edit(meta):
         if int(meta.get("format-version", 1)) != fv:
             raise ValueError(
                 "cannot overwrite: the table's format-version changed "
                 "mid-operation; re-run"
             )
-        n_removed = len(iceberg_live_files(path)["files"])
-        seq = int(meta.get("last-sequence-number") or 0) + 1
-        sid = _uuid.uuid4().int >> 65
-        ml_rows = []
-        if staged["entries"]:
-            for e in staged["entries"]:
-                e["snapshot_id"] = sid
-            ap_mpath = f"metadata/ow-{run_id}-m{seq}.avro"
-            write_avro(
-                _resolve(path, ap_mpath),
-                staged["mf_schema"],
-                staged["entries"],
-            )
-            ml_rows.append(
-                {
-                    "manifest_path": ap_mpath,
-                    "manifest_length": os.path.getsize(
-                        _resolve(path, ap_mpath)
-                    ),
-                    "partition_spec_id": staged["spec_id"],
-                    "content": 0,
-                    "sequence_number": seq,
-                    "min_sequence_number": seq,
-                    "added_snapshot_id": sid,
-                    "added_files_count": len(staged["entries"]),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": staged["n_rows"],
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                    "partitions": staged["partitions"],
-                }
-            )
-        ml_rel = f"metadata/ow-{run_id}-snap-{seq}.avro"
-        write_avro(_resolve(path, ml_rel), _ML_SCHEMA, ml_rows)
-        prev_ts = max(
-            [
-                int(s.get("timestamp-ms") or 0)
-                for s in (meta.get("snapshots") or [])
-            ]
-            or [0]
+        removed["n"] = len(iceberg_live_files(path)["files"])
+        return _add_snapshot(
+            path,
+            meta,
+            _summary("overwrite", "overwrite"),
+            f"ow-{run_id}-",
+            lambda seq, sid: (
+                [
+                    _added_manifest(
+                        path, f"metadata/ow-{run_id}-m{seq}.avro",
+                        staged, seq, sid,
+                    )
+                ]
+                if staged["entries"]
+                else [],
+                staged["n_rows"],
+            ),
         )
-        now_ms = max(int(time.time() * 1000), prev_ts + 1)
-        snap = {
-            "snapshot-id": sid,
-            "parent-snapshot-id": meta.get("current-snapshot-id"),
-            "timestamp-ms": now_ms,
-            "sequence-number": seq,
-            "summary": {
-                "operation": "overwrite",
-                "engine": (
-                    "rxlan-aws-lakehouse-spark foreign overwrite"
-                ),
-            },
-            "manifest-list": ml_rel,
-            "schema-id": meta.get("current-schema-id", 0),
-        }
-        new_meta = dict(meta)
-        new_meta["last-sequence-number"] = seq
-        new_meta["last-updated-ms"] = now_ms
-        new_meta["current-snapshot-id"] = sid
-        new_meta["snapshots"] = list(
-            meta.get("snapshots") or []
-        ) + [snap]
-        new_meta["snapshot-log"] = list(
-            meta.get("snapshot-log") or []
-        ) + [{"timestamp-ms": now_ms, "snapshot-id": sid}]
-        if fv >= 3:
-            first_rid = int(meta.get("next-row-id") or 0)
-            snap["first-row-id"] = first_rid
-            new_meta["next-row-id"] = first_rid + int(
-                staged["n_rows"]
-            )
-        mdir = os.path.join(path, "metadata")
-        try:
-            _publish_metadata(mdir, head_v + 1, new_meta)
-        except FileExistsError:
-            continue  # lost the race: re-read the head, retry
-        return {
-            "snapshot_id": sid,
-            "snapshot_seq": seq,
-            "n_files": len(staged["entries"]),
-            "n_rows": int(staged["n_rows"]),
-            "n_files_removed": n_removed,
-        }
-    raise RuntimeError(
-        f"overwrite of {path} lost the metadata race 8 times; giving up"
-    )
+
+    new_meta = _commit_metadata(path, "overwrite", edit)
+    return {
+        "snapshot_id": new_meta["current-snapshot-id"],
+        "snapshot_seq": new_meta["last-sequence-number"],
+        "n_files": len(staged["entries"]),
+        "n_rows": int(staged["n_rows"]),
+        "n_files_removed": removed["n"],
+    }
 
 
 def merge_iceberg(
@@ -2266,18 +2222,9 @@ def merge_iceberg(
     write half — write cost is O(|updates|) data bytes + O(matched
     positions), never a whole-table rewrite.  A merge matching
     nothing (or into an empty table) degrades to a pure fast-append
-    snapshot.  Duplicate merge keys in ``updates`` refuse loudly.
-    Returns ``{"snapshot_id", "snapshot_seq", "n_matched",
-    "n_files_touched", "mode"}``."""
-    if not keys:
-        raise ValueError("cannot merge: empty key list")
-    up_cols = {c.lower() for c in updates.columns}
-    for k in keys:
-        if str(k).lower() not in up_cols:
-            raise ValueError(
-                f"cannot merge: unknown key column {k!r}"
-            )
-    validate_merge_keys(updates, keys, delete_keys)
+    snapshot.  Duplicate merge keys in ``updates`` refuse loudly
+    (``txn.bind_foreign_dml``).  Returns ``{"snapshot_id",
+    "snapshot_seq", "n_matched", "n_files_touched", "mode"}``."""
     return _row_level_iceberg(
         spark,
         path,
@@ -2328,10 +2275,10 @@ def _row_level_iceberg(
     through ``append_iceberg``'s write half and committed in the SAME
     snapshot (operation ``overwrite``); existing equality deletes
     never re-kill the copies — they scope strictly below the new
-    sequence number.  The snapshot publishes via the same pinned-slot
-    create-if-absent loop as ``append_iceberg``; a lost race retries
-    only while every touched data file is still live and the delete
-    files are unchanged.
+    sequence number.  The snapshot is built by ``_add_snapshot`` and
+    published by ``_commit_metadata``; a lost race retries only while
+    every touched data file is still live and the delete files are
+    unchanged.
 
     Returns ``{"snapshot_id", "snapshot_seq", "n_matched",
     "n_files_touched", "mode"}``."""
@@ -2341,12 +2288,7 @@ def _row_level_iceberg(
 
     from pyspark.sql import functions as F
 
-    from .iceberg_import import (
-        _resolve,
-        _spark_schema,
-        iceberg_live_files,
-        load_table_metadata_versioned,
-    )
+    from .iceberg_import import _spark_schema, iceberg_live_files
 
     is_update = set_map is not None
     is_merge = merge is not None
@@ -2374,48 +2316,9 @@ def _row_level_iceberg(
             "position delete files (use mode='dv')"
         )
     schema_l = _spark_schema(meta)
-    mkeys: list[str] = []
-    upd_src = dels_src = all_keys = None
-    if is_merge:
-        by_lower_m = {f.name.lower(): f.name for f in schema_l.fields}
-        for k in merge["keys"]:
-            n = by_lower_m.get(str(k).lower())
-            if n is None:
-                raise ValueError(
-                    f"cannot merge: unknown key column {k!r}"
-                )
-            mkeys.append(n)
-        upd_src = merge["updates"]
-        missing = [
-            f.name
-            for f in schema_l.fields
-            if f.name.lower()
-            not in {c.lower() for c in upd_src.columns}
-        ]
-        extra = [
-            c
-            for c in upd_src.columns
-            if c.lower() not in by_lower_m
-        ]
-        if missing or extra:
-            raise ValueError(
-                "cannot merge: updates columns do not match the "
-                f"table schema (missing {missing}, unexpected "
-                f"{extra}); merges do not evolve a foreign schema"
-            )
-        upd_src = upd_src.select(
-            *(
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                for f in schema_l.fields
-            )
-        )
-        dels_src = merge.get("delete_keys")
-        if dels_src is not None:
-            dels_src = dels_src.select(*mkeys).distinct()
-        all_keys = upd_src.select(*mkeys)
-        if dels_src is not None:
-            all_keys = all_keys.unionByName(dels_src)
-        all_keys = all_keys.distinct()
+    set_exprs, mkeys, upd_src, dels_src, all_keys = bind_foreign_dml(
+        schema_l, set_map, merge
+    )
     if not st["files"]:
         if is_merge:
             # empty-table merge: pure insert — one fast-append snapshot
@@ -2434,26 +2337,12 @@ def _row_level_iceberg(
             "n_files_touched": 0,
             "mode": mode,
         }
-    set_exprs: dict = {}
-    if is_update:
-        by_lower = {f.name.lower(): f for f in schema_l.fields}
-        for k, v in set_map.items():
-            fld = by_lower.get(str(k).lower())
-            if fld is None:
-                raise ValueError(
-                    f"cannot update: unknown column {k!r} in SET"
-                )
-            set_exprs[fld.name] = (
-                F.expr(v) if isinstance(v, str) else v
-            )
-    dead = _existing_dead_pairs(path, st)
     cond = (
         None
         if is_merge
         else (F.expr(where) if isinstance(where, str) else where)
     )
-    lineage = _iceberg_lineage_scan(spark, path, st)
-    lineage = _apply_eq_exclusion(spark, path, st, lineage)
+    lineage, dead = _live_lineage(spark, path, st)
     # MERGE matches by key membership (NULL-safe by construction: a
     # NULL key never equi-joins, per ANSI MERGE); DELETE/UPDATE match
     # by predicate
@@ -2462,22 +2351,6 @@ def _row_level_iceberg(
         if is_merge
         else lineage.filter(cond)
     )
-
-    # exclude already-dead ordinals executor-side via a broadcast
-    # anti-join (bounded by _ICE_DELETE_MAX_EXISTING above)
-    if dead:
-        dead_rows = [
-            (fp, int(ri)) for fp, s in dead.items() for ri in s
-        ]
-        matched_full = matched_full.join(
-            F.broadcast(
-                spark.createDataFrame(
-                    dead_rows, "__ic_path string, __ic_ri bigint"
-                )
-            ),
-            ["__ic_path", "__ic_ri"],
-            "left_anti",
-        )
     matched = matched_full.select("__ic_path", "__ic_ri")
 
     # adjacent to the table: same-fs hard links + scratch-fs inheritance
@@ -2530,8 +2403,6 @@ def _row_level_iceberg(
                 n_matched = 0
                 touched = []
                 new_delete_entries = []
-                dropped_manifests: set = set()
-                rewrites: list = []
                 _pos_empty = True
             else:
                 _pos_empty = False
@@ -2596,8 +2467,6 @@ def _row_level_iceberg(
                         },
                     }
                 ]
-                dropped_manifests: set = set()
-                rewrites: list = []
         else:
             # v3 deletion vectors: per-file union of new ordinals +
             # existing DV + superseded position deletes.  Union AND the
@@ -2721,8 +2590,6 @@ def _row_level_iceberg(
                     )
                 return False
 
-            dropped_manifests = set()
-            rewrites = []
         n_files_touched = len(touched)
 
         upd_staged = None
@@ -2750,7 +2617,6 @@ def _row_level_iceberg(
                 spark, path, updated_df, _stage_only=True
             )
 
-        # ---- commit loop: pinned slot, create-if-absent ----
         mf_schema_del = {
             "type": "record",
             "name": "manifest_entry",
@@ -2813,11 +2679,126 @@ def _row_level_iceberg(
                 },
             ],
         }
-        from .avro_lite import read_avro
-
         touched_set = set(touched)
-        for _attempt in range(8):
-            meta, head_v = load_table_metadata_versioned(path)
+        operation = (
+            ("overwrite" if n_matched else "append")
+            if is_merge
+            else ("overwrite" if is_update else "delete")
+        )
+
+        def keep_manifests(rows, seq, sid):
+            """The DV supersede rule over the head's manifest list:
+            drop delete manifests whose every live entry this DV set
+            replaces, rewrite partially superseded ones."""
+            keep_rows = []
+            for row in rows:
+                if int(row.get("content") or 0) == 1:
+                    # classify this delete manifest's entries
+                    _, ents = read_avro(
+                        _resolve(path, row["manifest_path"])
+                    )
+                    live_ents = [
+                        e for e in ents if int(e.get("status") or 0) != 2
+                    ]
+                    flags = [
+                        superseded(
+                            {
+                                "dv": (
+                                    e["data_file"].get(
+                                        "referenced_data_file"
+                                    )
+                                    is not None
+                                ),
+                                "referenced": e["data_file"].get(
+                                    "referenced_data_file"
+                                ),
+                                "content": int(
+                                    e["data_file"].get("content") or 1
+                                ),
+                                "abs": _resolve(
+                                    path, e["data_file"]["file_path"]
+                                ),
+                            }
+                        )
+                        for e in live_ents
+                    ]
+                    if live_ents and all(flags):
+                        continue
+                    if any(flags):
+                        # PARTIAL supersede: rewrite the manifest
+                        # keeping the still-live delete entries as
+                        # EXISTING (explicit original sequence
+                        # numbers — inheritance is ADDED-only);
+                        # superseded entries are simply omitted
+                        if any(
+                            (e["data_file"].get("partition") or {})
+                            for e in live_ents
+                        ):
+                            raise ValueError(
+                                f"cannot {opl}: a partially "
+                                "superseded delete manifest carries "
+                                "PARTITIONED entries this writer "
+                                "cannot rewrite; compact the table's "
+                                "deletes first"
+                            )
+                        m_seq = int(row.get("sequence_number") or 0)
+                        keep_ents = []
+                        min_seq = seq
+                        for e, fl in zip(live_ents, flags):
+                            if fl:
+                                continue
+                            eseq = e.get("sequence_number")
+                            eseq = int(eseq) if eseq is not None else m_seq
+                            min_seq = min(min_seq, eseq)
+                            keep_ents.append(
+                                {
+                                    "status": 0,
+                                    "snapshot_id": e.get("snapshot_id")
+                                    or row.get("added_snapshot_id"),
+                                    "sequence_number": eseq,
+                                    "file_sequence_number": e.get(
+                                        "file_sequence_number"
+                                    )
+                                    or eseq,
+                                    "data_file": dict(e["data_file"]),
+                                }
+                            )
+                        new_mpath = (
+                            f"metadata/del-{run_id}-rw{len(keep_rows)}.avro"
+                        )
+                        write_avro(
+                            _resolve(path, new_mpath),
+                            mf_schema_del,
+                            keep_ents,
+                        )
+                        keep_rows.append(
+                            _ml_row(
+                                path,
+                                new_mpath,
+                                int(row.get("partition_spec_id") or 0),
+                                1,
+                                seq,
+                                sid,
+                                min_seq=min_seq,
+                                existing=(
+                                    len(keep_ents),
+                                    sum(
+                                        int(
+                                            e["data_file"].get(
+                                                "record_count"
+                                            )
+                                            or 0
+                                        )
+                                        for e in keep_ents
+                                    ),
+                                ),
+                            )
+                        )
+                        continue
+                keep_rows.append(row)
+            return keep_rows
+
+        def edit(meta):
             if int(meta.get("format-version", 1)) != fv:
                 raise ValueError(
                     f"cannot {opl}: the table's format-version changed "
@@ -2828,8 +2809,8 @@ def _row_level_iceberg(
             if not touched_set <= live_paths:
                 raise ValueError(
                     f"cannot {opl}: a concurrent commit rewrote or "
-                    f"removed data file(s) this {opl.upper()} touches; re-run "
-                    "against the new state"
+                    f"removed data file(s) this {opl.upper()} touches; "
+                    "re-run against the new state"
                 )
             if mode == "dv":
                 # the DV union and the supersede classification were
@@ -2861,18 +2842,10 @@ def _row_level_iceberg(
                         "read its snapshot; re-run against the new "
                         "state"
                     )
-            seq = int(meta.get("last-sequence-number") or 0) + 1
-            sid = _uuid.uuid4().int >> 65
             specs = list(meta.get("partition-specs") or [])
             unpart = next(
-                (
-                    s
-                    for s in specs
-                    if not (s.get("fields") or [])
-                ),
-                None,
+                (s for s in specs if not (s.get("fields") or [])), None
             )
-            new_meta = dict(meta)
             if unpart is None:
                 unpart = {
                     "spec-id": max(
@@ -2881,321 +2854,88 @@ def _row_level_iceberg(
                     + 1,
                     "fields": [],
                 }
-                new_meta["partition-specs"] = specs + [unpart]
-            if mode == "dv" and touched:
-                # write the Puffin file now that this attempt's
-                # snapshot-id/sequence-number are known (blob
-                # FileMetadata carries them); a retried attempt
-                # rewrites the same not-yet-committed path
-                metas = write_puffin(
-                    _resolve(path, puf_rel),
-                    dv_blobs,
-                    snapshot_id=sid,
-                    sequence_number=seq,
-                )
-                puf_size = os.path.getsize(_resolve(path, puf_rel))
-                new_delete_entries = [
-                    {
-                        "status": 1,
-                        "snapshot_id": None,
-                        "sequence_number": None,
-                        "file_sequence_number": None,
-                        "data_file": {
-                            "content": 1,
-                            "file_path": puf_rel,
-                            "file_format": "PUFFIN",
-                            "partition": {},
-                            "record_count": card,
-                            "file_size_in_bytes": puf_size,
-                            "referenced_data_file": fp,
-                            "content_offset": m["offset"],
-                            "content_size_in_bytes": m["length"],
-                            "null_value_counts": None,
-                            "lower_bounds": None,
-                            "upper_bounds": None,
-                        },
-                    }
-                    for fp, card, m in zip(touched, dv_cards, metas)
-                ]
-            for e in new_delete_entries:
-                e["snapshot_id"] = sid
-                e["sequence_number"] = seq
-                e["file_sequence_number"] = seq
-            mpath = f"metadata/del-{run_id}-m{seq}.avro"
-            if new_delete_entries:
-                # a merge matching nothing writes NO delete manifest
-                write_avro(
-                    _resolve(path, mpath),
-                    mf_schema_del,
-                    new_delete_entries,
-                )
-            snap_cur = next(
-                (
-                    s
-                    for s in meta.get("snapshots") or []
-                    if s.get("snapshot-id")
-                    == meta.get("current-snapshot-id")
-                ),
-                None,
-            )
-            prev_rows = []
-            if snap_cur is not None:
-                _, prev_rows = read_avro(
-                    _resolve(path, snap_cur["manifest-list"])
-                )
-            if mode == "dv":
-                keep_rows = []
-                for row in prev_rows:
-                    if int(row.get("content") or 0) == 1:
-                        # classify this delete manifest's entries
-                        _, ents = read_avro(
-                            _resolve(path, row["manifest_path"])
+                meta = {**meta, "partition-specs": specs + [unpart]}
+
+            def build(seq, sid):
+                entries = new_delete_entries
+                if mode == "dv" and touched:
+                    # write the Puffin file now that this attempt's
+                    # snapshot-id/sequence-number are known (blob
+                    # FileMetadata carries them); a retried attempt
+                    # rewrites the same not-yet-committed path
+                    metas = write_puffin(
+                        _resolve(path, puf_rel),
+                        dv_blobs,
+                        snapshot_id=sid,
+                        sequence_number=seq,
+                    )
+                    puf_size = os.path.getsize(_resolve(path, puf_rel))
+                    entries = [
+                        {
+                            "status": 1,
+                            "snapshot_id": None,
+                            "sequence_number": None,
+                            "file_sequence_number": None,
+                            "data_file": {
+                                "content": 1,
+                                "file_path": puf_rel,
+                                "file_format": "PUFFIN",
+                                "partition": {},
+                                "record_count": card,
+                                "file_size_in_bytes": puf_size,
+                                "referenced_data_file": fp,
+                                "content_offset": m["offset"],
+                                "content_size_in_bytes": m["length"],
+                                "null_value_counts": None,
+                                "lower_bounds": None,
+                                "upper_bounds": None,
+                            },
+                        }
+                        for fp, card, m in zip(touched, dv_cards, metas)
+                    ]
+                rows = _current_manifests(path, meta)
+                if mode == "dv":
+                    rows = keep_manifests(rows, seq, sid)
+                if upd_staged and upd_staged["entries"]:
+                    # the updated copies' data manifest, committed in
+                    # the SAME snapshot as their removal (ADDED
+                    # entries inherit the snapshot's sequence number)
+                    rows.append(
+                        _added_manifest(
+                            path, f"metadata/up-{run_id}-m{seq}.avro",
+                            upd_staged, seq, sid,
                         )
-                        live_ents = [
-                            e
-                            for e in ents
-                            if int(e.get("status") or 0) != 2
-                        ]
-                        flags = [
-                            superseded(
-                                {
-                                    "dv": (e["data_file"].get(
-                                        "referenced_data_file"
-                                    ) is not None),
-                                    "referenced": e["data_file"].get(
-                                        "referenced_data_file"
-                                    ),
-                                    "content": int(
-                                        e["data_file"].get("content")
-                                        or 1
-                                    ),
-                                    "abs": _resolve(
-                                        path,
-                                        e["data_file"]["file_path"],
-                                    ),
-                                }
-                            )
-                            for e in live_ents
-                        ]
-                        if live_ents and all(flags):
-                            dropped_manifests.add(row["manifest_path"])
-                            continue
-                        if any(flags):
-                            # PARTIAL supersede: rewrite the manifest
-                            # keeping the still-live delete entries as
-                            # EXISTING (explicit original sequence
-                            # numbers — inheritance is ADDED-only);
-                            # superseded entries are simply omitted
-                            if any(
-                                (e["data_file"].get("partition") or {})
-                                for e in live_ents
-                            ):
-                                raise ValueError(
-                                    f"cannot {opl}: a partially "
-                                    "superseded delete manifest "
-                                    "carries PARTITIONED entries this "
-                                    "writer cannot rewrite; compact "
-                                    "the table's deletes first"
-                                )
-                            m_seq = int(row.get("sequence_number") or 0)
-                            keep_ents = []
-                            min_seq = seq
-                            for e, fl in zip(live_ents, flags):
-                                if fl:
-                                    continue
-                                eseq = e.get("sequence_number")
-                                eseq = (
-                                    int(eseq)
-                                    if eseq is not None
-                                    else m_seq
-                                )
-                                min_seq = min(min_seq, eseq)
-                                keep_ents.append(
-                                    {
-                                        "status": 0,
-                                        "snapshot_id": e.get(
-                                            "snapshot_id"
-                                        )
-                                        or row.get("added_snapshot_id"),
-                                        "sequence_number": eseq,
-                                        "file_sequence_number": e.get(
-                                            "file_sequence_number"
-                                        )
-                                        or eseq,
-                                        "data_file": dict(
-                                            e["data_file"]
-                                        ),
-                                    }
-                                )
-                            new_mpath = (
-                                f"metadata/del-{run_id}"
-                                f"-rw{len(rewrites)}.avro"
-                            )
-                            write_avro(
-                                _resolve(path, new_mpath),
-                                mf_schema_del,
-                                keep_ents,
-                            )
-                            rewrites.append(new_mpath)
-                            keep_rows.append(
-                                {
-                                    "manifest_path": new_mpath,
-                                    "manifest_length": os.path.getsize(
-                                        _resolve(path, new_mpath)
-                                    ),
-                                    "partition_spec_id": int(
-                                        row.get("partition_spec_id")
-                                        or 0
-                                    ),
-                                    "content": 1,
-                                    "sequence_number": seq,
-                                    "min_sequence_number": min_seq,
-                                    "added_snapshot_id": sid,
-                                    "added_files_count": 0,
-                                    "existing_files_count": len(
-                                        keep_ents
-                                    ),
-                                    "deleted_files_count": 0,
-                                    "added_rows_count": 0,
-                                    "existing_rows_count": sum(
-                                        int(
-                                            e["data_file"].get(
-                                                "record_count"
-                                            )
-                                            or 0
-                                        )
-                                        for e in keep_ents
-                                    ),
-                                    "deleted_rows_count": 0,
-                                    "partitions": None,
-                                }
-                            )
-                            continue
-                    keep_rows.append(row)
-                prev_rows = keep_rows
-            del_rows = (
-                [
-                    {
-                        "manifest_path": mpath,
-                        "manifest_length": os.path.getsize(
-                            _resolve(path, mpath)
-                        ),
-                        "partition_spec_id": int(unpart["spec-id"]),
-                        "content": 1,
-                        "sequence_number": seq,
-                        "min_sequence_number": seq,
-                        "added_snapshot_id": sid,
-                        "added_files_count": len(new_delete_entries),
-                        "existing_files_count": 0,
-                        "deleted_files_count": 0,
-                        "added_rows_count": n_matched,
-                        "existing_rows_count": 0,
-                        "deleted_rows_count": 0,
-                        "partitions": None,
-                    }
-                ]
-                if new_delete_entries
-                else []
-            )
-            add_rows = []
-            if upd_staged and upd_staged["entries"]:
-                # the updated copies' data manifest, committed in the
-                # SAME snapshot as their removal (ADDED entries
-                # inherit the snapshot's sequence number)
-                for e in upd_staged["entries"]:
-                    e["snapshot_id"] = sid
-                ap_mpath = f"metadata/up-{run_id}-m{seq}.avro"
-                write_avro(
-                    _resolve(path, ap_mpath),
-                    upd_staged["mf_schema"],
-                    upd_staged["entries"],
-                )
-                add_rows.append(
-                    {
-                        "manifest_path": ap_mpath,
-                        "manifest_length": os.path.getsize(
-                            _resolve(path, ap_mpath)
-                        ),
-                        "partition_spec_id": upd_staged["spec_id"],
-                        "content": 0,
-                        "sequence_number": seq,
-                        "min_sequence_number": seq,
-                        "added_snapshot_id": sid,
-                        "added_files_count": len(
-                            upd_staged["entries"]
-                        ),
-                        "existing_files_count": 0,
-                        "deleted_files_count": 0,
-                        "added_rows_count": upd_staged["n_rows"],
-                        "existing_rows_count": 0,
-                        "deleted_rows_count": 0,
-                        "partitions": upd_staged["partitions"],
-                    }
-                )
-            ml_rel = f"metadata/del-{run_id}-snap-{seq}.avro"
-            write_avro(
-                _resolve(path, ml_rel),
-                _ML_SCHEMA,
-                prev_rows + add_rows + del_rows,
-            )
-            prev_ts = max(
-                [
-                    int(s.get("timestamp-ms") or 0)
-                    for s in (meta.get("snapshots") or [])
-                ]
-                or [0]
-            )
-            now_ms = max(int(time.time() * 1000), prev_ts + 1)
-            snap = {
-                "snapshot-id": sid,
-                "parent-snapshot-id": meta.get("current-snapshot-id"),
-                "timestamp-ms": now_ms,
-                "sequence-number": seq,
-                "summary": {
-                    "operation": (
-                        ("overwrite" if n_matched else "append")
-                        if is_merge
-                        else ("overwrite" if is_update else "delete")
-                    ),
-                    "engine": (
-                        f"rxlan-aws-lakehouse-spark foreign {opl}"
-                    ),
-                },
-                "manifest-list": ml_rel,
-                "schema-id": meta.get("current-schema-id", 0),
-            }
-            new_meta["last-sequence-number"] = seq
-            new_meta["last-updated-ms"] = now_ms
-            new_meta["current-snapshot-id"] = sid
-            new_meta["snapshots"] = list(
-                meta.get("snapshots") or []
-            ) + [snap]
-            new_meta["snapshot-log"] = list(
-                meta.get("snapshot-log") or []
-            ) + [{"timestamp-ms": now_ms, "snapshot-id": sid}]
-            if fv >= 3:
+                    )
+                if entries:
+                    # a merge matching nothing writes NO delete manifest
+                    for e in entries:
+                        e["snapshot_id"] = sid
+                        e["sequence_number"] = seq
+                        e["file_sequence_number"] = seq
+                    mpath = f"metadata/del-{run_id}-m{seq}.avro"
+                    write_avro(_resolve(path, mpath), mf_schema_del, entries)
+                    rows.append(
+                        _ml_row(
+                            path, mpath, unpart["spec-id"], 1, seq, sid,
+                            added=(len(entries), n_matched),
+                        )
+                    )
                 # v3 row lineage: a DELETE adds no rows; an UPDATE's/
                 # MERGE's appended files advance next-row-id
-                first_rid = int(meta.get("next-row-id") or 0)
-                snap["first-row-id"] = first_rid
-                new_meta["next-row-id"] = first_rid + (
-                    int(upd_staged["n_rows"]) if upd_staged else 0
-                )
-            mdir = os.path.join(path, "metadata")
-            try:
-                _publish_metadata(mdir, head_v + 1, new_meta)
-            except FileExistsError:
-                continue  # lost the race: re-read the head, retry
-            return {
-                "snapshot_id": sid,
-                "snapshot_seq": seq,
-                "n_matched": n_matched,
-                "n_files_touched": n_files_touched,
-                "mode": mode,
-            }
-        raise RuntimeError(
-            f"{opl} on {path} lost the metadata race 8 times; giving up"
-        )
+                return rows, (int(upd_staged["n_rows"]) if upd_staged else 0)
+
+            return _add_snapshot(
+                path, meta, _summary(operation, opl), f"del-{run_id}-", build
+            )
+
+        new_meta = _commit_metadata(path, opl, edit)
+        return {
+            "snapshot_id": new_meta["current-snapshot-id"],
+            "snapshot_seq": new_meta["last-sequence-number"],
+            "n_matched": n_matched,
+            "n_files_touched": n_files_touched,
+            "mode": mode,
+        }
     finally:
         _shutil.rmtree(staging, ignore_errors=True)
 
@@ -3267,170 +3007,101 @@ def rewrite_manifests_iceberg(spark, path: str) -> dict:
     pass through untouched.  The new snapshot commits with operation
     ``replace`` and adds ZERO data files — streaming tails emit
     nothing for it (added-entries-only rule).  Data bytes are never
-    read or moved: this is O(manifest bytes), not O(data).
+    read or moved: this is O(manifest bytes), not O(data).  A lost
+    metadata race refuses.
 
     Returns ``{"snapshot_id", "snapshot_seq", "n_manifests_before",
     "n_manifests_after"}`` (snapshot_id None = nothing to merge)."""
     import uuid as _uuid
 
-    from .avro_lite import read_avro
-    from .iceberg_import import (
-        _current_schema,
-        _resolve,
-        load_table_metadata_versioned,
-    )
+    from .iceberg_import import _current_schema
 
-    meta, head_v = load_table_metadata_versioned(path)
-    cur_sid = meta.get("current-snapshot-id")
-    if cur_sid in (None, -1):
-        return {
-            "snapshot_id": None,
-            "snapshot_seq": None,
-            "n_manifests_before": 0,
-            "n_manifests_after": 0,
-        }
-    snap_cur = next(
-        s
-        for s in meta.get("snapshots") or []
-        if s.get("snapshot-id") == cur_sid
-    )
-    _, ml_rows = read_avro(_resolve(path, snap_cur["manifest-list"]))
-    data_rows = [
-        r for r in ml_rows if int(r.get("content") or 0) == 0
-    ]
-    delete_rows = [
-        r for r in ml_rows if int(r.get("content") or 0) != 0
-    ]
-    if len(data_rows) <= 1:
-        return {
-            "snapshot_id": None,
-            "snapshot_seq": None,
-            "n_manifests_before": len(data_rows),
-            "n_manifests_after": len(data_rows),
-        }
-    by_id = {
-        int(f["id"]): f for f in _current_schema(meta)["fields"]
-    }
-    specs = {
-        int(s["spec-id"]): s
-        for s in (meta.get("partition-specs") or [])
-    }
-    # group entries per spec id, EXISTING with explicit seqs
-    merged: dict[int, list] = {}
-    counts: dict[int, int] = {}
-    for row in data_rows:
-        m_seq = int(row.get("sequence_number") or 0)
-        m_sid = row.get("added_snapshot_id")
-        _, ents = read_avro(_resolve(path, row["manifest_path"]))
-        spid = int(row.get("partition_spec_id") or 0)
-        for e in ents:
-            if int(e.get("status") or 0) == 2:
-                continue  # tombstone: drops in the rewrite
-            eseq = e.get("sequence_number")
-            eseq = int(eseq) if eseq is not None else m_seq
-            efseq = e.get("file_sequence_number")
-            efseq = int(efseq) if efseq is not None else eseq
-            merged.setdefault(spid, []).append(
-                {
-                    "status": 0,
-                    "snapshot_id": e.get("snapshot_id") or m_sid,
-                    "sequence_number": eseq,
-                    "file_sequence_number": efseq,
-                    "data_file": dict(e["data_file"]),
-                }
-            )
-            counts[spid] = counts.get(spid, 0) + int(
-                e["data_file"].get("record_count") or 0
-            )
     run_id = _uuid.uuid4().hex[:12]
-    seq = int(meta.get("last-sequence-number") or 0) + 1
-    sid = _uuid.uuid4().int >> 65
-    new_rows = []
-    for spid, ents in sorted(merged.items()):
-        spec = specs.get(spid) or {"spec-id": spid, "fields": []}
-        part_fields = _spec_avro_part_fields(
-            spec, by_id, "rewrite manifests"
-        )
-        mpath = f"metadata/rw-{run_id}-s{spid}.avro"
-        write_avro(
-            _resolve(path, mpath),
-            _manifest_schema(part_fields),
-            ents,
-        )
-        new_rows.append(
-            {
-                "manifest_path": mpath,
-                "manifest_length": os.path.getsize(
-                    _resolve(path, mpath)
-                ),
-                "partition_spec_id": spid,
-                "content": 0,
-                "sequence_number": seq,
-                "min_sequence_number": min(
-                    e["sequence_number"] for e in ents
-                ),
-                "added_snapshot_id": sid,
-                "added_files_count": 0,
-                "existing_files_count": len(ents),
-                "deleted_files_count": 0,
-                "added_rows_count": 0,
-                "existing_rows_count": counts.get(spid, 0),
-                "deleted_rows_count": 0,
-                "partitions": None,
-            }
-        )
-    ml_rel = f"metadata/rw-{run_id}-snap-{seq}.avro"
-    write_avro(
-        _resolve(path, ml_rel), _ML_SCHEMA, new_rows + delete_rows
-    )
-    prev_ts = max(
-        [
-            int(s.get("timestamp-ms") or 0)
-            for s in (meta.get("snapshots") or [])
+    counts = {"before": 0, "after": 0}
+
+    def edit(meta):
+        ml_rows = _current_manifests(path, meta)
+        data_rows = [
+            r for r in ml_rows if int(r.get("content") or 0) == 0
         ]
-        or [0]
-    )
-    now_ms = max(int(time.time() * 1000), prev_ts + 1)
-    snap = {
-        "snapshot-id": sid,
-        "parent-snapshot-id": cur_sid,
-        "timestamp-ms": now_ms,
-        "sequence-number": seq,
-        "summary": {
-            "operation": "replace",
-            "engine": (
-                "rxlan-aws-lakehouse-spark foreign rewrite-manifests"
-            ),
-        },
-        "manifest-list": ml_rel,
-        "schema-id": meta.get("current-schema-id", 0),
-    }
-    new_meta = dict(meta)
-    new_meta["last-sequence-number"] = seq
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["current-snapshot-id"] = sid
-    new_meta["snapshots"] = list(meta.get("snapshots") or []) + [snap]
-    new_meta["snapshot-log"] = list(
-        meta.get("snapshot-log") or []
-    ) + [{"timestamp-ms": now_ms, "snapshot-id": sid}]
-    if int(meta.get("format-version", 1)) >= 3:
-        # v3 row lineage: a manifest rewrite adds no rows
-        first_rid = int(meta.get("next-row-id") or 0)
-        snap["first-row-id"] = first_rid
-        new_meta["next-row-id"] = first_rid
-    mdir = os.path.join(path, "metadata")
-    try:
-        _publish_metadata(mdir, head_v + 1, new_meta)
-    except FileExistsError:
-        raise ValueError(
-            "cannot rewrite manifests: lost the metadata race; "
-            "re-run against the new state"
+        counts["before"] = counts["after"] = len(data_rows)
+        if len(data_rows) <= 1:
+            return None
+        by_id = {
+            int(f["id"]): f for f in _current_schema(meta)["fields"]
+        }
+        specs = {
+            int(s["spec-id"]): s
+            for s in (meta.get("partition-specs") or [])
+        }
+        # group entries per spec id, EXISTING with explicit seqs
+        merged: dict[int, list] = {}
+        n_rows: dict[int, int] = {}
+        for row in data_rows:
+            m_seq = int(row.get("sequence_number") or 0)
+            m_sid = row.get("added_snapshot_id")
+            _, ents = read_avro(_resolve(path, row["manifest_path"]))
+            spid = int(row.get("partition_spec_id") or 0)
+            for e in ents:
+                if int(e.get("status") or 0) == 2:
+                    continue  # tombstone: drops in the rewrite
+                eseq = e.get("sequence_number")
+                eseq = int(eseq) if eseq is not None else m_seq
+                efseq = e.get("file_sequence_number")
+                efseq = int(efseq) if efseq is not None else eseq
+                merged.setdefault(spid, []).append(
+                    {
+                        "status": 0,
+                        "snapshot_id": e.get("snapshot_id") or m_sid,
+                        "sequence_number": eseq,
+                        "file_sequence_number": efseq,
+                        "data_file": dict(e["data_file"]),
+                    }
+                )
+                n_rows[spid] = n_rows.get(spid, 0) + int(
+                    e["data_file"].get("record_count") or 0
+                )
+        counts["after"] = len(merged)
+
+        def build(seq, sid):
+            rows = []
+            for spid, ents in sorted(merged.items()):
+                spec = specs.get(spid) or {"spec-id": spid, "fields": []}
+                part_fields = _spec_avro_part_fields(
+                    spec, by_id, "rewrite manifests"
+                )
+                mpath = f"metadata/rw-{run_id}-s{spid}.avro"
+                write_avro(
+                    _resolve(path, mpath),
+                    _manifest_schema(part_fields),
+                    ents,
+                )
+                rows.append(
+                    _ml_row(
+                        path, mpath, spid, 0, seq, sid,
+                        min_seq=min(e["sequence_number"] for e in ents),
+                        existing=(len(ents), n_rows.get(spid, 0)),
+                    )
+                )
+            delete_rows = [
+                r for r in ml_rows if int(r.get("content") or 0) != 0
+            ]
+            return rows + delete_rows, 0  # a manifest rewrite adds no rows
+
+        return _add_snapshot(
+            path,
+            meta,
+            _summary("replace", "rewrite-manifests"),
+            f"rw-{run_id}-",
+            build,
         )
+
+    new_meta = _commit_metadata(path, "rewrite manifests", edit, attempts=1)
     return {
-        "snapshot_id": sid,
-        "snapshot_seq": seq,
-        "n_manifests_before": len(data_rows),
-        "n_manifests_after": len(new_rows),
+        "snapshot_id": new_meta and new_meta["current-snapshot-id"],
+        "snapshot_seq": new_meta and new_meta["last-sequence-number"],
+        "n_manifests_before": counts["before"],
+        "n_manifests_after": counts["after"],
     }
 
 
@@ -3483,14 +3154,11 @@ def compact_data_files_iceberg(
 
     from pyspark.sql import functions as F
 
-    from .avro_lite import read_avro
     from .iceberg_import import (
         _current_schema,
         _path_variants,
-        _resolve,
         _spark_schema,
         iceberg_live_files,
-        load_table_metadata_versioned,
     )
 
     st = iceberg_live_files(path)
@@ -3548,23 +3216,8 @@ def compact_data_files_iceberg(
         entries=[st["entries"][i] for i in keep_idx],
         delete_specs=[st["delete_specs"][i] for i in keep_idx],
     )
-    dead = _existing_dead_pairs(path, st_cand)
-    lineage = _iceberg_lineage_scan(spark, path, st_cand)
-    lineage = _apply_eq_exclusion(spark, path, st_cand, lineage)
-    rows = lineage.filter(F.col("__ic_path").isin(sorted(cand_set)))
-    if dead:
-        dead_rows = [
-            (fp, int(ri)) for fp, s in dead.items() for ri in s
-        ]
-        rows = rows.join(
-            F.broadcast(
-                spark.createDataFrame(
-                    dead_rows, "__ic_path string, __ic_ri bigint"
-                )
-            ),
-            ["__ic_path", "__ic_ri"],
-            "left_anti",
-        )
+    rows, _ = _live_lineage(spark, path, st_cand)
+    rows = rows.filter(F.col("__ic_path").isin(sorted(cand_set)))
     schema_l = _spark_schema(meta0)
     rows = rows.select(*(F.col(f.name) for f in schema_l.fields))
     # bin-pack: size the write to ceil(candidate bytes / target) tasks
@@ -3580,28 +3233,6 @@ def compact_data_files_iceberg(
     staged = append_iceberg(spark, path, rows, _stage_only=True)
 
     run_id = _uuid.uuid4().hex[:12]
-    meta, head_v = load_table_metadata_versioned(path)
-    if meta.get("current-snapshot-id") != (st["snapshot"] or {}).get(
-        "snapshot-id"
-    ):
-        raise ValueError(
-            "cannot compact: a concurrent commit moved the table "
-            "head; re-run against the new state"
-        )
-    by_id = {int(f["id"]): f for f in _current_schema(meta)["fields"]}
-    specs = {
-        int(s["spec-id"]): s
-        for s in (meta.get("partition-specs") or [])
-    }
-    seq = int(meta.get("last-sequence-number") or 0) + 1
-    sid = _uuid.uuid4().int >> 65
-    snap_cur = next(
-        s
-        for s in meta.get("snapshots") or []
-        if s.get("snapshot-id") == meta.get("current-snapshot-id")
-    )
-    _, ml_rows = read_avro(_resolve(path, snap_cur["manifest-list"]))
-    new_rows: list = []
     n_delete_dropped = 0
 
     def _fully_superseded(e) -> bool:
@@ -3624,158 +3255,106 @@ def compact_data_files_iceberg(
             for fp in fps
         )
 
-    for row in ml_rows:
-        m_seq = int(row.get("sequence_number") or 0)
-        m_sid = row.get("added_snapshot_id")
-        spid = int(row.get("partition_spec_id") or 0)
-        _, ents = read_avro(_resolve(path, row["manifest_path"]))
-        live = [e for e in ents if int(e.get("status") or 0) != 2]
-        if int(row.get("content") or 0) == 1:
-            if live and all(_fully_superseded(e) for e in live):
-                n_delete_dropped += len(live)
-                continue
-            new_rows.append(row)
-            continue
-        touched = [
-            e
-            for e in live
-            if e["data_file"]["file_path"] in cand_set
-        ]
-        if not touched:
-            new_rows.append(row)
-            continue
-        spec = specs.get(spid) or {"spec-id": spid, "fields": []}
-        part_fields = _spec_avro_part_fields(spec, by_id, "compact")
-        out_ents, min_seq = [], seq
-        n_keep = keep_rows_n = 0
-        for e in live:
-            eseq = e.get("sequence_number")
-            eseq = int(eseq) if eseq is not None else m_seq
-            efseq = e.get("file_sequence_number")
-            efseq = int(efseq) if efseq is not None else eseq
-            min_seq = min(min_seq, eseq)
-            compacted = e["data_file"]["file_path"] in cand_set
-            if not compacted:
-                n_keep += 1
-                keep_rows_n += int(
-                    e["data_file"].get("record_count") or 0
-                )
-            out_ents.append(
-                {
-                    "status": 2 if compacted else 0,
-                    "snapshot_id": (
-                        sid
-                        if compacted
-                        else (e.get("snapshot_id") or m_sid)
-                    ),
-                    "sequence_number": eseq,
-                    "file_sequence_number": efseq,
-                    "data_file": dict(e["data_file"]),
-                }
+    def edit(meta):
+        if meta.get("current-snapshot-id") != (st["snapshot"] or {}).get(
+            "snapshot-id"
+        ):
+            raise ValueError(
+                "cannot compact: a concurrent commit moved the table "
+                "head; re-run against the new state"
             )
-        mpath = f"metadata/cp-{run_id}-rw{len(new_rows)}.avro"
-        write_avro(
-            _resolve(path, mpath),
-            _manifest_schema(part_fields),
-            out_ents,
+        by_id = {
+            int(f["id"]): f for f in _current_schema(meta)["fields"]
+        }
+        specs = {
+            int(s["spec-id"]): s
+            for s in (meta.get("partition-specs") or [])
+        }
+
+        def build(seq, sid):
+            nonlocal n_delete_dropped
+            new_rows: list = []
+            for row in _current_manifests(path, meta):
+                m_seq = int(row.get("sequence_number") or 0)
+                m_sid = row.get("added_snapshot_id")
+                spid = int(row.get("partition_spec_id") or 0)
+                _, ents = read_avro(_resolve(path, row["manifest_path"]))
+                live = [e for e in ents if int(e.get("status") or 0) != 2]
+                if int(row.get("content") or 0) == 1:
+                    if live and all(_fully_superseded(e) for e in live):
+                        n_delete_dropped += len(live)
+                        continue
+                    new_rows.append(row)
+                    continue
+                if not any(
+                    e["data_file"]["file_path"] in cand_set for e in live
+                ):
+                    new_rows.append(row)
+                    continue
+                spec = specs.get(spid) or {"spec-id": spid, "fields": []}
+                part_fields = _spec_avro_part_fields(spec, by_id, "compact")
+                out_ents, min_seq = [], seq
+                for e in live:
+                    eseq = e.get("sequence_number")
+                    eseq = int(eseq) if eseq is not None else m_seq
+                    efseq = e.get("file_sequence_number")
+                    efseq = int(efseq) if efseq is not None else eseq
+                    min_seq = min(min_seq, eseq)
+                    compacted = e["data_file"]["file_path"] in cand_set
+                    out_ents.append(
+                        {
+                            "status": 2 if compacted else 0,
+                            "snapshot_id": (
+                                sid
+                                if compacted
+                                else (e.get("snapshot_id") or m_sid)
+                            ),
+                            "sequence_number": eseq,
+                            "file_sequence_number": efseq,
+                            "data_file": dict(e["data_file"]),
+                        }
+                    )
+                mpath = f"metadata/cp-{run_id}-rw{len(new_rows)}.avro"
+                write_avro(
+                    _resolve(path, mpath),
+                    _manifest_schema(part_fields),
+                    out_ents,
+                )
+
+                def count(status):
+                    ents_s = [e for e in out_ents if e["status"] == status]
+                    return (
+                        len(ents_s),
+                        sum(
+                            int(e["data_file"].get("record_count") or 0)
+                            for e in ents_s
+                        ),
+                    )
+
+                new_rows.append(
+                    _ml_row(
+                        path, mpath, spid, 0, seq, sid, min_seq=min_seq,
+                        existing=count(0), deleted=count(2),
+                    )
+                )
+            if staged["entries"]:
+                new_rows.append(
+                    _added_manifest(
+                        path, f"metadata/cp-{run_id}-add.avro",
+                        staged, seq, sid,
+                    )
+                )
+            return new_rows, staged["n_rows"]
+
+        return _add_snapshot(
+            path, meta, _summary("replace", "compact"), f"cp-{run_id}-",
+            build,
         )
-        new_rows.append(
-            {
-                "manifest_path": mpath,
-                "manifest_length": os.path.getsize(
-                    _resolve(path, mpath)
-                ),
-                "partition_spec_id": spid,
-                "content": 0,
-                "sequence_number": seq,
-                "min_sequence_number": min_seq,
-                "added_snapshot_id": sid,
-                "added_files_count": 0,
-                "existing_files_count": n_keep,
-                "deleted_files_count": len(out_ents) - n_keep,
-                "added_rows_count": 0,
-                "existing_rows_count": keep_rows_n,
-                "deleted_rows_count": sum(
-                    int(e["data_file"].get("record_count") or 0)
-                    for e in out_ents
-                    if e["status"] == 2
-                ),
-                "partitions": None,
-            }
-        )
-    add_rows: list = []
-    if staged["entries"]:
-        for e in staged["entries"]:
-            e["snapshot_id"] = sid
-        ap_mpath = f"metadata/cp-{run_id}-add.avro"
-        write_avro(
-            _resolve(path, ap_mpath),
-            staged["mf_schema"],
-            staged["entries"],
-        )
-        add_rows.append(
-            {
-                "manifest_path": ap_mpath,
-                "manifest_length": os.path.getsize(
-                    _resolve(path, ap_mpath)
-                ),
-                "partition_spec_id": staged["spec_id"],
-                "content": 0,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": sid,
-                "added_files_count": len(staged["entries"]),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": staged["n_rows"],
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                "partitions": staged["partitions"],
-            }
-        )
-    ml_rel = f"metadata/cp-{run_id}-snap-{seq}.avro"
-    write_avro(
-        _resolve(path, ml_rel), _ML_SCHEMA, new_rows + add_rows
-    )
-    prev_ts = max(
-        [
-            int(s.get("timestamp-ms") or 0)
-            for s in (meta.get("snapshots") or [])
-        ]
-        or [0]
-    )
-    now_ms = max(int(time.time() * 1000), prev_ts + 1)
-    snap = {
-        "snapshot-id": sid,
-        "parent-snapshot-id": meta.get("current-snapshot-id"),
-        "timestamp-ms": now_ms,
-        "sequence-number": seq,
-        "summary": {
-            "operation": "replace",
-            "engine": "rxlan-aws-lakehouse-spark foreign compact",
-        },
-        "manifest-list": ml_rel,
-        "schema-id": meta.get("current-schema-id", 0),
-    }
-    new_meta = dict(meta)
-    new_meta["last-sequence-number"] = seq
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["current-snapshot-id"] = sid
-    new_meta["snapshots"] = list(meta.get("snapshots") or []) + [snap]
-    new_meta["snapshot-log"] = list(
-        meta.get("snapshot-log") or []
-    ) + [{"timestamp-ms": now_ms, "snapshot-id": sid}]
-    mdir = os.path.join(path, "metadata")
-    try:
-        _publish_metadata(mdir, head_v + 1, new_meta)
-    except FileExistsError:
-        raise ValueError(
-            "cannot compact: lost the metadata race; re-run against "
-            "the new state"
-        )
+
+    new_meta = _commit_metadata(path, "compact", edit, attempts=1)
     return {
-        "snapshot_id": sid,
-        "snapshot_seq": seq,
+        "snapshot_id": new_meta["current-snapshot-id"],
+        "snapshot_seq": new_meta["last-sequence-number"],
         "n_files_before": len(st["files"]),
         "n_files_after": len(st["files"])
         - len(cand_set)
@@ -3800,40 +3379,14 @@ def expire_snapshots_iceberg(
     ``older_than_ms`` (default: keep all but apply ``keep_last``), and
     the ``keep_last`` most recent regardless.  Expired snapshots drop
     from ``snapshots``/``snapshot-log`` in a new metadata version
-    (pinned-slot create-if-absent); then any manifest list, manifest,
+    (``_commit_metadata``; a lost race refuses); then any manifest
+    list, manifest,
     data/delete file reachable ONLY from expired snapshots is deleted
     — reachability from every KEPT snapshot is collected first, so
     shared files always survive.  ``dry_run`` reports without
     deleting or committing."""
-    from .avro_lite import read_avro
-    from .iceberg_import import (
-        _resolve,
-        load_table_metadata_versioned,
-    )
-
-    meta, head_v = load_table_metadata_versioned(path)
-    snaps = list(meta.get("snapshots") or [])
-    cur_sid = meta.get("current-snapshot-id")
-    by_time = sorted(
-        snaps, key=lambda s: int(s.get("timestamp-ms") or 0)
-    )
-    keep_ids = {cur_sid}
-    keep_ids.update(
-        s["snapshot-id"] for s in by_time[-max(1, keep_last):]
-    )
-    if older_than_ms is not None:
-        keep_ids.update(
-            s["snapshot-id"]
-            for s in snaps
-            if int(s.get("timestamp-ms") or 0) >= older_than_ms
-        )
-    expired = [s for s in snaps if s["snapshot-id"] not in keep_ids]
-    if not expired:
-        return {
-            "n_expired": 0,
-            "n_files_deleted": 0,
-            "dry_run": dry_run,
-        }
+    result = {"n_expired": 0, "n_files_deleted": 0, "dry_run": dry_run}
+    doomed: set[str] = set()
 
     def reach(snapshot) -> set[str]:
         """Every file a snapshot's tree references (manifest list,
@@ -3854,45 +3407,57 @@ def expire_snapshots_iceberg(
                 )
         return out
 
-    kept_reach: set[str] = set()
-    for s in snaps:
-        if s["snapshot-id"] in keep_ids:
-            kept_reach |= reach(s)
-    root_real = os.path.realpath(path)
-    doomed: set[str] = set()
-    for s in expired:
-        for p in reach(s):
-            if p not in kept_reach and p.startswith(
-                root_real + os.sep
-            ):
-                doomed.add(p)
-    if dry_run:
-        return {
-            "n_expired": len(expired),
-            "n_files_deleted": len(doomed),
-            "dry_run": True,
-        }
-    new_meta = dict(meta)
-    new_meta["snapshots"] = [
-        s for s in snaps if s["snapshot-id"] in keep_ids
-    ]
-    new_meta["snapshot-log"] = [
-        x
-        for x in (meta.get("snapshot-log") or [])
-        if x.get("snapshot-id") in keep_ids
-    ]
-    new_meta["last-updated-ms"] = max(
-        int(meta.get("last-updated-ms") or 0),
-        int(time.time() * 1000),
-    )
-    mdir = os.path.join(path, "metadata")
-    try:
-        _publish_metadata(mdir, head_v + 1, new_meta)
-    except FileExistsError:
-        raise ValueError(
-            "cannot expire snapshots: lost the metadata race; re-run "
-            "against the new state"
+    def edit(meta):
+        snaps = list(meta.get("snapshots") or [])
+        cur_sid = meta.get("current-snapshot-id")
+        by_time = sorted(
+            snaps, key=lambda s: int(s.get("timestamp-ms") or 0)
         )
+        keep_ids = {cur_sid}
+        keep_ids.update(
+            s["snapshot-id"] for s in by_time[-max(1, keep_last):]
+        )
+        if older_than_ms is not None:
+            keep_ids.update(
+                s["snapshot-id"]
+                for s in snaps
+                if int(s.get("timestamp-ms") or 0) >= older_than_ms
+            )
+        expired = [s for s in snaps if s["snapshot-id"] not in keep_ids]
+        if not expired:
+            return None
+        kept_reach: set[str] = set()
+        for s in snaps:
+            if s["snapshot-id"] in keep_ids:
+                kept_reach |= reach(s)
+        root_real = os.path.realpath(path)
+        for s in expired:
+            for p in reach(s):
+                if p not in kept_reach and p.startswith(
+                    root_real + os.sep
+                ):
+                    doomed.add(p)
+        result["n_expired"] = len(expired)
+        result["n_files_deleted"] = len(doomed)
+        if dry_run:
+            return None
+        new_meta = dict(meta)
+        new_meta["snapshots"] = [
+            s for s in snaps if s["snapshot-id"] in keep_ids
+        ]
+        new_meta["snapshot-log"] = [
+            x
+            for x in (meta.get("snapshot-log") or [])
+            if x.get("snapshot-id") in keep_ids
+        ]
+        new_meta["last-updated-ms"] = max(
+            int(meta.get("last-updated-ms") or 0),
+            int(time.time() * 1000),
+        )
+        return new_meta
+
+    if _commit_metadata(path, "expire snapshots", edit, attempts=1) is None:
+        return result
     n_del = 0
     for p in sorted(doomed):
         try:
@@ -3900,8 +3465,4 @@ def expire_snapshots_iceberg(
             n_del += 1
         except OSError:
             pass
-    return {
-        "n_expired": len(expired),
-        "n_files_deleted": n_del,
-        "dry_run": False,
-    }
+    return dict(result, n_files_deleted=n_del)

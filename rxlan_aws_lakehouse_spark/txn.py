@@ -515,6 +515,56 @@ def validate_merge_keys(
             )
 
 
+def bind_foreign_dml(schema, set_map: dict = None, merge: dict = None):
+    """Bind a foreign UPDATE's SET map or MERGE's inputs to a Delta or
+    Iceberg table's logical ``schema``: the front half the mirrors'
+    row-level verbs share. SET names resolve case-insensitively, each
+    value becoming a Column. A MERGE (``updates``, ``keys``,
+    ``delete_keys``) must name known keys, pass
+    ``validate_merge_keys`` and carry exactly the table's columns; its
+    updates are cast to the table types. Returns ``(set_exprs, mkeys,
+    upd_src, dels_src, all_keys)``, the last four None/empty without a
+    MERGE; ``all_keys`` is every distinct key the MERGE matches."""
+    by_lower = {f.name.lower(): f for f in schema.fields}
+    set_exprs = {}
+    for k, v in (set_map or {}).items():
+        fld = by_lower.get(str(k).lower())
+        if fld is None:
+            raise ValueError(f"cannot update: unknown column {k!r} in SET")
+        set_exprs[fld.name] = F.expr(v) if isinstance(v, str) else v
+    if merge is None:
+        return set_exprs, [], None, None, None
+    if not merge["keys"]:
+        raise ValueError("cannot merge: empty key list")
+    updates, delete_keys = merge["updates"], merge.get("delete_keys")
+    up_cols = {c.lower() for c in updates.columns}
+    mkeys = []
+    for k in merge["keys"]:
+        fld = by_lower.get(str(k).lower())
+        if fld is None or fld.name.lower() not in up_cols:
+            raise ValueError(f"cannot merge: unknown key column {k!r}")
+        mkeys.append(fld.name)
+    validate_merge_keys(updates, mkeys, delete_keys)
+    missing = [f.name for f in schema.fields if f.name.lower() not in up_cols]
+    extra = [c for c in updates.columns if c.lower() not in by_lower]
+    if missing or extra:
+        raise ValueError(
+            "cannot merge: updates columns do not match the table schema "
+            f"(missing {missing}, unexpected {extra}); merges do not "
+            "evolve a foreign schema"
+        )
+    upd_src = updates.select(
+        *(F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields)
+    )
+    dels_src = (
+        None if delete_keys is None else delete_keys.select(*mkeys).distinct()
+    )
+    all_keys = upd_src.select(*mkeys)
+    if dels_src is not None:
+        all_keys = all_keys.unionByName(dels_src)
+    return set_exprs, mkeys, upd_src, dels_src, all_keys.distinct()
+
+
 def _conform(rows: DataFrame, cols: list[str], like: DataFrame) -> DataFrame:
     """Target ``rows`` in a merge's output ``cols``: a column only the
     update set ``like`` has (additive ``merge_schema`` evolution) reads
